@@ -34,9 +34,13 @@ from aind_data_transformation_spark.ops import (
     attach_broadcast,
     connected_components,
     knuth32,
+    local_materializer,
     parquet_materializer,
 )
-from aind_data_transformation_spark.texthash import verified_near_dups
+from aind_data_transformation_spark.texthash import (
+    token_grams,
+    verified_near_dups,
+)
 
 
 class FormatConversionJobSettings(SparkJobSettings):
@@ -241,10 +245,8 @@ class NearDupResolveJob(GenericSparkEtl[NearDupResolveJobSettings]):
         docs = self.spark.read.parquet(str(s.input_source))
         n_in = docs.count()
 
-        mat_dir = s.materialize_dir or (
-            str(s.checkpoint_dir) if s.checkpoint_dir else None
-        )
-        mat = parquet_materializer(mat_dir) if mat_dir else None
+        mat_dir = s.materialize_dir or s.checkpoint_dir
+        mat = parquet_materializer(mat_dir) if mat_dir else local_materializer
         edges = verified_near_dups(
             docs,
             "doc_id",
@@ -292,11 +294,14 @@ class TrainingCorpusPipelineJobSettings(SparkJobSettings):
     #: excluded from the output corpus)
     bench_sources: list[str] = ["src0", "src1"]
     n_shards: int = 16
-    #: When set, every stage boundary materializes as parquet under this
-    #: directory (stage1_gated/, stage2_neardup/, stage3_clean/) — the
-    #: fault-tolerant cluster mode: a stage failure restarts from the last
-    #: durable boundary, and lost executors replay from storage. Unset,
-    #: the stages chain as one lazy plan (fine in local mode).
+    #: When set (or, failing that, ``checkpoint_dir``), every stage
+    #: materializes as parquet under this directory — the stage boundaries
+    #: ``stage1_gated.parquet``, ``stage2_neardup.parquet`` and
+    #: ``stage3_clean.parquet``, and the near-dup work ``lsh_banded``,
+    #: ``lsh_cands``, ``verify_trigrams``, ``cc_edges`` and
+    #: ``cc_labels_{round}`` (each ``.parquet``) — the fault-tolerant
+    #: cluster mode: lost executors replay from storage. Unset, the same
+    #: boundaries are executor-local checkpoints (fine in local mode).
     staging_dir: Optional[str] = None
 
 
@@ -307,7 +312,10 @@ class TrainingCorpusPipelineJob(
     operator already proven in isolation (CorpusCleanJob's gate+dedup,
     NearDupResolveJob's LSH->verify->components, corpus_decontaminate's
     8-gram probe, corpus_shuffle_shard's deterministic sharding), chained
-    with optional durable staging between them.
+    through materialized stage boundaries so each stage runs once
+    (executor-local checkpoints, or durable parquet under
+    ``staging_dir``). ``JobResponse.data`` carries the per-stage row
+    counts and ``stage_seconds`` (gate, neardup, decontaminate, write).
 
     Scale shape per stage: (1) gate is a scan-level filter + one
     hash-window dedup on sha256(text); (2) near-dup cost is bounded by
@@ -317,26 +325,22 @@ class TrainingCorpusPipelineJob(
     each output directory is written in parallel with bounded file
     counts."""
 
-    def _stage(self, df: DataFrame, name: str) -> DataFrame:
-        s = self.job_settings
-        staging = s.staging_dir or (
-            str(s.checkpoint_dir) if s.checkpoint_dir else None
-        )
-        if not staging:
-            return df
-        path = f"{staging}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
-
     def run_job(self) -> JobResponse:
         from pyspark.sql import Window
 
         started = time.time()
         s = self.job_settings
+        # one materializer for every stage boundary, near-dup stage and
+        # connected-components round: each stage runs once, and every
+        # rows_* count reads the materialized frame, not its lineage
+        staging = s.staging_dir or s.checkpoint_dir
+        mat = parquet_materializer(staging) if staging else local_materializer
+        stage_seconds = {}
         docs = self.spark.read.parquet(str(s.input_source))
         n_in = docs.count()
 
         # stage 1: quality gate + exact dedup (min-doc_id survivor)
+        t0 = time.perf_counter()
         toks = F.split("text", " ")
         gated = docs.where(
             F.col("lang").isin(s.langs)
@@ -344,23 +348,17 @@ class TrainingCorpusPipelineJob(
             & (F.size(toks) >= s.min_tokens)
         )
         w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
-        exact = (
+        exact = mat(
             gated.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
-            .drop("rn")
+            .drop("rn"),
+            "stage1_gated",
         )
-        exact = self._stage(exact, "stage1_gated")
         n_gated = exact.count()
+        stage_seconds["gate"] = time.perf_counter() - t0
 
         # stage 2: near-dup clusters -> one survivor per cluster
-        staging = s.staging_dir or (
-            str(s.checkpoint_dir) if s.checkpoint_dir else None
-        )
-        mat = (
-            parquet_materializer(f"{staging}/neardup_work")
-            if staging
-            else None
-        )
+        t0 = time.perf_counter()
         edges = verified_near_dups(
             exact, "doc_id", "text",
             threshold=s.jaccard_threshold, materializer=mat,
@@ -369,42 +367,30 @@ class TrainingCorpusPipelineJob(
         losers = comps.where(F.col("node") != F.col("component")).select(
             F.col("node").alias("doc_id")
         )
-        neardup = exact.join(losers, "doc_id", "left_anti")
-        neardup = self._stage(neardup, "stage2_neardup")
+        neardup = mat(exact.join(losers, "doc_id", "left_anti"), "stage2_neardup")
         n_neardup = neardup.count()
+        stage_seconds["neardup"] = time.perf_counter() - t0
 
         # stage 3: benchmark decontamination (8-gram overlap, bench side
         # is distinct-small -> broadcast anti-join; training side never
         # shuffles)
-        def grams(df: DataFrame) -> DataFrame:
-            t = F.split("text", " ")
-            return df.where(F.size(t) >= 8).select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(split(text, ' ')) - 7),"
-                        " i -> concat_ws(' ', slice(split(text, ' '), i, 8)))"
-                    )
-                ).alias("gram"),
-            )
-
+        t0 = time.perf_counter()
         is_bench = F.col("source").isin(s.bench_sources)
-        bench_grams = (
-            grams(docs.where(is_bench)).select("gram").distinct()
-        )
+        bench_grams = token_grams(docs.where(is_bench), []).distinct()
         train = neardup.where(~is_bench)
         contaminated = (
-            grams(train)
+            token_grams(train, ["doc_id"])
             .join(F.broadcast(bench_grams), "gram", "left_semi")
             .select("doc_id")
             .distinct()
         )
-        clean = train.join(contaminated, "doc_id", "left_anti")
-        clean = self._stage(clean, "stage3_clean")
+        clean = mat(train.join(contaminated, "doc_id", "left_anti"), "stage3_clean")
         n_clean = clean.count()
+        stage_seconds["decontaminate"] = time.perf_counter() - t0
 
         # stage 4: deterministic shuffle-shard write (Knuth multiplicative
         # key -> shard; partition-parallel, pruned reads per shard)
+        t0 = time.perf_counter()
         key = knuth32(F.col("doc_id"))
         sharded = clean.withColumn(
             "shard", (key % s.n_shards).cast("long")
@@ -416,6 +402,7 @@ class TrainingCorpusPipelineJob(
             .option("compression", s.compression)
             .parquet(str(s.output_directory))
         )
+        stage_seconds["write"] = time.perf_counter() - t0
         return JobResponse(
             status_code=200,
             message="ok",
@@ -430,6 +417,9 @@ class TrainingCorpusPipelineJob(
                     "contaminated_dropped": n_neardup - n_clean,
                     "n_shards": s.n_shards,
                     "seconds": round(time.time() - started, 3),
+                    "stage_seconds": {
+                        k: round(v, 3) for k, v in stage_seconds.items()
+                    },
                 }
             ),
         )

@@ -244,18 +244,29 @@ def connected_components(
     max_iters: int = 25,
     materializer=None,
 ) -> DataFrame:
-    """Connected components by min-label propagation: returns
-    ``(node, component)`` where ``component`` is the smallest node id in
-    the node's component. Input is an undirected edge list (one direction
-    per pair is enough).
+    """Connected components by min-label hooking plus pointer jumping:
+    returns ``(node, component)`` where ``component`` is the smallest node
+    id in the node's component. Input is an undirected edge list (one
+    direction per pair is enough; duplicate edges and self-loops are
+    harmless).
 
-    Distributed shape: each round is one equi-join shuffle (neighbor
-    labels) + one groupBy; a round propagates the minimum one hop, so
-    rounds = graph diameter. For near-dup clusters (the intended use:
-    resolve pairwise duplicate edges into canonical groups) diameters are
-    tiny, so this converges in 2-4 rounds even at 100 TB. Lineage is
-    truncated per round with ``localCheckpoint`` — without it the plan
-    doubles every iteration. Convergence is detected with a cheap
+    Labels start at each node's neighbour minimum (itself included). A
+    round then (1) takes ``m(v)``, the minimum label over v's closed
+    neighbourhood, and hooks v's label onto it —
+    ``parent(w) = min(m(w), m(v) for every v labelled w)`` — and (2)
+    jumps pointers, ``label <- parent[parent]``. Labels only fall, always
+    name a node of the same component, and a round that changes no label
+    leaves every edge's two ends with equal labels, so the fixed point is
+    the component minimum. Jumping doubles the distance a label travels
+    per round, so rounds grow with log(component diameter), not with the
+    diameter itself (Kiveris et al., *Connected Components in MapReduce
+    and Beyond*, SoCC 2014): a 1,000-node path takes 10 rounds, the near-
+    dup clusters of a corpus (stars and cliques) one.
+
+    Distributed shape: each round is two equi-joins of the edge list with
+    the label table, one groupBy and one self-join of the parent table.
+    State is truncated per round through ``materializer`` — without it the
+    plan doubles every iteration. Convergence is detected with a cheap
     ``limit(1).count`` probe of changed labels.
 
     ``materializer`` controls how per-round state is persisted:
@@ -263,46 +274,75 @@ def connected_components(
     ``parquet_materializer(dir)`` for fault-tolerant cluster runs.
     """
     mat = materializer or local_materializer
+    s, d = F.col(src), F.col(dst)
+    # both directions plus a self-loop per endpoint: the closed
+    # neighbourhood, so a node's own label takes part in every minimum
     sym = mat(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct(),
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(s.alias("a"), d.alias("b")),
+                    F.struct(d.alias("a"), s.alias("b")),
+                    F.struct(s.alias("a"), s.alias("b")),
+                    F.struct(d.alias("a"), d.alias("b")),
+                )
+            ).alias("e")
+        ).select("e.*"),
         "cc_edges",
     )
     labels = mat(
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node")),
+        sym.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("label")),
         "cc_labels_0",
     )
+    no_label = F.lit(None).cast(labels.schema["label"].dataType)
     for round_no in range(1, max_iters + 1):
-        nbr_min = (
+        # each edge (v, u) offers L(u) to v itself and to v's label L(v)
+        offers = (
             sym.join(
-                labels.select(F.col("node").alias("b"), "label"), "b"
+                labels.select(F.col("node").alias("b"), F.col("label").alias("lb")),
+                "b",
             )
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_min"))
+            .join(
+                labels.select(F.col("node").alias("a"), F.col("label").alias("la")),
+                "a",
+            )
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("a").alias("node"),
+                            F.col("lb").alias("p"),
+                            F.col("la").alias("old"),
+                        ),
+                        F.struct(
+                            F.col("la").alias("node"),
+                            F.col("lb").alias("p"),
+                            no_label.alias("old"),
+                        ),
+                    )
+                ).alias("o")
+            )
+            .select("o.*")
         )
-        stepped = labels.join(
-            nbr_min.select(F.col("a").alias("node"), "nbr_min"), "node", "left"
-        ).select(
-            "node",
-            "label",
-            F.least("label", F.coalesce("nbr_min", "label")).alias("new_label"),
+        parent = offers.groupBy("node").agg(
+            F.min("p").alias("p"), F.max("old").alias("label")
         )
+        stepped = parent.join(
+            parent.select(F.col("node").alias("p"), F.col("p").alias("new_label")),
+            "p",
+        ).select("node", "label", "new_label")
         stepped = mat(stepped, f"cc_labels_{round_no}")
         changed = stepped.where(F.col("new_label") < F.col("label")).limit(1)
         labels = stepped.select("node", F.col("new_label").alias("label"))
         if changed.count() == 0:
             return labels.select("node", F.col("label").alias("component"))
     # exhausting the round budget with changes still pending means the
-    # component diameter exceeds max_iters: the labels are PARTIAL and
-    # silently wrong (a high-diameter chain would split into several
-    # components) — fail loudly instead of returning them (r6 advice)
+    # labels are PARTIAL and silently wrong (a long chain would split
+    # into several components) — fail loudly instead of returning them
     raise RuntimeError(
         f"connected_components did not converge within max_iters="
         f"{max_iters} rounds (labels still changing): the graph's"
-        " component diameter exceeds the round budget — pass a larger"
+        " components need more rounds than the budget — pass a larger"
         " max_iters"
     )
 

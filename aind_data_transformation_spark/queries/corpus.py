@@ -23,6 +23,7 @@ from aind_data_transformation_spark.ops import (
     series_row_number,
 )
 from aind_data_transformation_spark.texthash import (
+    token_grams,
     tokval,
     verified_near_dups,
     verified_pairs_sql,
@@ -236,27 +237,10 @@ def q_corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin is exact. At 100 TB you'd hash the grams to 8-byte ints for the
     broadcast and keep the same plan."""
     d = load_table(spark, sf_dir, "documents")
-    # tokenize once per row — the gram builder references the array 3×
-    grams = (
-        "transform(sequence(0, size(__toks) - 8),"
-        " i -> concat_ws(' ', slice(__toks, i + 1, 8)))"
-    )
     is_bench = F.col("source").isin("src0", "src1")
-    bench_grams = (
-        d.where(is_bench)
-        .select(F.expr("split(text, ' ')").alias("__toks"))
-        .where(F.expr("size(__toks) >= 8"))
-        .select(F.explode(F.expr(grams)).alias("gram"))
-        .distinct()
-    )
+    bench_grams = token_grams(d.where(is_bench), []).distinct()
     train = d.where(~is_bench)
-    train_grams = (
-        train.select(
-            "doc_id", "source", F.expr("split(text, ' ')").alias("__toks")
-        )
-        .where(F.expr("size(__toks) >= 8"))
-        .select("doc_id", "source", F.explode(F.expr(grams)).alias("gram"))
-    )
+    train_grams = token_grams(train, ["doc_id", "source"])
     contaminated = (
         train_grams.join(F.broadcast(bench_grams), "gram", "left_semi")
         .select("doc_id", "source")
@@ -810,16 +794,7 @@ def q_corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: counts are integers; the ppm is one floor-divide."""
     d = load_table(spark, sf_dir, "documents")
-    grams = (
-        "transform(sequence(0, size(__toks) - 8),"
-        " i -> concat_ws(' ', slice(__toks, i + 1, 8)))"
-    )
-    dg = (
-        d.select("doc_id", "source", F.expr("split(text, ' ')").alias("__toks"))
-        .where(F.expr("size(__toks) >= 8"))
-        .select("doc_id", "source", F.explode(F.expr(grams)).alias("gram"))
-        .distinct()
-    )
+    dg = token_grams(d, ["doc_id", "source"]).distinct()
     first = dg.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     marked = dg.join(first, "gram").select(
         "source",

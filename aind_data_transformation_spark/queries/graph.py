@@ -806,19 +806,18 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the co-purchase graph — the canonical
     graph primitive the family was missing (the engine's CC machinery
     previously surfaced only inside `dedup_clusters`' near-dup
-    resolution). Runs `ops.connected_components` min-label propagation
-    to convergence (rounds = component diameter; one equi-join + one
-    min-groupBy per round, per-round state checkpointed — the Pregel
-    round lowered to DataFrames) over the same support>=2 edge list as
-    the rest of the graph family, then reduces to one row per component:
-    id (smallest member), size, and largest member.
+    resolution). Runs `ops.connected_components` min-label hooking plus
+    pointer jumping to convergence (rounds grow with log(component
+    diameter); per-round state checkpointed) over the same support>=2
+    edge list as the rest of the graph family, then reduces to one row
+    per component: id (smallest member), size, and largest member.
 
     Correctness is diameter-independent: the DuckDB oracle computes the
     full recursive-CTE transitive closure and takes per-node minima —
-    if propagation stopped early, label sets would differ and the hash
-    would break. And `ops.connected_components` now RAISES if the round
-    budget is exhausted with labels still changing (r6 advice) — a
-    diameter larger than max_iters fails loudly rather than returning
+    if the rounds stopped early, label sets would differ and the hash
+    would break. And `ops.connected_components` RAISES if the round
+    budget is exhausted with labels still changing — a graph needing
+    more than max_iters rounds fails loudly rather than returning
     partial components. All-integer labels; no tie-break subtleties."""
     from aind_data_transformation_spark.ops import connected_components
 

@@ -44,6 +44,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from aind_data_transformation_spark.ops import attach_broadcast, knuth32, knuth32_sql
 
 from aind_data_transformation_spark.io.sources import load_table
+from aind_data_transformation_spark.texthash import (
+    token_grams,
+    token_grams_expr,
+)
 
 #: session gap threshold, microseconds (30 minutes)
 _GAP_US = 30 * 60 * 1_000_000
@@ -215,19 +219,8 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram (at 100 TB you would key on xxhash64(gram) to shrink shuffle
     width; the string key is kept here for oracle parity), and the
     flag-back join is gram-keyed equi-join — never all-pairs."""
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(_TOKS_SPARK).alias("toks"))
-        .where(F.size("toks") >= 8)
-    )
-    g = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 7),"
-                " i -> concat_ws(' ', slice(toks, i, 8)))"
-            )
-        ).alias("gram"),
+    g = token_grams(
+        load_table(spark, sf_dir, "documents"), ["doc_id"], _TOKS_SPARK
     )
     # "occurs in >= 2 distinct docs" == min(doc_id) != max(doc_id): two
     # map-side-combinable extrema instead of a count-distinct expansion.
@@ -287,12 +280,7 @@ def q_dedup_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = d.where(F.col("n_tokens") >= 8)
     g = big.select(
         "doc_id",
-        F.posexplode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 7),"
-                " i -> concat_ws(' ', slice(toks, i, 8)))"
-            )
-        ).alias("pos0", "gram"),
+        F.posexplode(F.expr(token_grams_expr("toks"))).alias("pos0", "gram"),
     ).select("doc_id", (F.col("pos0") + 1).alias("i"), "gram")
     owner = g.groupBy("gram").agg(F.min("doc_id").alias("owner"))
     foreign = g.join(owner, "gram").where(F.col("owner") < F.col("doc_id"))

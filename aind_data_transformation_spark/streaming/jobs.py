@@ -639,11 +639,16 @@ def incremental_minhash_dedup_ingest(
        feed its own candidate join. That pair of guards is what turns
        foreachBatch's at-least-once into exactly-once here.
 
+    The pair partitions are NOT a set: a batch lands its pairs without a
+    distinct, so one partition may hold the same pair up to four times
+    (two bands, and both join directions of a pair whose two documents
+    arrived in the same batch), and a document delivered twice repeats
+    its pairs across partitions. Read them only through
+    ``read_stream_dedup_pairs``, the distinct over all partitions.
+
     Equivalence contract (tested in tests/test_streaming.py): after the
     stream drains, ``read_stream_dedup_pairs`` equals the batch
-    `dedup_fuzzy_minhash` pair set over the same documents — every pair
-    involves exactly one earliest-arriving side, so no pair can be
-    emitted twice across batches.
+    `dedup_fuzzy_minhash` pair set over the same documents.
 
     Scale: the signature store is ~40 bytes/doc (orders of magnitude
     smaller than the corpus); the band join is the only shuffle; at

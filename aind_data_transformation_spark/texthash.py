@@ -157,6 +157,18 @@ def verified_pairs_sql(threshold: float = 0.7) -> str:
     """
 
 
+def token_grams_expr(toks: str) -> str:
+    """Spark SQL array of the contiguous 8-token windows of the token
+    array column ``toks``, each joined by single spaces. The builder
+    references ``toks`` three times, so pass a column that was split once
+    (a projected array), never a ``split(...)`` call; rows must hold at
+    least 8 tokens."""
+    return (
+        f"transform(sequence(0, size({toks}) - 8),"
+        f" i -> concat_ws(' ', slice({toks}, i + 1, 8)))"
+    )
+
+
 # --- DataFrame-level operators --------------------------------------------
 
 
@@ -172,6 +184,21 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         for i in range(8)
     ]
     return vals.select(id_col, *sigs)
+
+
+def token_grams(
+    df: DataFrame, keep: list[str], toks: str = TOKS_SPARK
+) -> DataFrame:
+    """``(*keep, gram)``: one row per 8-token window of each row's
+    ``toks`` expression (see :func:`token_grams_expr`). The text is split
+    once per row; rows with fewer than 8 tokens yield no grams."""
+    return (
+        df.select(*keep, F.expr(toks).alias("__toks"))
+        .where(F.size("__toks") >= 8)
+        .select(
+            *keep, F.explode(F.expr(token_grams_expr("__toks"))).alias("gram")
+        )
+    )
 
 
 def lsh_candidate_pairs(

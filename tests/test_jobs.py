@@ -275,56 +275,99 @@ def test_neardup_parquet_materialization_identical_to_checkpoint(
     assert staged, "parquet mode must write stage directories"
 
 
-def test_training_corpus_pipeline_end_to_end(spark, tmp_path):
-    """The capstone pipeline: gate -> exact dedup -> near-dup ->
-    decontaminate -> shard write. Checks monotone stage counts, the
-    hive-sharded output layout, determinism across reruns, and that the
-    staged (durable-boundary) mode produces the identical corpus."""
-    import os
-
+def _run_training_corpus_pipeline(spark, out, **settings):
     from aind_data_transformation_spark.jobs import (
         TrainingCorpusPipelineJob,
         TrainingCorpusPipelineJobSettings,
     )
 
-    out1 = tmp_path / "corpus_a"
     resp = TrainingCorpusPipelineJob(
         TrainingCorpusPipelineJobSettings(
             input_source=f"{TEST_SF_DIR}/documents.parquet",
-            output_directory=str(out1),
+            output_directory=str(out),
             n_shards=4,
+            **settings,
         ),
         spark=spark,
     ).run_job()
     assert resp.status_code == 200
-    m = json.loads(resp.data)
+    return json.loads(resp.data)
+
+
+def test_training_corpus_pipeline_end_to_end(spark, tmp_path):
+    """The capstone pipeline: gate -> exact dedup -> near-dup ->
+    decontaminate -> shard write. Checks monotone stage counts, the
+    hive-sharded output layout, the gate count against DuckDB, and that
+    the staged (durable-boundary) mode gives the same counts and the
+    same shard contents, every column included."""
+    import os
+
+    out1 = tmp_path / "corpus_a"
+    m = _run_training_corpus_pipeline(spark, out1)
     assert (
         m["rows_in"] >= m["rows_gated"] >= m["rows_after_neardup"]
         >= m["rows_clean"] > 0
     )
+    assert set(m["stage_seconds"]) == {
+        "gate", "neardup", "decontaminate", "write"
+    }
     # bench sources are gone and the output is hive-sharded
     shard_dirs = [d for d in os.listdir(out1) if d.startswith("shard=")]
     assert 1 <= len(shard_dirs) <= 4
     got = spark.read.parquet(str(out1))
     assert got.where(got.source.isin("src0", "src1")).count() == 0
-    ids1 = sorted(r.doc_id for r in got.select("doc_id").collect())
+    assert got.count() == m["rows_clean"]
 
-    # rerun with durable staging: identical surviving corpus
+    # gate + exact dedup keeps one doc per distinct gated text
+    want_gated = duckdb.connect().execute(
+        f"""
+        SELECT count(DISTINCT text)
+        FROM read_parquet('{TEST_SF_DIR}/documents.parquet')
+        WHERE lang IN ('en', 'de', 'fr') AND n_chars BETWEEN 50 AND 5000
+          AND len(string_split(text, ' ')) >= 10
+        """
+    ).fetchone()[0]
+    assert m["rows_gated"] == want_gated
+
+    # rerun with durable staging: identical counts and shard contents
     out2 = tmp_path / "corpus_b"
-    TrainingCorpusPipelineJob(
-        TrainingCorpusPipelineJobSettings(
-            input_source=f"{TEST_SF_DIR}/documents.parquet",
-            output_directory=str(out2),
-            n_shards=4,
-            staging_dir=str(tmp_path / "staging"),
-        ),
-        spark=spark,
-    ).run_job()
-    ids2 = sorted(
-        r.doc_id
-        for r in spark.read.parquet(str(out2)).select("doc_id").collect()
+    staging = tmp_path / "staging"
+    m2 = _run_training_corpus_pipeline(spark, out2, staging_dir=str(staging))
+    rows = {k: v for k, v in m.items() if k.startswith("rows_")}
+    assert rows == {k: v for k, v in m2.items() if k.startswith("rows_")}
+    for stage in ("stage1_gated", "stage2_neardup", "stage3_clean"):
+        assert (staging / f"{stage}.parquet").is_dir(), stage
+
+    def contents(out):
+        df = spark.read.parquet(str(out))
+        cols = sorted(df.columns)
+        return cols, sorted(tuple(r) for r in df.select(*cols).collect())
+
+    assert contents(out1) == contents(out2)
+
+
+#: Spark jobs one TrainingCorpusPipelineJob may launch on the test
+#: fixture: the count measured when every stage runs once, plus one for
+#: texthash.verified_near_dups, which runs one job more on some runs of
+#: the same input. A stage recomputed from its lineage instead of read
+#: from its materialized boundary adds several jobs and fails this.
+_CORPUS_PIPELINE_JOB_BUDGET = 44 + 1
+
+
+def test_training_corpus_pipeline_job_budget(spark, tmp_path):
+    sc = spark.sparkContext
+    group = f"corpus-pipeline-budget-{id(tmp_path)}"
+    sc.setJobGroup(group, "TrainingCorpusPipelineJob job budget")
+    try:
+        _run_training_corpus_pipeline(spark, tmp_path / "out")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= _CORPUS_PIPELINE_JOB_BUDGET, (
+        f"{n_jobs} Spark jobs > budget {_CORPUS_PIPELINE_JOB_BUDGET}: a"
+        " stage is computed more than once"
     )
-    assert ids1 == ids2
 
 
 def test_session_knobs_shuffle_partitions_and_state_store(spark, tmp_path):

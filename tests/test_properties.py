@@ -16,6 +16,7 @@ from tests.conftest import TEST_SF_DIR
 
 from aind_data_transformation_spark.ops import (
     asof_join,
+    connected_components,
     dedup_keep_first,
     hash_sample,
     topk_per_group,
@@ -475,6 +476,72 @@ def test_quantile_bins_partition_all_rows(spark):
     for lo, hi in zip(spans, spans[1:]):
         assert lo["max_cents"] <= hi["min_cents"]
 
+
+
+def _union_find_components(edges):
+    """Driver-side reference: node -> smallest node id of its component
+    (union by smaller root, so every root is its set's minimum)."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+@st.composite
+def _edge_lists(draw):
+    """Disjoint pieces over randomly permuted ids — long chains, stars,
+    isolated pairs and dense random blobs — plus reversed duplicate
+    edges and self-loops (some on otherwise isolated ids)."""
+    ids = draw(st.permutations(range(200)))
+    edges, used = [], 0
+    kinds = ["chain", "star", "pair", "blob"]
+    for kind in draw(st.lists(st.sampled_from(kinds), min_size=1, max_size=4)):
+        size = 2 if kind == "pair" else draw(st.integers(2, 48))
+        nodes = ids[used:used + size]
+        used += size
+        if kind == "chain":
+            edges += list(zip(nodes, nodes[1:]))
+        elif kind == "star":
+            edges += [(nodes[0], n) for n in nodes[1:]]
+        elif kind == "pair":
+            edges.append((nodes[0], nodes[1]))
+        else:
+            pick = st.sampled_from(nodes)
+            edges += draw(st.lists(st.tuples(pick, pick), min_size=1, max_size=40))
+    dups = draw(st.lists(st.sampled_from(edges), max_size=5))
+    loops = draw(st.lists(st.sampled_from(ids), max_size=3))
+    return edges + [(b, a) for a, b in dups] + [(v, v) for v in loops]
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(edges=_edge_lists())
+def test_connected_components_matches_union_find(spark, edges):
+    """Hooking + pointer jumping gives every node its component minimum,
+    exactly as a union-find does — including 48-node chains, which
+    one-hop label propagation could not finish in the default 25 rounds."""
+    schema = T.StructType(
+        [T.StructField("s", T.LongType()), T.StructField("d", T.LongType())]
+    )
+    df = spark.createDataFrame(edges, schema)
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(df, "s", "d").collect()
+    }
+    assert got == _union_find_components(edges)
 
 def test_bfs_distances_consistent_with_edges(spark):
     """BFS output sanity: the seed has distance 0; every other reached
