@@ -34,15 +34,18 @@ from aind_data_transformation_spark.queries.streaming_batch import (
     SESSION_GAP,
     WATERMARK_DELAY,
 )
-from aind_data_transformation_spark.io.sources import normalize_event_ts
-from aind_data_transformation_spark.session import apply_runtime_confs
+from aind_data_transformation_spark.io.sources import (
+    normalize_event_ts,
+    table_schema,
+)
 
 #: events physical schema for synthetic INT64 TIMESTAMP(NANOS) fixtures
 #: (tests/test_watermark.py writes these): with
 #: spark.sql.legacy.parquet.nanosAsLong the ns timestamp arrives as a raw
 #: long and is floor-divided to µs by ``normalize_event_ts``. The real
 #: testdata tables may instead be TIMESTAMP(MICROS) — ``read_events_stream``
-#: infers the actual footer schema rather than assuming this one.
+#: takes the actual footer schema from ``io.sources.table_schema`` (the
+#: loader's per-application schema cache) rather than assuming this one.
 EVENTS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -60,10 +63,10 @@ def read_events_stream(
 ) -> DataFrame:
     """File-source stream over the events parquet (same ns→µs ts
     normalization as the batch ``load_table``)."""
-    apply_runtime_confs(spark)
-    # streams need an explicit schema; take it from the parquet footer (a
-    # metadata-only batch read) so ns-as-long and µs-native files both work
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    # streams need an explicit schema; the loader's cached footer schema
+    # covers both the ns-as-long and the µs-native files (table_schema also
+    # applies the runtime confs the stream reads under)
+    raw_schema = table_schema(spark, sf_dir, "events")
     # the file stream source wants a directory; glob-filter to the one table
     reader = (
         spark.readStream.schema(raw_schema)

@@ -413,3 +413,40 @@ def test_upsert_classify_delete_race_degrades_to_insert(tmp_path, spark):
     assert final == {(0, 1), (1, 1), (3, 1), (4, 1), (2, 99), (7, 50)}, (
         final
     )
+
+
+def test_concurrent_load_table_fills_schema_cache_once_per_table(
+    spark, monkeypatch
+):
+    """8 threads load the 10 driver tables at once, starting from an empty
+    schema cache (``queries/sinks.py`` calls ``load_table`` from a thread
+    pool). No load raises, every schema equals an inferred read's, and the
+    cache ends with exactly one entry per table."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from aind_data_transformation_spark.io import sources
+    from tests.test_sources import _inferred
+
+    monkeypatch.setattr(sources, "_SCHEMA_CACHE", {})
+    expected = {
+        name: _inferred(spark, TEST_SF_DIR, name).schema
+        for name in sources.TABLES
+    }
+
+    def load_all(i):
+        # each thread starts at a different table
+        order = sources.TABLES[i:] + sources.TABLES[:i]
+        return {
+            name: sources.load_table(spark, TEST_SF_DIR, name).schema
+            for name in order
+        }
+
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        results = list(pool.map(load_all, range(8)))
+    assert results == [expected] * 8
+    cached_paths = sorted(k[1] for k in sources._SCHEMA_CACHE)
+    assert cached_paths == sorted(
+        sources.table_path(TEST_SF_DIR, name) for name in sources.TABLES
+    )
+    app = spark.sparkContext.applicationId
+    assert {k[0] for k in sources._SCHEMA_CACHE} == {app}
