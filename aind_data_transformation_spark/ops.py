@@ -4,14 +4,99 @@ needs a custom Catalyst rule — these are algorithmic, not planner-level).
 
 Every operator is a pure DataFrame -> DataFrame function, independent of
 the driver tables, so jobs and queries compose them; the ``queries/``
-modules are thin bindings of these onto the test tables.
+modules are thin bindings of these onto the test tables. The one
+exception is :func:`session_stage`, the cache of per-session artifacts
+those bindings share.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import atexit
+import os
+import shutil
+import tempfile
+import threading
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+
+#: (applicationId, *key) -> {"lock", "scratch", "value"}; see session_stage
+_STAGES: dict = {}
+_STAGES_LOCK = threading.Lock()
+
+
+def session_stage(spark: SparkSession, key: tuple, build: Callable):
+    """The value of ``build(scratch)``, built once per Spark application
+    and ``key`` and reused by every later call: the staged parquet,
+    checkpointed frames and trained models that several keys of one
+    session share.
+
+    * **Key:** the stage name plus its inputs, e.g. ``("copurchase",
+      sf_dir)`` or ``("lloyd", sf_dir, k)``. The application id is added
+      here, so a stage never serves another session's checkpoints.
+    * **Scratch:** ``build`` receives a fresh ``tempfile.mkdtemp``
+      directory owned by the entry; stages that hold in-memory values
+      ignore it. No two entries share a directory, so a rebuild can
+      never overwrite or delete another entry's output.
+    * **Hit rule:** an entry is valid while its scratch directory exists;
+      deleting it forces a rebuild.
+    * **Locking:** each key has its own lock, so concurrent first calls
+      build once. The table lock is never held during a build, because
+      builds nest (the IVF layout builds the IVF base, which builds the
+      Lloyd quantizer).
+    * **Eviction:** when a key is first seen, the entries of other (dead)
+      applications are dropped and their scratch directories removed;
+      the entries left at interpreter exit are removed too.
+    """
+    app = spark.sparkContext.applicationId
+    ck = (app, *key)
+    dead = []
+    with _STAGES_LOCK:
+        entry = _STAGES.get(ck)
+        if entry is None:
+            dead = [_STAGES.pop(k) for k in list(_STAGES) if k[0] != app]
+            entry = _STAGES[ck] = {
+                "lock": threading.Lock(), "scratch": None, "value": None
+            }
+    for d in dead:
+        if d["scratch"] is not None:
+            shutil.rmtree(d["scratch"], ignore_errors=True)
+    with entry["lock"]:
+        if entry["scratch"] is not None and os.path.isdir(entry["scratch"]):
+            return entry["value"]
+        scratch = tempfile.mkdtemp(prefix=f"stage_{key[0]}_")
+        try:
+            value = build(scratch)
+        except BaseException:
+            shutil.rmtree(scratch, ignore_errors=True)
+            raise
+        entry["scratch"], entry["value"] = scratch, value
+        return value
+
+
+@atexit.register
+def _drop_stages() -> None:
+    for entry in _STAGES.values():
+        if entry["scratch"] is not None:
+            shutil.rmtree(entry["scratch"], ignore_errors=True)
+
+
+def staged_parquet(
+    spark: SparkSession, key: tuple, frame: Callable[[], DataFrame]
+) -> DataFrame:
+    """``frame()`` written to parquet once per session (a
+    :func:`session_stage` under ``key``) and read back with the schema
+    inferred at that write, so a hit runs no footer job. Only the schema
+    is shared, never a ``DataFrame``: every call gets a fresh read."""
+
+    def build(scratch: str):
+        out = os.path.join(scratch, "data")
+        frame().write.parquet(out)
+        return out, spark.read.parquet(out).schema
+
+    out, schema = session_stage(spark, key, build)
+    return spark.read.schema(schema).parquet(out)
+
 
 #: A materializer truncates lineage between pipeline stages and returns a
 #: DataFrame backed by the materialized data. ``None`` everywhere means

@@ -21,6 +21,7 @@ from aind_data_transformation_spark.ops import (
     knuth32_sql,
     pack_sequences,
     series_row_number,
+    staged_parquet,
 )
 from aind_data_transformation_spark.texthash import (
     token_grams,
@@ -37,60 +38,33 @@ _HASH_SPARK = knuth32_sql("doc_id", "spark")
 _HASH_DUCK = knuth32_sql("doc_id", "duck")
 
 
-#: resolved-cluster frame cache: (applicationId, sf_dir) -> parquet dir
-#: holding the (doc_id, canonical_id) resolution (r8 verdict item #4:
-#: the LSH + exact-Jaccard + connected-components pass is the expensive
-#: part of every consumer — dedup_clusters, split_leakage_safe — and was
-#: recomputed per invocation). Same lifecycle as the IVF-layout /
-#: minhash-stage caches: dead-session entries evicted (and their scratch
-#: dirs removed) on insert.
-_DEDUP_CLUSTER_CACHE: dict = {}
-
-
 def _dedup_clusters_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The resolved (doc_id, canonical_id) frame, computed once per
-    (session, sf_dir) and staged as parquet — every consumer reads the
-    staged resolution instead of re-running the dedup cascade."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DEDUP_CLUSTER_CACHE.get(ck)
-    if hit is not None and _os.path.isdir(hit):
-        return spark.read.parquet(hit)
+    """The resolved (doc_id, canonical_id) frame, staged once per
+    (session, sf_dir): the LSH + exact-Jaccard + connected-components
+    pass is the expensive part of every consumer (dedup_clusters,
+    split_leakage_safe), which read the staged resolution instead."""
     from aind_data_transformation_spark.texthash import (
         verified_near_dups_docs,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    pairs = verified_near_dups_docs(spark, sf_dir, threshold=0.7)
-    comp = connected_components(pairs, "id_a", "id_b")
-    resolved = (
-        d.select("doc_id")
-        .join(
-            comp.select(F.col("node").alias("doc_id"), "component"),
-            "doc_id",
-            "left",
+    def resolve() -> DataFrame:
+        pairs = verified_near_dups_docs(spark, sf_dir, threshold=0.7)
+        comp = connected_components(pairs, "id_a", "id_b")
+        return (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id")
+            .join(
+                comp.select(F.col("node").alias("doc_id"), "component"),
+                "doc_id",
+                "left",
+            )
+            .select(
+                "doc_id",
+                F.coalesce("component", "doc_id").alias("canonical_id"),
+            )
         )
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("canonical_id"),
-        )
-    )
-    out = _os.path.join(
-        _tempfile.gettempdir(),
-        "spark_graft_corpus",
-        str(_os.getpid()),
-        sf_dir.rstrip("/").rsplit("/", 1)[-1],
-        "dedup_clusters",
-    )
-    resolved.write.mode("overwrite").parquet(out)
-    for stale in [x for x in _DEDUP_CLUSTER_CACHE if x[0] != ck[0]]:
-        _shutil.rmtree(_DEDUP_CLUSTER_CACHE[stale], ignore_errors=True)
-        del _DEDUP_CLUSTER_CACHE[stale]
-    _DEDUP_CLUSTER_CACHE[ck] = out
-    return spark.read.parquet(out)
+
+    return staged_parquet(spark, ("dedup_clusters", sf_dir), resolve)
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    local_materializer,
+    session_stage,
+)
 
 SCALE = 1_000_000_000_000
 ROUNDS = 8
@@ -249,15 +253,6 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 BFS_ROUNDS = 3
 
 
-#: shared co-purchase support cache: (applicationId, sf_dir) -> the
-#: materialized (u, v, n_orders) support table. See
-#: :func:`_copurchase_support`. Same lifecycle discipline as
-#: llm_vectors._LLOYD_CACHE: checkpointed frames are valid only for the
-#: owning SparkSession, so entries from dead sessions are evicted on
-#: insert.
-_COPURCHASE_CACHE: dict = {}
-
-
 def _copurchase_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchase SUPPORT table — ``(u, v, n_orders)`` with
     ``u < v`` and ``n_orders >= 2`` from the basket self equi-join —
@@ -270,35 +265,30 @@ def _copurchase_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage write; locally it is a localCheckpoint. Every derived shape
     (symmetrized edge list, weighted edges, rule pairs, degree counts)
     is a narrow map/union over this one frame."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _COPURCHASE_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    half = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    def build(_scratch: str) -> DataFrame:
+        li = (
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_partkey")
+            .distinct()
         )
-        .groupBy(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
+        a, b = li.alias("a"), li.alias("b")
+        half = (
+            a.join(
+                b,
+                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+            )
+            .groupBy(
+                F.col("a.l_partkey").alias("u"),
+                F.col("b.l_partkey").alias("v"),
+            )
+            .agg(F.count(F.lit(1)).alias("n_orders"))
+            .where(F.col("n_orders") >= 2)
         )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .where(F.col("n_orders") >= 2)
-    )
-    out = mat(half, "copurchase_support")
-    for stale in [x for x in _COPURCHASE_CACHE if x[0] != ck[0]]:
-        del _COPURCHASE_CACHE[stale]
-    _COPURCHASE_CACHE[ck] = out
-    return out
+        return local_materializer(half, "copurchase_support")
+
+    return session_stage(spark, ("copurchase", sf_dir), build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,6 +26,8 @@ from aind_data_transformation_spark.io.sources import load_table
 from aind_data_transformation_spark.ops import (
     attach_broadcast,
     partitioned_cum_before,
+    session_stage,
+    staged_parquet,
 )
 
 _N_QUERIES = 5
@@ -167,35 +169,25 @@ def _ivf_probes(
     return out if keep_pr else out.drop("pr")
 
 
-#: materialized cell-assigned corpus cache: (applicationId, sf_dir) ->
-#: (base frame, trained centroids). The base rides the cached
-#: `_lloyd_rounds` quantizer but adds its own localCheckpoint, so the
-#: IVF keys AND the nprobe sweep share one materialization. Dead-session
-#: entries evicted on insert (checkpoint lifetime = owning session).
-_IVF_BASE_CACHE: dict = {}
-
-
 def _ivf_base(spark: SparkSession, sf_dir: str):
-    """The cell-assigned corpus ``(vec_id, cell, v, nrm)`` (materialized)
-    plus the trained centroids, cached per (session, sf_dir)."""
+    """The cell-assigned corpus ``(vec_id, cell, v, nrm)`` plus the trained
+    centroids, staged once per (session, sf_dir). The base rides the
+    staged `_lloyd_rounds` quantizer but adds its own localCheckpoint, so
+    the IVF keys AND the nprobe sweep share one materialization."""
     from aind_data_transformation_spark.ops import local_materializer as mat
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_BASE_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    _, a2, c1, _ = _lloyd_rounds(spark, sf_dir)
-    norm = F.sqrt(_dot(F.col("v"), F.col("v")))
-    base = mat(
-        a2.select(
-            "vec_id", F.col("cid").alias("cell"), "v", norm.alias("nrm")
-        ),
-        "ivf_cells",
-    )
-    for stale in [x for x in _IVF_BASE_CACHE if x[0] != ck[0]]:
-        del _IVF_BASE_CACHE[stale]
-    _IVF_BASE_CACHE[ck] = (base, c1)
-    return base, c1
+    def build(_scratch: str):
+        _, a2, c1, _ = _lloyd_rounds(spark, sf_dir)
+        norm = F.sqrt(_dot(F.col("v"), F.col("v")))
+        base = mat(
+            a2.select(
+                "vec_id", F.col("cid").alias("cell"), "v", norm.alias("nrm")
+            ),
+            "ivf_cells",
+        )
+        return base, c1
+
+    return session_stage(spark, ("ivf_base", sf_dir), build)
 
 
 def _ivf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,50 +316,21 @@ def q_ann_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: cell-partitioned corpus layout cache: (applicationId, sf_dir) ->
-#: parquet dir written partitionBy(cell). The index-build-once shape:
-#: every probing query rides the same layout.
-_IVF_PART_CACHE: dict = {}
-
-
 def _ivf_partitioned_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write the cell-assigned corpus as a parquet table PARTITIONED BY
     the IVF cell — the physical index layout the `ann_ivf_topk`
     docstring promises for 100 TB ("the cells ARE the partition
     layout"). One job (repartition on cell -> one file per cell dir),
-    cached per (session, sf_dir)."""
-    import os as _os
-    import tempfile as _tempfile
+    staged once per (session, sf_dir): the index-build-once shape, every
+    probing query rides the same layout."""
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_PART_CACHE.get(ck)
-    if hit is not None and _os.path.isdir(hit):
-        return hit
-    base, _ = _ivf_base(spark, sf_dir)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = _os.path.join(
-        _tempfile.gettempdir(),
-        "spark_graft_vectors",
-        str(_os.getpid()),
-        tag,
-        "ivf_cells_partitioned",
-    )
-    (
-        base.repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out)
-    )
-    for stale in [x for x in _IVF_PART_CACHE if x[0] != ck[0]]:
-        # the evicted entry is dead-session scratch by construction —
-        # remove its on-disk layout too, or long-lived processes
-        # accumulate orphaned temp data across sessions.
-        import shutil as _shutil
+    def build(scratch: str) -> str:
+        base, _ = _ivf_base(spark, sf_dir)
+        out = os.path.join(scratch, "ivf_cells_partitioned")
+        base.repartition("cell").write.partitionBy("cell").parquet(out)
+        return out
 
-        _shutil.rmtree(_IVF_PART_CACHE[stale], ignore_errors=True)
-        del _IVF_PART_CACHE[stale]
-    _IVF_PART_CACHE[ck] = out
-    return out
+    return session_stage(spark, ("ivf_layout", sf_dir), build)
 
 
 def q_ann_ivf_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1999,51 +1962,40 @@ def _lloyd_rounds(spark: SparkSession, sf_dir: str, k: int | None = None):
     decimals — so DuckDB's `_kmeans_prefix` SQL twin reproduces the
     index bit-for-bit at any scale factor and any k.
 
-    The trained quantizer is cached per (session, sf_dir, k): an IVF
+    The trained quantizer is staged per (session, sf_dir, k): an IVF
     index is built ONCE and amortized across every query that probes it
     — `ann_ivf_topk`, `ann_ivfpq_topk`, `dedup_semantic` and the
-    `ml_ann_recall` grader share one training run. The cache holds
-    checkpointed DataFrames, which stay valid for the life of the
-    owning SparkSession only — hence the applicationId in the key."""
+    `ml_ann_recall` grader share one training run."""
     from aind_data_transformation_spark.ops import local_materializer as mat
 
-    ck = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        "auto" if k is None else k,
-    )
-    hit = _LLOYD_CACHE.get(ck)
-    if hit is not None:
-        return hit
+    def build(_scratch: str):
+        em = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _dbl("embedding").alias("v")
+        )
+        n_cells = _auto_k(em.count()) if k is None else k
+        cap = n_cells * _TRAIN_PTS_PER_CENTROID
+        # bounded-by-cap driver transfer: the training sample (deterministic
+        # hash-order prefix; Spark plans the global limit as a TakeOrdered,
+        # not a full sort)
+        sample = (
+            em.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+            .limit(cap)
+            .collect()
+        )
+        cents = _train_lloyd_numpy(sample, n_cells)
+        a2 = mat(
+            em.mapInPandas(
+                _assign_batches(cents),
+                "vec_id bigint, v array<double>, cid bigint",
+            ),
+            "lloyd_a2",
+        )
+        c_df = spark.createDataFrame(cents, "cid bigint, cv array<double>")
+        return em, a2, c_df, c_df
 
-    em = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dbl("embedding").alias("v")
+    return session_stage(
+        spark, ("lloyd", sf_dir, "auto" if k is None else k), build
     )
-    if k is None:
-        k = _auto_k(em.count())
-    cap = k * _TRAIN_PTS_PER_CENTROID
-    # bounded-by-cap driver transfer: the training sample (deterministic
-    # hash-order prefix; Spark plans the global limit as a TakeOrdered,
-    # not a full sort)
-    sample = (
-        em.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(cap)
-        .collect()
-    )
-    cents = _train_lloyd_numpy(sample, k)
-    a2 = mat(
-        em.mapInPandas(
-            _assign_batches(cents), "vec_id bigint, v array<double>, cid bigint"
-        ),
-        "lloyd_a2",
-    )
-    c_df = spark.createDataFrame(cents, "cid bigint, cv array<double>")
-    out = (em, a2, c_df, c_df)
-    # drop entries from dead sessions so the cache stays bounded
-    for stale in [x for x in _LLOYD_CACHE if x[0] != ck[0]]:
-        del _LLOYD_CACHE[stale]
-    _LLOYD_CACHE[ck] = out
-    return out
 
 
 def q_embed_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2078,11 +2030,6 @@ def q_embed_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: pruned rows at sf0.001/0.01/0.1 under the auto-sized trainer) — the
 #: plan and the oracle are threshold-independent.
 _SEMDEDUP_TAU = 0.45
-
-#: trained-quantizer cache: (applicationId, sf_dir, k) -> the
-#: `_lloyd_rounds` result tuple. See that function's docstring.
-_LLOYD_CACHE: dict = {}
-
 
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic deduplication — SemDeDup (Abbas et al. 2023): cluster
@@ -3278,47 +3225,22 @@ def _phash_png_batch(batches):
         )
 
 
-_PHASH_STAGE_CACHE: dict = {}
-
-
 def _phash_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (doc_id, phash_hi, phash_lo) frame, computed ONCE per
-    (session, corpus) and staged to scratch parquet — the encode +
-    decode + hash pipeline is the expensive shared prefix of the two
-    phash keys, exactly the quantizer/`_MINHASH_STAGE_CACHE` pattern;
-    consumers pay one 3-column parquet read. Evicted entries drop
-    their directories (dead-session scratch)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
+    """The (doc_id, phash_hi, phash_lo) frame, staged once per (session,
+    corpus): the encode + decode + hash pipeline is the expensive shared
+    prefix of the two phash keys, so consumers pay one 3-column parquet
+    read."""
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PHASH_STAGE_CACHE.get(ck)
-    if hit is None or not os.path.isdir(hit):
-        tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-        out = os.path.join(
-            _tempfile.gettempdir(),
-            "spark_graft_vectors",
-            str(os.getpid()),
-            tag,
-            "phash_stage",
-        )
-        d = load_table(spark, sf_dir, "documents")
-        (
-            _ids_partitioned(d)
+    def phash() -> DataFrame:
+        return (
+            _ids_partitioned(load_table(spark, sf_dir, "documents"))
             .mapInPandas(_encode_png_pixels, "doc_id long, payload binary")
             .mapInPandas(
-                _phash_png_batch,
-                "doc_id long, phash_hi long, phash_lo long",
+                _phash_png_batch, "doc_id long, phash_hi long, phash_lo long"
             )
-            .write.mode("overwrite")
-            .parquet(out)
         )
-        for stale in [x for x in _PHASH_STAGE_CACHE if x[0] != ck[0]]:
-            _shutil.rmtree(_PHASH_STAGE_CACHE[stale], ignore_errors=True)
-            del _PHASH_STAGE_CACHE[stale]
-        _PHASH_STAGE_CACHE[ck] = out
-        hit = out
-    return spark.read.parquet(hit)
+
+    return staged_parquet(spark, ("phash", sf_dir), phash)
 
 
 def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -600,14 +600,10 @@ def q_bpe_train_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: learned merge tables: (applicationId, sf_dir) -> [(round, pa, pb, n)].
-#: The merge table IS a tokenizer's shipped artifact (merges.txt) —
-#: inherently metadata-sized (4 rows here; ~50k for a production vocab),
-#: so collecting it driver-side and inlining it as literals is the
-#: production shape, not a scale compromise.
-_BPE_MERGES_CACHE: dict = {}
-
-
+# The merge table IS a tokenizer's shipped artifact (merges.txt) —
+# inherently metadata-sized (4 rows here; ~50k for a production vocab),
+# so collecting it driver-side and inlining it as literals is the
+# production shape, not a scale compromise.
 def _bpe_learned_merges(spark: SparkSession, sf_dir: str) -> list:
     """Run the multi-round training loop once per (session, sf_dir) and
     return the learned merge list [(round, pa, pb, n_occurrences)].
@@ -617,58 +613,59 @@ def _bpe_learned_merges(spark: SparkSession, sf_dir: str) -> list:
     map-side merge fold. Rounds are stage-materialized
     (ops.local_materializer; parquet on a cluster) so the plan stays
     linear in rounds."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_MERGES_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    d = load_table(spark, sf_dir, "documents")
-    wc = (
-        d.select(
-            F.explode(
-                F.expr("filter(split(lower(text), ' '), x -> x <> '')")
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.length("w") >= 2)
+    from aind_data_transformation_spark.ops import (
+        local_materializer as mat,
+        session_stage,
     )
-    chars = "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-    words = mat(wc.select("cnt", F.expr(chars).alias("cs")), "bpe_w0")
-    merges = []
-    for r in range(1, _BPE_ROUNDS + 1):
-        pairs = (
-            words.select(
-                "cnt",
+
+    def build(_scratch: str) -> list:
+        d = load_table(spark, sf_dir, "documents")
+        wc = (
+            d.select(
                 F.explode(
-                    F.expr(
-                        "zip_with(slice(cs, 1, size(cs) - 1),"
-                        " slice(cs, 2, size(cs) - 1),"
-                        " (a, b) -> struct(a AS pa, b AS pb))"
-                    )
-                ).alias("p"),
+                    F.expr("filter(split(lower(text), ' '), x -> x <> '')")
+                ).alias("w")
             )
-            .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-            .agg(F.sum("cnt").alias("n_occurrences"))
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .where(F.length("w") >= 2)
         )
-        row = (
-            pairs.orderBy(F.desc("n_occurrences"), F.asc("pa"), F.asc("pb"))
-            .limit(1)
-            .collect()[0]
-        )
-        merges.append((r, row["pa"], row["pb"], int(row["n_occurrences"])))
-        if r < _BPE_ROUNDS:
-            fold = _bpe_merge_spark_expr(
-                _sql_str_lit(row["pa"]), _sql_str_lit(row["pb"])
+        chars = "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
+        words = mat(wc.select("cnt", F.expr(chars).alias("cs")), "bpe_w0")
+        merges = []
+        for r in range(1, _BPE_ROUNDS + 1):
+            pairs = (
+                words.select(
+                    "cnt",
+                    F.explode(
+                        F.expr(
+                            "zip_with(slice(cs, 1, size(cs) - 1),"
+                            " slice(cs, 2, size(cs) - 1),"
+                            " (a, b) -> struct(a AS pa, b AS pb))"
+                        )
+                    ).alias("p"),
+                )
+                .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
+                .agg(F.sum("cnt").alias("n_occurrences"))
             )
-            words = mat(
-                words.select("cnt", F.expr(fold).alias("cs")), f"bpe_w{r}"
+            row = (
+                pairs.orderBy(
+                    F.desc("n_occurrences"), F.asc("pa"), F.asc("pb")
+                )
+                .limit(1)
+                .collect()[0]
             )
-    for stale in [x for x in _BPE_MERGES_CACHE if x[0] != ck[0]]:
-        del _BPE_MERGES_CACHE[stale]
-    _BPE_MERGES_CACHE[ck] = merges
-    return merges
+            merges.append((r, row["pa"], row["pb"], int(row["n_occurrences"])))
+            if r < _BPE_ROUNDS:
+                fold = _bpe_merge_spark_expr(
+                    _sql_str_lit(row["pa"]), _sql_str_lit(row["pb"])
+                )
+                words = mat(
+                    words.select("cnt", F.expr(fold).alias("cs")), f"bpe_w{r}"
+                )
+        return merges
+
+    return session_stage(spark, ("bpe_merges", sf_dir), build)
 
 
 def q_bpe_encode_apply(spark: SparkSession, sf_dir: str) -> DataFrame:

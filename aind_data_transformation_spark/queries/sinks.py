@@ -26,7 +26,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from aind_data_transformation_spark.ops import attach_broadcast
+from aind_data_transformation_spark.ops import attach_broadcast, session_stage
 from pyspark.sql import types as T
 
 from aind_data_transformation_spark.io.sources import load_table, read_csv, read_json
@@ -593,6 +593,8 @@ def q_sink_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
     from functools import reduce
 
+    from pyspark import inheritable_thread_target
+
     base = _scratch(sf_dir, "lineitem_codec")
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)")
@@ -618,8 +620,12 @@ def q_sink_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             1 for f in os.listdir(out) if f.startswith("part-")
         )
 
+    # the wrapper copies the caller's local properties (job group,
+    # description) and session tags when it is applied, so the writes
+    # are attributed to the caller's group
+    write = inheritable_thread_target(spark)(_write)
     with ThreadPoolExecutor(len(_TRADEOFF_CODECS)) as ex:
-        written = list(ex.map(_write, _TRADEOFF_CODECS))
+        written = list(ex.map(write, _TRADEOFF_CODECS))
     per_codec = [
         spark.read.parquet(out).agg(
             F.lit(codec).alias("codec"),
@@ -765,48 +771,36 @@ def q_sink_txlog_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-staged txlog base-fixture batches: (applicationId, sf_dir) ->
-#: staged dir holding batch-0..batch-3. The four hash-split orders files
-#: are deterministic and IDENTICAL for every txlog key, so the Spark
-#: write job runs once per (session, sf_dir) (the copurchase/ANN-index
-#: staging doctrine) and each key's private table is populated by
-#: hardlinking the immutable parquet files into its own data dir.
-#: Safe because no txlog mutation ever modifies file CONTENTS — merges/
-#: optimizes write new GUID-named files, removes are logical, vacuum
-#: unlinks the key's own link (the staged inode survives).
-_TXLOG_FIXTURE_STAGE: dict = {}
-
-
 def _txlog_fixture_batches(spark: SparkSession, sf_dir: str) -> str:
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TXLOG_FIXTURE_STAGE.get(ck)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    staged = _scratch(sf_dir, "_txlog_fixture_stage")
-    shutil.rmtree(staged, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders")
-    # ONE write job for all four batch files (partitionBy on the hash
-    # bucket, then rename the partition dirs into place — r6 advice:
-    # four sequential filtered writes scanned orders four times).
-    staging = staged + ".tmp"
-    (
-        orders.withColumn("__b", F.pmod("o_orderkey", F.lit(4)))
-        .repartition(4, "__b")
-        .write.partitionBy("__b")
-        .parquet(staging)
-    )
-    os.makedirs(staged, exist_ok=True)
-    for b in range(4):
-        os.rename(
-            os.path.join(staging, f"__b={b}"),
-            os.path.join(staged, f"batch-{b}"),
+    """The staged dir holding batch-0..batch-3, built once per (session,
+    sf_dir). The four hash-split orders files are deterministic and
+    IDENTICAL for every txlog key, so each key's private table is
+    populated by hardlinking the immutable parquet files into its own
+    data dir. Safe because no txlog mutation ever modifies file CONTENTS
+    — merges/optimizes write new GUID-named files, removes are logical,
+    vacuum unlinks the key's own link (the staged inode survives)."""
+
+    def build(scratch: str) -> str:
+        # ONE write job for all four batch files (partitionBy on the hash
+        # bucket, then rename the partition dirs into place — r6 advice:
+        # four sequential filtered writes scanned orders four times).
+        staging = os.path.join(scratch, "staging")
+        (
+            load_table(spark, sf_dir, "orders")
+            .withColumn("__b", F.pmod("o_orderkey", F.lit(4)))
+            .repartition(4, "__b")
+            .write.partitionBy("__b")
+            .parquet(staging)
         )
-    shutil.rmtree(staging, ignore_errors=True)
-    for stale in [k for k in _TXLOG_FIXTURE_STAGE if k[0] != ck[0]]:
-        shutil.rmtree(_TXLOG_FIXTURE_STAGE[stale], ignore_errors=True)
-        del _TXLOG_FIXTURE_STAGE[stale]
-    _TXLOG_FIXTURE_STAGE[ck] = staged
-    return staged
+        for b in range(4):
+            os.rename(
+                os.path.join(staging, f"__b={b}"),
+                os.path.join(scratch, f"batch-{b}"),
+            )
+        shutil.rmtree(staging, ignore_errors=True)
+        return scratch
+
+    return session_stage(spark, ("txlog_fixture", sf_dir), build)
 
 
 def _link_tree(src: str, dst: str) -> None:

@@ -19,10 +19,10 @@ Determinism notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast
+from aind_data_transformation_spark.ops import attach_broadcast, session_stage
 from aind_data_transformation_spark.queries.numeric import money_sum, sql_money_sum
 
 #: Session gap / watermark delay shared with streaming/jobs.py.
@@ -403,62 +403,70 @@ def q_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: staged 4-chunk source cache: (applicationId, sf_dir) -> the incoming
-#: dir holding the four hash-chunk deliveries (r7 verdict item #3: the
-#: fixture was re-staged — four coalesce(1) write jobs — on EVERY
-#: invocation, ~half the key's bench cost). Same lifecycle discipline as
-#: graph._COPURCHASE_CACHE: entries from dead sessions are evicted on
-#: insert; the staged dir is plain parquet on local disk so it stays
-#: valid for the owning session's lifetime.
-_MINHASH_STAGE_CACHE: dict = {}
+#: micro-batch deliveries per staged stream source
+_N_CHUNKS = 4
 
 
-def _minhash_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the documents table as 4 deterministic hash-chunk files
-    (the micro-batch deliveries) ONCE per (session, sf_dir)."""
-    import os
-    import tempfile
-
+def _stage_chunks(
+    df: DataFrame, chunk: Column, scratch: str
+) -> tuple[str, list]:
+    """Stage ``df`` as up to ``_N_CHUNKS`` files ``chunk-<c>.parquet``
+    (the stream's micro-batch deliveries) in ``scratch/incoming``, with
+    ``chunk`` in ``[0, _N_CHUNKS)`` picking each row's file. ONE write job
+    for all chunks (partitionBy), then each chunk's part file is renamed
+    into the source dir: sequential per-chunk writes were about half of
+    a streaming key's cost. Delivery order (lexical by name once mtimes
+    tie) does not matter to any consumer. Returns the source dir and the
+    chunks that received rows."""
     import glob
+    import os
     import shutil
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MINHASH_STAGE_CACHE.get(ck)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    base = tempfile.mkdtemp(prefix="stream_minhash_src_")
-    src = os.path.join(base, "incoming")
-    os.makedirs(src)
-    # ONE write job for all 4 chunks (partitionBy), then flatten the
-    # part files into the source dir as chunk-<c>.parquet — r7 verdict
-    # item #3: the previous 4 sequential coalesce(1) jobs were ~half
-    # the key's bench cost. Delivery order (lexical by name once mtimes
-    # tie) doesn't matter: the accumulated pair set is order-free and
-    # the oracle is the batch pair set.
-    staging = os.path.join(base, "staging")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    staging = os.path.join(scratch, "staging")
     (
-        docs.withColumn("chunk", F.pmod("doc_id", F.lit(4)))
-        .repartition(4, "chunk")
+        df.withColumn("chunk", chunk)
+        .repartition(_N_CHUNKS, "chunk")
         .write.partitionBy("chunk")
         .parquet(staging)
     )
-    for c in range(4):
+    src = os.path.join(scratch, "incoming")
+    os.makedirs(src)
+    present = []
+    for c in range(_N_CHUNKS):
         parts = glob.glob(os.path.join(staging, f"chunk={c}", "part-*"))
-        assert len(parts) == 1, parts
-        os.rename(parts[0], os.path.join(src, f"chunk-{c}.parquet"))
+        assert len(parts) <= 1, parts
+        if parts:
+            os.rename(parts[0], os.path.join(src, f"chunk-{c}.parquet"))
+            present.append(c)
     shutil.rmtree(staging, ignore_errors=True)
-    for stale in [x for x in _MINHASH_STAGE_CACHE if x[0] != ck[0]]:
-        # evicted entries are dead-session mkdtemp scratch — remove the
-        # whole tempdir (the parent of the incoming/ dir) so long-lived
-        # processes don't accumulate orphaned staged data.
-        shutil.rmtree(
-            os.path.dirname(_MINHASH_STAGE_CACHE[stale]),
-            ignore_errors=True,
+    return src, present
+
+
+def _all_chunks(spark: SparkSession, key: tuple, frame, chunk_col: str) -> str:
+    """A session-staged source dir of ``frame()`` chunked on
+    ``chunk_col mod _N_CHUNKS``, with every chunk present."""
+
+    def build(scratch: str) -> str:
+        src, present = _stage_chunks(
+            frame(), F.pmod(chunk_col, F.lit(_N_CHUNKS)), scratch
         )
-        del _MINHASH_STAGE_CACHE[stale]
-    _MINHASH_STAGE_CACHE[ck] = src
-    return src
+        assert present == list(range(_N_CHUNKS)), present
+        return src
+
+    return session_stage(spark, key, build)
+
+
+def _minhash_stage(spark: SparkSession, sf_dir: str) -> str:
+    """The documents table as 4 deterministic hash-chunk files (the
+    micro-batch deliveries), staged once per (session, sf_dir)."""
+    return _all_chunks(
+        spark,
+        ("minhash_stream", sf_dir),
+        lambda: load_table(spark, sf_dir, "documents").select(
+            "doc_id", "text"
+        ),
+        "doc_id",
+    )
 
 
 def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,48 +505,17 @@ def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sjobs.read_stream_dedup_pairs(spark, f"{base}/pairs")
 
 
-#: staged 4-chunk orders source cache, same lifecycle as
-#: _MINHASH_STAGE_CACHE
-_TXLOG_STAGE_CACHE: dict = {}
-
-
 def _txlog_sink_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Stage orders as 4 deterministic hash-chunk files (the stream's
-    micro-batch deliveries) once per (session, sf_dir)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TXLOG_STAGE_CACHE.get(ck)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    base = tempfile.mkdtemp(prefix="stream_txlog_src_")
-    src = os.path.join(base, "incoming")
-    os.makedirs(src)
-    staging = os.path.join(base, "staging")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
+    """Orders as 4 deterministic hash-chunk files (the stream's
+    micro-batch deliveries), staged once per (session, sf_dir)."""
+    return _all_chunks(
+        spark,
+        ("txlog_stream", sf_dir),
+        lambda: load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        ),
+        "o_orderkey",
     )
-    (
-        orders.withColumn("chunk", F.pmod("o_orderkey", F.lit(4)))
-        .repartition(4, "chunk")
-        .write.partitionBy("chunk")
-        .parquet(staging)
-    )
-    for c in range(4):
-        parts = glob.glob(os.path.join(staging, f"chunk={c}", "part-*"))
-        assert len(parts) == 1, parts
-        os.rename(parts[0], os.path.join(src, f"chunk-{c}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
-    for stale in [x for x in _TXLOG_STAGE_CACHE if x[0] != ck[0]]:
-        shutil.rmtree(
-            os.path.dirname(_TXLOG_STAGE_CACHE[stale]), ignore_errors=True
-        )
-        del _TXLOG_STAGE_CACHE[stale]
-    _TXLOG_STAGE_CACHE[ck] = src
-    return src
 
 
 def q_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -577,56 +554,26 @@ def q_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sinks._txlog_read(spark, log_dir, as_of=None)
 
 
-#: staged 4-chunk CDC change-set cache, same lifecycle as the other
-#: session caches
-_CDC_STAGE_CACHE: dict = {}
-
-
-def _cdc_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Stage `sinks._merge_changes` as 4 deterministic hash-chunk files
-    (the CDC deliveries) once per (session, sf_dir). Chunking on the
-    (possibly re-keyed) row key keeps chunks key-disjoint, so applying
-    them sequentially equals the one-shot merge."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+def _cdc_stage(spark: SparkSession, sf_dir: str) -> tuple:
+    """`sinks._merge_changes` as 4 deterministic hash-chunk files (the
+    CDC deliveries), staged once per (session, sf_dir); returns the
+    source dir and its schema. Chunking on the (possibly re-keyed) row
+    key keeps chunks key-disjoint, so applying them sequentially equals
+    the one-shot merge."""
     from aind_data_transformation_spark.queries import sinks as _sinks
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CDC_STAGE_CACHE.get(ck)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    base = tempfile.mkdtemp(prefix="stream_txlog_cdc_src_")
-    src = os.path.join(base, "incoming")
-    os.makedirs(src)
-    staging = os.path.join(base, "staging")
-    changes = _sinks._merge_changes(spark, sf_dir)
-    # chunk on key div 4: the change-set's keys live in fixed residues
-    # mod 4 (that's how the fixture maps ops to batches), so dividing
-    # first spreads every op kind across all four deliveries
-    (
-        changes.withColumn(
-            "chunk", F.pmod(F.expr("o_orderkey div 4"), F.lit(4))
+    def build(scratch: str) -> tuple:
+        # chunk on key div 4: the change-set's keys live in fixed residues
+        # mod 4 (that's how the fixture maps ops to batches), so dividing
+        # first spreads every op kind across all four deliveries
+        src, _ = _stage_chunks(
+            _sinks._merge_changes(spark, sf_dir),
+            F.pmod(F.expr("o_orderkey div 4"), F.lit(_N_CHUNKS)),
+            scratch,
         )
-        .repartition(4, "chunk")
-        .write.partitionBy("chunk")
-        .parquet(staging)
-    )
-    for c in range(4):
-        parts = glob.glob(os.path.join(staging, f"chunk={c}", "part-*"))
-        assert len(parts) <= 1, parts
-        if parts:
-            os.rename(parts[0], os.path.join(src, f"chunk-{c}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
-    for stale in [x for x in _CDC_STAGE_CACHE if x[0] != ck[0]]:
-        shutil.rmtree(
-            os.path.dirname(_CDC_STAGE_CACHE[stale]), ignore_errors=True
-        )
-        del _CDC_STAGE_CACHE[stale]
-    _CDC_STAGE_CACHE[ck] = src
-    return src
+        return src, spark.read.parquet(src).schema
+
+    return session_stage(spark, ("cdc_stream", sf_dir), build)
 
 
 def q_stream_txlog_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -640,17 +587,15 @@ def q_stream_txlog_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     break the hash. Crash-replay idempotence (kill between merge commit
     and checkpoint commit, restart) is asserted in
     tests/test_streaming.py."""
-    import os
     import tempfile
 
     from aind_data_transformation_spark.queries import sinks as _sinks
     from aind_data_transformation_spark.streaming import jobs as sjobs
 
-    src = _cdc_stage(spark, sf_dir)
+    src, schema = _cdc_stage(spark, sf_dir)
     log_dir = _sinks._build_txlog_table(
         spark, sf_dir, "txlog_table_stream_cdc"
     )
-    schema = spark.read.parquet(os.path.join(src, "chunk-0.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -306,42 +306,23 @@ def verified_near_dups(
         df, id_col, text_col, materializer=materializer
     ).where(F.col("jaccard") >= threshold)
 
-#: verified near-dup pair cache over the DOCUMENTS table:
-#: (applicationId, sf_dir, threshold) -> staged parquet dir. The LSH +
-#: exact-Jaccard verification pass is the expensive common prefix of
-#: dedup_minhash_verified, dedup_clusters, and corpus_dedup_cascade —
-#: stage it once per session like the IVF-layout / dedup-cluster caches;
-#: dead-session entries are evicted with their scratch dirs on insert.
-_VERIFIED_PAIRS_CACHE: dict = {}
-
 
 def verified_near_dups_docs(spark, sf_dir: str, threshold: float = 0.7):
-    """`verified_near_dups` over the documents table, computed once per
-    (session, sf_dir, threshold) and read back from a staged parquet.
-    Columns: (id_a, id_b, jaccard)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
+    """`verified_near_dups` over the documents table, staged once per
+    (session, sf_dir, threshold): the LSH + exact-Jaccard pass is the
+    expensive common prefix of dedup_minhash_verified, dedup_clusters and
+    corpus_dedup_cascade. Columns: (id_a, id_b, jaccard)."""
     from aind_data_transformation_spark.io.sources import load_table
+    from aind_data_transformation_spark.ops import staged_parquet
 
-    ck = (spark.sparkContext.applicationId, sf_dir, threshold)
-    hit = _VERIFIED_PAIRS_CACHE.get(ck)
-    if hit is not None and _os.path.isdir(hit):
-        return spark.read.parquet(hit)
-    d = load_table(spark, sf_dir, "documents")
-    pairs = verified_near_dups(d, "doc_id", "text", threshold=threshold)
-    out = _os.path.join(
-        _tempfile.gettempdir(),
-        "spark_graft_texthash",
-        str(_os.getpid()),
-        sf_dir.rstrip("/").rsplit("/", 1)[-1],
-        f"verified_pairs_{int(threshold * 100)}",
+    return staged_parquet(
+        spark,
+        ("verified_pairs", sf_dir, threshold),
+        lambda: verified_near_dups(
+            load_table(spark, sf_dir, "documents"),
+            "doc_id",
+            "text",
+            threshold=threshold,
+        ),
     )
-    pairs.write.mode("overwrite").parquet(out)
-    for stale in [x for x in _VERIFIED_PAIRS_CACHE if x[0] != ck[0]]:
-        _shutil.rmtree(_VERIFIED_PAIRS_CACHE[stale], ignore_errors=True)
-        del _VERIFIED_PAIRS_CACHE[stale]
-    _VERIFIED_PAIRS_CACHE[ck] = out
-    return spark.read.parquet(out)
 

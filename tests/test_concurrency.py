@@ -16,6 +16,8 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+
 from tests.conftest import TEST_SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -450,3 +452,133 @@ def test_concurrent_load_table_fills_schema_cache_once_per_table(
     )
     app = spark.sparkContext.applicationId
     assert {k[0] for k in sources._SCHEMA_CACHE} == {app}
+
+
+class _StubSession:
+    """Just enough of a SparkSession for ``ops.session_stage``."""
+
+    def __init__(self, app_id: str):
+        self.sparkContext = type("SC", (), {"applicationId": app_id})()
+
+
+@pytest.fixture
+def ops(monkeypatch):
+    """The ``ops`` module with an empty session-stage table; the scratch
+    dirs made during the test are removed afterwards."""
+    from aind_data_transformation_spark import ops as ops_module
+
+    monkeypatch.setattr(ops_module, "_STAGES", {})
+    yield ops_module
+    ops_module._drop_stages()
+
+
+def test_session_stage_concurrent_first_calls_build_once(ops):
+    """8 threads first-call one key with a slow build: it runs once and
+    every thread gets the same value."""
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    spark = _StubSession("app-1")
+    builds = []
+    lock = threading.Lock()
+
+    def build(scratch):
+        with lock:
+            builds.append(scratch)
+        time.sleep(0.3)
+        return object()
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            values = list(
+                pool.map(
+                    lambda _: ops.session_stage(spark, ("slow", "x"), build),
+                    range(8),
+                    timeout=60,
+                )
+            )
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(builds) == 1
+    assert all(v is values[0] for v in values)
+
+
+def test_session_stage_new_application_evicts_dead_entries(ops):
+    """A second application id rebuilds the key; the first application's
+    entry is dropped and its scratch dir removed, while the new entry's
+    dir exists."""
+    scratches = []
+
+    def build(scratch):
+        scratches.append(scratch)
+        return len(scratches)
+
+    assert ops.session_stage(_StubSession("app-a"), ("s", "x"), build) == 1
+    assert ops.session_stage(_StubSession("app-a"), ("s", "x"), build) == 1
+    assert ops.session_stage(_StubSession("app-b"), ("s", "x"), build) == 2
+    assert [k[0] for k in ops._STAGES] == ["app-b"]
+    assert not os.path.exists(scratches[0])
+    assert os.path.isdir(scratches[1])
+
+
+def test_session_stage_inputs_get_distinct_scratch_dirs(ops):
+    """Keys that differ only in an input never share a scratch dir, so
+    one input's build can never overwrite another's output."""
+    spark = _StubSession("app-1")
+    a = ops.session_stage(spark, ("s", "/a/sfx"), lambda d: d)
+    b = ops.session_stage(spark, ("s", "/b/sfx"), lambda d: d)
+    c = ops.session_stage(spark, ("s", "/a/sfx", 8), lambda d: d)
+    assert len({a, b, c}) == 3
+    assert all(os.path.isdir(d) for d in (a, b, c))
+
+
+def test_session_stage_missing_scratch_dir_forces_rebuild(ops):
+    """An entry is valid only while its scratch dir exists."""
+    import shutil
+
+    spark = _StubSession("app-1")
+    first = ops.session_stage(spark, ("s",), lambda d: d)
+    assert ops.session_stage(spark, ("s",), lambda d: "unused") == first
+    shutil.rmtree(first)
+    second = ops.session_stage(spark, ("s",), lambda d: d)
+    assert second != first and os.path.isdir(second)
+
+
+def test_application_id_read_only_by_the_two_session_caches():
+    """``ops.session_stage`` is the one session-stage cache, beside the
+    table-schema cache of ``io/sources.table_schema`` (keyed by file
+    version, not a scratch stage). A new ``sparkContext.applicationId``
+    read anywhere else is a hand-rolled cache."""
+    import ast
+
+    pkg = os.path.join(REPO, "aind_data_transformation_spark")
+    found = set()
+    for d, _dirs, files in os.walk(pkg):
+        for f in (f for f in files if f.endswith(".py")):
+            path = os.path.join(d, f)
+            tree = ast.parse(open(path).read(), path)
+            parent = {
+                child: node
+                for node in ast.walk(tree)
+                for child in ast.iter_child_nodes(node)
+            }
+            for node in ast.walk(tree):
+                if not (
+                    isinstance(node, ast.Attribute)
+                    and node.attr == "applicationId"
+                ):
+                    continue
+                fn = node
+                while fn is not None and not isinstance(
+                    fn, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ):
+                    fn = parent.get(fn)
+                where = fn.name if fn is not None else "<module>"
+                found.add((os.path.relpath(path, pkg), where))
+    assert found == {
+        ("ops.py", "session_stage"),
+        (os.path.join("io", "sources.py"), "table_schema"),
+    }

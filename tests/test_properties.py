@@ -358,23 +358,34 @@ def test_lloyd_cache_isolated_by_corpus_and_k(spark):
     collision across corpora or cluster counts would silently serve one
     corpus's cells to another's probes — hash-green at the checked SF
     and wrong everywhere else."""
+    import os
+
+    from aind_data_transformation_spark import ops
     from aind_data_transformation_spark.queries.llm_vectors import (
-        _LLOYD_CACHE,
         _lloyd_rounds,
     )
 
-    _, a_small, _, _ = _lloyd_rounds(spark, "/root/testdata/sf0.001", k=4)
-    _, a_big, _, _ = _lloyd_rounds(spark, "/root/testdata/sf0.01", k=4)
-    _, a_k8, _, _ = _lloyd_rounds(spark, "/root/testdata/sf0.001", k=8)
-    keys = {k for k in _LLOYD_CACHE}
-    assert len({(k[1], k[2]) for k in keys}) >= 3
+    fixtures = os.path.dirname(TEST_SF_DIR)
+    small, big = (os.path.join(fixtures, s) for s in ("sf0.001", "sf0.01"))
+    _, a_small, _, _ = _lloyd_rounds(spark, small, k=4)
+    _, a_big, _, _ = _lloyd_rounds(spark, big, k=4)
+    _, a_k8, _, _ = _lloyd_rounds(spark, small, k=8)
+    app = spark.sparkContext.applicationId
+    entries = [
+        ops._STAGES[(app, "lloyd", sf, k)]
+        for sf, k in ((small, 4), (big, 4), (small, 8))
+    ]
+    assert len({id(e) for e in entries}) == 3
+    assert len({e["scratch"] for e in entries}) == 3
+    for e, a2 in zip(entries, (a_small, a_big, a_k8)):
+        assert e["value"][1] is a2
     # same corpus, different k -> different cell structure
     assert a_small is not a_k8
     assert a_k8.select("cid").distinct().count() > a_small.select(
         "cid"
     ).distinct().count()
     # repeat call returns the identical cached frames
-    _, again, _, _ = _lloyd_rounds(spark, "/root/testdata/sf0.001", k=4)
+    _, again, _, _ = _lloyd_rounds(spark, small, k=4)
     assert again is a_small
 
 

@@ -795,6 +795,24 @@ def test_codec_tradeoff_sizes_are_ordinal(spark):
     assert sizes["zstd"] <= sizes["snappy"]
 
 
+def test_codec_tradeoff_writes_stay_in_caller_job_group(spark):
+    """The three codec writes run on a thread pool; each worker inherits
+    the caller's job group, so the key's work is attributed to it (the
+    Spark UI, job cancellation and per-key job counts all go by group).
+    No job of the call runs outside the group."""
+    from tests.test_sources import _jobs_in_group
+
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    _, n_jobs = _jobs_in_group(
+        spark,
+        "codec-tradeoff-group",
+        lambda: sinks.q_sink_codec_tradeoff(spark, TEST_SF_DIR),
+    )
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert n_jobs >= len(sinks._TRADEOFF_CODECS)
+
+
 def test_compact_small_files_collapses_file_count(spark):
     """The compactor must actually fix the layout: 64 fragmented input
     files collapse to the byte-planned target count (ceil(total bytes /
