@@ -41,6 +41,22 @@ DETERMINISTIC epoch-named data dir plus a ``txn`` idempotence marker
 micro-batch (crash between sink commit and checkpoint commit) finds
 its marker in the log and skips instead of double-applying.
 
+This module is the format's ONE replay, commit and schema core; the
+engine's mutators and snapshot reads (`queries/sinks.py`,
+`queries/streaming_batch.py`, `streaming/jobs.py`) call it rather than
+keeping copies:
+
+- replay: `_log_rows` (checkpoint + JSON tail) feeds `_live_files`,
+  `_incremental_files`, `_live_dvs` and `_live_adds` — one last-action-
+  per-path rule (remove beats add within a commit) — plus
+  `_version_as_of_ts` (AS OF TIMESTAMP) and `_mapping_as_of`;
+- commit: `commit_loop` is the only retry loop around the put-if-absent
+  `attempt_commit` (one snapshot per attempt, a budget, an optional
+  cheap rebase); losing past the budget raises `TxlogConflictError`;
+- schema: `_snapshot_ddl` decides a snapshot's schema from the log
+  (mapping, evolved DDL) or the first live file's footer, so the engine
+  reads snapshots with ``spark.read.schema(ddl)`` and no inference job.
+
 Reference scope: the reference framework (core.py:15-110) reads opaque
 input directories; this connector is the engine-idiomatic equivalent
 surface for its own table format.
@@ -94,8 +110,9 @@ def _log_rows(log_dir: str) -> list:
     """Driver-side log replay input: every action line of every commit
     file (metadata-sized), via stdlib json — no Spark needed, so the
     reader classes stay picklable and executor-safe. Checkpoint-aware:
-    a compacted table replays latest checkpoint parquet + JSON tail,
-    matching queries/sinks._txlog_log_rows."""
+    a compacted table replays latest checkpoint parquet + JSON tail.
+    The engine's one entry point (`queries/sinks._txlog_log_rows`)
+    normalizes these rows and applies the read gate."""
     ckpts = _checkpoint_dirs(log_dir)
     rows = []
     ckpt_version = -1
@@ -117,8 +134,9 @@ def _log_rows(log_dir: str) -> list:
 
 
 def _live_files(rows: list, as_of=None) -> list:
-    """Last action per path wins (remove beats add within a commit),
-    matching queries/sinks._txlog_live_from_rows."""
+    """The live file list at ``as_of`` (None = head): last action per
+    path wins, with remove beating add within one commit (the
+    (commit, action) sort puts 'remove' after 'add')."""
     last: dict = {}
     for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
         if as_of is not None and r["commit"] > as_of:
@@ -143,8 +161,10 @@ def _incremental_files(rows: list, start: int, end: int) -> list:
 
 
 def _live_dvs(rows: list, live: list, as_of=None) -> dict:
-    """Deletion-vector applicability from pure log metadata (matching
-    queries/sinks._txlog_live_dvs): sidecar -> its targets, kept only
+    """Deletion-vector applicability from pure log metadata: each
+    ``dv`` action names its TARGET data file, so a sidecar applies iff
+    one of its targets is still live (a rewrite of the target retires
+    the DV without a log edit); sidecar -> its targets, kept only
     where a target is still live (and, for time travel, only DVs
     committed at or before ``as_of`` — later deletes must not apply to
     an earlier snapshot). Returned as {target data dir: [sidecar
@@ -162,11 +182,30 @@ def _live_dvs(rows: list, live: list, as_of=None) -> dict:
     return by_target
 
 
+def _version_as_of_ts(rows: list, ts: int) -> int:
+    """``AS OF TIMESTAMP`` resolution: the latest commit whose
+    commitInfo timestamp (microseconds) is at or before ``ts``
+    (Delta's rule). Well-defined because `attempt_commit` clamps
+    commit timestamps to be non-decreasing."""
+    cand = [
+        r["commit"]
+        for r in rows
+        if r.get("action") == "commitInfo"
+        and r.get("ts") is not None
+        and r["ts"] <= ts
+    ]
+    if not cand:
+        raise ValueError(
+            f"no commit at or before timestamp {ts}; table history"
+            " begins later"
+        )
+    return max(cand)
+
+
 def _resolve_as_of(rows: list, options) -> "int | None":
     """Time-travel resolution for the reader options: ``version_as_of``
-    (a commit number) or ``timestamp_as_of`` (microseconds, resolved to
-    the latest commit whose commitInfo ts <= t — the same rule as the
-    engine's AS OF TIMESTAMP). None = head."""
+    (a commit number) or ``timestamp_as_of`` (microseconds, resolved by
+    `_version_as_of_ts`). None = head."""
     v = options.get("version_as_of")
     t = options.get("timestamp_as_of")
     if v is not None and t is not None:
@@ -176,20 +215,7 @@ def _resolve_as_of(rows: list, options) -> "int | None":
     if v is not None:
         return int(v)
     if t is not None:
-        ts = int(t)
-        cand = [
-            r["commit"]
-            for r in rows
-            if r.get("action") == "commitInfo"
-            and r.get("ts") is not None
-            and r["ts"] <= ts
-        ]
-        if not cand:
-            raise ValueError(
-                f"no commit at or before timestamp {ts}; table history"
-                " begins later"
-            )
-        return max(cand)
+        return _version_as_of_ts(rows, int(t))
     return None
 
 
@@ -569,17 +595,6 @@ class TxlogProtocolError(RuntimeError):
     unsupported-table-feature analogue)."""
 
 
-def _row_get(r, k, default=None):
-    """Tolerant field access across the two row shapes log replay
-    yields: stdlib dicts (connector `_log_rows`) and pyspark Rows
-    (the engine's `_txlog_log_rows`), which have no ``.get``."""
-    try:
-        v = r[k]
-    except (KeyError, IndexError, ValueError, TypeError):
-        return default
-    return default if v is None else v
-
-
 def _latest_protocol(rows: list, as_of=None):
     """Latest protocol payload at/before ``as_of`` (None = table head),
     decoded from the newest ``protocol`` action's JSON column. Protocol
@@ -588,14 +603,14 @@ def _latest_protocol(rows: list, as_of=None):
     best = None
     best_commit = -1
     for r in rows:
-        if _row_get(r, "action") != "protocol":
+        if r.get("action") != "protocol":
             continue
-        c = _row_get(r, "commit", 0)
+        c = r.get("commit") or 0
         if as_of is not None and c > as_of:
             continue
         if c >= best_commit:
             best_commit = c
-            best = _row_get(r, "protocol")
+            best = r.get("protocol")
     if best is None:
         return None
     return json.loads(best)
@@ -675,7 +690,6 @@ def set_protocol(
     min_writer: int = 1,
     reader_features=(),
     writer_features=(),
-    max_retries: int = 20,
 ) -> int:
     """Commit a ``protocol`` action (Delta's upgradeTableProtocol).
     Validated against the PRE-upgrade snapshot like any transaction —
@@ -693,21 +707,15 @@ def set_protocol(
         },
         sort_keys=True,
     )
-    for _ in range(max_retries):
-        rows = _log_rows(log_dir)
-        version = max((r.get("commit", 0) for r in rows), default=-1) + 1
-        act = {
-            "commit": version,
-            "action": "protocol",
-            "protocol": payload,
-        }
-        if attempt_commit(
-            log_dir, version, [act], op="SET PROTOCOL", rows=rows
-        ):
-            return version
-    raise RuntimeError(
-        f"set_protocol lost the commit race {max_retries} times"
+    version, _ = commit_loop(
+        log_dir,
+        lambda rows, v: [
+            {"commit": v, "action": "protocol", "protocol": payload}
+        ],
+        "SET PROTOCOL",
+        WRITER_COMMIT_BUDGET,
     )
+    return version
 
 
 def text_candidate_files(log_dir: str, needles) -> tuple:
@@ -756,15 +764,24 @@ def _part_files(data_dirs: list) -> list:
 
 
 def _infer_ddl(log_dir: str, options=None) -> str:
-    """Spark DDL for the table at the requested snapshot: a
-    column-MAPPED table's schema is its mapping's logical names/types
-    (the log owns the schema, files only know physical names);
-    otherwise the first live file's parquet footer (pyarrow) — the
-    same footer-driven inference a JVM parquet scan performs."""
+    """Spark DDL for the table at the snapshot the reader options
+    request (see `_snapshot_ddl`)."""
+    rows = _log_rows(log_dir)
+    return _snapshot_ddl(rows, _resolve_as_of(rows, options or {}))
+
+
+def _snapshot_ddl(rows: list, as_of=None) -> str:
+    """Spark DDL of the snapshot at ``as_of`` (None = head) — the one
+    schema rule for the connector and the engine: a column-MAPPED
+    table's schema is its mapping's logical names/types (the log owns
+    the schema, files only know physical names); an EVOLVED table's is
+    its latest metaData DDL (old files null-fill the added columns at
+    read time); any other table's is the first live file's parquet
+    footer, read with pyarrow on the driver — the footer a JVM parquet
+    scan would infer from, without the Spark job that inference costs.
+    A footer type the DDL vocabulary lacks raises."""
     import pyarrow.parquet as pq
 
-    rows = _log_rows(log_dir)
-    as_of = _resolve_as_of(rows, options or {})
     mapping = _mapping_as_of(rows, as_of)
     if mapping is not None:
         return ", ".join(
@@ -772,36 +789,25 @@ def _infer_ddl(log_dir: str, options=None) -> str:
         )
     evolved = _ddl_schema_as_of(rows, as_of)
     if evolved is not None:
-        # an EVOLVED table's schema is owned by the log (the additive
-        # mechanic: old files null-fill the added columns at read time)
         return ", ".join(f"`{n}` {t}" for n, t in _parse_ddl(evolved))
     live = _live_files(rows, as_of=as_of)
     if not live:
-        raise ValueError(f"txlog table has no live files: {log_dir}")
-    parts = _part_files(live[:1])
-    schema = pq.read_schema(parts[0])
-    m = {
-        "int64": "bigint",
-        "int32": "int",
-        "double": "double",
-        "float": "float",
-        "string": "string",
-        "large_string": "string",
-        "bool": "boolean",
-        "date32[day]": "date",
-    }
+        raise ValueError("txlog table has no live files")
 
     def ddl(t):
-        s = str(t)
-        if s in m:
-            return m[s]
-        if s.startswith("timestamp"):
-            return "timestamp"
-        if s.startswith("decimal"):
+        if str(t).startswith("decimal"):
             # pyarrow prints decimal128(p, s) — not valid Spark DDL
             return f"decimal({t.precision},{t.scale})"
-        raise ValueError(f"unsupported txlog column type: {s}")
+        if str(t).startswith("timestamp") and t.tz is None and t.unit != "ns":
+            # isAdjustedToUTC=false: Spark infers TIMESTAMP_NTZ (a UTC-
+            # adjusted column carries a tz here; INT96 reads as ns)
+            return "timestamp_ntz"
+        d = _arrow_ddl(t)
+        if not d:
+            raise ValueError(f"unsupported txlog column type: {t}")
+        return d
 
+    schema = pq.read_schema(_part_files(live[:1])[0])
     return ", ".join(f"`{f.name}` {ddl(f.type)}" for f in schema)
 
 
@@ -829,9 +835,9 @@ def attempt_commit(
     skew, which is what makes ``AS OF TIMESTAMP`` resolution
     (latest commit with ts <= t) well-defined.
 
-    This is the ONE commit primitive of the format — the engine's
-    mutators (`queries/sinks._txlog_attempt_commit`) delegate here, so
-    the connector and the query tier can never drift on log semantics.
+    This is the ONE commit primitive of the format — every retrying
+    writer reaches it through `commit_loop`, so the connector and the
+    engine's mutators can never drift on log semantics.
     Being the one primitive also makes it the write-side protocol
     gate: the table's protocol (version + writer features, validated
     against the pre-commit snapshot) is enforced HERE, so no writer —
@@ -886,6 +892,70 @@ def attempt_commit(
         for a in acts:
             fh.write(json.dumps(a) + "\n")
     return True
+
+
+#: commit-race budgets (commit attempts): an engine mutator's attempt
+#: may re-run Spark work, a connector writer's only rebuilds actions
+#: over already-published files, so the writers can afford more.
+#: Each retry revalidates against a fresh snapshot, so a budget bounds
+#: live-lock under contention, not correctness.
+ENGINE_COMMIT_BUDGET = 3
+WRITER_COMMIT_BUDGET = 20
+
+
+class TxlogConflictError(RuntimeError):
+    """A concurrent writer kept winning the commit race past the retry
+    budget, or changed what this commit was validated against (Delta's
+    ConcurrentModificationException analogue)."""
+
+
+def commit_loop(
+    log_dir: str,
+    plan,
+    op: str,
+    budget: int = ENGINE_COMMIT_BUDGET,
+    rebase=None,
+    read=_log_rows,
+    **commit_kw,
+):
+    """THE optimistic commit loop of the format. Each attempt reads ONE
+    log snapshot (``read(log_dir)``), claims version head+1 (0 on an
+    empty log), and commits through `attempt_commit` with that snapshot
+    as ``rows`` — so what the actions were validated against, the
+    version they claim and the protocol gate all see the same state,
+    and a commit landing in between collides on the version file.
+
+    ``plan(rows, version)`` returns the actions to commit, or None when
+    there is nothing to commit (an empty append, an already-applied
+    txn). After a lost race, ``rebase(rows, lost)`` — when given — says
+    whether the previous plan is still valid against the fresh snapshot
+    (``lost``: the version the intervening commits took first); True
+    re-commits the same actions at the new version without re-planning
+    (the cheap path of a conflict check), False re-plans. A rebase may
+    raise `TxlogConflictError` itself (a caller that must not serialize
+    after a conflicting writer). ``commit_kw`` goes to `attempt_commit`.
+
+    Returns ``(version, attempts)`` — version None when ``plan``
+    declined; raises `TxlogConflictError` after ``budget`` lost
+    attempts."""
+    actions = lost = None
+    for attempt in range(1, budget + 1):
+        rows = read(log_dir)
+        version = max((r["commit"] for r in rows), default=-1) + 1
+        if actions is not None and rebase is not None and rebase(rows, lost):
+            actions = [{**a, "commit": version} for a in actions]
+        else:
+            actions = plan(rows, version)
+            if actions is None:
+                return None, attempt - 1
+        if attempt_commit(
+            log_dir, version, actions, op=op, rows=rows, **commit_kw
+        ):
+            return version, attempt
+        lost = version
+    raise TxlogConflictError(
+        f"{op} lost the commit race {budget} times: {log_dir}"
+    )
 
 
 #: default row-group split threshold: files larger than this are split
@@ -1624,12 +1694,6 @@ class TxlogStreamReader(DataSourceStreamReader):
 
     def commit(self, end):
         pass
-
-
-#: commit-race retry budget for the connector's writers (each retry
-#: revalidates against a fresh log snapshot, so this bounds live-lock
-#: under heavy writer contention, not correctness)
-_WRITE_MAX_RETRIES = 20
 
 
 #: DESCRIBE surfaces the connector serves without engine imports
@@ -2572,7 +2636,8 @@ class TxlogBatchWriter(DataSourceArrowWriter):
         #: batches by this column's value; the commit publishes one
         #: data dir per partition value and one ``part``-valued add
         #: action each, so partition-pruned reads
-        #: (queries/sinks._txlog_part_live) plan on pure log metadata.
+        #: (`_live_adds` carries each add's ``part``) plan on pure log
+        #: metadata.
         #: Combines with stats_col: each partition's add also records
         #: that partition's exact min/max (partition pruning AND range
         #: pruning from one commit's metadata).
@@ -2703,7 +2768,7 @@ class TxlogBatchWriter(DataSourceArrowWriter):
             checkpoint_log(self.log_dir, version)
 
     def _commit_published(self, msgs, part_adds, final_dir):
-        for _ in range(_WRITE_MAX_RETRIES):
+        def plan(rows, version):
             # ONE log snapshot per attempt feeds BOTH the schema
             # decision and the attempt version: a concurrent
             # merge_schema commit between attempts changes the schema
@@ -2711,7 +2776,6 @@ class TxlogBatchWriter(DataSourceArrowWriter):
             # made on an earlier snapshot than the version claim would
             # be a lost update (the other writer's column silently
             # dropped from the head schema)
-            rows = _log_rows(self.log_dir)
             if self.overwrite:
                 evolved_ddl = self._overwrite_ddl(rows)
             else:
@@ -2719,7 +2783,6 @@ class TxlogBatchWriter(DataSourceArrowWriter):
                     self.log_dir, self.names, self.arrow_schema,
                     merge=self.merge_schema, rows=rows,
                 )
-            version = max((r["commit"] for r in rows), default=-1) + 1
             actions = []
             if evolved_ddl is not None:
                 actions.append(
@@ -2799,23 +2862,21 @@ class TxlogBatchWriter(DataSourceArrowWriter):
             if not actions:
                 return None  # empty append: nothing to commit
             _attach_bytes(actions)
-            # rows= hands attempt_commit this attempt's snapshot: the
-            # protocol write-gate (unknown writer features, append_only
-            # vs the overwrite's removes) validates against the same
-            # state the schema decision used, and a protocol rejection
-            # raises out through commit()'s cleanup guard, so the
-            # published-but-unreferenced final_dir is removed
-            if attempt_commit(
-                self.log_dir,
-                version,
-                actions,
-                op="OVERWRITE" if self.overwrite else "APPEND",
-                rows=rows,
-            ):
-                return version
-        raise RuntimeError(
-            f"txlog write lost the commit race {_WRITE_MAX_RETRIES} times"
+            return actions
+
+        # the loop hands attempt_commit each attempt's snapshot: the
+        # protocol write-gate (unknown writer features, append_only vs
+        # the overwrite's removes) validates against the same state the
+        # schema decision used, and a protocol rejection raises out
+        # through commit()'s cleanup guard, so the published-but-
+        # unreferenced final_dir is removed
+        version, _ = commit_loop(
+            self.log_dir,
+            plan,
+            "OVERWRITE" if self.overwrite else "APPEND",
+            WRITER_COMMIT_BUDGET,
         )
+        return version
 
     def abort(self, messages):
         _drop_temps(messages)
@@ -2942,11 +3003,9 @@ class TxlogStreamWriter(DataSourceStreamArrowWriter):
             checkpoint_log(self.log_dir, version)
 
     def _commit_epoch(self, msgs, part_adds, final_dir, txn):
-        for _ in range(_WRITE_MAX_RETRIES):
-            rows = _log_rows(self.log_dir)
+        def plan(rows, version):
             if self._txn_done(rows, txn):
                 return None  # a concurrent replayer committed this epoch
-            version = max((r["commit"] for r in rows), default=-1) + 1
             actions = []
             for pdir, v, nrows, st, bloom, tbloom in part_adds:
                 add = {
@@ -3005,15 +3064,12 @@ class TxlogStreamWriter(DataSourceStreamArrowWriter):
                 {"commit": version, "action": "txn", "path": txn}
             )
             _attach_bytes(actions)
-            if attempt_commit(
-                self.log_dir, version, actions, op="STREAMING UPDATE",
-                rows=rows,
-            ):
-                return version
-        raise RuntimeError(
-            f"txlog stream write lost the commit race "
-            f"{_WRITE_MAX_RETRIES} times (txn {txn})"
+            return actions
+
+        version, _ = commit_loop(
+            self.log_dir, plan, "STREAMING UPDATE", WRITER_COMMIT_BUDGET
         )
+        return version
 
     def abort(self, messages, batchId) -> None:
         _drop_temps(messages)

@@ -29,7 +29,23 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from aind_data_transformation_spark.ops import attach_broadcast, session_stage
 from pyspark.sql import types as T
 
+from aind_data_transformation_spark.io import txlog_source
 from aind_data_transformation_spark.io.sources import load_table, read_csv, read_json
+from aind_data_transformation_spark.io.txlog_source import (
+    ENGINE_COMMIT_BUDGET,
+    TxlogConflictError,
+    _ddl_schema_as_of,
+    _incremental_files,
+    _live_adds,
+    _live_dvs,
+    _live_files,
+    _log_rows,
+    _mapping_as_of,
+    _snapshot_ddl,
+    _version_as_of_ts,
+    check_protocol,
+    commit_loop,
+)
 
 
 def _scratch(sf_dir: str, name: str) -> str:
@@ -761,14 +777,7 @@ def q_sink_txlog_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # post-checkpoint tail), so the live set falls out of the standard
     # last-action-per-path replay — identical result to full-log
     # replay, O(checkpoint + tail) metadata cost
-    live = _txlog_live_from_rows(_txlog_log_rows(spark, log_dir))
-    snap = spark.read.parquet(*live)
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return _txlog_read(spark, log_dir, as_of=None)
 
 
 def _txlog_fixture_batches(spark: SparkSession, sf_dir: str) -> str:
@@ -873,31 +882,26 @@ _TXLOG_TS0 = 1_700_000_000_000_000
 def _txlog_log_rows(spark: SparkSession, log_dir: str) -> list:
     """ONE read of the action log, collected driver-side (metadata-sized:
     one row per action ever committed — the same snapshot computation
-    Delta performs). Mutating operations MUST derive everything they
-    validate against (live set, attempt version) from a single such
-    snapshot: two separate log reads can straddle a concurrent commit,
-    in which case the retry loop would commit at max+1 without having
-    revalidated against that commit's changes (a lost update)."""
-    # Driver-side replay through the connector's `_log_rows` (stdlib
-    # json + pyarrow for checkpoint parquet) — the log is metadata by
-    # design, and Delta computes snapshots on the driver for the same
-    # reason. Each call previously launched 1-2 distributed Spark jobs
-    # (spark.read.json(...).collect()) just to fetch a few KB of
-    # actions; with ~45 engine call sites, several per mutating key,
-    # that fixed job cost dominated the txlog family's bench profile.
-    # Rows are normalized to the full action schema (missing field ->
-    # None) so callers keep unconditional r["field"] access, exactly
-    # as the schema'd Spark read returned them. Checkpoint replay
-    # (reconciled state + JSON tail) and the crashed-compaction digit
-    # filter live in `_log_rows` itself — one implementation shared
-    # with the connector, no drift.
-    from aind_data_transformation_spark.io.txlog_source import _log_rows
+    Delta performs) through the connector's checkpoint-aware `_log_rows`.
+    Mutating operations MUST derive everything they validate against
+    (live set, attempt version) from a single such snapshot: two
+    separate log reads can straddle a concurrent commit (a lost update)
+    — `commit_loop` hands each attempt exactly one.
 
+    Rows are normalized to the full action schema (missing field ->
+    None) so callers keep unconditional r["field"] access. This is the
+    engine's protocol read-gate too: a table whose protocol demands a
+    reader version or feature this code does not implement fails here,
+    covering every engine read and (since mutators replay before
+    committing) every engine mutation. Checked at the table HEAD
+    (fail-closed even for time-travel reads); the connector reader
+    scopes the check to the travelled-to snapshot. Write-side checks
+    live in `attempt_commit`."""
     rows = [
         {f: r.get(f) for f in _TXLOG_ACTION_FIELDS}
         for r in _log_rows(log_dir)
     ]
-    _check_read_protocol(rows)
+    check_protocol(rows, "read")
     return rows
 
 
@@ -906,54 +910,50 @@ def _txlog_log_rows(spark: SparkSession, log_dir: str) -> list:
 #: when absent from the JSON line / checkpoint column set.
 _TXLOG_ACTION_FIELDS = (
     "commit", "action", "path", "target", "constraint", "part", "schema",
-    "ts", "op", "metrics", "min_key", "max_key", "part_col", "stats_col",
-    "bloom", "bloom_col", "bloom_bits", "stats_json", "bytes", "rows",
-    "protocol", "tbloom", "tbloom_col", "tbloom_bits",
+    "ts", "op", "metrics", "min_key", "max_key", "min_cust", "max_cust",
+    "part_col", "stats_col", "bloom", "bloom_col", "bloom_bits",
+    "stats_json", "bytes", "rows", "protocol", "tbloom", "tbloom_col",
+    "tbloom_bits",
 )
 
 
-def _check_read_protocol(rows: list) -> None:
-    """Protocol read-gate at the engine's ONE replay entry point: a
-    table whose protocol demands a reader version or feature this
-    code does not implement fails loudly here, covering every engine
-    read AND (since mutators replay before committing) every engine
-    mutation. Write-side feature checks live in the commit primitive
-    (`io/txlog_source.attempt_commit`). Tables without a protocol
-    action pass untouched. Checked at the table HEAD (fail-closed even
-    for time-travel reads — the as_of resolves after replay here); the
-    connector reader scopes the check to the travelled-to snapshot."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        check_protocol,
+def _txlog_commit(spark: SparkSession, log_dir: str, plan, op: str, **kw):
+    """`commit_loop` over the engine's replay (`_txlog_log_rows`) with
+    the engine mutators' budget; returns ``(version, attempts)``."""
+    return commit_loop(
+        log_dir, plan, op, read=lambda d: _txlog_log_rows(spark, d), **kw
     )
 
-    check_protocol(rows, "read")
+
+def _txlog_scan(
+    spark: SparkSession, rows: list, paths: list, as_of=None
+) -> DataFrame:
+    """Read ``paths`` — data files of the snapshot ``rows`` replays to
+    at ``as_of`` — under the log's schema (`_snapshot_ddl`), so no
+    snapshot read runs Spark's footer-inference job. A mapped table's
+    files hold PHYSICAL names, so they are read under the mapping's
+    physical DDL (a file written before an ADD surfaces NULL)."""
+    m = _mapping_as_of(rows, as_of)
+    if m is None:
+        ddl = _snapshot_ddl(rows, as_of)
+    else:
+        ddl = ", ".join(
+            f"`{c['physical']}` {c['type']}" for c in m["columns"]
+        )
+    return spark.read.schema(ddl).parquet(*paths)
 
 
-def _txlog_live_from_rows(rows: list, as_of=None) -> list:
-    """Replay collected log rows (optionally only commits <= as_of —
-    time travel) to the live file list: last action per path wins, with
-    remove beating add within one commit (matching the
-    max(struct(commit, action)) tie-break: 'remove' > 'add')."""
-    last: dict = {}
-    for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
-        if as_of is not None and r["commit"] > as_of:
-            continue
-        if r["action"] in ("add", "remove") and r["path"] is not None:
-            last[r["path"]] = r["action"]
-    return sorted(p for p, a in last.items() if a == "add")
-
-
-def _txlog_live_files(spark: SparkSession, log_dir: str, as_of) -> list:
-    """Replay the action log (optionally only commits <= as_of — time
-    travel) to the live file list: last action per path wins."""
-    return _txlog_live_from_rows(_txlog_log_rows(spark, log_dir), as_of)
+def _txlog_snapshot(spark: SparkSession, log_dir: str, as_of=None):
+    """The snapshot at ``as_of`` (None = head; version time travel is a
+    pure log-replay filter, commit <= v) read under the log's schema."""
+    rows = _txlog_log_rows(spark, log_dir)
+    return _txlog_scan(spark, rows, _live_files(rows, as_of), as_of)
 
 
 def _txlog_read(spark: SparkSession, log_dir: str, as_of) -> DataFrame:
     """Replay the action log (optionally only commits <= as_of — time
     travel) and aggregate the resulting snapshot."""
-    live = _txlog_live_files(spark, log_dir, as_of)
-    snap = spark.read.parquet(*live)
+    snap = _txlog_snapshot(spark, log_dir, as_of)
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum(
@@ -973,44 +973,6 @@ def q_sink_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _txlog_read(spark, log_dir, as_of=1)
 
 
-class TxlogConflictError(RuntimeError):
-    """A concurrent writer kept winning the commit race past the retry
-    budget (Delta's ConcurrentModificationException analogue)."""
-
-
-def _txlog_attempt_commit(
-    log_dir: str,
-    version: int,
-    actions,
-    op: str = "WRITE",
-    metrics=None,
-    extra_writer_features=(),
-) -> bool:
-    """ONE optimistic-concurrency commit attempt (put-if-absent on the
-    version file). Delegates to the connector's `attempt_commit`
-    (io/txlog_source.py) — the format's single commit primitive, shared
-    by the engine's mutators and the `df.write.format("txlog")` path —
-    which also stamps a ``commitInfo`` provenance action (operation
-    name + non-decreasing microsecond timestamp) unless the caller
-    supplied its own, powering ``AS OF TIMESTAMP`` and history audit."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        attempt_commit,
-    )
-
-    return attempt_commit(
-        log_dir,
-        version,
-        actions,
-        op=op,
-        metrics=metrics,
-        extra_writer_features=extra_writer_features,
-    )
-
-
-#: commit-race retry budget for the mutating txlog operations
-_TXLOG_MAX_RETRIES = 3
-
-
 def txlog_merge(
     spark: SparkSession,
     log_dir: str,
@@ -1026,7 +988,7 @@ def txlog_merge(
 
     Steps (each the production shape):
 
-    1. snapshot live files by log replay (`_txlog_live_files`);
+    1. snapshot live files by log replay (`_live_files`);
     2. map matched keys -> containing files via ``input_file_name()``
        — a semi-join against the delete/update keys, collapsed to a
        metadata-sized distinct file list (Delta's "touched files" scan);
@@ -1039,58 +1001,53 @@ def txlog_merge(
        because removes are logical — data files are deleted by VACUUM,
        never by MERGE.
 
-    Concurrency: the commit is one optimistic put-if-absent attempt
-    (`_txlog_attempt_commit`). Losing the race first runs Delta's CHEAP
-    conflict check against the commits it hadn't seen: if no intervener
-    touched any of our files, removed any file we read, or added rows
-    matching our change-set's keys (checked by a bounded semi-join
-    against only the interveners' added files — delta-sized, never the
-    table), our rewrite is still serializable as-is and is re-committed
-    verbatim at the next version with ZERO recompute — two writers
-    merging disjoint file sets both land on their first computation.
-    Only a real conflict re-runs the whole computation against the new
-    snapshot (revalidate-and-retry).
+    Concurrency: the commit goes through `commit_loop` (one log
+    snapshot per attempt, put-if-absent). Losing the race first runs
+    Delta's CHEAP conflict check against the commits it hadn't seen
+    (the loop's rebase hook): if no intervener touched any of our
+    files, removed any file we read, or added rows matching our
+    change-set's keys (checked by a bounded semi-join against only the
+    interveners' added files — delta-sized, never the table), our
+    rewrite is still serializable as-is and is re-committed verbatim at
+    the next version with ZERO recompute — two writers merging disjoint
+    file sets both land on their first computation. Only a real
+    conflict re-runs the whole computation against the new snapshot
+    (revalidate-and-retry).
 
     Scale: the rewrite cost is proportional to the TOUCHED bytes, not
     the table (the reason CoW wins for low-selectivity daily CDC); the
     file list and commit are driver-side metadata. Returns
     ``{"version", "touched", "added", "attempts", "recomputes"}`` for
     the layout assertions in tests/test_sinks.py."""
+    import uuid as _uuid
+
     data_cols = [c for c in changes.columns if c != "op"]
-    attempt = 0
-    for recomputes in range(_TXLOG_MAX_RETRIES):
+    matched_keys = changes.where(F.col("op").isin("D", "U")).select(key_col)
+    upserts = changes.where(F.col("op").isin("U", "I")).select(*data_cols)
+    st = {"plans": 0, "touched": [], "added": None}
+    # read by attempt_commit at commit time, so it always describes the
+    # plan being committed
+    metrics = {"n_added_files": 1}
+
+    def txn_applied(rows) -> bool:
+        return txn_id is not None and any(
+            r["action"] == "txn" and r["path"] == txn_id for r in rows
+        )
+
+    def plan(rows, version):
         # transactional idempotence (Delta's txn action): a caller that
         # replays the same logical transaction (a foreachBatch
         # micro-batch re-delivered after a crash) passes the same
         # txn_id; if a committed version already carries it, the merge
         # was applied — skip instead of double-applying the change-set.
-        if txn_id is not None and any(
-            r["action"] == "txn" and r["path"] == txn_id
-            for r in _txlog_log_rows(spark, log_dir)
-        ):
-            return {
-                "version": None,
-                "touched": [],
-                "added": None,
-                "attempts": attempt,
-                "recomputes": recomputes,
-                "skipped": txn_id,
-            }
-        # one log read per attempt: BOTH the live set and the attempt
-        # version come from the same collected snapshot, so any commit
-        # landing after this point collides on the version file below
-        # and forces a full revalidating retry (no lost-update window
-        # between "what files are live" and "what version am I").
-        log_rows = _txlog_log_rows(spark, log_dir)
-        live = _txlog_live_from_rows(log_rows)
-        version = max(r["commit"] for r in log_rows) + 1
+        st["plans"] += 1
+        if txn_applied(rows):
+            return None
+        live = _live_files(rows)
         # 2. touched files: which live files hold a key the change-set
         # deletes or updates. input_file_name() is a URI over the part
-        # file; normalize to the plain dir path the log records.
-        matched_keys = changes.where(F.col("op").isin("D", "U")).select(
-            key_col
-        )
-        snap = spark.read.parquet(*live).withColumn(
+        # file; normalize to the logged path.
+        snap = _txlog_scan(spark, rows, live).withColumn(
             "_src", _src_logged_col(live)
         )
         touched = sorted(
@@ -1106,12 +1063,9 @@ def txlog_merge(
         # dropped), plus update images and inserts. An insert-only
         # change-set (or one whose D/U keys match no live file) touches
         # nothing — commit just the new rows, no parquet read.
-        upserts = changes.where(F.col("op").isin("U", "I")).select(
-            *data_cols
-        )
         if touched:
             rewritten = (
-                spark.read.parquet(*touched)
+                _txlog_scan(spark, rows, touched)
                 .join(F.broadcast(matched_keys), key_col, "left_anti")
                 .select(*data_cols)
                 .unionByName(upserts)
@@ -1122,14 +1076,14 @@ def txlog_merge(
         # writers racing on the same version must never write the same
         # path — the loser's rewrite would otherwise be clobbered by
         # the winner's before the loser's cheap re-commit references it.
-        import uuid as _uuid
-
         merge_path = os.path.join(
             os.path.dirname(log_dir),
             "data",
             f"merge-{version:05d}-{_uuid.uuid4().hex[:8]}",
         )
         rewritten.write.mode("overwrite").parquet(merge_path)
+        st["touched"], st["added"] = touched, merge_path
+        metrics["n_removed_files"] = len(touched)
         # 4. one atomic commit: paired remove/add actions
         actions = [
             {"commit": version, "action": "remove", "path": p}
@@ -1142,78 +1096,59 @@ def txlog_merge(
             actions.append(
                 {"commit": version, "action": "txn", "path": txn_id}
             )
-        touched_set = set(touched)
-        while True:
-            attempt += 1
-            if _txlog_attempt_commit(
-                log_dir,
-                version,
-                actions,
-                op="MERGE",
-                metrics={
-                    "n_removed_files": len(touched),
-                    "n_added_files": 1,
-                },
-            ):
-                return {
-                    "version": version,
-                    "touched": touched,
-                    "added": merge_path,
-                    "attempts": attempt,
-                    "recomputes": recomputes,
-                }
-            # lost the race. Delta's cheap conflict check before the
-            # expensive recompute: look only at the commits we hadn't
-            # seen (>= our attempted version).
-            new_rows = _txlog_log_rows(spark, log_dir)
-            inter = [r for r in new_rows if r["commit"] >= version]
-            inter_removed = {
-                r["path"] for r in inter if r["action"] == "remove"
-            }
-            inter_added = sorted(
-                r["path"]
-                for r in inter
-                if r["action"] == "add" and r["path"] is not None
-            )
-            # conflict iff they touched a file WE rewrite (our removes
-            # would tombstone their rewrite, or vice versa). Removing a
-            # file we merely READ is harmless: we found no matched keys
-            # in it, and any matched keys in its replacement are caught
-            # by the key scan below.
-            conflict = bool(
-                (inter_removed | set(inter_added)) & touched_set
-            )
-            if not conflict and inter_added:
-                # do their NEW files contain any of our matched keys?
-                # Bounded: scans only the interveners' added files.
-                conflict = (
-                    spark.read.parquet(*inter_added)
-                    .join(F.broadcast(matched_keys), key_col, "left_semi")
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-            if conflict:
-                break  # full revalidate-and-retry (outer loop)
-            # disjoint writers: re-commit the SAME rewrite at the next
-            # version — no recompute, the merge file is already on disk
-            version = max(r["commit"] for r in new_rows) + 1
-            actions = [
-                {"commit": version, "action": "remove", "path": p}
-                for p in touched
-            ]
-            actions.append(
-                {"commit": version, "action": "add", "path": merge_path}
-            )
-            if txn_id is not None:
-                actions.append(
-                    {"commit": version, "action": "txn", "path": txn_id}
-                )
-            if attempt >= _TXLOG_MAX_RETRIES * 2:
-                break
-    raise TxlogConflictError(
-        f"merge lost the commit race after {attempt} attempts"
+        return actions
+
+    def rebase(rows, lost) -> bool:
+        # Delta's cheap conflict check: look only at the commits we
+        # hadn't seen (>= the version we lost).
+        inter = [r for r in rows if r["commit"] >= lost]
+        if txn_applied(inter):
+            return False  # re-plan, which skips
+        inter_removed = {r["path"] for r in inter if r["action"] == "remove"}
+        inter_added = sorted(
+            r["path"]
+            for r in inter
+            if r["action"] == "add" and r["path"] is not None
+        )
+        # conflict iff they touched a file WE rewrite (our removes
+        # would tombstone their rewrite, or vice versa). Removing a
+        # file we merely READ is harmless: we found no matched keys in
+        # it, and any matched keys in its replacement are caught by
+        # the key scan below.
+        if (inter_removed | set(inter_added)) & set(st["touched"]):
+            return False
+        # do their NEW files contain any of our matched keys? Bounded:
+        # scans only the interveners' added files.
+        return not inter_added or (
+            _txlog_scan(spark, rows, inter_added)
+            .join(F.broadcast(matched_keys), key_col, "left_semi")
+            .limit(1)
+            .count()
+            == 0
+        )
+
+    # a cheap rebase re-runs no Spark work, so a merge keeps its
+    # long-standing bound of twice the engine budget in commit attempts:
+    # every concurrent writer can cost it one lost race
+    version, attempts = _txlog_commit(
+        spark,
+        log_dir,
+        plan,
+        "MERGE",
+        budget=2 * ENGINE_COMMIT_BUDGET,
+        rebase=rebase,
+        metrics=metrics,
     )
+    out = {
+        "version": version,
+        "touched": st["touched"] if version is not None else [],
+        "added": st["added"] if version is not None else None,
+        "attempts": attempts,
+        "recomputes": max(st["plans"] - 1, 0),
+    }
+    if version is None:
+        out["skipped"] = txn_id
+    return out
 
 
 def _merge_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1280,7 +1215,7 @@ def txlog_vacuum(
     rows = _txlog_log_rows(spark, log_dir)
     keep: set = set()
     for v in retain_versions:
-        keep.update(_txlog_live_from_rows(rows, as_of=v))
+        keep.update(_live_files(rows, as_of=v))
     ever_added = {
         r["path"] for r in rows if r["action"] == "add"
     }
@@ -1371,8 +1306,7 @@ def q_sink_txlog_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_vac")
     txlog_merge(spark, log_dir, _merge_changes(spark, sf_dir), "o_orderkey")
     txlog_vacuum(spark, log_dir, retain_versions=(None,))
-    live = _txlog_live_files(spark, log_dir, as_of=None)
-    snap = spark.read.parquet(*live)
+    snap = _txlog_snapshot(spark, log_dir)
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_keys"),
@@ -1389,7 +1323,7 @@ def txlog_restore(
     rollback: one new commit re-adds the files live at the target
     version and removes the files live now but not then. ``to_ts``
     (microseconds) resolves to the latest commit whose commitInfo
-    timestamp is at or before it (`_txlog_version_as_of_ts` — the same
+    timestamp is at or before it (`_version_as_of_ts` — the same
     resolution AS OF TIMESTAMP reads use), then version rollback takes
     over. No data moves; history is preserved (the bad versions stay
     readable via time travel until vacuumed) — the reason lakehouse
@@ -1402,36 +1336,32 @@ def txlog_restore(
     if (to_version is None) == (to_ts is None):
         raise ValueError("pass exactly one of to_version / to_ts")
     if to_ts is not None:
-        to_version = _txlog_version_as_of_ts(
-            _txlog_log_rows(spark, log_dir), to_ts
-        )
-    for attempt in range(1, _TXLOG_MAX_RETRIES + 1):
-        # single log read per attempt (see _txlog_log_rows): target,
-        # current, and the attempt version all derive from one snapshot
-        # so an intervening commit always collides and forces a retry.
-        log_rows = _txlog_log_rows(spark, log_dir)
-        target = set(_txlog_live_from_rows(log_rows, as_of=to_version))
-        current = set(_txlog_live_from_rows(log_rows))
-        version = max(r["commit"] for r in log_rows) + 1
-        re_added = sorted(target - current)
-        removed = sorted(current - target)
-        actions = [
+        to_version = _version_as_of_ts(_txlog_log_rows(spark, log_dir), to_ts)
+    st = {}
+
+    def plan(rows, version):
+        # target, current and the attempt version all derive from the
+        # attempt's one snapshot
+        target = set(_live_files(rows, as_of=to_version))
+        current = set(_live_files(rows))
+        st["re_added"] = sorted(target - current)
+        st["removed"] = sorted(current - target)
+        return [
             {"commit": version, "action": "remove", "path": p}
-            for p in removed
+            for p in st["removed"]
         ] + [
-            {"commit": version, "action": "add", "path": p} for p in re_added
+            {"commit": version, "action": "add", "path": p}
+            for p in st["re_added"]
         ]
-        if _txlog_attempt_commit(log_dir, version, actions, op="RESTORE"):
-            return {
-                "version": version,
-                "re_added": re_added,
-                "removed": removed,
-                "attempts": attempt,
-                "restored_to": to_version,
-            }
-    raise TxlogConflictError(
-        f"restore lost the commit race {_TXLOG_MAX_RETRIES} times"
-    )
+
+    version, attempts = _txlog_commit(spark, log_dir, plan, "RESTORE")
+    return {
+        "version": version,
+        "re_added": st["re_added"],
+        "removed": st["removed"],
+        "attempts": attempts,
+        "restored_to": to_version,
+    }
 
 
 def q_sink_txlog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1509,17 +1439,11 @@ def txlog_evo_read(spark: SparkSession, log_dir: str):
     rewrite on ALTER TABLE ADD COLUMN, the lakehouse schema-evolution
     guarantee. Returns (snapshot DataFrame, current schema DDL).
 
-    Driver-side log replay (metadata-sized — previously two distributed
-    Spark jobs per read just to pick the latest metaData DDL and the
-    live file list out of a few KB of JSON)."""
+    Driver-side log replay and the one snapshot schema rule
+    (`_snapshot_ddl` — an evolved table's schema is its latest metaData
+    DDL), so neither the DDL pick nor the scan runs a Spark job."""
     rows = _txlog_log_rows(spark, log_dir)
-    schema = max(
-        (r for r in rows if r["action"] == "metaData"),
-        key=lambda r: r["commit"],
-    )["schema"]
-    live = _txlog_live_from_rows(rows)
-    snap = spark.read.schema(schema).parquet(*live)
-    return snap, schema
+    return _txlog_scan(spark, rows, _live_files(rows)), _ddl_schema_as_of(rows)
 
 
 def q_sink_txlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1629,22 +1553,18 @@ def txlog_stats_read(
     checkpoint. A live file with NO recorded stats is always scanned
     (pruning is a superset guarantee, never a filter)."""
     rows = _txlog_log_rows(spark, log_dir)
-    last: dict = {}
-    for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
-        if r["action"] in ("add", "remove") and r["path"] is not None:
-            last[r["path"]] = r
-    live = [r for r in last.values() if r["action"] == "add"]
+    live = _live_adds(rows)
     pruned = sorted(
-        r["path"]
-        for r in live
+        p
+        for p, r in live.items()
         if r["min_key"] is None
         or r["max_key"] is None
         or (r["max_key"] >= lo and r["min_key"] <= hi)
     )
     # everything pruned: a correct EMPTY result, not a crash — scan one
     # live file under the (unsatisfiable, by the proven bounds) filter
-    paths = pruned or sorted(r["path"] for r in live)[:1]
-    snap = spark.read.parquet(*paths).where(
+    paths = pruned or sorted(live)[:1]
+    snap = _txlog_scan(spark, rows, paths).where(
         F.col("o_orderkey").between(lo, hi)
     )
     return snap, len(live), len(pruned)
@@ -1690,23 +1610,13 @@ def txlog_incremental_files(
     never table size, which is what makes log-backed incremental ETL
     viable on a 100-TB table that grows by 0.1% a day.
 
-    Driver-side log replay (the log is metadata-sized; previously this
-    launched a distributed JSON read + shuffle per consumer poll just
-    to diff a few KB of actions): last action per path wins with the
-    (commit, action) tie-break of max(struct(commit, action)) — the
-    sorted-iteration last-assignment below is exactly that order."""
+    Driver-side log replay (the log is metadata-sized) through the
+    connector's `_incremental_files`, the same increment its streaming
+    reader serves per micro-batch."""
     rows = _txlog_log_rows(spark, log_dir)
-    last: dict = {}
-    for r in sorted(rows, key=lambda r: (r["commit"], r["action"] or "")):
-        if to_version is not None and r["commit"] > to_version:
-            continue
-        if r["path"] is not None:
-            last[r["path"]] = (r["commit"], r["action"])
-    return sorted(
-        p
-        for p, (c, a) in last.items()
-        if a == "add" and c > from_version
-    )
+    if to_version is None:
+        to_version = max((r["commit"] for r in rows), default=-1)
+    return _incremental_files(rows, from_version, to_version)
 
 
 def q_sink_txlog_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1720,7 +1630,7 @@ def q_sink_txlog_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame
     consumers see upstream CoW changes."""
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_incr")
     files = txlog_incremental_files(spark, log_dir, from_version=1)
-    snap = spark.read.parquet(*files)
+    snap = _txlog_scan(spark, _txlog_log_rows(spark, log_dir), files)
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_keys"),
@@ -1846,44 +1756,22 @@ def txlog_stats2_read(
     whether a predicate on the SECOND column opens a few quadrant
     directories or every file in the table.
 
-    Driver-side log replay via the connector's `_log_rows` (the raw
-    action dicts — this fixture's adds carry the two-column
-    min_cust/max_cust stats beyond the engine's normalized field set);
-    previously each of the FOUR (layout × predicate) reads per key
-    launched its own distributed JSON read + shuffle over ~35 metadata
-    rows. Last action per path wins with the same (commit, action)
-    tie-break as max(struct(commit, action, ...))."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        _log_rows,
-        check_protocol,
-    )
-
-    rows = _log_rows(log_dir)
-    check_protocol(rows, "read")
+    Driver-side log replay (this fixture's adds carry the two-column
+    min_cust/max_cust stats too); the connector's `_live_adds` keeps
+    each live file's winning add."""
+    rows = _txlog_log_rows(spark, log_dir)
     mn, mx = (
         ("min_key", "max_key")
         if column == "o_orderkey"
         else ("min_cust", "max_cust")
     )
-    last: dict = {}
-    for r in sorted(
-        rows, key=lambda r: (r["commit"], r["action"] or "")
-    ):
-        if as_of is not None and r["commit"] > as_of:
-            continue
-        if r.get("path") is not None:
-            last[r["path"]] = r
-    live = [
-        (r.get(mn), r.get(mx))
-        for r in last.values()
-        if r["action"] == "add"
-    ]
+    live = _live_adds(rows, as_of)
     pruned = sorted(
-        p
-        for p, r in last.items()
-        if r["action"] == "add" and r.get(mx) >= lo and r.get(mn) <= hi
+        p for p, r in live.items() if r[mx] >= lo and r[mn] <= hi
     )
-    snap = spark.read.parquet(*pruned).where(F.col(column).between(lo, hi))
+    snap = _txlog_scan(spark, rows, pruned, as_of).where(
+        F.col(column).between(lo, hi)
+    )
     return snap, len(live), len(pruned)
 
 
@@ -1952,35 +1840,13 @@ def q_sink_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_sinks.py."""
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_merge")
     txlog_merge(spark, log_dir, _merge_changes(spark, sf_dir), "o_orderkey")
-    live = _txlog_live_files(spark, log_dir, as_of=None)
-    snap = spark.read.parquet(*live)
+    snap = _txlog_snapshot(spark, log_dir)
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_keys"),
         F.sum(
             F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
         ).cast("long").alias("sum_price_cents"),
-    )
-
-
-def _txlog_live_dvs(rows: list, live: list, as_of=None) -> list:
-    """APPLICABLE deletion-vector sidecars: each ``dv`` action records
-    its TARGET data file (the Delta DV-descriptor design), so
-    applicability is pure log metadata — a DV file is read iff at least
-    one of its targets is still live at the requested version. A later
-    OPTIMIZE that rewrites the targets makes the DV inert without a log
-    edit, and VACUUM can physically reclaim an all-targets-dead DV
-    without ever breaking a reader (the reader never lists it)."""
-    live_set = set(live)
-    return sorted(
-        {
-            r["path"]
-            for r in rows
-            if r["action"] == "dv"
-            and r["path"] is not None
-            and r["target"] in live_set
-            and (as_of is None or r["commit"] <= as_of)
-        }
     )
 
 
@@ -2023,13 +1889,13 @@ def txlog_delete_with_dv(
     MERGE — the live set and attempt version derive from ONE log read,
     so any intervening commit collides on the version file and forces a
     revalidating retry."""
-    for attempt in range(1, _TXLOG_MAX_RETRIES + 1):
-        log_rows = _txlog_log_rows(spark, log_dir)
-        live = _txlog_live_from_rows(log_rows)
-        version = max(r["commit"] for r in log_rows) + 1
-        snap = spark.read.parquet(*live).withColumn(
-        "_src", _src_logged_col(live)
-    )
+    st = {}
+
+    def plan(rows, version):
+        live = _live_files(rows)
+        snap = _txlog_scan(spark, rows, live).withColumn(
+            "_src", _src_logged_col(live)
+        )
         dv_rows = snap.join(
             F.broadcast(delete_keys.select(key_col)), key_col, "left_semi"
         ).select(
@@ -2046,36 +1912,26 @@ def txlog_delete_with_dv(
             r["target"]
             for r in dv_rows.select("target").distinct().collect()
         )
-        actions = [
+        st["dv"], st["targets"] = dv_path, targets
+        # a delete that matched nothing still commits (an empty
+        # version is a valid no-op transaction)
+        return [
             {
                 "commit": version,
                 "action": "dv",
                 "path": dv_path,
                 "target": t,
             }
-            for t in targets
+            for t in targets or [None]
         ]
-        if not actions:
-            # delete matched nothing: still commit (an empty version is
-            # a valid no-op transaction)
-            actions = [
-                {
-                    "commit": version,
-                    "action": "dv",
-                    "path": dv_path,
-                    "target": None,
-                }
-            ]
-        if _txlog_attempt_commit(log_dir, version, actions, op="DELETE"):
-            return {
-                "version": version,
-                "dv": dv_path,
-                "targets": targets,
-                "attempts": attempt,
-            }
-    raise TxlogConflictError(
-        f"dv delete lost the commit race {_TXLOG_MAX_RETRIES} times"
-    )
+
+    version, attempts = _txlog_commit(spark, log_dir, plan, "DELETE")
+    return {
+        "version": version,
+        "dv": st["dv"],
+        "targets": st["targets"],
+        "attempts": attempts,
+    }
 
 
 def txlog_read_with_dvs(
@@ -2088,9 +1944,10 @@ def txlog_read_with_dvs(
     anti-join broadcasts; the scan itself is unchanged (the read
     amplification IS the MoR tradeoff, reported by the query key)."""
     rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows, as_of)
-    dvs = _txlog_live_dvs(rows, live, as_of)
-    snap = spark.read.parquet(*live).withColumn(
+    live = _live_files(rows, as_of)
+    by_target = _live_dvs(rows, live, as_of)
+    dvs = sorted({p for ps in by_target.values() for p in ps})
+    snap = _txlog_scan(spark, rows, live, as_of).withColumn(
         "_src", _src_logged_col(live)
     )
     if not dvs:
@@ -2115,55 +1972,50 @@ def txlog_dv_materialize(
     — after which every previously-live DV is inert (its target is no
     longer live) and reads are 1:1 again. Write cost ∝ DV'd files'
     bytes, the same copy-on-write bill the DELETE deferred."""
-    for attempt in range(1, _TXLOG_MAX_RETRIES + 1):
-        log_rows = _txlog_log_rows(spark, log_dir)
-        live = _txlog_live_from_rows(log_rows)
-        dvs = _txlog_live_dvs(log_rows, live)
-        version = max(r["commit"] for r in log_rows) + 1
-        if not dvs:
-            return {"version": None, "rewritten": [], "attempts": attempt}
+    st = {"targets": []}
+
+    def plan(rows, version):
+        live = _live_files(rows)
         # applicable targets straight from the log metadata (the dv
         # actions), no sidecar read needed to plan the rewrite
-        live_set = set(live)
-        targets = sorted(
-            {
-                r["target"]
-                for r in log_rows
-                if r["action"] == "dv" and r["target"] in live_set
-            }
-        )
-        dv = spark.read.parquet(*dvs).where(F.col("target").isin(live))
+        by_target = _live_dvs(rows, live)
+        targets = sorted(by_target)
+        st["targets"] = targets
         if not targets:
-            return {"version": None, "rewritten": [], "attempts": attempt}
-        snap = spark.read.parquet(*targets).withColumn(
+            return None
+        dvs = sorted({p for ps in by_target.values() for p in ps})
+        dvk = (
+            spark.read.parquet(*dvs)
+            .where(F.col("target").isin(live))
+            .withColumnRenamed("key", key_col)
+        )
+        snap = _txlog_scan(spark, rows, targets).withColumn(
             "_src", _src_logged_col(targets)
         )
-        dvk = dv.withColumnRenamed("key", key_col)
         survivors = snap.join(
             F.broadcast(dvk),
             (snap["_src"] == dvk["target"])
             & (snap[key_col] == dvk[key_col]),
             "left_anti",
         ).drop("_src")
-        out = os.path.join(
+        st["added"] = os.path.join(
             os.path.dirname(log_dir), "data", f"optimize-{version:05d}"
         )
-        survivors.write.mode("overwrite").parquet(out)
-        actions = [
+        survivors.write.mode("overwrite").parquet(st["added"])
+        return [
             {"commit": version, "action": "remove", "path": p}
             for p in targets
-        ]
-        actions.append({"commit": version, "action": "add", "path": out})
-        if _txlog_attempt_commit(log_dir, version, actions, op="OPTIMIZE"):
-            return {
-                "version": version,
-                "rewritten": targets,
-                "added": out,
-                "attempts": attempt,
-            }
-    raise TxlogConflictError(
-        f"dv materialize lost the commit race {_TXLOG_MAX_RETRIES} times"
-    )
+        ] + [{"commit": version, "action": "add", "path": st["added"]}]
+
+    version, attempts = _txlog_commit(spark, log_dir, plan, "OPTIMIZE")
+    out = {
+        "version": version,
+        "rewritten": st["targets"],
+        "attempts": attempts,
+    }
+    if version is not None:
+        out["added"] = st["added"]
+    return out
 
 
 def q_sink_txlog_deletion_vectors(
@@ -2187,11 +2039,8 @@ def q_sink_txlog_deletion_vectors(
         .select("o_orderkey")
     )
     txlog_delete_with_dv(spark, log_dir, deletes, "o_orderkey")
-    rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows)
-    scanned = (
-        spark.read.parquet(*live)
-        .agg(F.count(F.lit(1)).cast("long").alias("n_rows_scanned"))
+    scanned = _txlog_snapshot(spark, log_dir).agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows_scanned")
     )
     snap = txlog_read_with_dvs(spark, log_dir, "o_orderkey")
     live_rows = snap.agg(
@@ -2226,9 +2075,7 @@ def q_sink_txlog_dv_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     txlog_delete_with_dv(spark, log_dir, deletes, "o_orderkey")
     txlog_dv_materialize(spark, log_dir, "o_orderkey")
-    rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows)
-    snap = spark.read.parquet(*live)
+    snap = _txlog_snapshot(spark, log_dir)
     scanned = snap.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_scanned")
     )
@@ -2297,8 +2144,8 @@ def txlog_table_changes(
     both = removed & added
     removed, added = sorted(removed - both), sorted(added - both)
 
-    def _img(paths, name):
-        df = spark.read.parquet(*paths)
+    def _img(paths, name, as_of):
+        df = _txlog_scan(spark, rows, paths, as_of)
         data = [c for c in df.columns if c != key_col]
         return df.select(
             F.col(key_col), F.struct(*data).alias(name)
@@ -2309,16 +2156,16 @@ def txlog_table_changes(
     if not removed and not added:
         j = None
     elif removed and added:
-        j = _img(removed, "pre").join(
-            _img(added, "post"), key_col, "full_outer"
+        j = _img(removed, "pre", from_version).join(
+            _img(added, "post", to_version), key_col, "full_outer"
         )
     elif added:
-        img = _img(added, "post")
+        img = _img(added, "post", to_version)
         j = img.withColumn(
             "pre", F.lit(None).cast(img.schema["post"].dataType)
         )
     else:
-        img = _img(removed, "pre")
+        img = _img(removed, "pre", from_version)
         j = img.withColumn(
             "post", F.lit(None).cast(img.schema["pre"].dataType)
         )
@@ -2405,7 +2252,7 @@ def txlog_table_changes(
             dvdf = dvdf.join(
                 F.broadcast(prev), ["target", key_col], "left_anti"
             )
-        tsnap = spark.read.parquet(*targets).withColumn(
+        tsnap = _txlog_scan(spark, rows, targets, to_version).withColumn(
             "_src", _src_logged_col(targets)
         )
         data = [c for c in tsnap.columns if c not in (key_col, "_src")]
@@ -2458,17 +2305,18 @@ def txlog_update_with_dv(
     read reconstructs the updated table. Write cost ∝ update size; the
     bill is the same read amplification DELETE pays, repaid by
     `txlog_dv_materialize`."""
+    import uuid as _uuid
+
     data_cols = list(updates.columns)
-    for attempt in range(1, _TXLOG_MAX_RETRIES + 1):
-        log_rows = _txlog_log_rows(spark, log_dir)
-        live = _txlog_live_from_rows(log_rows)
-        version = max(r["commit"] for r in log_rows) + 1
-        snap = spark.read.parquet(*live).withColumn(
-        "_src", _src_logged_col(live)
-    )
-        matched = updates.select(key_col)
+    st = {}
+
+    def plan(rows, version):
+        live = _live_files(rows)
+        snap = _txlog_scan(spark, rows, live).withColumn(
+            "_src", _src_logged_col(live)
+        )
         dv_rows = snap.join(
-            F.broadcast(matched), key_col, "left_semi"
+            F.broadcast(updates.select(key_col)), key_col, "left_semi"
         ).select(F.col("_src").alias("target"), F.col(key_col).alias("key"))
         dv_path = os.path.join(
             os.path.dirname(log_dir), "data", f"dv-{version:05d}"
@@ -2478,8 +2326,6 @@ def txlog_update_with_dv(
             r["target"]
             for r in dv_rows.select("target").distinct().collect()
         )
-        import uuid as _uuid
-
         delta_path = os.path.join(
             os.path.dirname(log_dir),
             "data",
@@ -2488,7 +2334,8 @@ def txlog_update_with_dv(
         updates.select(*data_cols).write.mode("overwrite").parquet(
             delta_path
         )
-        actions = [
+        st.update(dv=dv_path, targets=targets, added=delta_path)
+        return [
             {
                 "commit": version,
                 "action": "dv",
@@ -2496,21 +2343,10 @@ def txlog_update_with_dv(
                 "target": t,
             }
             for t in targets
-        ]
-        actions.append(
-            {"commit": version, "action": "add", "path": delta_path}
-        )
-        if _txlog_attempt_commit(log_dir, version, actions, op="UPDATE"):
-            return {
-                "version": version,
-                "dv": dv_path,
-                "targets": targets,
-                "added": delta_path,
-                "attempts": attempt,
-            }
-    raise TxlogConflictError(
-        f"dv update lost the commit race {_TXLOG_MAX_RETRIES} times"
-    )
+        ] + [{"commit": version, "action": "add", "path": delta_path}]
+
+    version, attempts = _txlog_commit(spark, log_dir, plan, "UPDATE")
+    return {"version": version, **st, "attempts": attempts}
 
 
 def q_sink_txlog_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2531,9 +2367,7 @@ def q_sink_txlog_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_totalprice", F.col("o_totalprice") + 10)
     )
     txlog_update_with_dv(spark, log_dir, updates, "o_orderkey")
-    rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows)
-    scanned = spark.read.parquet(*live).agg(
+    scanned = _txlog_snapshot(spark, log_dir).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_scanned")
     )
     snap = txlog_read_with_dvs(spark, log_dir, "o_orderkey")
@@ -2564,12 +2398,12 @@ def txlog_shallow_clone(
     be pointed at retention sets that would reclaim files the source
     still owns."""
     rows = _txlog_log_rows(spark, log_dir)
-    live = _txlog_live_from_rows(rows)
+    live = _live_files(rows)
     shutil.rmtree(clone_base, ignore_errors=True)
     clone_log = os.path.join(clone_base, "_log")
     os.makedirs(clone_log, exist_ok=True)
     actions = [{"commit": 0, "action": "add", "path": p} for p in live]
-    assert _txlog_attempt_commit(clone_log, 0, actions, op="CLONE")
+    assert txlog_source.attempt_commit(clone_log, 0, actions, op="CLONE")
     return clone_log
 
 
@@ -2590,8 +2424,7 @@ def q_sink_txlog_clone_diverge(
     txlog_merge(
         spark, clone_log, _merge_changes(spark, sf_dir), "o_orderkey"
     )
-    live = _txlog_live_files(spark, clone_log, as_of=None)
-    snap = spark.read.parquet(*live)
+    snap = _txlog_snapshot(spark, clone_log)
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_keys"),
@@ -2630,42 +2463,8 @@ def txlog_checkpoint(spark: SparkSession, log_dir: str, version: int) -> str:
     a table whose protocol demands unimplemented reader features fails
     here before compaction rather than committing a checkpoint its own
     readers cannot replay."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        _log_rows,
-        check_protocol,
-        checkpoint_log,
-    )
-
-    check_protocol(_log_rows(log_dir), "read")
-    return checkpoint_log(log_dir, version)
-
-
-def _txlog_rows_checkpointed(
-    spark: SparkSession, log_dir: str, ckpt_dir: str, ckpt_version: int
-) -> list:
-    """The action rows a reader sees on a checkpointed table: the
-    reconciled checkpoint state plus the JSON tail (> ckpt_version) —
-    same shape as `_txlog_log_rows`, O(checkpoint + tail) cost.
-    Driver-side pyarrow read of the checkpoint parquet — metadata, no
-    Spark job."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    ckpt = [
-        {f: r.get(f) for f in ("commit", "action", "path", "target")}
-        for r in _pq.read_table(ckpt_dir).to_pylist()
-    ]
-    # a checkpoint at the head leaves no JSON tail at all — an empty
-    # glob is a valid (fully compacted) state, not an error
-    if not _glob.glob(os.path.join(log_dir, "*.json")):
-        return list(ckpt)
-    tail = [
-        r
-        for r in _txlog_log_rows(spark, log_dir)
-        if r["commit"] > ckpt_version
-    ]
-    return list(ckpt) + tail
+    _txlog_log_rows(spark, log_dir)
+    return txlog_source.checkpoint_log(log_dir, version)
 
 
 def q_sink_txlog_checkpoint_mor(
@@ -2743,8 +2542,6 @@ def q_scan_txlog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's own replay read (`sink_txlog_snapshot`'s oracle): the
     connector and the query tier implement the same log semantics
     once each, and this key pins them together."""
-    from aind_data_transformation_spark.io import txlog_source
-
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_ds")
     txlog_source.register(spark)
     snap = spark.read.format("txlog").option("path", log_dir).load()
@@ -2764,8 +2561,6 @@ def q_stream_txlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow into a complete-mode aggregation, the result must
     hash-equal the snapshot read — the streaming consumption of a
     table's history converges to its current state."""
-    from aind_data_transformation_spark.io import txlog_source
-
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_stream_src")
     txlog_source.register(spark)
     name = f"txlog_src_{os.getpid()}"
@@ -3390,31 +3185,6 @@ def _build_txlog_part_table(spark: SparkSession, sf_dir: str, name: str):
     return log_dir, data_dir
 
 
-def _txlog_part_log_rows(spark: SparkSession, log_dir: str) -> list:
-    """One driver-side snapshot of a partition-valued action log (the
-    single-read discipline of `_txlog_log_rows`, with ``part`` carried
-    so pruning and conflict checks run on pure metadata). Driver-side
-    stdlib-json replay — no Spark job for a metadata read."""
-    from aind_data_transformation_spark.io.txlog_source import _log_rows
-
-    return [
-        {f: r.get(f) for f in ("commit", "action", "path", "part")}
-        for r in _log_rows(log_dir)
-    ]
-
-
-def _txlog_part_live(rows: list) -> list:
-    """Live (path, part) pairs from a partition-valued log snapshot —
-    last action per path wins."""
-    last = {}
-    for r in sorted(rows, key=lambda r: r["commit"]):
-        if r["action"] in ("add", "remove") and r["path"] is not None:
-            last[r["path"]] = (r["action"], r["part"])
-    return sorted(
-        (p, meta[1]) for p, meta in last.items() if meta[0] == "add"
-    )
-
-
 def txlog_replace_where(
     spark: SparkSession,
     log_dir: str,
@@ -3444,29 +3214,26 @@ def txlog_replace_where(
     disjoint date partitions all land on their first write either way."""
     import uuid as _uuid
 
-    rows = _txlog_part_log_rows(spark, log_dir)
     new_path = os.path.join(
         os.path.dirname(log_dir),
         "data",
         f"replace-{part_value}-{_uuid.uuid4().hex[:8]}",
     )
     new_rows.write.parquet(new_path)
-    attempts = 0
-    recomputes = 0
-    while attempts < _TXLOG_MAX_RETRIES:
-        attempts += 1
-        version = max((r["commit"] for r in rows), default=-1) + 1
-        victims = [
-            p for p, part in _txlog_part_live(rows) if part == part_value
+    st = {"recomputes": 0}
+
+    def plan(rows, version):
+        st["victims"] = [
+            p for p, r in _live_adds(rows).items() if r["part"] == part_value
         ]
-        actions = [
+        return [
             {
                 "commit": version,
                 "action": "remove",
                 "path": p,
                 "part": part_value,
             }
-            for p in victims
+            for p in st["victims"]
         ] + [
             {
                 "commit": version,
@@ -3475,29 +3242,26 @@ def txlog_replace_where(
                 "part": part_value,
             }
         ]
-        if _txlog_attempt_commit(log_dir, version, actions, op="REPLACE WHERE"):
-            return {
-                "version": version,
-                "attempts": attempts,
-                "recomputes": recomputes,
-                "n_removed": len(victims),
-            }
-        fresh = _txlog_part_log_rows(spark, log_dir)
-        touched = {
-            r["part"]
-            for r in fresh
-            if r["commit"] > max((x["commit"] for x in rows), default=-1)
-        }
-        if part_value in touched:
-            if on_conflict == "error":
-                raise TxlogConflictError(
-                    f"concurrent commit touched partition {part_value!r}"
-                )
-            recomputes += 1
-        rows = fresh
-    raise TxlogConflictError(
-        f"replace_where lost {_TXLOG_MAX_RETRIES} commit races"
+
+    def rebase(rows, lost) -> bool:
+        if part_value not in {r["part"] for r in rows if r["commit"] >= lost}:
+            return True
+        if on_conflict == "error":
+            raise TxlogConflictError(
+                f"concurrent commit touched partition {part_value!r}"
+            )
+        st["recomputes"] += 1
+        return False
+
+    version, attempts = _txlog_commit(
+        spark, log_dir, plan, "REPLACE WHERE", rebase=rebase
     )
+    return {
+        "version": version,
+        "attempts": attempts,
+        "recomputes": st["recomputes"],
+        "n_removed": len(st["victims"]),
+    }
 
 
 def q_sink_txlog_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3519,10 +3283,11 @@ def q_sink_txlog_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 2 == 0)
     )
     txlog_replace_where(spark, log_dir, "O", replacement)
-    live = _txlog_part_live(_txlog_part_log_rows(spark, log_dir))
-    pruned = [p for p, part in live if part == "O"]
-    o_scan_rows = spark.read.parquet(*pruned).count()
-    snap = spark.read.parquet(*[p for p, _ in live])
+    rows = _txlog_log_rows(spark, log_dir)
+    live = _live_adds(rows)
+    pruned = sorted(p for p, r in live.items() if r["part"] == "O")
+    o_scan_rows = _txlog_scan(spark, rows, pruned).count()
+    snap = _txlog_scan(spark, rows, sorted(live))
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_keys"),
@@ -3809,38 +3574,28 @@ def txlog_constrained_append(
         f"append-{version:05d}-{_uuid.uuid4().hex[:8]}",
     )
     rows.write.parquet(path)
-    attempts = 0
-    while attempts < _TXLOG_MAX_RETRIES:
-        attempts += 1
-        actions = [{"commit": version, "action": "add", "path": path}]
-        # this path DOES evaluate the table's CHECK constraint, so it
-        # declares the writer feature a constraints-gated protocol
-        # demands — the plain connector append (which doesn't) is
-        # refused by the same gate
-        if _txlog_attempt_commit(
-            log_dir, version, actions, op="APPEND",
-            extra_writer_features=("constraints",),
-        ):
-            return {
-                "committed": True,
-                "n_rejected": 0,
-                "version": version,
-            }
-        # lost the race: revalidate against the FRESH snapshot — if a
-        # concurrent commit changed the constraint, the batch was
-        # validated against a stale predicate (Delta's
-        # MetadataChangedException); an append-only intervener is safe
-        # to serialize after.
-        fresh = _txlog_log_rows(spark, log_dir)
-        if _txlog_latest_constraint(fresh) != check:
+
+    def plan(log_rows, version):
+        # revalidate against each attempt's snapshot: if a concurrent
+        # commit changed the constraint, the batch was validated
+        # against a stale predicate (Delta's MetadataChangedException);
+        # an append-only intervener is safe to serialize after.
+        if _txlog_latest_constraint(log_rows) != check:
             raise TxlogConflictError(
                 "constraint changed concurrently; batch validated "
                 "against a stale predicate"
             )
-        version = max((r["commit"] for r in fresh), default=-1) + 1
-    raise TxlogConflictError(
-        f"constrained append lost {_TXLOG_MAX_RETRIES} commit races"
+        return [{"commit": version, "action": "add", "path": path}]
+
+    # this path DOES evaluate the table's CHECK constraint, so it
+    # declares the writer feature a constraints-gated protocol demands
+    # — the plain connector append (which doesn't) is refused by the
+    # same gate
+    version, _ = _txlog_commit(
+        spark, log_dir, plan, "APPEND",
+        extra_writer_features=("constraints",),
     )
+    return {"committed": True, "n_rejected": 0, "version": version}
 
 
 def q_sink_txlog_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3877,8 +3632,7 @@ def q_sink_txlog_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res_bad = txlog_constrained_append(spark, log_dir, bad)
     res_good = txlog_constrained_append(spark, log_dir, good)
-    live = _txlog_live_files(spark, log_dir, as_of=None)
-    snap = spark.read.parquet(*live)
+    snap = _txlog_snapshot(spark, log_dir)
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum(
@@ -3930,8 +3684,6 @@ def q_scan_txlog_datasource_mor(
     deleted row (the interop bug this key exists to prevent — any
     external Spark job reading the format gets MoR semantics, not just
     the engine's own replay tier)."""
-    from aind_data_transformation_spark.io import txlog_source
-
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_ds_mor")
     k = F.col("o_orderkey")
     deletes = (
@@ -3970,27 +3722,6 @@ ORACLES["scan_txlog_datasource_mor"] = """
 """
 
 
-def _txlog_version_as_of_ts(rows: list, ts_us: int) -> int:
-    """``AS OF TIMESTAMP`` resolution: the latest commit whose
-    commitInfo timestamp is at or before ``ts_us`` (Delta's rule).
-    Well-defined because `attempt_commit` clamps commit timestamps to
-    be non-decreasing. Pure metadata — resolves over collected log
-    rows, then version time travel takes over."""
-    cand = [
-        r["commit"]
-        for r in rows
-        if r["action"] == "commitInfo"
-        and r["ts"] is not None
-        and r["ts"] <= ts_us
-    ]
-    if not cand:
-        raise ValueError(
-            f"no commit at or before timestamp {ts_us}; table history "
-            "begins later"
-        )
-    return max(cand)
-
-
 def _build_txlog_table_with_delete(
     spark: SparkSession, sf_dir: str, name: str
 ) -> str:
@@ -4001,9 +3732,9 @@ def _build_txlog_table_with_delete(
     log_dir = _build_txlog_table(spark, sf_dir, name)
     rows = _txlog_log_rows(spark, log_dir)
     b0 = next(
-        p for p in _txlog_live_from_rows(rows) if p.endswith("batch-0")
+        p for p in _live_files(rows) if p.endswith("batch-0")
     )
-    ok = _txlog_attempt_commit(
+    ok = txlog_source.attempt_commit(
         log_dir,
         3,
         [
@@ -4044,7 +3775,7 @@ def q_sink_txlog_time_travel_ts(
     ]
     out = None
     for label, ts in probes:
-        v = _txlog_version_as_of_ts(rows, ts)
+        v = _version_as_of_ts(rows, ts)
         df = (
             _txlog_read(spark, log_dir, as_of=v)
             .withColumn("probe", F.lit(label))
@@ -4087,7 +3818,7 @@ def q_sink_txlog_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         "",
     )
     per_dir = (
-        spark.read.parquet(*sorted({p for _, p in adds}))
+        _txlog_scan(spark, rows, sorted({p for _, p in adds}))
         .select(src_dir.alias("_src"))
         .groupBy("_src")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -4130,8 +3861,6 @@ def q_sink_txlog_datasource_write(
     head (writer/reader/engine can never drift on log semantics), and
     the engine's replay AS OF version 1 (the overwrite left history
     time-travelable, nothing was physically deleted)."""
-    from aind_data_transformation_spark.io import txlog_source
-
     base = _scratch(sf_dir, "txlog_ds_write")
     shutil.rmtree(base, ignore_errors=True)
     log_dir = os.path.join(base, "_log")
@@ -4225,8 +3954,6 @@ def q_sink_txlog_datasource_describe_history(
     the connector surface is pinned hash-equal to the engine's
     computation (`q_sink_txlog_history`); the side-by-side equality
     is also asserted directly in tests/test_txlog_r12.py."""
-    from aind_data_transformation_spark.io import txlog_source
-
     log_dir = _build_txlog_table_with_delete(
         spark, sf_dir, "txlog_table_history_ds"
     )
@@ -4274,51 +4001,32 @@ ORACLES["sink_txlog_datasource_write"] = """
 # ---------------------------------------------------------------------------
 
 
-def _txlog_mapping_latest(rows: list) -> dict:
-    """The CURRENT column mapping: latest metaData action whose schema
-    payload is a mapping document (JSON object), parsed. Plain-DDL
-    metaData rows (the additive-evolution keys) are not mappings."""
-    import json as _json
-
-    cand = [
-        r
-        for r in rows
-        if r["action"] == "metaData"
-        and r["schema"]
-        and r["schema"].lstrip().startswith("{")
-    ]
-    if not cand:
+def _current_mapping(rows: list) -> dict:
+    """The CURRENT column mapping (the connector's `_mapping_as_of` at
+    the head); raises on an unmapped table."""
+    m = _mapping_as_of(rows)
+    if m is None:
         raise ValueError("table has no column-mapping metaData")
-    return _json.loads(max(cand, key=lambda r: r["commit"])["schema"])
+    return m
 
 
 def _txlog_commit_metadata(
-    spark: SparkSession, log_dir: str, mapping: dict, op: str
+    spark: SparkSession, log_dir: str, edit, op: str
 ) -> int:
     """Metadata-ONLY commit (no add/remove): the whole point of column
-    mapping — schema surgery is one log action at any table size."""
+    mapping — schema surgery is one log action at any table size.
+    ``edit(columns, version)`` returns the new mapping's column list
+    from each attempt's snapshot of the current one, so a lost race
+    re-validates the edit against the winner's mapping."""
     import json as _json
 
-    payload = _json.dumps(mapping, sort_keys=True)
-    for _ in range(_TXLOG_MAX_RETRIES):
-        rows = _txlog_log_rows(spark, log_dir)
-        version = max(r["commit"] for r in rows) + 1
-        if _txlog_attempt_commit(
-            log_dir,
-            version,
-            [
-                {
-                    "commit": version,
-                    "action": "metaData",
-                    "schema": payload,
-                }
-            ],
-            op=op,
-        ):
-            return version
-    raise TxlogConflictError(
-        f"metadata commit lost the race {_TXLOG_MAX_RETRIES} times"
-    )
+    def plan(rows, version):
+        cols = [dict(c) for c in _current_mapping(rows)["columns"]]
+        cols = edit(cols, version)
+        payload = _json.dumps({"columns": cols}, sort_keys=True)
+        return [{"commit": version, "action": "metaData", "schema": payload}]
+
+    return _txlog_commit(spark, log_dir, plan, op)[0]
 
 
 def txlog_rename_column(
@@ -4326,30 +4034,31 @@ def txlog_rename_column(
 ) -> int:
     """ALTER TABLE RENAME COLUMN — logical name changes, physical name
     (what the parquet files store) stays; ZERO data files touched."""
-    m = _txlog_mapping_latest(_txlog_log_rows(spark, log_dir))
-    cols = [dict(c) for c in m["columns"]]
-    if not any(c["name"] == old for c in cols):
-        raise ValueError(f"no such column: {old}")
-    if any(c["name"] == new for c in cols):
-        raise ValueError(f"column exists: {new}")
-    for c in cols:
-        if c["name"] == old:
-            c["name"] = new
-    return _txlog_commit_metadata(
-        spark, log_dir, {"columns": cols}, op="RENAME COLUMN"
-    )
+
+    def edit(cols, _version):
+        if not any(c["name"] == old for c in cols):
+            raise ValueError(f"no such column: {old}")
+        if any(c["name"] == new for c in cols):
+            raise ValueError(f"column exists: {new}")
+        for c in cols:
+            if c["name"] == old:
+                c["name"] = new
+        return cols
+
+    return _txlog_commit_metadata(spark, log_dir, edit, "RENAME COLUMN")
 
 
 def txlog_drop_column(spark: SparkSession, log_dir: str, name: str) -> int:
     """ALTER TABLE DROP COLUMN — the mapping entry goes away; the
     physical column stays in old files, unreadable (soft drop)."""
-    m = _txlog_mapping_latest(_txlog_log_rows(spark, log_dir))
-    cols = [dict(c) for c in m["columns"] if c["name"] != name]
-    if len(cols) == len(m["columns"]):
-        raise ValueError(f"no such column: {name}")
-    return _txlog_commit_metadata(
-        spark, log_dir, {"columns": cols}, op="DROP COLUMN"
-    )
+
+    def edit(cols, _version):
+        kept = [c for c in cols if c["name"] != name]
+        if len(kept) == len(cols):
+            raise ValueError(f"no such column: {name}")
+        return kept
+
+    return _txlog_commit_metadata(spark, log_dir, edit, "DROP COLUMN")
 
 
 def txlog_add_column(
@@ -4360,18 +4069,15 @@ def txlog_add_column(
     re-adding a previously dropped name can never resurrect the old
     physical column's bytes: old files simply lack the new physical
     name and surface NULL."""
-    rows = _txlog_log_rows(spark, log_dir)
-    m = _txlog_mapping_latest(rows)
-    cols = [dict(c) for c in m["columns"]]
-    if any(c["name"] == name for c in cols):
-        raise ValueError(f"column exists: {name}")
-    version = max(r["commit"] for r in rows) + 1
-    cols.append(
-        {"name": name, "physical": f"{name}__v{version}", "type": dtype}
-    )
-    return _txlog_commit_metadata(
-        spark, log_dir, {"columns": cols}, op="ADD COLUMN"
-    )
+
+    def edit(cols, version):
+        if any(c["name"] == name for c in cols):
+            raise ValueError(f"column exists: {name}")
+        return cols + [
+            {"name": name, "physical": f"{name}__v{version}", "type": dtype}
+        ]
+
+    return _txlog_commit_metadata(spark, log_dir, edit, "ADD COLUMN")
 
 
 def txlog_mapped_read(spark: SparkSession, log_dir: str) -> DataFrame:
@@ -4380,12 +4086,8 @@ def txlog_mapped_read(spark: SparkSession, log_dir: str) -> DataFrame:
     before an ADD — surfaces NULL, Spark's missing-column fill), then
     project physical -> logical. One scan, no per-file branching."""
     rows = _txlog_log_rows(spark, log_dir)
-    m = _txlog_mapping_latest(rows)
-    live = _txlog_live_from_rows(rows)
-    phys_ddl = ", ".join(
-        f"`{c['physical']}` {c['type']}" for c in m["columns"]
-    )
-    snap = spark.read.schema(phys_ddl).parquet(*live)
+    m = _current_mapping(rows)
+    snap = _txlog_scan(spark, rows, _live_files(rows))
     return snap.select(
         *[F.col(f"`{c['physical']}`").alias(c["name"]) for c in m["columns"]]
     )
@@ -4398,7 +4100,7 @@ def txlog_mapped_write(
     to their physical names at write time — the invariant that makes
     rename/drop free is that files never contain logical names."""
     rows = _txlog_log_rows(spark, log_dir)
-    m = _txlog_mapping_latest(rows)
+    m = _current_mapping(rows)
     version = max(r["commit"] for r in rows) + 1
     path = os.path.join(
         os.path.dirname(log_dir), "data", f"{file_tag}-{version:05d}"
@@ -4406,19 +4108,12 @@ def txlog_mapped_write(
     df.select(
         *[F.col(c["name"]).alias(c["physical"]) for c in m["columns"]]
     ).write.mode("overwrite").parquet(path)
-    for _ in range(_TXLOG_MAX_RETRIES):
-        rows = _txlog_log_rows(spark, log_dir)
-        version2 = max(r["commit"] for r in rows) + 1
-        if _txlog_attempt_commit(
-            log_dir,
-            version2,
-            [{"commit": version2, "action": "add", "path": path}],
-            op="APPEND",
-        ):
-            return version2
-    raise TxlogConflictError(
-        f"mapped append lost the race {_TXLOG_MAX_RETRIES} times"
-    )
+    return _txlog_commit(
+        spark,
+        log_dir,
+        lambda _rows, v: [{"commit": v, "action": "add", "path": path}],
+        "APPEND",
+    )[0]
 
 
 def _build_txlog_mapped_table(
@@ -4449,7 +4144,7 @@ def _build_txlog_mapped_table(
             )
         ]
     }
-    ok = _txlog_attempt_commit(
+    ok = txlog_source.attempt_commit(
         log_dir,
         0,
         [
@@ -4733,7 +4428,7 @@ def txlog_export_manifests(
     rows = _txlog_log_rows(spark, log_dir)
     if version is None:
         version = max(r["commit"] for r in rows)
-    live = _txlog_live_from_rows(rows, as_of=version)
+    live = _live_files(rows, as_of=version)
     os.makedirs(meta_dir, exist_ok=True)
     entries = []
     n_footers = 0
@@ -4844,8 +4539,7 @@ def q_scan_txlog_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    live = _txlog_live_files(spark, log_dir, as_of=None)
-    replay = spark.read.parquet(*live)
+    replay = _txlog_snapshot(spark, log_dir)
     manifest = manifest_snapshot_read(spark, meta_dir, exp["version"])
     return agg(replay, "log_replay").unionByName(
         agg(manifest, "manifest_plane")
@@ -4901,8 +4595,6 @@ def q_sink_txlog_datasource_write_stats(
     Scale: this is the production write path — N tasks write N files
     and N metadata rows in one commit; the log carries the stats, so
     no reader ever opens a footer to plan."""
-    from aind_data_transformation_spark.io import txlog_source
-
     base = _scratch(sf_dir, "txlog_ds_write_stats")
     shutil.rmtree(base, ignore_errors=True)
     log_dir = os.path.join(base, "_log")
@@ -4983,8 +4675,6 @@ def q_sink_txlog_datasource_write_stats_date(
         GreaterThanOrEqual,
         LessThanOrEqual,
     )
-
-    from aind_data_transformation_spark.io import txlog_source
 
     base = _scratch(sf_dir, "txlog_ds_stats_date")
     shutil.rmtree(base, ignore_errors=True)
@@ -5081,8 +4771,6 @@ def q_sink_txlog_datasource_write_stats_multi(
         GreaterThanOrEqual,
         LessThanOrEqual,
     )
-
-    from aind_data_transformation_spark.io import txlog_source
 
     base = _scratch(sf_dir, "txlog_ds_stats_multi")
     shutil.rmtree(base, ignore_errors=True)
@@ -5183,8 +4871,6 @@ def q_sink_txlog_datasource_write_stats_nulls(
     pruning is the workhorse of sparse-column scans at 100 TB (a
     mostly-null enrichment column skips nearly every file)."""
     from pyspark.sql.datasource import IsNotNull, StringStartsWith
-
-    from aind_data_transformation_spark.io import txlog_source
 
     base = _scratch(sf_dir, "txlog_ds_stats_nulls")
     shutil.rmtree(base, ignore_errors=True)
@@ -5348,8 +5034,6 @@ def q_sink_txlog_datasource_write_partitioned(
     it. A reader that opened a partition it could prove irrelevant, or
     a writer that misrouted rows across partition dirs, breaks the
     hash (misrouted rows change the scanned aggregate)."""
-    from aind_data_transformation_spark.io import txlog_source
-
     base = _scratch(sf_dir, "txlog_ds_write_part")
     shutil.rmtree(base, ignore_errors=True)
     log_dir = os.path.join(base, "_log")
@@ -5363,8 +5047,8 @@ def q_sink_txlog_datasource_write_partitioned(
         .option("partition_col", "o_orderstatus")
         .save(log_dir)
     )
-    pairs = _txlog_part_live(_txlog_part_log_rows(spark, log_dir))
-    opened = sorted(p for p, v in pairs if v == "F")
+    pairs = _live_adds(_txlog_log_rows(spark, log_dir))
+    opened = sorted(p for p, r in pairs.items() if r["part"] == "F")
     # read back through the CONNECTOR: Spark pushes the partition
     # filter into the reader (pushFilters), which prunes the other
     # partitions' dirs at planning time — end-to-end partition
@@ -5417,8 +5101,6 @@ def q_scan_txlog_datasource_pruned(
     asserted at the reader level in tests/test_sinks.py; the
     partition-pushdown end-to-end read lives in
     `sink_txlog_datasource_write_partitioned`."""
-    from aind_data_transformation_spark.io import txlog_source
-
     base = _scratch(sf_dir, "txlog_ds_pruned")
     shutil.rmtree(base, ignore_errors=True)
     txlog_source.register(spark)
@@ -5484,8 +5166,6 @@ def q_scan_txlog_datasource_time_travel(
     version's replay; deletion vectors committed AFTER the travel
     point provably do not apply (the as_of-scoped DV resolution) —
     that case is pinned in tests/test_sinks.py."""
-    from aind_data_transformation_spark.io import txlog_source
-
     log_dir = _build_txlog_table_with_delete(
         spark, sf_dir, "txlog_table_ds_tt"
     )
@@ -5549,8 +5229,6 @@ def q_scan_txlog_datasource_mapped(
     dropped bytes stay unreachable, and external Spark jobs survive
     RENAME/DROP/re-ADD without coordination. Must hash-equal
     `sink_txlog_column_mapping`'s oracle."""
-    from aind_data_transformation_spark.io import txlog_source
-
     log_dir = _build_txlog_mapped_table(
         spark, sf_dir, "txlog_table_ds_colmap"
     )
@@ -5595,8 +5273,6 @@ def q_sink_txlog_datasource_write_part_stats(
     handful of partition dirs, never the table."""
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
 
-    from aind_data_transformation_spark.io import txlog_source
-
     base = _scratch(sf_dir, "txlog_ds_write_part_stats")
     shutil.rmtree(base, ignore_errors=True)
     log_dir = os.path.join(base, "_log")
@@ -5635,7 +5311,7 @@ def q_sink_txlog_datasource_write_part_stats(
         ]
     )
     n_scanned = len({p.data_dir for p in rdr.partitions()})
-    n_live = len(_txlog_live_from_rows(_txlog_log_rows(spark, log_dir)))
+    n_live = len(_live_files(_txlog_log_rows(spark, log_dir)))
     snap = (
         spark.read.format("txlog")
         .option("path", log_dir)
@@ -5702,8 +5378,6 @@ def q_sink_txlog_datasource_merge_schema(
     post-evolution rows carry it — same oracle as the engine key, so a
     connector that rewrote files, dropped old rows, or misaligned the
     added column breaks the hash."""
-    from aind_data_transformation_spark.io import txlog_source
-
     base = _scratch(sf_dir, "txlog_ds_merge_schema")
     shutil.rmtree(base, ignore_errors=True)
     log_dir = os.path.join(base, "_log")
@@ -5772,8 +5446,6 @@ def q_scan_txlog_datasource_mapped_dv(
     Oracle = the mapped table's restatement minus the deleted keys;
     resurrected rows, leaked tombstones, or a misprojected column all
     break the hash."""
-    from aind_data_transformation_spark.io import txlog_source
-
     log_dir = _build_txlog_mapped_table(
         spark, sf_dir, "txlog_table_ds_colmap_dv"
     )
@@ -5834,8 +5506,6 @@ def q_sink_txlog_stats_read_checkpointed(
     half's rows. The oracle restates the plain range aggregate; that
     pruning still genuinely skips files is asserted inline (all 8
     files live, strictly fewer opened)."""
-    from aind_data_transformation_spark.io import txlog_source
-
     base = _scratch(sf_dir, "txlog_stats_ckpt")
     shutil.rmtree(base, ignore_errors=True)
     log_dir = os.path.join(base, "_log")
@@ -5897,8 +5567,6 @@ def q_sink_txlog_datasource_autocheckpoint(
     read-back through the connector must still equal all of orders —
     the oracle restates it — proving no add was lost to compaction."""
     import glob as _glob
-
-    from aind_data_transformation_spark.io import txlog_source
 
     base = _scratch(sf_dir, "txlog_ds_autockpt")
     shutil.rmtree(base, ignore_errors=True)
@@ -5967,8 +5635,6 @@ def q_sink_txlog_datasource_bloom_prune(
     bits, sparse-compressed); a needle-in-100-TB key lookup plans on
     the log alone and opens a handful of files."""
     from pyspark.sql.datasource import In
-
-    from aind_data_transformation_spark.io import txlog_source
 
     base = _scratch(sf_dir, "txlog_ds_bloom")
     shutil.rmtree(base, ignore_errors=True)
@@ -6068,8 +5734,6 @@ def q_sink_txlog_partition_evolution(
     new files under the new."""
     from pyspark.sql.datasource import EqualTo
 
-    from aind_data_transformation_spark.io import txlog_source
-
     base = _scratch(sf_dir, "txlog_ds_part_evo")
     shutil.rmtree(base, ignore_errors=True)
     log_dir = os.path.join(base, "_log")
@@ -6102,7 +5766,7 @@ def q_sink_txlog_partition_evolution(
         rdr.pushFilters([filt])
         return len({p.data_dir for p in rdr.partitions()})
 
-    n_live = len(_txlog_live_from_rows(_txlog_log_rows(spark, log_dir)))
+    n_live = len(_live_files(_txlog_log_rows(spark, log_dir)))
     n_status = scanned(EqualTo(("o_orderstatus",), "F"))
     n_kmod = scanned(EqualTo(("kmod",), "1"))
     tbl = spark.read.format("txlog").option("path", log_dir).load()
@@ -6210,7 +5874,7 @@ def q_sink_txlog_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.dirname(log_dir), "data", "append-proto"
     )
     orders.where(F.col("o_orderkey") % 5 == 0).write.parquet(extra_path)
-    assert _txlog_attempt_commit(
+    assert txlog_source.attempt_commit(
         log_dir,
         4,
         [{"commit": 4, "action": "add", "path": extra_path}],
@@ -6219,7 +5883,7 @@ def q_sink_txlog_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ...but a remove-carrying commit is rejected at the primitive
     n_blocked_remove = 0
     try:
-        _txlog_attempt_commit(
+        txlog_source.attempt_commit(
             log_dir,
             5,
             [{"commit": 5, "action": "remove", "path": extra_path}],
@@ -6268,7 +5932,7 @@ def q_sink_txlog_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     set_protocol(log_c, 1, 2, [], ["constraints"])
     n_blocked_plain = 0
     try:
-        _txlog_attempt_commit(
+        txlog_source.attempt_commit(
             log_c,
             1,
             [{"commit": 1, "action": "add", "path": batch0}],
@@ -6277,7 +5941,7 @@ def q_sink_txlog_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     except TxlogProtocolError:
         n_blocked_plain = 1
     n_engine_commits = int(
-        _txlog_attempt_commit(
+        txlog_source.attempt_commit(
             log_c,
             1,
             [{"commit": 1, "action": "add", "path": batch0}],
@@ -6288,8 +5952,7 @@ def q_sink_txlog_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert n_blocked_plain == 1 and n_engine_commits == 1
 
     # --- result: table A's post-append snapshot + probe counters ---
-    live = _txlog_live_files(spark, log_dir, as_of=None)
-    snap = spark.read.parquet(*live)
+    snap = _txlog_snapshot(spark, log_dir)
     return (
         snap.groupBy("o_orderstatus")
         .agg(
@@ -6360,7 +6023,6 @@ def q_sink_txlog_text_bloom_prune(
     layout arithmetic."""
     from aind_data_transformation_spark.io.txlog_source import (
         TxlogBatchReader,
-        _log_rows,
         register,
     )
 
@@ -6560,7 +6222,7 @@ def q_corpus_decontaminate_indexed(
     )
     n_contaminated = (
         (
-            spark.read.parquet(*cands)
+            _txlog_scan(spark, _txlog_log_rows(spark, log_dir), cands)
             .where(cond)
             .select("doc_id")
             .distinct()
@@ -6618,10 +6280,9 @@ def txlog_upsert(
     merge's own snapshot degrades U to an unmatched update, which the
     merge inserts — upsert semantics hold under the race. Returns the
     merge result plus ``n_updated``/``n_inserted``."""
-    live = _txlog_live_files(spark, log_dir, None)
     batch_keys = rows.select(key_col).distinct()
     hits = (
-        spark.read.parquet(*live)
+        _txlog_snapshot(spark, log_dir)
         .select(key_col)
         .join(F.broadcast(batch_keys), key_col, "leftsemi")
         .distinct()
@@ -6667,8 +6328,7 @@ def q_sink_txlog_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = txlog_upsert(spark, log_dir, batch, "o_orderkey")
     assert res["version"] is not None
-    live = _txlog_live_files(spark, log_dir, as_of=None)
-    snap = spark.read.parquet(*live)
+    snap = _txlog_snapshot(spark, log_dir)
     return (
         snap.groupBy("o_orderstatus")
         .agg(

@@ -604,8 +604,7 @@ def q_stream_txlog_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="stream_txlog_cdc_ckpt_")
     q = sjobs.txlog_cdc_apply_ingest(stream, log_dir, ckpt)
     q.awaitTermination()
-    live = _sinks._txlog_live_files(spark, log_dir, as_of=None)
-    snap = spark.read.parquet(*live)
+    snap = _sinks._txlog_snapshot(spark, log_dir)
     return snap.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("o_orderkey").cast("long").alias("sum_keys"),

@@ -21,6 +21,7 @@ Scale notes (100 TB / unbounded):
 
 from __future__ import annotations
 
+import glob
 import os
 import tempfile
 import uuid
@@ -696,15 +697,18 @@ def minhash_dedup_apply_batch(
     # guard's semantics are unchanged)
     if len(banded.take(1)) == 0:
         return
-    try:
-        store = (
+    # the store exists once some batch landed its signatures (empty
+    # batches write nothing, so batch N>0 may find none yet); a store
+    # that exists but cannot be read raises instead of silently
+    # dropping every cross-batch pair
+    all_b = banded
+    if glob.glob(os.path.join(sig_dir, "batch_id=*")):
+        all_b = (
             spark.read.parquet(sig_dir)
             .where(F.col("batch_id") < batch_id)
             .select("doc_id", "band1", "band2")
+            .unionByName(banded)
         )
-    except Exception:
-        store = None
-    all_b = banded if store is None else store.unionByName(banded)
     # ONE equi-join on (band_no, band_key) instead of two per-band joins
     # unioned (r13, guide §2.4: the two joins carried identical inputs
     # under different keys — stacking the two bands as rows keys both
@@ -763,12 +767,12 @@ def txlog_epoch_commit(
     foreachBatch's at-least-once into exactly-once."""
     import os
 
-    from aind_data_transformation_spark.queries import sinks as _sinks
+    from aind_data_transformation_spark.io.txlog_source import attempt_commit
 
     path = os.path.join(data_dir, f"epoch-{int(batch_id):05d}")
     batch_df.write.mode("overwrite").parquet(path)
     os.makedirs(log_dir, exist_ok=True)
-    return _sinks._txlog_attempt_commit(
+    return attempt_commit(
         log_dir,
         int(batch_id),
         [{"commit": int(batch_id), "action": "add", "path": path}],

@@ -130,7 +130,7 @@ def test_multiprocess_appenders_no_lost_commits(tmp_path, spark):
     assert got == want
 
 
-def test_merge_vs_delete_serializability(tmp_path, spark):
+def test_merge_vs_delete_serializability(tmp_path, spark, monkeypatch):
     """A COPY-ON-WRITE merge racing a file-removing compaction on the
     same table must end in a state equal to SOME serial order — never
     a lost update or a resurrected file. Forced interleaving: the
@@ -142,6 +142,7 @@ def test_merge_vs_delete_serializability(tmp_path, spark):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.io.txlog_source import (
         _live_files, _log_rows, attempt_commit,
     )
@@ -178,7 +179,7 @@ def test_merge_vs_delete_serializability(tmp_path, spark):
     )
 
     interposed = {"done": False}
-    orig = sinks._txlog_attempt_commit
+    orig = attempt_commit
 
     def racing_commit(log_dir_, version, actions, **kw):
         # fire the interloper exactly once, just before the merge's
@@ -201,11 +202,8 @@ def test_merge_vs_delete_serializability(tmp_path, spark):
     changes = spark.createDataFrame(
         [(0, 10, "D"), (7, 99, "U")], "k long, v long, op string"
     )
-    sinks.txlog_merge.__globals__["_txlog_attempt_commit"] = racing_commit
-    try:
-        res = sinks.txlog_merge(spark, log_dir, changes, "k")
-    finally:
-        sinks.txlog_merge.__globals__["_txlog_attempt_commit"] = orig
+    monkeypatch.setattr(txlog_source, "attempt_commit", racing_commit)
+    res = sinks.txlog_merge(spark, log_dir, changes, "k")
     assert res["version"] is not None
     assert interposed["done"], "interloper never fired"
     # the overlap was a REAL conflict (interloper removed a file the
@@ -295,7 +293,7 @@ def test_dv_delete_applies_on_file_granular_tables(tmp_path, spark):
     """Regression (r12): the mutators mapped input_file_name() to its
     parent DIRECTORY unconditionally, so on a table whose adds are
     per-FILE (the connector's stats/bloom shape) a DV's target matched
-    no live path — `_txlog_live_dvs` dropped it and deleted rows came
+    no live path — the live-DV replay dropped it and deleted rows came
     back. The mapping now resolves to the logged add itself."""
     from aind_data_transformation_spark.io import txlog_source as tx
     from aind_data_transformation_spark.queries import sinks
@@ -339,7 +337,9 @@ def test_dv_delete_applies_on_file_granular_tables(tmp_path, spark):
     )
 
 
-def test_upsert_classify_delete_race_degrades_to_insert(tmp_path, spark):
+def test_upsert_classify_delete_race_degrades_to_insert(
+    tmp_path, spark, monkeypatch
+):
     """A key classified U (live) that a concurrent delete removes
     before the merge's own snapshot must still land — the unmatched
     update degrades to an insert (Delta's whenNotMatched fallback),
@@ -347,6 +347,7 @@ def test_upsert_classify_delete_race_degrades_to_insert(tmp_path, spark):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.io.txlog_source import (
         _live_files, _log_rows, attempt_commit,
     )
@@ -370,7 +371,7 @@ def test_upsert_classify_delete_race_degrades_to_insert(tmp_path, spark):
     )
 
     fired = {"done": False}
-    orig = sinks._txlog_attempt_commit
+    orig = attempt_commit
 
     def racing(log_dir_, version, actions, **kw):
         if not fired["done"]:
@@ -396,11 +397,8 @@ def test_upsert_classify_delete_race_degrades_to_insert(tmp_path, spark):
         return orig(log_dir_, version, actions, **kw)
 
     batch = spark.createDataFrame([(2, 99), (7, 50)], "k long, v long")
-    sinks.txlog_merge.__globals__["_txlog_attempt_commit"] = racing
-    try:
-        res = sinks.txlog_upsert(spark, log_dir, batch, "k")
-    finally:
-        sinks.txlog_merge.__globals__["_txlog_attempt_commit"] = orig
+    monkeypatch.setattr(txlog_source, "attempt_commit", racing)
+    res = sinks.txlog_upsert(spark, log_dir, batch, "k")
     # classification saw key 2 live -> U; key 7 new -> I
     assert (res["n_updated"], res["n_inserted"]) == (1, 1)
     assert fired["done"]
@@ -582,3 +580,40 @@ def test_application_id_read_only_by_the_two_session_caches():
         ("ops.py", "session_stage"),
         (os.path.join("io", "sources.py"), "table_schema"),
     }
+
+
+def test_attempt_commit_retried_only_by_the_commit_loop():
+    """`io/txlog_source.commit_loop` is the one optimistic retry loop:
+    a `for`/`while` loop anywhere else in the package that calls an
+    ``*attempt_commit`` function is a hand-rolled copy of it, with its
+    own snapshot, version and budget rules."""
+    import ast
+
+    pkg = os.path.join(REPO, "aind_data_transformation_spark")
+    found = set()
+    for d, _dirs, files in os.walk(pkg):
+        for f in (f for f in files if f.endswith(".py")):
+            path = os.path.join(d, f)
+            tree = ast.parse(open(path).read(), path)
+            parent = {
+                child: node
+                for node in ast.walk(tree)
+                for child in ast.iter_child_nodes(node)
+            }
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                name = getattr(fn, "id", None) or getattr(fn, "attr", "")
+                if not name.endswith("attempt_commit"):
+                    continue
+                up, in_loop = parent.get(node), False
+                while up is not None and not isinstance(
+                    up, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ):
+                    in_loop = in_loop or isinstance(up, (ast.For, ast.While))
+                    up = parent.get(up)
+                if in_loop:
+                    where = up.name if up is not None else "<module>"
+                    found.add((os.path.relpath(path, pkg), where))
+    assert found == {(os.path.join("io", "txlog_source.py"), "commit_loop")}

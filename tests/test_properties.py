@@ -1537,3 +1537,137 @@ def test_pushdown_intersection_is_superset_for_every_push(spark, pushes):
         assert common == set.intersection(*pushed_so_far)
     # and ⊆ the final push's set specifically
     assert effective <= {repr(EqualTo(("s",), v)) for v in pushes[-1]}
+
+
+# --- the txlog replay core vs a brute-force log simulation --------------
+
+_TXLOG_PATHS = [f"/t/data/f{i}" for i in range(5)]
+_txlog_action = st.one_of(
+    st.tuples(st.just("add"), st.sampled_from(_TXLOG_PATHS)),
+    st.tuples(st.just("remove"), st.sampled_from(_TXLOG_PATHS)),
+    st.tuples(
+        st.just("dv"),
+        st.sampled_from(["/t/data/dv0", "/t/data/dv1"]),
+        st.sampled_from(_TXLOG_PATHS),
+    ),
+    # the same file added AND removed in one commit, in either order
+    st.tuples(
+        st.just("add+remove"), st.sampled_from(_TXLOG_PATHS), st.booleans()
+    ),
+)
+
+
+def _txlog_commits(draw_acts):
+    """[[action dict]] per commit, in file order."""
+    commits = []
+    for c, acts in enumerate(draw_acts):
+        out = []
+        for a in acts:
+            if a[0] == "dv":
+                out.append(
+                    {"commit": c, "action": "dv", "path": a[1], "target": a[2]}
+                )
+            elif a[0] == "add+remove":
+                pair = [
+                    {"commit": c, "action": "add", "path": a[1]},
+                    {"commit": c, "action": "remove", "path": a[1]},
+                ]
+                out.extend(pair[::-1] if a[2] else pair)
+            else:
+                out.append({"commit": c, "action": a[0], "path": a[1]})
+        commits.append(out)
+    return commits
+
+
+def _ref_live(commits, v):
+    live = set()
+    for acts in commits[: v + 1]:
+        live |= {a["path"] for a in acts if a["action"] == "add"}
+        live -= {a["path"] for a in acts if a["action"] == "remove"}
+    return sorted(live)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    acts=st.lists(
+        st.lists(_txlog_action, min_size=1, max_size=4),
+        min_size=1,
+        max_size=7,
+    ),
+    data=st.data(),
+)
+def test_txlog_replay_matches_brute_force(acts, data):
+    """`_live_files`, `_incremental_files`, `_live_dvs` and `_live_adds`
+    against a commit-by-commit simulation (a commit applies its adds,
+    then its removes: remove beats add within a commit, whatever the
+    action order in the file), and checkpoint + tail replay equals full
+    replay at and after the checkpoint version."""
+    import json
+    import shutil
+    import tempfile
+
+    from aind_data_transformation_spark.io.txlog_source import (
+        _incremental_files,
+        _live_adds,
+        _live_dvs,
+        _live_files,
+        _log_rows,
+        checkpoint_log,
+    )
+
+    commits = _txlog_commits(acts)
+    head = len(commits) - 1
+    log_dir = tempfile.mkdtemp(prefix="txlog_replay_prop_")
+    try:
+        for c, rows in enumerate(commits):
+            with open(f"{log_dir}/{c:05d}.json", "w") as fh:
+                fh.writelines(json.dumps(r) + "\n" for r in rows)
+        full = _log_rows(log_dir)
+        for v in range(head + 1):
+            live = _ref_live(commits, v)
+            assert _live_files(full, v) == live
+            adds = _live_adds(full, v)
+            assert sorted(adds) == live
+            for p, r in adds.items():
+                assert r["action"] == "add" and r["commit"] == max(
+                    c
+                    for c, rows in enumerate(commits[: v + 1])
+                    if any(
+                        a["action"] == "add" and a["path"] == p for a in rows
+                    )
+                )
+            want_dvs: dict = {}
+            for rows in commits[: v + 1]:
+                for a in rows:
+                    if a["action"] == "dv" and a["target"] in live:
+                        want_dvs.setdefault(a["target"], set()).add(a["path"])
+            got_dvs = _live_dvs(full, live, v)
+            assert {t: set(ps) for t, ps in got_dvs.items()} == want_dvs
+            for start in range(-1, v):
+                added = {
+                    a["path"]
+                    for rows in commits[start + 1 : v + 1]
+                    for a in rows
+                    if a["action"] == "add"
+                }
+                assert _incremental_files(full, start, v) == sorted(
+                    added & set(live)
+                )
+        ckpt = data.draw(st.integers(min_value=0, max_value=head))
+        checkpoint_log(log_dir, ckpt)
+        compacted = _log_rows(log_dir)
+        for v in range(ckpt, head + 1):
+            live = _live_files(full, v)
+            assert _live_files(compacted, v) == live
+            assert (
+                _live_adds(compacted, v).keys() == _live_adds(full, v).keys()
+            )
+            assert {
+                t: set(ps) for t, ps in _live_dvs(compacted, live, v).items()
+            } == {t: set(ps) for t, ps in _live_dvs(full, live, v).items()}
+            for start in range(ckpt, v):
+                assert _incremental_files(compacted, start, v) == (
+                    _incremental_files(full, start, v)
+                )
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)

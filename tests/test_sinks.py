@@ -7,9 +7,17 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
+
 from tests.conftest import TEST_SF_DIR
 
+from aind_data_transformation_spark.io import txlog_source as tx
 from aind_data_transformation_spark.queries import sinks
+
+
+def _live(spark, log_dir: str, as_of=None) -> list:
+    """The live file list at ``as_of`` through the engine's replay."""
+    return tx._live_files(sinks._txlog_log_rows(spark, log_dir), as_of)
 
 
 def _scratch(name: str) -> str:
@@ -64,7 +72,7 @@ def test_txlog_merge_is_copy_on_write(spark):
     ]
     assert res["version"] == 3
     # live set swapped touched files for the merge file; batch-3 intact
-    live = sinks._txlog_live_files(spark, log_dir, as_of=None)
+    live = _live(spark, log_dir)
     live_names = sorted(os.path.basename(p) for p in live)
     assert live_names[0] == "batch-3" and len(live_names) == 2
     assert live_names[1].startswith("merge-00003-")  # GUID-suffixed
@@ -96,7 +104,7 @@ def test_txlog_merge_survives_commit_race(spark, monkeypatch):
 
     log_dir = sinks._build_txlog_table(spark, TEST_SF_DIR, "txlog_race_test")
     data_dir = os.path.join(os.path.dirname(log_dir), "data")
-    real = sinks._txlog_attempt_commit
+    real = tx.attempt_commit
     state = {"injected": False}
 
     def racy(log_dir_, version, actions, **kw):
@@ -120,7 +128,7 @@ def test_txlog_merge_survives_commit_race(spark, monkeypatch):
                 )
         return real(log_dir_, version, actions, **kw)
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy)
+    monkeypatch.setattr(tx, "attempt_commit", racy)
     res = sinks.txlog_merge(
         spark, log_dir, sinks._merge_changes(spark, TEST_SF_DIR), "o_orderkey"
     )
@@ -138,6 +146,223 @@ def test_txlog_merge_survives_commit_race(spark, monkeypatch):
         tuple(r) for r in sinks._txlog_read(spark, twin, None).collect()
     )
     assert got == want
+
+
+def _orders(spark):
+    from aind_data_transformation_spark.io.sources import load_table
+
+    return load_table(spark, TEST_SF_DIR, "orders")
+
+
+def _dv_delete(spark, log_dir):
+    sinks.txlog_delete_with_dv(
+        spark,
+        log_dir,
+        _orders(spark)
+        .where("o_orderkey % 4 = 0 AND o_orderkey % 3 = 0")
+        .select("o_orderkey"),
+        "o_orderkey",
+    )
+
+
+def _with_dv_delete(spark, name):
+    log_dir = sinks._build_txlog_table(spark, TEST_SF_DIR, name)
+    _dv_delete(spark, log_dir)
+    return log_dir
+
+
+def _with_constraint(spark, name):
+    import json
+
+    log_dir = sinks._build_txlog_table(spark, TEST_SF_DIR, name)
+    with open(os.path.join(log_dir, "00003.json"), "w") as fh:
+        fh.write(
+            json.dumps(
+                {
+                    "commit": 3,
+                    "action": "metaData",
+                    "constraint": sinks._TXLOG_CHECK,
+                }
+            )
+            + "\n"
+        )
+    return log_dir
+
+
+def _dv_update(spark, log_dir):
+    from pyspark.sql import functions as F
+
+    k = F.col("o_orderkey")
+    sinks.txlog_update_with_dv(
+        spark,
+        log_dir,
+        _orders(spark)
+        .where((k % 4 == 2) & (k % 5 == 0))
+        .withColumn("o_totalprice", F.col("o_totalprice") + 10),
+        "o_orderkey",
+    )
+
+
+def _mapped_append(spark, log_dir):
+    from pyspark.sql import functions as F
+
+    sinks.txlog_mapped_write(
+        spark,
+        log_dir,
+        _orders(spark)
+        .where(F.col("o_orderkey") % 3 == 0)
+        .select(
+            "o_orderkey",
+            "o_orderstatus",
+            F.col("o_totalprice").alias("price"),
+            "o_custkey",
+        ),
+        "batch-c",
+    )
+
+
+def _std(spark, name):
+    return sinks._build_txlog_table(spark, TEST_SF_DIR, name)
+
+
+def _part(spark, name):
+    return sinks._build_txlog_part_table(spark, TEST_SF_DIR, name)[0]
+
+
+def _mapped(spark, name):
+    return sinks._build_txlog_mapped_table(spark, TEST_SF_DIR, name)
+
+
+def _plain_read(spark, log_dir):
+    return sinks._txlog_snapshot(spark, log_dir)
+
+
+def _dv_read(spark, log_dir):
+    return sinks.txlog_read_with_dvs(spark, log_dir, "o_orderkey")
+
+
+#: every engine mutator that commits through the one commit loop:
+#: name -> (fixture table, mutation, snapshot read)
+_MUTATORS = {
+    "restore": (
+        _std,
+        lambda spark, d: sinks.txlog_restore(spark, d, to_version=1),
+        _plain_read,
+    ),
+    "delete_with_dv": (_std, _dv_delete, _dv_read),
+    "dv_materialize": (
+        _with_dv_delete,
+        lambda spark, d: sinks.txlog_dv_materialize(spark, d, "o_orderkey"),
+        _plain_read,
+    ),
+    "update_with_dv": (_std, _dv_update, _dv_read),
+    "replace_where": (
+        _part,
+        lambda spark, d: sinks.txlog_replace_where(
+            spark,
+            d,
+            "O",
+            _orders(spark).where(
+                "o_orderstatus = 'O' AND o_orderkey % 2 = 0"
+            ),
+        ),
+        _plain_read,
+    ),
+    "constrained_append": (
+        _with_constraint,
+        lambda spark, d: sinks.txlog_constrained_append(
+            spark, d, _orders(spark).limit(10)
+        ),
+        _plain_read,
+    ),
+    "add_column": (
+        _mapped,
+        lambda spark, d: sinks.txlog_add_column(spark, d, "extra", "bigint"),
+        sinks.txlog_mapped_read,
+    ),
+    "rename_column": (
+        _mapped,
+        lambda spark, d: sinks.txlog_rename_column(spark, d, "price", "p2"),
+        sinks.txlog_mapped_read,
+    ),
+    "drop_column": (
+        _mapped,
+        lambda spark, d: sinks.txlog_drop_column(spark, d, "o_orderstatus"),
+        sinks.txlog_mapped_read,
+    ),
+    "mapped_write": (_mapped, _mapped_append, sinks.txlog_mapped_read),
+}
+
+
+def _head(log_dir):
+    return max(r["commit"] for r in tx._log_rows(log_dir))
+
+
+def _competitor(version):
+    # a benign concurrent commit: a txn marker touches no file, no
+    # partition, no constraint and no mapping, so the conflict-free
+    # result stays the expected one
+    return [{"commit": version, "action": "txn", "path": f"rival-{version}"}]
+
+
+@pytest.mark.parametrize("name", sorted(_MUTATORS))
+def test_txlog_mutator_survives_commit_race(spark, monkeypatch, name):
+    """The lost-race contract of every engine mutator: a competing
+    commit takes the version the mutator claimed, just before its
+    first attempt. The mutator must lose that attempt, land at the next
+    version, and leave exactly the snapshot a conflict-free run leaves
+    on a twin table."""
+    from tests.conftest import canon_frame
+
+    build, mutate, read = _MUTATORS[name]
+    twin = build(spark, f"txlog_race_twin_{name}")
+    mutate(spark, twin)
+    log_dir = build(spark, f"txlog_race_{name}")
+    head0 = _head(log_dir)
+    real = tx.attempt_commit
+    calls = []
+
+    def racy(log_dir_, version, actions, **kw):
+        calls.append(version)
+        if len(calls) == 1:
+            assert real(log_dir_, version, _competitor(version))
+        return real(log_dir_, version, actions, **kw)
+
+    monkeypatch.setattr(tx, "attempt_commit", racy)
+    mutate(spark, log_dir)
+    monkeypatch.setattr(tx, "attempt_commit", real)
+    assert calls == [head0 + 1, head0 + 2]
+    assert _head(log_dir) == head0 + 2 == _head(twin) + 1
+    got, want = read(spark, log_dir), read(spark, twin)
+    assert got.columns == want.columns
+    assert canon_frame(got.toPandas()) == canon_frame(want.toPandas())
+
+
+@pytest.mark.parametrize("name", sorted(_MUTATORS))
+def test_txlog_mutator_raises_after_its_budget(spark, monkeypatch, name):
+    """A competing commit before EVERY attempt: the mutator raises
+    `TxlogConflictError` after exactly the engine budget of attempts,
+    and none of its actions reach the log."""
+    build, mutate, _ = _MUTATORS[name]
+    log_dir = build(spark, f"txlog_budget_{name}")
+    head0 = _head(log_dir)
+    real = tx.attempt_commit
+    calls = []
+
+    def always(log_dir_, version, actions, **kw):
+        calls.append(version)
+        assert real(log_dir_, version, _competitor(version))
+        return real(log_dir_, version, actions, **kw)
+
+    monkeypatch.setattr(tx, "attempt_commit", always)
+    with pytest.raises(sinks.TxlogConflictError):
+        mutate(spark, log_dir)
+    monkeypatch.setattr(tx, "attempt_commit", real)
+    budget = tx.ENGINE_COMMIT_BUDGET
+    assert budget == 3
+    assert calls == [head0 + 1 + i for i in range(budget)]
+    tail = [r for r in tx._log_rows(log_dir) if r["commit"] > head0]
+    assert {r["action"] for r in tail} == {"commitInfo", "txn"}
 
 
 def test_txlog_merge_disjoint_writers_skip_recompute(spark, monkeypatch):
@@ -168,7 +393,7 @@ def test_txlog_merge_disjoint_writers_skip_recompute(spark, monkeypatch):
     log_dir = sinks._build_txlog_table(
         spark, TEST_SF_DIR, "txlog_disjoint_test"
     )
-    real = sinks._txlog_attempt_commit
+    real = tx.attempt_commit
     state = {"injected": False}
 
     def racy(log_dir_, version, actions, **kw):
@@ -182,7 +407,7 @@ def test_txlog_merge_disjoint_writers_skip_recompute(spark, monkeypatch):
             assert res_b["attempts"] == 1 and res_b["recomputes"] == 0
         return real(log_dir_, version, actions, **kw)
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy)
+    monkeypatch.setattr(tx, "attempt_commit", racy)
     res_a = sinks.txlog_merge(spark, log_dir, a_changes, "o_orderkey")
     assert res_a["recomputes"] == 0, "disjoint writers must not recompute"
     assert res_a["attempts"] == 2
@@ -195,7 +420,7 @@ def test_txlog_merge_disjoint_writers_skip_recompute(spark, monkeypatch):
     twin = sinks._build_txlog_table(
         spark, TEST_SF_DIR, "txlog_disjoint_twin"
     )
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", real)
+    monkeypatch.setattr(tx, "attempt_commit", real)
     sinks.txlog_merge(spark, twin, b_changes, "o_orderkey")
     sinks.txlog_merge(spark, twin, a_changes, "o_orderkey")
     got = sorted(
@@ -233,7 +458,7 @@ def test_txlog_merge_overlapping_writers_do_recompute(spark, monkeypatch):
     log_dir = sinks._build_txlog_table(
         spark, TEST_SF_DIR, "txlog_overlap_test"
     )
-    real = sinks._txlog_attempt_commit
+    real = tx.attempt_commit
     state = {"injected": False}
 
     def racy(log_dir_, version, actions, **kw):
@@ -242,12 +467,12 @@ def test_txlog_merge_overlapping_writers_do_recompute(spark, monkeypatch):
             sinks.txlog_merge(spark, log_dir_, b_changes, "o_orderkey")
         return real(log_dir_, version, actions, **kw)
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy)
+    monkeypatch.setattr(tx, "attempt_commit", racy)
     res_a = sinks.txlog_merge(spark, log_dir, a_changes, "o_orderkey")
     assert res_a["recomputes"] == 1, "overlapping keys must recompute"
     # serial equivalence: B's inserted copies of the deleted keys are
     # gone too — no row with a deleted key survives anywhere
-    live = sinks._txlog_live_files(spark, log_dir, as_of=None)
+    live = _live(spark, log_dir)
     survivors = spark.read.parquet(*live).join(
         a_changes.select("o_orderkey"), "o_orderkey", "left_semi"
     )
@@ -275,7 +500,7 @@ def test_txlog_merge_insert_only_changeset(spark):
     res = sinks.txlog_merge(spark, log_dir, inserts, "o_orderkey")
     assert res["touched"] == []
     assert res["version"] == 3
-    live = sinks._txlog_live_files(spark, log_dir, as_of=None)
+    live = _live(spark, log_dir)
     live_names = sorted(os.path.basename(p) for p in live)
     assert live_names[:3] == ["batch-0", "batch-2", "batch-3"]
     assert len(live_names) == 4 and live_names[3].startswith("merge-00003-")
@@ -336,7 +561,7 @@ def test_txlog_dv_delete_is_merge_on_read(spark):
         "left_semi",
     ).count()
     # the live file SET is unchanged (the delete is pure metadata)
-    live = sinks._txlog_live_files(spark, log_dir, as_of=None)
+    live = _live(spark, log_dir)
     assert sorted(os.path.basename(p) for p in live) == [
         "batch-0",
         "batch-2",
@@ -360,7 +585,7 @@ def test_txlog_dv_delete_is_merge_on_read(spark):
     assert sorted(os.path.basename(p) for p in mat["rewritten"]) == [
         "batch-0"
     ]
-    live2 = sinks._txlog_live_files(spark, log_dir, as_of=None)
+    live2 = _live(spark, log_dir)
     assert sorted(os.path.basename(p) for p in live2) == [
         "batch-2",
         "batch-3",
@@ -472,9 +697,7 @@ def test_txlog_shallow_clone_is_zero_copy_and_isolated(spark):
     clone_base = sinks._scratch(TEST_SF_DIR, "txlog_cl_dst")
     clone_log = sinks.txlog_shallow_clone(spark, src_log, clone_base)
     # zero copy: the clone's live set IS the source's live set
-    assert sinks._txlog_live_files(
-        spark, clone_log, as_of=None
-    ) == sinks._txlog_live_files(spark, src_log, as_of=None)
+    assert _live(spark, clone_log) == _live(spark, src_log)
     res = sinks.txlog_merge(
         spark, clone_log, sinks._merge_changes(spark, TEST_SF_DIR),
         "o_orderkey",
@@ -541,7 +764,7 @@ def test_txlog_checkpoint_preserves_dv_and_txn_actions(spark):
     before = sinks._txlog_log_rows(spark, log_dir)
     head = max(r["commit"] for r in before)
     ckpt = sinks.txlog_checkpoint(spark, log_dir, head)
-    after = sinks._txlog_rows_checkpointed(spark, log_dir, ckpt, head)
+    after = sinks._txlog_log_rows(spark, log_dir)  # checkpoint-aware
 
     def pairs(rows, action):
         return {
@@ -551,12 +774,12 @@ def test_txlog_checkpoint_preserves_dv_and_txn_actions(spark):
     assert pairs(after, "dv") == pairs(before, "dv") != set()
     assert {r["path"] for r in after if r["action"] == "txn"} == {"unit:1"}
     # the reconstructed live set matches the pre-checkpoint one
-    assert sinks._txlog_live_from_rows(after) == sinks._txlog_live_from_rows(
+    assert tx._live_files(after) == tx._live_files(
         before
     )
     # and the DV-aware read still hides the deleted rows
-    live = sinks._txlog_live_from_rows(after)
-    dvs = sinks._txlog_live_dvs(after, live)
+    live = tx._live_files(after)
+    dvs = sorted({p for ps in tx._live_dvs(after, live).values() for p in ps})
     assert dvs == [res["dv"]]
 
 
@@ -565,10 +788,10 @@ def test_txlog_attempt_commit_is_put_if_absent(spark):
     False and leaves the winner's bytes untouched."""
     log_dir = sinks._build_txlog_table(spark, TEST_SF_DIR, "txlog_pia_test")
     a = [{"commit": 3, "action": "add", "path": "/tmp/x"}]
-    assert sinks._txlog_attempt_commit(log_dir, 3, a) is True
+    assert tx.attempt_commit(log_dir, 3, a) is True
     before = open(os.path.join(log_dir, "00003.json")).read()
     assert (
-        sinks._txlog_attempt_commit(
+        tx.attempt_commit(
             log_dir, 3, [{"commit": 3, "action": "add", "path": "/tmp/y"}]
         )
         is False
@@ -1221,9 +1444,8 @@ def test_txlog_replace_where_is_partition_scoped(spark):
     )
 
     # time travel: AS OF version 0 still sees the full 'O' partition
-    rows0 = sinks._txlog_part_log_rows(spark, log_dir)
-    live0 = sinks._txlog_part_live([r for r in rows0 if r["commit"] <= 0])
-    o_files0 = [p for p, part in live0 if part == "O"]
+    live0 = tx._live_adds(sinks._txlog_log_rows(spark, log_dir), as_of=0)
+    o_files0 = [p for p, r in live0.items() if r["part"] == "O"]
     n0 = spark.read.parquet(*o_files0).count()
     want0 = orders.where(F.col("o_orderstatus") == "O").count()
     assert n0 == want0
@@ -1250,7 +1472,7 @@ def test_txlog_replace_where_disjoint_partitions_skip_recompute(
     repl_f = orders.where(
         (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 3 == 0)
     )
-    real = sinks._txlog_attempt_commit
+    real = tx.attempt_commit
     state = {"injected": False}
 
     def racy(log_dir_, version, actions, **kw):
@@ -1260,18 +1482,18 @@ def test_txlog_replace_where_disjoint_partitions_skip_recompute(
             assert res_b["attempts"] == 1 and res_b["recomputes"] == 0
         return real(log_dir_, version, actions, **kw)
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy)
+    monkeypatch.setattr(tx, "attempt_commit", racy)
     res_a = sinks.txlog_replace_where(spark, log_dir, "O", repl_o)
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", real)
+    monkeypatch.setattr(tx, "attempt_commit", real)
     assert res_a["attempts"] == 2
     assert res_a["recomputes"] == 0, "disjoint partitions must not recompute"
 
-    live = sinks._txlog_part_live(sinks._txlog_part_log_rows(spark, log_dir))
+    live = tx._live_adds(sinks._txlog_log_rows(spark, log_dir))
     o_rows = spark.read.parquet(
-        *[p for p, part in live if part == "O"]
+        *[p for p, r in live.items() if r["part"] == "O"]
     ).count()
     f_rows = spark.read.parquet(
-        *[p for p, part in live if part == "F"]
+        *[p for p, r in live.items() if r["part"] == "F"]
     ).count()
     assert o_rows == repl_o.count()
     assert f_rows == repl_f.count()
@@ -1327,7 +1549,7 @@ def test_txlog_replace_where_error_mode_raises_on_overlap(
     repl_b = orders.where(
         (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 3 == 0)
     )
-    real = sinks._txlog_attempt_commit
+    real = tx.attempt_commit
     state = {"injected": False}
 
     def racy(log_dir_, version, actions, **kw):
@@ -1336,7 +1558,7 @@ def test_txlog_replace_where_error_mode_raises_on_overlap(
             sinks.txlog_replace_where(spark, log_dir_, "O", repl_b)
         return real(log_dir_, version, actions, **kw)
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy)
+    monkeypatch.setattr(tx, "attempt_commit", racy)
     with pytest.raises(sinks.TxlogConflictError):
         sinks.txlog_replace_where(
             spark, log_dir, "O", repl_a, on_conflict="error"
@@ -1412,7 +1634,7 @@ def test_txlog_constrained_append_race_paths(spark, monkeypatch):
             )
         return log_dir
 
-    real = sinks._txlog_attempt_commit
+    real = tx.attempt_commit
 
     # interloper 1: plain append wins version 4 -> we serialize at 5
     log_a = build("txlog_check_race_a")
@@ -1428,7 +1650,7 @@ def test_txlog_constrained_append_race_paths(spark, monkeypatch):
             )
         return real(log_dir_, version, actions, **kw)
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy_append)
+    monkeypatch.setattr(tx, "attempt_commit", racy_append)
     res = sinks.txlog_constrained_append(spark, log_a, good)
     assert res["committed"] is True and res["version"] == 5
 
@@ -1452,7 +1674,7 @@ def test_txlog_constrained_append_race_paths(spark, monkeypatch):
             )
         return real(log_dir_, version, actions, **kw)
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", racy_meta)
+    monkeypatch.setattr(tx, "attempt_commit", racy_meta)
     with pytest.raises(sinks.TxlogConflictError):
         sinks.txlog_constrained_append(spark, log_b, good)
 
@@ -1719,7 +1941,7 @@ def test_txlog_ds_writer_append_overwrite_lifecycle(spark):
     )
     expect = nation.where("n_regionkey = 0").count()
     assert len(head) == expect
-    live_v1 = sinks._txlog_live_files(spark, log_dir, as_of=1)
+    live_v1 = _live(spark, log_dir, 1)
     assert len(live_v1) == 2  # both appends still readable pre-overwrite
     assert spark.read.parquet(*live_v1).count() == 25
     # staging temps all published or cleaned
@@ -1842,7 +2064,7 @@ def test_txlog_ds_stream_writer_replay_exactly_once(spark):
     got = sorted(
         r["a"]
         for r in spark.read.parquet(
-            *sinks._txlog_live_files(spark, log_dir, as_of=None)
+            *_live(spark, log_dir)
         ).collect()
     )
     assert got == [1, 2, 3]
@@ -1859,7 +2081,7 @@ def test_txlog_ds_stream_writer_replay_exactly_once(spark):
     got = sorted(
         r["a"]
         for r in spark.read.parquet(
-            *sinks._txlog_live_files(spark, log_dir, as_of=None)
+            *_live(spark, log_dir)
         ).collect()
     )
     assert got == [1, 2, 3, 4, 5]
@@ -1884,7 +2106,7 @@ def test_txlog_commit_timestamps_monotonic(spark):
         spark, log_dir, sinks._merge_changes(spark, TEST_SF_DIR), "o_orderkey"
     )
     future = 4_000_000_000_000_000  # year ~2096, beyond any test clock
-    assert sinks._txlog_attempt_commit(
+    assert tx.attempt_commit(
         log_dir,
         4,
         [
@@ -1896,7 +2118,7 @@ def test_txlog_commit_timestamps_monotonic(spark):
             }
         ],
     )
-    assert sinks._txlog_attempt_commit(log_dir, 5, [], op="EMPTY")
+    assert tx.attempt_commit(log_dir, 5, [], op="EMPTY")
     rows = _read_log_json(log_dir)
     cis = sorted(
         (r["commit"], r["ts"], r["op"])
@@ -1922,16 +2144,16 @@ def test_txlog_as_of_timestamp_resolution(spark):
     )
     rows = sinks._txlog_log_rows(spark, log_dir)
     t0 = sinks._TXLOG_TS0
-    assert sinks._txlog_version_as_of_ts(rows, t0) == 0  # inclusive
-    assert sinks._txlog_version_as_of_ts(rows, t0 + 59_999_999) == 0
-    assert sinks._txlog_version_as_of_ts(rows, t0 + 60_000_000) == 1
-    assert sinks._txlog_version_as_of_ts(rows, t0 + 10**12) == 3
+    assert tx._version_as_of_ts(rows, t0) == 0  # inclusive
+    assert tx._version_as_of_ts(rows, t0 + 59_999_999) == 0
+    assert tx._version_as_of_ts(rows, t0 + 60_000_000) == 1
+    assert tx._version_as_of_ts(rows, t0 + 10**12) == 3
     with pytest.raises(ValueError, match="history begins later"):
-        sinks._txlog_version_as_of_ts(rows, t0 - 1)
+        tx._version_as_of_ts(rows, t0 - 1)
 
     sinks.txlog_checkpoint(spark, log_dir, 3)
     rows2 = sinks._txlog_log_rows(spark, log_dir)
-    assert sinks._txlog_version_as_of_ts(rows2, t0 + 10**12) == 3
+    assert tx._version_as_of_ts(rows2, t0 + 10**12) == 3
     assert {
         r["commit"] for r in rows2 if r["action"] == "commitInfo"
     } == {0, 1, 2, 3}
@@ -2000,7 +2222,7 @@ def test_txlog_column_mapping_never_rewrites(spark):
             )
         ]
     }
-    assert sinks._txlog_attempt_commit(
+    assert tx.attempt_commit(
         log_dir,
         0,
         [
@@ -2038,7 +2260,7 @@ def test_txlog_column_mapping_never_rewrites(spark):
     ).collect()[0]
     assert got["n_price"] == snap.count() and got["n_cust"] == 0
 
-    m = sinks._txlog_mapping_latest(sinks._txlog_log_rows(spark, log_dir))
+    m = tx._mapping_as_of(sinks._txlog_log_rows(spark, log_dir))
     recust = next(c for c in m["columns"] if c["name"] == "o_custkey")
     assert recust["physical"] == f"o_custkey__v{v3}"
 
@@ -2132,7 +2354,7 @@ def test_txlog_uniform_export_is_metadata_only_and_versioned(spark):
     for v in (2, 3):
         exp = sinks.txlog_export_manifests(spark, log_dir, meta_dir, version=v)
         assert exp["n_data_rows_read"] == 0
-        live = sinks._txlog_live_files(spark, log_dir, as_of=v)
+        live = _live(spark, log_dir, v)
         n_parts = sum(len(sinks._part_files_local(d)) for d in live)
         assert exp["n_footers_read"] == n_parts
         assert exp["n_files"] == len(live)
@@ -2352,8 +2574,11 @@ def test_txlog_ds_writer_partitioned_layout(spark):
         .option("partition_col", "o_orderstatus")
         .save(log_dir)
     )
-    pairs = sinks._txlog_part_live(
-        sinks._txlog_part_log_rows(spark, log_dir)
+    pairs = sorted(
+        (p, r["part"])
+        for p, r in tx._live_adds(
+            sinks._txlog_log_rows(spark, log_dir)
+        ).items()
     )
     assert sorted(v for _, v in pairs) == ["F", "O", "P"]
     total = 0
@@ -2664,7 +2889,7 @@ def test_txlog_ds_stream_writer_auto_checkpoint(spark, tmp_path):
     assert jsons == ["00010.json", "00011.json"], jsons
 
     want = sorted(x for e in range(12) for x in (e * 10, e * 10 + 1))
-    live = sinks._txlog_live_files(spark, log_dir, as_of=None)
+    live = _live(spark, log_dir)
     got_engine = sorted(
         r["a"] for r in spark.read.parquet(*live).collect()
     )
@@ -2686,7 +2911,7 @@ def test_txlog_ds_stream_writer_auto_checkpoint(spark, tmp_path):
     assert sorted(
         r["a"]
         for r in spark.read.parquet(
-            *sinks._txlog_live_files(spark, log_dir, as_of=None)
+            *_live(spark, log_dir)
         ).collect()
     ) == want
 
@@ -3238,12 +3463,12 @@ def test_txlog_checkpoint_twins_inverse_direction(spark):
     rows_after = sinks._txlog_log_rows(spark, log_dir)
     # the RECONCILED state the readers consume survives compaction:
     # live files, applicable DV (sidecar, target) pairs, provenance
-    assert sinks._txlog_live_from_rows(
+    assert tx._live_files(
         rows_after
-    ) == sinks._txlog_live_from_rows(rows_before)
+    ) == tx._live_files(rows_before)
 
     def live_dvs(rows):
-        live = sinks._txlog_live_from_rows(rows)
+        live = tx._live_files(rows)
         return {
             (r["path"], r["target"])
             for r in rows
@@ -3895,3 +4120,59 @@ def test_stream_reader_protocol_gate(spark, tmp_path):
         q.awaitTermination(120)
         if q.exception() is not None:
             raise Exception(str(q.exception()))
+
+
+def test_txlog_snapshot_ddl_equals_spark_inference(spark):
+    """The one snapshot-schema rule (`_snapshot_ddl`, which the engine's
+    snapshot reads use instead of Spark's footer inference) must give
+    exactly the schema Spark infers from the same live files, for every
+    fixture table the engine builds. The evolved table's log DDL is
+    compared with Spark's merged-schema inference (its old files lack
+    the added column); the rowgroup and manifest fixtures carry no log,
+    so their files are replayed as one add commit."""
+    import json
+
+    fixtures = {
+        "plain": sinks._build_txlog_table(spark, TEST_SF_DIR, "ddl_plain"),
+        "with_delete": sinks._build_txlog_table_with_delete(
+            spark, TEST_SF_DIR, "ddl_delete"
+        ),
+        "evolved": sinks._build_txlog_evo_table(spark, TEST_SF_DIR, "ddl_evo"),
+        "stats": sinks._build_txlog_stats_table(
+            spark, TEST_SF_DIR, "ddl_stats"
+        )[0],
+        "zorder": sinks._build_txlog_zorder_table(
+            spark, TEST_SF_DIR, "ddl_z2"
+        )[0],
+        "part": sinks._build_txlog_part_table(spark, TEST_SF_DIR, "ddl_part")[
+            0
+        ],
+    }
+    cases = [
+        (name, sinks._txlog_log_rows(spark, d), as_of)
+        for name, d in fixtures.items()
+        for as_of in (None, 0)
+    ]
+    rg_dir, _, _ = sinks._build_rowgroup_table(spark, TEST_SF_DIR, "ddl_rg")
+    meta_dir, _, _ = sinks._build_manifest_table(spark, TEST_SF_DIR, "ddl_mf")
+    manifest_files = []
+    for f in sorted(glob.glob(os.path.join(meta_dir, "manifest-0*.json"))):
+        with open(f) as fh:
+            manifest_files += [json.loads(ln)["path"] for ln in fh]
+    for name, paths in (
+        ("rowgroup", sorted(glob.glob(os.path.join(rg_dir, "*.parquet")))),
+        ("manifest", manifest_files),
+    ):
+        assert paths, name
+        rows = [{"commit": 0, "action": "add", "path": p} for p in paths]
+        cases.append((name, rows, None))
+    for name, rows, as_of in cases:
+        live = tx._live_files(rows, as_of)
+        reader = spark.read
+        if name == "evolved":
+            reader = reader.option("mergeSchema", "true")
+        want = reader.parquet(*live).schema
+        got = spark.read.schema(tx._snapshot_ddl(rows, as_of)).parquet(
+            *live
+        ).schema
+        assert got == want, (name, as_of, got, want)

@@ -793,6 +793,39 @@ def test_incremental_minhash_dedup_batch_replay_is_idempotent(spark, tmp_path):
     assert after == before
 
 
+def test_minhash_signature_store_read_errors_raise(spark, tmp_path):
+    """An existing signature store that cannot be read must fail the
+    batch: treating the error as "no store yet" would silently drop
+    every cross-batch near-dup pair. A missing store (no earlier batch
+    landed signatures) is still the legitimate empty case."""
+    import os
+
+    import pytest
+
+    sig = str(tmp_path / "sigs")
+    pairs = str(tmp_path / "pairs")
+    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    batch = docs.where("doc_id % 2 = 1")
+    # no store at all: batch 1 lands its pairs and signatures
+    jobs.minhash_dedup_apply_batch(batch, 1, sig, pairs)
+    assert os.path.isdir(os.path.join(sig, "batch_id=1"))
+
+    bad = tmp_path / "bad_sigs"
+    (bad / "batch_id=0").mkdir(parents=True)
+    (bad / "batch_id=0" / "part-00000.parquet").write_bytes(
+        b"not a parquet file"
+    )
+    with pytest.raises(Exception):
+        jobs.minhash_dedup_apply_batch(
+            batch, 1, str(bad), str(tmp_path / "bad_pairs")
+        )
+    assert not os.path.exists(tmp_path / "bad_pairs"), (
+        "a batch whose store read failed must not land pairs"
+    )
+
+
 def test_txlog_stream_sink_exactly_once_across_kill_restart(
     spark, tmp_path, monkeypatch
 ):
@@ -804,6 +837,7 @@ def test_txlog_stream_sink_exactly_once_across_kill_restart(
     epoch exactly once."""
     import os
 
+    from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.io.sources import load_table
     from aind_data_transformation_spark.queries import sinks
     from aind_data_transformation_spark.streaming import jobs as sjobs
@@ -831,7 +865,7 @@ def test_txlog_stream_sink_exactly_once_across_kill_restart(
 
     # run 1: bomb the commit of epoch 2 AFTER its data write — the
     # worst-case crash point (data on disk, nothing in the log)
-    real = sinks._txlog_attempt_commit
+    real = txlog_source.attempt_commit
     state = {"armed": True}
 
     def bombed(log_dir_, version, actions, **kw):
@@ -840,7 +874,7 @@ def test_txlog_stream_sink_exactly_once_across_kill_restart(
             raise RuntimeError("injected crash before epoch-2 commit")
         return real(log_dir_, version, actions, **kw)
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", bombed)
+    monkeypatch.setattr(txlog_source, "attempt_commit", bombed)
     import pytest as _pytest
 
     with _pytest.raises(Exception):
@@ -850,7 +884,7 @@ def test_txlog_stream_sink_exactly_once_across_kill_restart(
 
     # run 2: same checkpoint, bomb disarmed — epoch 2 replays (same
     # deterministic path, put-if-absent commit), 3 completes
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", real)
+    monkeypatch.setattr(txlog_source, "attempt_commit", real)
     run()
     assert sorted(os.listdir(log_dir)) == [
         "00000.json",
@@ -862,7 +896,7 @@ def test_txlog_stream_sink_exactly_once_across_kill_restart(
         f"epoch-{i:05d}" for i in range(4)
     ]
     # snapshot == full source, nothing dropped or doubled
-    live = sinks._txlog_live_files(spark, log_dir, as_of=None)
+    live = txlog_source._live_files(sinks._txlog_log_rows(spark, log_dir))
     snap = spark.read.parquet(*live)
     assert snap.count() == orders.count()
     assert (
@@ -918,6 +952,7 @@ def test_txlog_cdc_apply_exactly_once_across_kill_restart(
     merge, and batch 1's replayed merge must report skipped."""
     import os
 
+    from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.io.sources import load_table
     from aind_data_transformation_spark.queries import sinks
     from aind_data_transformation_spark.streaming import jobs as sjobs
@@ -941,7 +976,7 @@ def test_txlog_cdc_apply_exactly_once_across_kill_restart(
 
     # bomb: let batch 1's merge commit, then crash before the
     # checkpoint records it
-    real = sinks._txlog_attempt_commit
+    real = txlog_source.attempt_commit
     state = {"armed": True}
     skipped = []
 
@@ -959,14 +994,14 @@ def test_txlog_cdc_apply_exactly_once_across_kill_restart(
             raise RuntimeError("injected crash after cdc:1 commit")
         return ok
 
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", bombed)
+    monkeypatch.setattr(txlog_source, "attempt_commit", bombed)
     import pytest as _pytest
 
     with _pytest.raises(Exception):
         run()
 
     # restart: batch 1 replays and must SKIP (txn already committed)
-    monkeypatch.setattr(sinks, "_txlog_attempt_commit", real)
+    monkeypatch.setattr(txlog_source, "attempt_commit", real)
     real_merge = sinks.txlog_merge
 
     def spying_merge(spark_, log_dir_, changes_, key_col, txn_id=None):
@@ -1029,7 +1064,7 @@ def test_txlog_stream_source_resumes_from_checkpoint(spark, tmp_path):
         r["o_orderstatus"]: r["n"]
         for r in spark.table(name).collect()
     }
-    live = sinks._txlog_live_files(spark, log_dir, as_of=None)
+    live = txlog_source._live_files(sinks._txlog_log_rows(spark, log_dir))
     assert sum(base.values()) == spark.read.parquet(*live).count()
 
     # an append-only commit lands while the stream is down
@@ -1101,10 +1136,10 @@ def test_txlog_stream_source_admission_control(spark, tmp_path):
         b1 = os.path.join(data_dir, "batch-1")
         b4 = os.path.join(data_dir, "batch-4x")
         shutil.copytree(b1, b4)
-        assert sinks._txlog_attempt_commit(
+        assert txlog_source.attempt_commit(
             log_dir, 3, [{"commit": 3, "action": "add", "path": b1}]
         )
-        assert sinks._txlog_attempt_commit(
+        assert txlog_source.attempt_commit(
             log_dir, 4, [{"commit": 4, "action": "add", "path": b4}]
         )
         while time.monotonic() < deadline and sum(n for _, n in seen) < 1875:

@@ -694,10 +694,10 @@ def test_adds_record_bytes_and_stream_paces_by_bytes(spark, tmp_path):
         assert seen and seen[0][1] == 1125, seen  # catch-up batch
         b4 = os.path.join(data_dir, "batch-4x")
         shutil.copytree(b1, b4)
-        assert sinks._txlog_attempt_commit(
+        assert txlog_source.attempt_commit(
             log_dir, 3, [{"commit": 3, "action": "add", "path": b1}]
         )
-        assert sinks._txlog_attempt_commit(
+        assert txlog_source.attempt_commit(
             log_dir, 4, [{"commit": 4, "action": "add", "path": b4}]
         )
         while time.monotonic() < deadline and sum(n for _, n in seen) < 1875:
