@@ -1933,6 +1933,8 @@ def checkpoint_log(log_dir: str, version: int) -> str:
         ("metrics", pa.string()),
         ("min_key", pa.int64()),
         ("max_key", pa.int64()),
+        ("min_cust", pa.int64()),
+        ("max_cust", pa.int64()),
         ("part_col", pa.string()),
         ("stats_col", pa.string()),
         ("bloom", pa.string()),

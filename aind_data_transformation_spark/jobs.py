@@ -35,6 +35,7 @@ from aind_data_transformation_spark.ops import (
     connected_components,
     knuth32,
     local_materializer,
+    materialize_observed,
     parquet_materializer,
 )
 from aind_data_transformation_spark.texthash import (
@@ -259,11 +260,16 @@ class NearDupResolveJob(GenericSparkEtl[NearDupResolveJobSettings]):
         losers = comps.where(F.col("node") != F.col("component")).select(
             F.col("node").alias("doc_id")
         )
-        survivors = docs.join(losers, "doc_id", "left_anti")
+        # rows_out rides the write (observed at the root, as in
+        # CorpusCleanJob) — no re-read of the output
+        obs_out = Observation("neardup_out")
+        survivors = docs.join(losers, "doc_id", "left_anti").observe(
+            obs_out, F.count(F.lit(1)).alias("n")
+        )
         survivors.write.mode("overwrite").option(
             "compression", s.compression
         ).parquet(str(s.output_directory))
-        n_out = self.spark.read.parquet(str(s.output_directory)).count()
+        n_out = int(obs_out.get["n"])
         n_clusters = comps.select("component").distinct().count()
         return JobResponse(
             status_code=200,
@@ -299,9 +305,11 @@ class TrainingCorpusPipelineJobSettings(SparkJobSettings):
     #: ``stage1_gated.parquet``, ``stage2_neardup.parquet`` and
     #: ``stage3_clean.parquet``, and the near-dup work ``lsh_banded``,
     #: ``lsh_cands``, ``verify_trigrams``, ``cc_edges`` and
-    #: ``cc_labels_{round}`` (each ``.parquet``) — the fault-tolerant
-    #: cluster mode: lost executors replay from storage. Unset, the same
-    #: boundaries are executor-local checkpoints (fine in local mode).
+    #: ``cc_labels_{round}`` for rounds 1, 2, ... (each ``.parquet``; the
+    #: starting labels are computed inline, not staged) — the
+    #: fault-tolerant cluster mode: lost executors replay from storage.
+    #: Unset, the same boundaries are executor-local checkpoints (fine in
+    #: local mode).
     staging_dir: Optional[str] = None
 
 
@@ -332,7 +340,7 @@ class TrainingCorpusPipelineJob(
         s = self.job_settings
         # one materializer for every stage boundary, near-dup stage and
         # connected-components round: each stage runs once, and every
-        # rows_* count reads the materialized frame, not its lineage
+        # stage's rows_* count is observed on the job that materializes it
         staging = s.staging_dir or s.checkpoint_dir
         mat = parquet_materializer(staging) if staging else local_materializer
         stage_seconds = {}
@@ -348,13 +356,15 @@ class TrainingCorpusPipelineJob(
             & (F.size(toks) >= s.min_tokens)
         )
         w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
-        exact = mat(
+        exact, seen = materialize_observed(
+            mat,
             gated.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .drop("rn"),
             "stage1_gated",
+            rows=F.count(F.lit(1)),
         )
-        n_gated = exact.count()
+        n_gated = seen["rows"]
         stage_seconds["gate"] = time.perf_counter() - t0
 
         # stage 2: near-dup clusters -> one survivor per cluster
@@ -367,8 +377,11 @@ class TrainingCorpusPipelineJob(
         losers = comps.where(F.col("node") != F.col("component")).select(
             F.col("node").alias("doc_id")
         )
-        neardup = mat(exact.join(losers, "doc_id", "left_anti"), "stage2_neardup")
-        n_neardup = neardup.count()
+        neardup, seen = materialize_observed(
+            mat, exact.join(losers, "doc_id", "left_anti"), "stage2_neardup",
+            rows=F.count(F.lit(1)),
+        )
+        n_neardup = seen["rows"]
         stage_seconds["neardup"] = time.perf_counter() - t0
 
         # stage 3: benchmark decontamination (8-gram overlap, bench side
@@ -384,8 +397,11 @@ class TrainingCorpusPipelineJob(
             .select("doc_id")
             .distinct()
         )
-        clean = mat(train.join(contaminated, "doc_id", "left_anti"), "stage3_clean")
-        n_clean = clean.count()
+        clean, seen = materialize_observed(
+            mat, train.join(contaminated, "doc_id", "left_anti"), "stage3_clean",
+            rows=F.count(F.lit(1)),
+        )
+        n_clean = seen["rows"]
         stage_seconds["decontaminate"] = time.perf_counter() - t0
 
         # stage 4: deterministic shuffle-shard write (Knuth multiplicative

@@ -18,7 +18,14 @@ import tempfile
 import threading
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    Observation,
+    SparkSession,
+    Window,
+    functions as F,
+)
 
 #: (applicationId, *key) -> {"lock", "scratch", "value"}; see session_stage
 _STAGES: dict = {}
@@ -125,6 +132,21 @@ def parquet_materializer(base_dir: str):
         return df.sparkSession.read.parquet(path)
 
     return materialize
+
+
+def materialize_observed(
+    mat, df: DataFrame, name: str, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """``mat(df, name)`` with ``metrics`` (name -> aggregate column)
+    observed at the frame's root: returns the materialized frame and the
+    metric values, which ride the materializing job instead of costing a
+    second one (a ``count()`` of the staged frame). At the root the
+    metrics are collected in the result stage, which a retried map stage
+    cannot count twice. ``mat`` must run the frame eagerly, as both
+    materializers above do."""
+    obs = Observation()
+    out = mat(df.observe(obs, *(c.alias(k) for k, c in metrics.items())), name)
+    return out, obs.get
 
 
 def asof_join(
@@ -351,8 +373,11 @@ def connected_components(
     Distributed shape: each round is two equi-joins of the edge list with
     the label table, one groupBy and one self-join of the parent table.
     State is truncated per round through ``materializer`` — without it the
-    plan doubles every iteration. Convergence is detected with a cheap
-    ``limit(1).count`` probe of changed labels.
+    plan doubles every iteration. The starting labels are not staged:
+    round 1 computes them inline, and its two joins with them share one
+    exchange. Convergence is detected by ``count_if(new_label < label)``,
+    observed on the round's own materialization, so the probe adds no
+    Spark job.
 
     ``materializer`` controls how per-round state is persisted:
     ``local_materializer`` (default) for local/short runs,
@@ -375,10 +400,7 @@ def connected_components(
         ).select("e.*"),
         "cc_edges",
     )
-    labels = mat(
-        sym.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("label")),
-        "cc_labels_0",
-    )
+    labels = sym.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("label"))
     no_label = F.lit(None).cast(labels.schema["label"].dataType)
     for round_no in range(1, max_iters + 1):
         # each edge (v, u) offers L(u) to v itself and to v's label L(v)
@@ -416,10 +438,12 @@ def connected_components(
             parent.select(F.col("node").alias("p"), F.col("p").alias("new_label")),
             "p",
         ).select("node", "label", "new_label")
-        stepped = mat(stepped, f"cc_labels_{round_no}")
-        changed = stepped.where(F.col("new_label") < F.col("label")).limit(1)
+        stepped, seen = materialize_observed(
+            mat, stepped, f"cc_labels_{round_no}",
+            changed=F.count_if(F.col("new_label") < F.col("label")),
+        )
         labels = stepped.select("node", F.col("new_label").alias("label"))
-        if changed.count() == 0:
+        if seen["changed"] == 0:
             return labels.select("node", F.col("label").alias("component"))
     # exhausting the round budget with changes still pending means the
     # labels are PARTIAL and silently wrong (a long chain would split

@@ -5,6 +5,15 @@ shuffle-partition coalescing, skew-join splitting, broadcast demotion),
 Arrow for any Python<->JVM exchange, UTC session time zone (oracle
 determinism, SURVEY.md §5.2.4), and the legacy nanos-as-long parquet flag so
 TIMESTAMP(NANOS) sources (the ``events`` table) are readable.
+
+The JVM-wide generated-code cache is sized above Spark's default of 100
+entries. One TrainingCorpusPipelineJob compiles 112-118 classes cold and
+one pass of the benchmark's registry workload 118-120, so at the default
+every warm pass evicted and recompiled most of its own code: 85 Janino
+compiles per warm corpus job and 90 per warm registry pass (sf0.1-shaped
+tables, ``local[4]``). With room for 1000 classes both fall to 0-4.
+These workloads are short queries, where compile time is a visible share
+of latency.
 """
 
 from __future__ import annotations
@@ -43,6 +52,11 @@ BUILD_CONFS = {
     # Spark hard-fails such a reader when this is off)
     "spark.sql.python.filterPushdown.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # generated-code cache entries (Spark default 100): above the measured
+    # working sets, about 115 classes per corpus job and 120 per registry
+    # pass, with headroom for the full registry (module docstring). A
+    # static conf, so it only takes effect when the session is built.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

@@ -42,6 +42,45 @@ def test_connected_components_raises_on_round_exhaustion(spark):
         connected_components(edges, "s", "d", max_iters=3)
 
 
+#: Spark jobs connected_components launches on a graph that converges in
+#: its first round: staging the edge list, then the round's own
+#: materialization with its shuffle stages. The starting labels are not
+#: staged and the convergence probe rides the round's job, so neither
+#: adds a job of its own.
+_CC_ONE_ROUND_JOB_BUDGET = 10
+
+
+def test_connected_components_one_round_job_budget(spark):
+    from aind_data_transformation_spark.ops import local_materializer
+    from tests.test_sources import _jobs_in_group
+
+    # a star and a clique: every node's starting label (its neighbour
+    # minimum) is already the component minimum, so one round confirms it
+    star = [(0, i) for i in range(1, 20)]
+    clique = [(a, b) for a in range(100, 106) for b in range(a + 1, 106)]
+    edges = spark.createDataFrame(star + clique, ["s", "d"])
+    staged = []
+
+    def mat(df, name):
+        staged.append(name)
+        return local_materializer(df, name)
+
+    comps, n_jobs = _jobs_in_group(
+        spark,
+        "cc-one-round-job-budget",
+        lambda: connected_components(edges, "s", "d", materializer=mat),
+    )
+    got = {r["node"]: r["component"] for r in comps.collect()}
+    assert got == {
+        **{n: 0 for n in range(20)}, **{n: 100 for n in range(100, 106)}
+    }
+    assert staged == ["cc_edges", "cc_labels_1"]
+    assert n_jobs <= _CC_ONE_ROUND_JOB_BUDGET, (
+        f"{n_jobs} Spark jobs > budget {_CC_ONE_ROUND_JOB_BUDGET} for one"
+        " connected-components round"
+    )
+
+
 def test_pack_sequences_matches_bruteforce(spark):
     rows = [(i, (i * 7) % 13 + 1) for i in range(100)]
     df = spark.createDataFrame(rows, ["id", "n"])
