@@ -95,9 +95,10 @@ class SparkJobSettings(BaseSettings):
     #: "rocksdb" (spills to local disk + changelog checkpointing — the
     #: production choice when key cardinality makes state exceed heap)
     streaming_state_store: Literal["hdfs", "rocksdb"] = "hdfs"
-    #: durable directory for iterative-op stage materialization and
-    #: pipeline stage boundaries (HDFS/S3 on a cluster). Job subclasses
-    #: with their own materialize/staging knobs fall back to this.
+    #: durable directory (HDFS/S3 on a cluster): the corpus jobs stage
+    #: their pipeline boundaries, near-dup work and connected-components
+    #: rounds here as parquet (unset: executor-local checkpoints), and
+    #: StreamingIngestJob keeps its streaming checkpoint here
     checkpoint_dir: Optional[str] = None
 
     @classmethod
@@ -199,15 +200,10 @@ class GenericSparkEtl(ABC, Generic[_T]):
     def run_job(self) -> JobResponse:
         """Run the ETL job and report the outcome."""
 
-    def timed_response(self, rows_written: int, started_at: float) -> JobResponse:
-        """Convenience: success envelope with metrics in ``data``."""
-        return JobResponse(
-            status_code=200,
-            message="ok",
-            data=json.dumps(
-                {
-                    "rows_written": rows_written,
-                    "seconds": round(time.time() - started_at, 3),
-                }
-            ),
-        )
+    @staticmethod
+    def timed_response(started: float, **data) -> JobResponse:
+        """Success envelope: status 200, ``"ok"``, and ``data`` as JSON
+        with the wall ``seconds`` since ``started`` (a ``time.time()``)
+        added."""
+        data["seconds"] = round(time.time() - started, 3)
+        return JobResponse(status_code=200, message="ok", data=json.dumps(data))

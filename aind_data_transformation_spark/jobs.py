@@ -2,26 +2,33 @@
 (subclass the generic job, implement ``run_job``, get a ``JobResponse`` —
 reference README.md:12-47 usage pattern), rebuilt as Spark pipelines.
 
-Two jobs cover the reference's documented job domain plus the engine's
-LLM-pipeline extension:
+Seven jobs cover the reference's documented job domain plus the engine's
+LLM-pipeline and lakehouse extensions:
 
 * :class:`FormatConversionJob` — the reference's literal purpose
   ("compression and format conversion", reference pyproject.toml:7,
   README.md:12): read any supported format, write any other, with codec,
   partitioning, and file-count control from settings.
+* :class:`CompactionJob` — small-files compaction of a parquet directory
+  into files of a target size.
 * :class:`CorpusCleanJob` — the 100-TB training-data shape: language/
-  quality gate -> exact dedup -> near-dup candidate drop, one declarative
-  plan, metrics in ``JobResponse.data``.
+  quality gate -> exact dedup, one declarative plan, metrics in
+  ``JobResponse.data``.
 * :class:`NearDupResolveJob` — the fuzzy tier CorpusCleanJob's exact hash
   can't catch: MinHash-LSH candidates -> exact-Jaccard verification ->
   connected components -> keep one survivor per duplicate cluster.
+* :class:`TrainingCorpusPipelineJob` — the two stages above chained with
+  benchmark decontamination and a deterministic shard write.
+* :class:`AnnIndexBuildJob` — build, publish and validate a quantized
+  ANN index over an embeddings table.
+* :class:`StreamingIngestJob` — incremental watermark-windowed event
+  aggregation into a parquet sink.
 """
 
 from __future__ import annotations
 
 import json
 import time
-from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
@@ -33,6 +40,7 @@ from aind_data_transformation_spark.core import (
 from aind_data_transformation_spark.ops import (
     attach_broadcast,
     connected_components,
+    dedup_keep_first,
     knuth32,
     local_materializer,
     materialize_observed,
@@ -42,6 +50,46 @@ from aind_data_transformation_spark.texthash import (
     token_grams,
     verified_near_dups,
 )
+
+
+def _stage_materializer(s: SparkJobSettings):
+    """Durable parquet stages under ``checkpoint_dir`` when it is set
+    (the fault-tolerant cluster mode: a lost executor replays from
+    storage), executor-local checkpoints otherwise."""
+    if s.checkpoint_dir:
+        return parquet_materializer(s.checkpoint_dir)
+    return local_materializer
+
+
+def _gate_exact_dedup(docs: DataFrame, s: CorpusCleanJobSettings) -> DataFrame:
+    """Language / length / token-count quality gate, then exact dedup on
+    sha256(text) keeping the min-doc_id survivor: one scan-level filter
+    and one hash-window shuffle, no collect, no loop."""
+    gated = docs.where(
+        F.col("lang").isin(s.langs)
+        & F.col("n_chars").between(s.min_chars, s.max_chars)
+        & (F.size(F.split("text", " ")) >= s.min_tokens)
+    )
+    return dedup_keep_first(gated, [F.sha2("text", 256)], ["doc_id"])
+
+
+def _resolve_near_dups(
+    docs: DataFrame, threshold: float, mat
+) -> tuple[DataFrame, DataFrame]:
+    """MinHash-LSH candidates -> exact trigram-Jaccard verification (>=
+    ``threshold``) -> connected components -> anti-join the non-survivors
+    out of ``docs``. Returns ``(survivors, components)``; components are
+    ``(node, component)`` rows. Every stage and component round is
+    materialized through ``mat``."""
+    edges = verified_near_dups(
+        docs, "doc_id", "text", threshold=threshold, materializer=mat
+    )
+    comps = connected_components(edges, "id_a", "id_b", materializer=mat)
+    # survivor = min doc_id per component == the component label itself
+    losers = comps.where(F.col("node") != F.col("component")).select(
+        F.col("node").alias("doc_id")
+    )
+    return docs.join(losers, "doc_id", "left_anti"), comps
 
 
 class FormatConversionJobSettings(SparkJobSettings):
@@ -103,17 +151,11 @@ class FormatConversionJob(GenericSparkEtl[FormatConversionJobSettings]):
                 status_code=400,
                 message=f"unsupported output_format: {s.output_format}",
             )
-        return JobResponse(
-            status_code=200,
-            message="ok",
-            data=json.dumps(
-                {
-                    "rows_written": int(obs.get["n_rows"]),
-                    "output_format": s.output_format,
-                    "compression": codec,
-                    "seconds": round(time.time() - started, 3),
-                }
-            ),
+        return self.timed_response(
+            started,
+            rows_written=int(obs.get["n_rows"]),
+            output_format=s.output_format,
+            compression=codec,
         )
 
 
@@ -147,17 +189,11 @@ class CompactionJob(GenericSparkEtl[CompactionJobSettings]):
         df.repartition(int(n_files)).write.mode("overwrite").option(
             "compression", s.compression
         ).parquet(str(s.output_directory))
-        return JobResponse(
-            status_code=200,
-            message="ok",
-            data=json.dumps(
-                {
-                    "rows_written": int(obs.get["n_rows"]),
-                    "input_bytes": int(total_bytes),
-                    "output_files": int(n_files),
-                    "seconds": round(time.time() - started, 3),
-                }
-            ),
+        return self.timed_response(
+            started,
+            rows_written=int(obs.get["n_rows"]),
+            input_bytes=int(total_bytes),
+            output_files=int(n_files),
         )
 
 
@@ -170,12 +206,10 @@ class CorpusCleanJobSettings(SparkJobSettings):
 
 class CorpusCleanJob(GenericSparkEtl[CorpusCleanJobSettings]):
     """Pretraining-corpus cleaning: quality gate -> exact-hash dedup
-    (min-doc_id survivor) -> write. Everything is one declarative plan —
-    the dedup is a single window over sha256(text), no collect, no loop."""
+    (min-doc_id survivor) -> write, as one declarative plan
+    (:func:`_gate_exact_dedup`)."""
 
     def run_job(self) -> JobResponse:
-        from pyspark.sql import Window
-
         started = time.time()
         s = self.job_settings
         docs = self.spark.read.parquet(str(s.input_source))
@@ -185,47 +219,21 @@ class CorpusCleanJob(GenericSparkEtl[CorpusCleanJobSettings]):
         obs_in = Observation("corpus_in")
         obs_out = Observation("corpus_out")
         docs = docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
-
-        toks = F.split("text", " ")
-        gated = docs.where(
-            F.col("lang").isin(s.langs)
-            & F.col("n_chars").between(s.min_chars, s.max_chars)
-            & (F.size(toks) >= s.min_tokens)
-        )
-        w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
-        deduped = (
-            gated.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-            .observe(obs_out, F.count(F.lit(1)).alias("n"))
+        deduped = _gate_exact_dedup(docs, s).observe(
+            obs_out, F.count(F.lit(1)).alias("n")
         )
         deduped.write.mode("overwrite").option(
             "compression", s.compression
         ).parquet(str(s.output_directory))
         n_in = int(obs_in.get["n"])
         n_out = int(obs_out.get["n"])
-        return JobResponse(
-            status_code=200,
-            message="ok",
-            data=json.dumps(
-                {
-                    "rows_in": n_in,
-                    "rows_out": n_out,
-                    "rows_dropped": n_in - n_out,
-                    "seconds": round(time.time() - started, 3),
-                }
-            ),
+        return self.timed_response(
+            started, rows_in=n_in, rows_out=n_out, rows_dropped=n_in - n_out
         )
 
 
 class NearDupResolveJobSettings(SparkJobSettings):
     jaccard_threshold: float = 0.7
-    #: When set, pipeline stages (LSH bands, candidate pairs, trigram
-    #: sets, per-round component labels) materialize as parquet under this
-    #: directory instead of ``localCheckpoint`` — the fault-tolerant mode
-    #: for cluster runs: a lost executor replays from durable storage
-    #: rather than recomputing from nothing. Leave unset in local mode.
-    materialize_dir: Optional[str] = None
 
 
 class NearDupResolveJob(GenericSparkEtl[NearDupResolveJobSettings]):
@@ -238,7 +246,9 @@ class NearDupResolveJob(GenericSparkEtl[NearDupResolveJobSettings]):
     non-survivors out of the corpus. At 100 TB the expensive stages are
     bounded by the candidate set (LSH buckets), not the corpus: the
     verify join and the component graph only ever see docs that share a
-    signature band."""
+    signature band. With ``checkpoint_dir`` set, LSH bands, candidate
+    pairs, trigram sets and per-round component labels are staged there
+    as parquet."""
 
     def run_job(self) -> JobResponse:
         started = time.time()
@@ -246,84 +256,62 @@ class NearDupResolveJob(GenericSparkEtl[NearDupResolveJobSettings]):
         docs = self.spark.read.parquet(str(s.input_source))
         n_in = docs.count()
 
-        mat_dir = s.materialize_dir or s.checkpoint_dir
-        mat = parquet_materializer(mat_dir) if mat_dir else local_materializer
-        edges = verified_near_dups(
-            docs,
-            "doc_id",
-            "text",
-            threshold=s.jaccard_threshold,
-            materializer=mat,
-        )
-        comps = connected_components(edges, "id_a", "id_b", materializer=mat)
-        # survivor = min doc_id per component == the component label itself
-        losers = comps.where(F.col("node") != F.col("component")).select(
-            F.col("node").alias("doc_id")
+        survivors, comps = _resolve_near_dups(
+            docs, s.jaccard_threshold, _stage_materializer(s)
         )
         # rows_out rides the write (observed at the root, as in
         # CorpusCleanJob) — no re-read of the output
         obs_out = Observation("neardup_out")
-        survivors = docs.join(losers, "doc_id", "left_anti").observe(
-            obs_out, F.count(F.lit(1)).alias("n")
-        )
+        survivors = survivors.observe(obs_out, F.count(F.lit(1)).alias("n"))
         survivors.write.mode("overwrite").option(
             "compression", s.compression
         ).parquet(str(s.output_directory))
         n_out = int(obs_out.get["n"])
         n_clusters = comps.select("component").distinct().count()
-        return JobResponse(
-            status_code=200,
-            message="ok",
-            data=json.dumps(
-                {
-                    "rows_in": n_in,
-                    "rows_out": n_out,
-                    "near_dup_clusters": n_clusters,
-                    "rows_dropped": n_in - n_out,
-                    "seconds": round(time.time() - started, 3),
-                }
-            ),
+        return self.timed_response(
+            started,
+            rows_in=n_in,
+            rows_out=n_out,
+            near_dup_clusters=n_clusters,
+            rows_dropped=n_in - n_out,
         )
 
 
-class TrainingCorpusPipelineJobSettings(SparkJobSettings):
+class TrainingCorpusPipelineJobSettings(
+    CorpusCleanJobSettings, NearDupResolveJobSettings
+):
     """End-to-end corpus build: gate -> exact dedup -> near-dup resolve ->
-    benchmark decontamination -> deterministic shard write."""
+    benchmark decontamination -> deterministic shard write. The gate and
+    near-dup knobs are the two stage jobs' own settings."""
 
-    langs: list[str] = ["en", "de", "fr"]
-    min_chars: int = 50
-    max_chars: int = 5000
-    min_tokens: int = 10
-    jaccard_threshold: float = 0.7
     #: sources treated as evaluation benchmarks; any training doc sharing
     #: a token 8-gram with them is dropped (and bench docs themselves are
     #: excluded from the output corpus)
     bench_sources: list[str] = ["src0", "src1"]
     n_shards: int = 16
-    #: When set (or, failing that, ``checkpoint_dir``), every stage
-    #: materializes as parquet under this directory — the stage boundaries
-    #: ``stage1_gated.parquet``, ``stage2_neardup.parquet`` and
-    #: ``stage3_clean.parquet``, and the near-dup work ``lsh_banded``,
-    #: ``lsh_cands``, ``verify_trigrams``, ``cc_edges`` and
-    #: ``cc_labels_{round}`` for rounds 1, 2, ... (each ``.parquet``; the
-    #: starting labels are computed inline, not staged) — the
-    #: fault-tolerant cluster mode: lost executors replay from storage.
-    #: Unset, the same boundaries are executor-local checkpoints (fine in
-    #: local mode).
-    staging_dir: Optional[str] = None
 
 
 class TrainingCorpusPipelineJob(
     GenericSparkEtl[TrainingCorpusPipelineJobSettings]
 ):
     """The 100-TB training-corpus pipeline as ONE job: every stage is the
-    operator already proven in isolation (CorpusCleanJob's gate+dedup,
-    NearDupResolveJob's LSH->verify->components, corpus_decontaminate's
-    8-gram probe, corpus_shuffle_shard's deterministic sharding), chained
-    through materialized stage boundaries so each stage runs once
-    (executor-local checkpoints, or durable parquet under
-    ``staging_dir``). ``JobResponse.data`` carries the per-stage row
-    counts and ``stage_seconds`` (gate, neardup, decontaminate, write).
+    operator already proven in isolation (CorpusCleanJob's
+    :func:`_gate_exact_dedup`, NearDupResolveJob's
+    :func:`_resolve_near_dups`, corpus_decontaminate's 8-gram probe,
+    corpus_shuffle_shard's deterministic sharding), chained through
+    materialized stage boundaries so each stage runs once.
+    ``JobResponse.data`` carries the per-stage row counts and
+    ``stage_seconds`` (gate, neardup, decontaminate, write).
+
+    With ``checkpoint_dir`` set, every stage materializes as parquet under
+    it — the stage boundaries ``stage1_gated.parquet``,
+    ``stage2_neardup.parquet`` and ``stage3_clean.parquet``, and the
+    near-dup work ``lsh_banded``, ``lsh_cands``, ``verify_trigrams``,
+    ``cc_edges`` and ``cc_labels_{round}`` for rounds 1, 2, ... (each
+    ``.parquet``; the starting labels are computed inline, not staged) —
+    the fault-tolerant cluster mode: lost executors replay from storage.
+    Unset, the same boundaries are executor-local checkpoints (fine in
+    local mode).
 
     Scale shape per stage: (1) gate is a scan-level filter + one
     hash-window dedup on sha256(text); (2) near-dup cost is bounded by
@@ -334,34 +322,20 @@ class TrainingCorpusPipelineJob(
     counts."""
 
     def run_job(self) -> JobResponse:
-        from pyspark.sql import Window
-
         started = time.time()
         s = self.job_settings
         # one materializer for every stage boundary, near-dup stage and
         # connected-components round: each stage runs once, and every
         # stage's rows_* count is observed on the job that materializes it
-        staging = s.staging_dir or s.checkpoint_dir
-        mat = parquet_materializer(staging) if staging else local_materializer
+        mat = _stage_materializer(s)
         stage_seconds = {}
         docs = self.spark.read.parquet(str(s.input_source))
         n_in = docs.count()
 
         # stage 1: quality gate + exact dedup (min-doc_id survivor)
         t0 = time.perf_counter()
-        toks = F.split("text", " ")
-        gated = docs.where(
-            F.col("lang").isin(s.langs)
-            & F.col("n_chars").between(s.min_chars, s.max_chars)
-            & (F.size(toks) >= s.min_tokens)
-        )
-        w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
         exact, seen = materialize_observed(
-            mat,
-            gated.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn"),
-            "stage1_gated",
+            mat, _gate_exact_dedup(docs, s), "stage1_gated",
             rows=F.count(F.lit(1)),
         )
         n_gated = seen["rows"]
@@ -369,17 +343,9 @@ class TrainingCorpusPipelineJob(
 
         # stage 2: near-dup clusters -> one survivor per cluster
         t0 = time.perf_counter()
-        edges = verified_near_dups(
-            exact, "doc_id", "text",
-            threshold=s.jaccard_threshold, materializer=mat,
-        )
-        comps = connected_components(edges, "id_a", "id_b", materializer=mat)
-        losers = comps.where(F.col("node") != F.col("component")).select(
-            F.col("node").alias("doc_id")
-        )
+        survivors, _ = _resolve_near_dups(exact, s.jaccard_threshold, mat)
         neardup, seen = materialize_observed(
-            mat, exact.join(losers, "doc_id", "left_anti"), "stage2_neardup",
-            rows=F.count(F.lit(1)),
+            mat, survivors, "stage2_neardup", rows=F.count(F.lit(1)),
         )
         n_neardup = seen["rows"]
         stage_seconds["neardup"] = time.perf_counter() - t0
@@ -419,25 +385,17 @@ class TrainingCorpusPipelineJob(
             .parquet(str(s.output_directory))
         )
         stage_seconds["write"] = time.perf_counter() - t0
-        return JobResponse(
-            status_code=200,
-            message="ok",
-            data=json.dumps(
-                {
-                    "rows_in": n_in,
-                    "rows_gated": n_gated,
-                    "rows_after_neardup": n_neardup,
-                    "rows_clean": n_clean,
-                    "exact_dropped": n_in - n_gated,
-                    "neardup_dropped": n_gated - n_neardup,
-                    "contaminated_dropped": n_neardup - n_clean,
-                    "n_shards": s.n_shards,
-                    "seconds": round(time.time() - started, 3),
-                    "stage_seconds": {
-                        k: round(v, 3) for k, v in stage_seconds.items()
-                    },
-                }
-            ),
+        return self.timed_response(
+            started,
+            rows_in=n_in,
+            rows_gated=n_gated,
+            rows_after_neardup=n_neardup,
+            rows_clean=n_clean,
+            exact_dropped=n_in - n_gated,
+            neardup_dropped=n_gated - n_neardup,
+            contaminated_dropped=n_neardup - n_clean,
+            n_shards=s.n_shards,
+            stage_seconds={k: round(v, 3) for k, v in stage_seconds.items()},
         )
 
 
@@ -605,17 +563,15 @@ class AnnIndexBuildJob(GenericSparkEtl[AnnIndexBuildJobSettings]):
             "code_bytes_per_vector": 32,
             "recall_at_k": round(recall, 4),
             "k": s.top_k,
-            "seconds": round(time.time() - started, 3),
         }
         if recall < 0.6:
+            payload["seconds"] = round(time.time() - started, 3)
             return JobResponse(
                 status_code=500,
                 message=f"index validation failed: recall {recall:.2f} < 0.6",
                 data=json.dumps(payload),
             )
-        return JobResponse(
-            status_code=200, message="ok", data=json.dumps(payload)
-        )
+        return self.timed_response(started, **payload)
 
 
 class StreamingIngestJobSettings(SparkJobSettings):
@@ -700,14 +656,6 @@ class StreamingIngestJob(GenericSparkEtl[StreamingIngestJobSettings]):
         )
         q.awaitTermination()
         n_rows = s.read.parquet(out).count() if os.path.isdir(out) else 0
-        return JobResponse(
-            status_code=200,
-            message="ok",
-            data=json.dumps(
-                {
-                    "sink_rows_total": int(n_rows),
-                    "checkpoint": ckpt,
-                    "seconds": round(time.time() - started, 3),
-                }
-            ),
+        return self.timed_response(
+            started, sink_rows_total=int(n_rows), checkpoint=ckpt
         )

@@ -105,10 +105,9 @@ def staged_parquet(
     return spark.read.schema(schema).parquet(out)
 
 
-#: A materializer truncates lineage between pipeline stages and returns a
-#: DataFrame backed by the materialized data. ``None`` everywhere means
-#: :func:`local_materializer`.
-Materializer = "Callable[[DataFrame, str], DataFrame]"
+# A materializer ``(df, name) -> DataFrame`` truncates lineage between
+# pipeline stages and returns a frame backed by the materialized data.
+# ``None`` everywhere means :func:`local_materializer`.
 
 
 def local_materializer(df: DataFrame, name: str) -> DataFrame:
@@ -124,12 +123,13 @@ def parquet_materializer(base_dir: str):
     ``{base_dir}/{name}.parquet`` and reads it back — the 100-TB-safe
     option: stages become durable, replayable from any executor, and
     restartable mid-pipeline. Costs one write+read of the (small,
-    signature/edge-sized) intermediate per stage."""
+    signature/edge-sized) intermediate per stage; the read takes the
+    written frame's schema, so it runs no footer-inference job."""
 
     def materialize(df: DataFrame, name: str) -> DataFrame:
         path = f"{base_dir.rstrip('/')}/{name}.parquet"
         df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
     return materialize
 
@@ -279,8 +279,8 @@ def topk_per_group(
 
 def dedup_keep_first(
     df: DataFrame,
-    key_cols: Sequence[str],
-    order_by: Sequence[Column],
+    key_cols: Sequence[str | Column],
+    order_by: Sequence[str | Column],
 ) -> DataFrame:
     """Deterministic dedup: keep the first row per key under an explicit
     total order (unlike ``dropDuplicates``, which keeps an arbitrary one).

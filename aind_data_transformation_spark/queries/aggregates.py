@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
+from aind_data_transformation_spark.ops import dedup_keep_first
 from aind_data_transformation_spark.queries.numeric import (
     cents,
     money_avg,
@@ -324,17 +325,14 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = o.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.col("cnt").desc(), F.col("o_orderpriority").asc()
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("mode_priority"),
-            "cnt",
-        )
+    return dedup_keep_first(
+        counts,
+        ["o_orderstatus"],
+        [F.col("cnt").desc(), F.col("o_orderpriority").asc()],
+    ).select(
+        "o_orderstatus",
+        F.col("o_orderpriority").alias("mode_priority"),
+        "cnt",
     )
 
 

@@ -55,9 +55,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank_plan(
-    spark: SparkSession, sf_dir: str, materialize_every: int = 0
-) -> DataFrame:
+def pagerank_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point integer PageRank, ROUNDS rounds, damping 0.85.
 
     rank0 = SCALE // N for every node; each round every node sends
@@ -71,12 +69,9 @@ def pagerank_plan(
     *linearly* (one join+agg per round) and a fixed ROUNDS needs no
     per-round materialization — one action executes all rounds as one
     job (8 chained shuffles beat 8 jobs + 8 count() materializations by
-    ~8x measured). Materialization is only for lineage control on LONG
-    runs: pass ``materialize_every=k`` to localCheckpoint every k rounds
-    (what you'd do for 50+ rounds on a cluster). Contrast with connected
-    components (ops.py), where each round references its frame twice and
-    the plan would double per round — there, per-round materialization is
-    mandatory."""
+    ~8x measured). Contrast with connected components (ops.py), where
+    each round references its frame twice and the plan would double per
+    round — there, per-round materialization is mandatory."""
     edges = _edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # localCheckpoint (not persist): the edge table is referenced by all
@@ -90,7 +85,7 @@ def pagerank_plan(
     r0 = SCALE // n_nodes
     base = (15 * r0) // DAMP_DEN
     ranks = deg.select(F.col("src").alias("node"), F.lit(r0).alias("rank"))
-    for round_no in range(1, ROUNDS + 1):
+    for _ in range(ROUNDS):
         contribs = edges_deg.join(
             ranks, edges_deg.src == ranks.node, "inner"
         ).select("dst", F.expr("rank DIV deg").alias("contrib"))
@@ -104,8 +99,6 @@ def pagerank_plan(
                 ).alias("rank"),
             )
         )
-        if materialize_every and round_no % materialize_every == 0:
-            ranks = ranks.localCheckpoint()
     return ranks
 
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
+from aind_data_transformation_spark.ops import dedup_keep_first
 
 
 def q_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,11 +155,8 @@ def q_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").isin("en", "fr", "de")
         & F.col("n_chars").between(100, 20000)
     )
-    w = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
-    deduped = (
-        filtered.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
+    deduped = dedup_keep_first(
+        filtered, [F.sha2(F.col("text"), 256)], ["doc_id"]
     )
     return deduped.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),

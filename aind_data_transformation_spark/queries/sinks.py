@@ -1531,15 +1531,29 @@ def _build_txlog_stats_table(spark: SparkSession, sf_dir: str, name: str):
     return log_dir, kmin, kmax
 
 
+#: the add-action fields holding each prunable column's per-file bounds
+_STATS_BOUNDS = {
+    "o_orderkey": ("min_key", "max_key"),
+    "o_custkey": ("min_cust", "max_cust"),
+}
+
+
 def txlog_stats_read(
-    spark: SparkSession, log_dir: str, lo: int, hi: int
+    spark: SparkSession,
+    log_dir: str,
+    lo: int,
+    hi: int,
+    column: str = "o_orderkey",
+    as_of=None,
 ) -> tuple:
     """Stats-based file skipping — the data-skipping half of why
-    lakehouse logs exist: replay the log to the live files WITH their
-    recorded per-file min/max, prune every file whose [min,max] cannot
-    intersect [lo,hi], and scan only the survivors (predicate still
-    applied — stats pruning is a superset guarantee, not a filter).
-    Returns (snapshot DataFrame, n_files_live, n_files_scanned).
+    lakehouse logs exist: replay the log to the live files AS OF
+    ``as_of`` (None = head) WITH their recorded per-file min/max for
+    ``column`` ('o_orderkey' or 'o_custkey'), prune every file whose
+    [min,max] cannot intersect [lo,hi], and scan only the survivors
+    (predicate still applied — stats pruning is a superset guarantee,
+    not a filter). Returns (snapshot DataFrame, n_files_live,
+    n_files_scanned).
 
     Scale: pruning runs on the metadata frame (one row per file), never
     touches data, and is sound because the recorded stats are exact
@@ -1550,22 +1564,21 @@ def txlog_stats_read(
     checkpoint state + JSON tail), so a compacted table prunes from the
     stats the checkpoint preserved — a *.json-glob reader would
     silently drop every live file whose add survives only in the
-    checkpoint. A live file with NO recorded stats is always scanned
-    (pruning is a superset guarantee, never a filter)."""
+    checkpoint. A live file with NO recorded stats for ``column`` (a
+    connector append records none for o_custkey) is always scanned."""
     rows = _txlog_log_rows(spark, log_dir)
-    live = _live_adds(rows)
+    mn, mx = _STATS_BOUNDS[column]
+    live = _live_adds(rows, as_of)
     pruned = sorted(
         p
         for p, r in live.items()
-        if r["min_key"] is None
-        or r["max_key"] is None
-        or (r["max_key"] >= lo and r["min_key"] <= hi)
+        if r[mn] is None or r[mx] is None or (r[mx] >= lo and r[mn] <= hi)
     )
     # everything pruned: a correct EMPTY result, not a crash — scan one
     # live file under the (unsatisfiable, by the proven bounds) filter
     paths = pruned or sorted(live)[:1]
-    snap = _txlog_scan(spark, rows, paths).where(
-        F.col("o_orderkey").between(lo, hi)
+    snap = _txlog_scan(spark, rows, paths, as_of).where(
+        F.col(column).between(lo, hi)
     )
     return snap, len(live), len(pruned)
 
@@ -1740,41 +1753,6 @@ def _build_txlog_zorder_table(spark: SparkSession, sf_dir: str, name: str):
     return log_dir, (kmin, kmax, cmin, cmax)
 
 
-def txlog_stats2_read(
-    spark: SparkSession, log_dir: str, as_of, column: str, lo: int, hi: int
-):
-    """Two-column stats skipping with time travel: replay the log to the
-    live files AS OF `as_of` (None = head) with their recorded per-file
-    min/max for ``column`` ('o_orderkey' or 'o_custkey'), prune files
-    whose [min,max] cannot intersect [lo,hi], and scan only the
-    survivors (predicate still applied — stats pruning is a superset
-    guarantee, never a filter). Returns (snapshot DataFrame,
-    n_files_live, n_files_scanned).
-
-    Scale: the prune runs on one metadata row per file; at 100 TB the
-    difference between the two layouts this key's fixture commits is
-    whether a predicate on the SECOND column opens a few quadrant
-    directories or every file in the table.
-
-    Driver-side log replay (this fixture's adds carry the two-column
-    min_cust/max_cust stats too); the connector's `_live_adds` keeps
-    each live file's winning add."""
-    rows = _txlog_log_rows(spark, log_dir)
-    mn, mx = (
-        ("min_key", "max_key")
-        if column == "o_orderkey"
-        else ("min_cust", "max_cust")
-    )
-    live = _live_adds(rows, as_of)
-    pruned = sorted(
-        p for p, r in live.items() if r[mx] >= lo and r[mn] <= hi
-    )
-    snap = _txlog_scan(spark, rows, pruned, as_of).where(
-        F.col(column).between(lo, hi)
-    )
-    return snap, len(live), len(pruned)
-
-
 def q_sink_txlog_zorder_skipping(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1782,7 +1760,7 @@ def q_sink_txlog_zorder_skipping(
     lakehouse clustering story end-to-end): the fixture's commit 1
     rewrites the key-ordered table into Morton (o_orderkey × o_custkey)
     quadrant files, and the SAME two range predicates are served at both
-    versions via `txlog_stats2_read` — 4 result rows (layout × predicate
+    versions via `txlog_stats_read` — 4 result rows (layout × predicate
     column), each carrying files-live vs files-opened plus the scanned
     rows' aggregate. The oracle restates both bucket assignments (the
     shared `_zval_terms` Morton interleave) and both predicate windows,
@@ -1805,8 +1783,8 @@ def q_sink_txlog_zorder_skipping(
             ("key", "o_orderkey", k_lo, k_hi),
             ("cust", "o_custkey", c_lo, c_hi),
         ):
-            snap, n_live, n_scanned = txlog_stats2_read(
-                spark, log_dir, as_of, column, lo, hi
+            snap, n_live, n_scanned = txlog_stats_read(
+                spark, log_dir, lo, hi, column=column, as_of=as_of
             )
             parts.append(
                 snap.agg(

@@ -22,7 +22,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast, session_stage
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    dedup_keep_first,
+    session_stage,
+)
 from aind_data_transformation_spark.queries.numeric import money_sum, sql_money_sum
 
 #: Session gap / watermark delay shared with streaming/jobs.py.
@@ -103,11 +107,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch twin makes the survivor rule explicit so it is
     oracle-checkable (streaming dedup keeps an arbitrary first-seen row)."""
     e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_id").orderBy("ts", "value")
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("event_id", "ts", "user_id", "event_type", "value")
+    return dedup_keep_first(e, ["event_id"], ["ts", "value"]).select(
+        "event_id", "ts", "user_id", "event_type", "value"
     )
 
 

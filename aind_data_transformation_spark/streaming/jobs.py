@@ -39,6 +39,7 @@ from aind_data_transformation_spark.io.sources import (
     normalize_event_ts,
     table_schema,
 )
+from aind_data_transformation_spark.ops import dedup_keep_first
 
 #: events physical schema for synthetic INT64 TIMESTAMP(NANOS) fixtures
 #: (tests/test_watermark.py writes these): with
@@ -585,19 +586,13 @@ def incremental_corpus_ingest(
     re-scanning the corpus — same plan, smaller probe side. Returns the
     started StreamingQuery.
     """
-    from pyspark.sql import Window
 
     def apply_batch(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
         if len(batch_df.take(1)) == 0:
             return
         hashed = batch_df.withColumn("text_sha", F.sha2("text", 256))
-        w = Window.partitionBy("text_sha").orderBy("doc_id")
-        fresh = (
-            hashed.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        fresh = dedup_keep_first(hashed, ["text_sha"], ["doc_id"])
         try:
             seen = spark.read.parquet(corpus_dir).select("text_sha").distinct()
         except Exception:

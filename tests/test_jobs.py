@@ -229,7 +229,8 @@ def test_neardup_parquet_materialization_identical_to_checkpoint(
 ):
     """The fault-tolerant parquet stage-materialization mode must be
     byte-identical to the default localCheckpoint mode — same survivors,
-    same metrics — and must actually write its stages to disk."""
+    same metrics — and setting only ``checkpoint_dir`` must actually
+    write its stages there."""
     import json
 
     from aind_data_transformation_spark.jobs import (
@@ -259,7 +260,7 @@ def test_neardup_parquet_materialization_identical_to_checkpoint(
             NearDupResolveJobSettings(
                 input_source=str(src),
                 output_directory=str(out),
-                materialize_dir=mat_dir,
+                checkpoint_dir=mat_dir,
             ),
             spark=spark,
         ).run_job()
@@ -303,7 +304,8 @@ def test_training_corpus_pipeline_end_to_end(spark, tmp_path):
     decontaminate -> shard write. Checks monotone stage counts, the
     hive-sharded output layout, the gate count against DuckDB, and that
     the staged (durable-boundary) mode gives the same counts and the
-    same shard contents, every column included."""
+    same shard contents, every column included; the staged gate stage
+    is exactly CorpusCleanJob's output on the same input."""
     import os
 
     out1 = tmp_path / "corpus_a"
@@ -336,7 +338,9 @@ def test_training_corpus_pipeline_end_to_end(spark, tmp_path):
     # rerun with durable staging: identical counts and shard contents
     out2 = tmp_path / "corpus_b"
     staging = tmp_path / "staging"
-    m2 = _run_training_corpus_pipeline(spark, out2, staging_dir=str(staging))
+    m2 = _run_training_corpus_pipeline(
+        spark, out2, checkpoint_dir=str(staging)
+    )
     rows = {k: v for k, v in m.items() if k.startswith("rows_")}
     assert rows == {k: v for k, v in m2.items() if k.startswith("rows_")}
     for stage in ("stage1_gated", "stage2_neardup", "stage3_clean"):
@@ -349,6 +353,17 @@ def test_training_corpus_pipeline_end_to_end(spark, tmp_path):
 
     assert contents(out1) == contents(out2)
 
+    clean = tmp_path / "corpus_clean"
+    resp = CorpusCleanJob(
+        CorpusCleanJobSettings(
+            input_source=f"{TEST_SF_DIR}/documents.parquet",
+            output_directory=str(clean),
+        ),
+        spark=spark,
+    ).run_job()
+    assert resp.status_code == 200
+    assert contents(clean) == contents(staging / "stage1_gated.parquet")
+
 
 #: Spark jobs one TrainingCorpusPipelineJob may launch on the test
 #: fixture: the count measured when every stage runs once and each
@@ -357,21 +372,41 @@ def test_training_corpus_pipeline_end_to_end(spark, tmp_path):
 #: same input. A stage recomputed from its lineage instead of read from
 #: its materialized boundary, or counted by a job of its own, fails this.
 _CORPUS_PIPELINE_JOB_BUDGET = 35 + 1
+#: The same with ``checkpoint_dir`` set: each parquet stage is one write
+#: job, and its read-back takes the written schema, so it runs no
+#: footer-inference job of its own.
+_CORPUS_PIPELINE_STAGED_JOB_BUDGET = 32 + 1
 
 
-def test_training_corpus_pipeline_job_budget(spark, tmp_path):
+def _pipeline_jobs(spark, tmp_path, **settings) -> int:
+    """Spark jobs one TrainingCorpusPipelineJob run launches."""
     sc = spark.sparkContext
-    group = f"corpus-pipeline-budget-{id(tmp_path)}"
+    group = f"corpus-pipeline-budget-{tmp_path}"
     sc.setJobGroup(group, "TrainingCorpusPipelineJob job budget")
     try:
-        _run_training_corpus_pipeline(spark, tmp_path / "out")
+        _run_training_corpus_pipeline(spark, tmp_path / "out", **settings)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_training_corpus_pipeline_job_budget(spark, tmp_path):
+    n_jobs = _pipeline_jobs(spark, tmp_path)
     assert n_jobs <= _CORPUS_PIPELINE_JOB_BUDGET, (
         f"{n_jobs} Spark jobs > budget {_CORPUS_PIPELINE_JOB_BUDGET}: a"
         " stage is computed more than once"
+    )
+
+
+def test_training_corpus_pipeline_staged_job_budget(spark, tmp_path):
+    n_jobs = _pipeline_jobs(
+        spark, tmp_path, checkpoint_dir=str(tmp_path / "stages")
+    )
+    assert n_jobs <= _CORPUS_PIPELINE_STAGED_JOB_BUDGET, (
+        f"{n_jobs} Spark jobs > budget {_CORPUS_PIPELINE_STAGED_JOB_BUDGET}:"
+        " a stage is computed more than once or a staged read-back"
+        " infers its schema"
     )
 
 
@@ -403,8 +438,7 @@ def test_training_corpus_pipeline_warm_rerun_compile_budget(spark, tmp_path):
 def test_session_knobs_shuffle_partitions_and_state_store(spark, tmp_path):
     """The SCALE.md cluster knobs are real settings: shuffle_partitions
     and streaming_state_store apply to the session (runtime confs, safe
-    on an externally-owned session); checkpoint_dir feeds the parquet
-    materializer fallback."""
+    on an externally-owned session)."""
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         job = FormatConversionJob(
@@ -426,31 +460,6 @@ def test_session_knobs_shuffle_partitions_and_state_store(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_checkpoint_dir_fallback_feeds_materializer(spark, tmp_path):
-    """NearDupResolveJob with only the base checkpoint_dir set must
-    stage its iterative work as parquet under that directory."""
-    import os
-
-    from aind_data_transformation_spark.jobs import (
-        NearDupResolveJob,
-        NearDupResolveJobSettings,
-    )
-
-    ck = tmp_path / "ck"
-    job = NearDupResolveJob(
-        NearDupResolveJobSettings(
-            input_source=f"{TEST_SF_DIR}/documents.parquet",
-            output_directory=str(tmp_path / "out"),
-            checkpoint_dir=str(ck),
-        ),
-        spark=spark,
-    )
-    resp = job.run_job()
-    assert resp.status_code == 200
-    staged = os.listdir(ck)
-    assert staged, "no parquet stage materialized under checkpoint_dir"
 
 
 def test_ann_index_build_job_publishes_and_validates(spark, tmp_path):
@@ -558,3 +567,59 @@ def test_streaming_ingest_job_incremental(spark, tmp_path):
     assert got, "no finalized windows written"
     for k, v in got.items():
         assert want.get(k) == v, k
+
+
+def test_corpus_job_settings_reject_removed_dir_names():
+    """``checkpoint_dir`` is the one stage directory: a config still
+    naming a removed per-job stage directory fails validation instead of
+    silently running unstaged."""
+    import pytest
+    from pydantic import ValidationError
+
+    from aind_data_transformation_spark.jobs import (
+        NearDupResolveJobSettings,
+        TrainingCorpusPipelineJobSettings,
+    )
+
+    for cls, name in (
+        (NearDupResolveJobSettings, "materialize_dir"),
+        (TrainingCorpusPipelineJobSettings, "staging_dir"),
+    ):
+        with pytest.raises(ValidationError):
+            cls(input_source="/in", output_directory="/out", **{name: "/d"})
+
+
+def test_jobs_declare_each_setting_and_near_dup_stage_once():
+    """Each settings field in ``jobs.py`` is declared by one class (a
+    composite job inherits its stage jobs' settings), and the near-dup
+    stage's ``verified_near_dups`` and ``connected_components`` are each
+    called from one function, which every near-dup job shares."""
+    import ast
+    import collections
+
+    import aind_data_transformation_spark.jobs as jobs
+
+    tree = ast.parse(open(jobs.__file__).read(), jobs.__file__)
+    declared = collections.defaultdict(list)
+    for cls in (n for n in tree.body if isinstance(n, ast.ClassDef)):
+        for stmt in cls.body:
+            if isinstance(stmt, ast.AnnAssign):
+                declared[stmt.target.id].append(cls.name)
+    twice = {f: c for f, c in declared.items() if len(c) > 1}
+    assert not twice, f"settings declared in more than one class: {twice}"
+
+    callers = collections.defaultdict(set)
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", None) or getattr(
+                    node.func, "attr", ""
+                )
+                if name in ("verified_near_dups", "connected_components"):
+                    callers[name].add(fn.name)
+    assert {k: len(v) for k, v in callers.items()} == {
+        "verified_near_dups": 1,
+        "connected_components": 1,
+    }, dict(callers)

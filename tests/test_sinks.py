@@ -864,14 +864,48 @@ def test_txlog_checkpoint_keeps_second_column_stats(spark):
     hi = cmin + (cmax - cmin) * sinks._STATS_HI_PCT // 100
 
     def cust_read():
-        snap, n_live, n_scanned = sinks.txlog_stats2_read(
-            spark, log_dir, None, "o_custkey", lo, hi
+        snap, n_live, n_scanned = sinks.txlog_stats_read(
+            spark, log_dir, lo, hi, column="o_custkey"
         )
         return n_live, n_scanned, snap.count()
 
     before = cust_read()
     sinks.txlog_checkpoint(spark, log_dir, 1)
     assert cust_read() == before
+
+
+def test_txlog_stats_read_scans_appended_file_without_column_stats(spark):
+    """A connector append to the z-order table records o_orderkey stats
+    only: an o_custkey stats read still prunes the fixture's files, always
+    scans the appended file (it has no min_cust/max_cust to prune by) and
+    returns its matching rows."""
+    from pyspark.sql import functions as F
+
+    from aind_data_transformation_spark.io import txlog_source
+
+    log_dir, (_, _, cmin, cmax) = sinks._build_txlog_zorder_table(
+        spark, TEST_SF_DIR, "txlog_z2_append"
+    )
+    lo = cmin + (cmax - cmin) * sinks._STATS_LO_PCT // 100
+    hi = cmin + (cmax - cmin) * sinks._STATS_HI_PCT // 100
+    snap, n_live, n_scanned = sinks.txlog_stats_read(
+        spark, log_dir, lo, hi, column="o_custkey"
+    )
+    before = (n_live, n_scanned, snap.count())
+
+    txlog_source.register(spark)
+    extra = spark.createDataFrame(
+        [(10**9 + i, lo + i) for i in range(3)], "o_orderkey long, o_custkey long"
+    )
+    extra.coalesce(1).write.format("txlog").mode("append").option(
+        "stats_col", "o_orderkey"
+    ).save(log_dir)
+    snap, n_live, n_scanned = sinks.txlog_stats_read(
+        spark, log_dir, lo, hi, column="o_custkey"
+    )
+    assert (n_live, n_scanned) == (before[0] + 1, before[1] + 1)
+    assert snap.count() == before[2] + 3
+    assert snap.where(F.col("o_orderkey") >= 10**9).count() == 3
 
 
 def test_txlog_schema_evolution_never_rewrites_old_files(spark):
