@@ -45,6 +45,7 @@ from aind_data_transformation_spark.ops import (
     local_materializer,
     materialize_observed,
     parquet_materializer,
+    scratch_dir,
 )
 from aind_data_transformation_spark.texthash import (
     token_grams,
@@ -591,7 +592,10 @@ class StreamingIngestJob(GenericSparkEtl[StreamingIngestJobSettings]):
     offsets AND window state across invocations, so re-running the job is
     an incremental batch, not a recompute — windows still inside the
     watermark stay in state and finalize on a later run. Pairs with the
-    ``streaming_state_store='rocksdb'`` knob for heap-free state.
+    ``streaming_state_store='rocksdb'`` knob for heap-free state. With
+    ``checkpoint_dir`` unset the checkpoint is a scratch dir that lives
+    only as long as the Spark application, so a later process starts
+    over; set ``checkpoint_dir`` to resume across processes.
 
     Scale: the aggregation is the same partial+final hash-agg shape as the
     batch twin (queries/streaming_batch.q_stream_tumbling); state size is
@@ -599,7 +603,6 @@ class StreamingIngestJob(GenericSparkEtl[StreamingIngestJobSettings]):
 
     def run_job(self) -> JobResponse:
         import os
-        import tempfile
 
         from aind_data_transformation_spark.io.sources import (
             normalize_event_ts,
@@ -640,12 +643,7 @@ class StreamingIngestJob(GenericSparkEtl[StreamingIngestJobSettings]):
             )
         )
         out = str(st.output_directory)
-        ckpt = str(
-            st.checkpoint_dir
-            or os.path.join(
-                tempfile.mkdtemp(prefix="spark_graft_ingest_"), "ckpt"
-            )
-        )
+        ckpt = str(st.checkpoint_dir or scratch_dir(s, "ingest_ckpt"))
         q = (
             agg.writeStream.format("parquet")
             .option("path", out)

@@ -4,9 +4,11 @@ needs a custom Catalyst rule — these are algorithmic, not planner-level).
 
 Every operator is a pure DataFrame -> DataFrame function, independent of
 the driver tables, so jobs and queries compose them; the ``queries/``
-modules are thin bindings of these onto the test tables. The one
-exception is :func:`session_stage`, the cache of per-session artifacts
-those bindings share.
+modules are thin bindings of these onto the test tables. The two
+exceptions are :func:`session_stage`, the cache of per-session artifacts
+those bindings share, and :func:`scratch_dir`, the fresh directory every
+call that writes gets; they are the package's only makers of temporary
+paths.
 """
 
 from __future__ import annotations
@@ -86,6 +88,18 @@ def _drop_stages() -> None:
     for entry in _STAGES.values():
         if entry["scratch"] is not None:
             shutil.rmtree(entry["scratch"], ignore_errors=True)
+
+
+def scratch_dir(spark: SparkSession, name: str) -> str:
+    """A fresh, empty directory for one call's output, named
+    ``<name>_<random>``. It lives under one root per Spark application
+    (a :func:`session_stage` entry), so it is removed with that entry:
+    when another application's first stage call evicts this one, or at
+    interpreter exit. Two calls never share a directory, so a later
+    call can never overwrite the files under a frame an earlier call
+    returned."""
+    root = session_stage(spark, ("scratch",), lambda d: d)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=root)
 
 
 def staged_parquet(

@@ -11,27 +11,16 @@ of ``orders`` so both engines see identical inputs.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import asof_join
+from aind_data_transformation_spark.ops import asof_join, scratch_dir
 
 #: the "already materialized" period boundary — everything before it is
 #: the base, everything at/after is the newly-arrived delta
 SPLIT_DATE = "1997-01-01"
 
 _CENTS = "CAST(round(o_totalprice*100) AS BIGINT)"
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    # pid-scoped so concurrent sessions never cross-read mid-rewrite dirs
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.join(
-        tempfile.gettempdir(), "spark_graft_incr", str(os.getpid()), tag, name
-    )
 
 
 def q_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,7 +47,7 @@ def q_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr(_CENTS)).alias("total_cents"),
         )
 
-    mv_path = _scratch(sf_dir, "orders_mv")
+    mv_path = scratch_dir(spark, "orders_mv")
     rollup(o.where(F.col("o_orderdate") < SPLIT_DATE)).write.mode(
         "overwrite"
     ).parquet(mv_path)

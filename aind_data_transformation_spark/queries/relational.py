@@ -9,13 +9,11 @@ across engines, so computed columns can be emitted raw.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from aind_data_transformation_spark.io.sources import load_table, read_csv, read_json
+from aind_data_transformation_spark.ops import scratch_dir
 
 
 def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,9 +31,7 @@ def q_scan_csv_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     Schema-on-read is explicit (never inferSchema — that is an extra full
     pass at 100 TB); the join broadcasts the 5-row region side.
     """
-    scratch = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scan_csv_json", str(os.getpid())
-    )
+    scratch = scratch_dir(spark, "scan_csv_json")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     nation.write.mode("overwrite").option("header", "true").csv(f"{scratch}/nation_csv")
@@ -128,9 +124,7 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     Schema-on-read is explicit (inferSchema on XML is an extra full
     pass); the oracle recomputes from the parquet table, proving the
     XML round-trip is lossless."""
-    scratch = os.path.join(
-        tempfile.gettempdir(), "spark_graft_scan_xml", str(os.getpid())
-    )
+    scratch = scratch_dir(spark, "scan_xml")
     nation = load_table(spark, sf_dir, "nation")
     nation.write.mode("overwrite").format("xml").option(
         "rowTag", "nation"

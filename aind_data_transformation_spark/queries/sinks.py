@@ -8,8 +8,8 @@ layout, and round-trip between formats losslessly.
 Each operator here *performs a real write* to a scratch directory, re-reads
 what it wrote, and returns a DataFrame derived from the re-read — so the
 oracle check validates end-to-end write→read fidelity, not just the plan.
-Scratch lives under /tmp (mode=overwrite; rerun-safe), keyed by scale
-factor so concurrent sf runs don't collide.
+Every call writes into its own fresh ``ops.scratch_dir``, so two live
+frames of one key never share files; the dirs go with the application.
 
 100-TB notes: ``partitionBy`` on a low-cardinality column gives partition
 pruning on read; ``repartition(n)`` before write controls file count/size
@@ -22,11 +22,14 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from aind_data_transformation_spark.ops import attach_broadcast, session_stage
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    scratch_dir,
+    session_stage,
+)
 from pyspark.sql import types as T
 
 from aind_data_transformation_spark.io import txlog_source
@@ -48,20 +51,11 @@ from aind_data_transformation_spark.io.txlog_source import (
 )
 
 
-def _scratch(sf_dir: str, name: str) -> str:
-    # pid-scoped: a concurrently-running second session (bench + tests)
-    # must never read a directory this process is mid-rewrite on.
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.join(
-        tempfile.gettempdir(), "spark_graft_sinks", str(os.getpid()), tag, name
-    )
-
-
 def q_sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned zstd parquet: write lineitem partitioned by
     l_returnflag, re-read, and prove partition pruning + fidelity by
     aggregating per partition from the re-read copy."""
-    out = _scratch(sf_dir, "lineitem_by_flag")
+    out = scratch_dir(spark, "lineitem_by_flag")
     li = load_table(spark, sf_dir, "lineitem")
     # repartition on (partition col, small salt) first: without it every
     # task writes a file into every partition dir (tasks x values small
@@ -88,7 +82,7 @@ def q_sink_repartition(spark: SparkSession, sf_dir: str) -> DataFrame:
     on o_custkey before writing (co-locates each customer's orders in one
     file — the layout a downstream per-customer job wants). The oracle
     checks total fidelity; tests/test_sinks.py asserts the file count."""
-    out = _scratch(sf_dir, "orders_repart")
+    out = scratch_dir(spark, "orders_repart")
     o = load_table(spark, sf_dir, "orders")
     o.repartition(8, "o_custkey").write.mode("overwrite").parquet(out)
     reread = spark.read.parquet(out)
@@ -114,7 +108,7 @@ def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Format conversion parquet→CSV→DataFrame, returning the full re-read
     table: the oracle compares it against the original, proving the
     round-trip is lossless (quoting, header, explicit schema on read)."""
-    out = _scratch(sf_dir, "nation_csv")
+    out = scratch_dir(spark, "nation_csv")
     n = load_table(spark, sf_dir, "nation")
     n.write.mode("overwrite").option("header", "true").csv(out)
     return read_csv(spark, out, _NATION_SCHEMA)
@@ -126,7 +120,7 @@ def q_sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip, so the aggregate checksum (count + exact cents total +
     timestamp bounds) must survive unchanged; the oracle computes the same
     checksum from the original table."""
-    out = _scratch(sf_dir, "orders_json")
+    out = scratch_dir(spark, "orders_json")
     o = load_table(spark, sf_dir, "orders")
     o.write.mode("overwrite").json(out)
     schema = T.StructType(
@@ -157,7 +151,7 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC's native column encodings + predicate pushdown make it the
     interchange format for Hive-era warehouses; the engine supports it as
     a first-class sink alongside parquet/CSV/JSON."""
-    out = _scratch(sf_dir, "customer_orc")
+    out = scratch_dir(spark, "customer_orc")
     c = load_table(spark, sf_dir, "customer")
     c.write.mode("overwrite").option("compression", "zlib").orc(out)
     reread = spark.read.orc(out)
@@ -203,7 +197,7 @@ def q_sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the table-maintenance job behind every
     OPTIMIZE ... ZORDER BY: one range shuffle on zval, then pure
     columnar writes."""
-    out = _scratch(sf_dir, "lineitem_zorder")
+    out = scratch_dir(spark, "lineitem_zorder")
     li = load_table(spark, sf_dir, "lineitem")
     bounds = li.agg(
         F.min("l_partkey").alias("pmin"),
@@ -259,7 +253,7 @@ def q_scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine for a handful of generations, wrong as a steady state; compact
     old generations forward or keep the authoritative schema in a
     catalog. Never rely on positional union across file generations."""
-    out = _scratch(sf_dir, "orders_evolving")
+    out = scratch_dir(spark, "orders_evolving")
     o = load_table(spark, sf_dir, "orders")
     (
         o.where(F.expr("o_orderkey % 2 = 0"))
@@ -297,7 +291,7 @@ def q_scan_bad_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB note: PERMISSIVE + quarantine is the only ingest mode that
     scales operationally; FAILFAST turns one bad row in one file into a
     dead pipeline."""
-    out = _scratch(sf_dir, "nation_dirty")
+    out = scratch_dir(spark, "nation_dirty")
     n = load_table(spark, sf_dir, "nation")
     # The dirty scratch file is test SCAFFOLDING, not the operator: nation
     # is 25 rows, so it is assembled driver-side with plain file IO (three
@@ -306,8 +300,6 @@ def q_scan_bad_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semantics (type-parse failure or extra tokens) — a merely-short row
     # is filled with nulls, not quarantined.
     rows = n.select("n_nationkey", "n_name", "n_regionkey").collect()
-    shutil.rmtree(out, ignore_errors=True)  # the reader scans the whole dir
-    os.makedirs(out, exist_ok=True)
     with open(os.path.join(out, "part-0.csv"), "w", encoding="utf-8") as fh:
         for r in rows:
             fh.write(f"{r[0]},{r[1]},{r[2]}\n")
@@ -368,7 +360,7 @@ def q_scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — proving the line source is lossless for newline-free text.
     At 100 TB the text source splits on line boundaries within files, so
     parallelism is file-count × block-count, same as CSV."""
-    out = _scratch(sf_dir, "docs_txt")
+    out = scratch_dir(spark, "docs_txt")
     d = load_table(spark, sf_dir, "documents")
     d.select("text").write.mode("overwrite").text(out)
     lines = spark.read.text(out)
@@ -387,11 +379,9 @@ def q_scan_bad_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Good docs flow on, bad lines are counted — a crawler dump with one
     mangled line must never kill the ingest. Result: (n_good, n_bad,
     total chars over good docs)."""
-    out = _scratch(sf_dir, "docs_dirty_jsonl")
+    out = scratch_dir(spark, "docs_dirty_jsonl")
     d = load_table(spark, sf_dir, "documents")
     rows = d.select("doc_id", "text").orderBy("doc_id").limit(50).collect()
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
     import json as _json
 
     with open(os.path.join(out, "part-0.jsonl"), "w", encoding="utf-8") as fh:
@@ -434,22 +424,25 @@ def q_scan_bad_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _orders_by_status(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per process) orders as a Hive-partitioned parquet table
-    on o_orderstatus — the shared fixture for the two partition-pruning
-    demos below. The salt bounds files per partition dir at 2 while
-    keeping the write parallel (same knob as sink_parquet_partitioned)."""
-    out = _scratch(sf_dir, "orders_by_status")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        o = load_table(spark, sf_dir, "orders")
+    """Orders as a Hive-partitioned parquet table on o_orderstatus,
+    written once per (session, sf_dir) — the shared read-only fixture
+    for the two partition-pruning demos below. The salt bounds files per
+    partition dir at 2 while keeping the write parallel (same knob as
+    sink_parquet_partitioned)."""
+
+    def build(scratch: str) -> str:
+        out = os.path.join(scratch, "data")
         (
-            o.repartition(
+            load_table(spark, sf_dir, "orders")
+            .repartition(
                 6, F.col("o_orderstatus"), F.pmod("o_orderkey", F.lit(2))
             )
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
+            .write.partitionBy("o_orderstatus")
             .parquet(out)
         )
-    return out
+        return out
+
+    return session_stage(spark, ("orders_by_status", sf_dir), build)
 
 
 def q_scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,14 +474,18 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole fact table."""
     out = _orders_by_status(spark, sf_dir)
     fact = spark.read.parquet(out)
-    dim_path = _scratch(sf_dir, "status_dim")
-    if not os.path.exists(os.path.join(dim_path, "_SUCCESS")):
+
+    def build(scratch: str) -> str:
+        out = os.path.join(scratch, "data")
         # VALUES relation, not createDataFrame: the latter routes the
         # 3 rows through a Python-worker parallelize job (~seconds).
         spark.sql(
             "SELECT col1 AS status, CAST(col2 AS INT) AS sla"
             " FROM VALUES ('F', 1), ('O', 2), ('P', 3)"
-        ).coalesce(1).write.mode("overwrite").parquet(dim_path)
+        ).coalesce(1).write.parquet(out)
+        return out
+
+    dim_path = session_stage(spark, ("status_dim",), build)
     dim = spark.read.parquet(dim_path).where(F.col("sla") <= 1)
     return (
         fact.join(dim, fact.o_orderstatus == dim.status)
@@ -538,16 +535,15 @@ def q_sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the co-located-join layout that turns the fact-fact shuffle, the
     single biggest cost of a repeatedly-joined 100-TB table pair, into
     a scan-local merge. The oracle is the plain join: bucketing must be
-    invisible to results."""
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_buckets_{sf_tag}"
-    )
+    invisible to results. The catalog table names carry the call's
+    scratch dir name, so they are per-call too."""
+    base = scratch_dir(spark, "bkt")
+    tag = os.path.basename(base)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
     for name, df, key in (
-        (f"orders_bkt_{sf_tag}", o, "o_orderkey"),
-        (f"lineitem_bkt_{sf_tag}", li, "l_orderkey"),
+        (f"orders_{tag}", o, "o_orderkey"),
+        (f"lineitem_{tag}", li, "l_orderkey"),
     ):
         (
             df.write.mode("overwrite")
@@ -563,10 +559,10 @@ def q_sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket key) reuses the bucket partitioning — zero shuffles total
     # (plan-asserted in tests/test_plans.py).
     return (
-        spark.table(f"orders_bkt_{sf_tag}")
+        spark.table(f"orders_{tag}")
         .hint("merge")
         .join(
-            spark.table(f"lineitem_bkt_{sf_tag}"),
+            spark.table(f"lineitem_{tag}"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
         .groupBy("o_orderkey", "o_orderstatus")
@@ -611,7 +607,7 @@ def q_sink_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark import inheritable_thread_target
 
-    base = _scratch(sf_dir, "lineitem_codec")
+    base = scratch_dir(spark, "lineitem_codec")
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)")
     term = (
@@ -654,19 +650,17 @@ def q_sink_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(DataFrame.unionByName, per_codec)
 
 
-def codec_bytes(sf_dir: str) -> dict:
-    """On-disk part-file byte totals per codec from the last
-    `sink_codec_tradeoff` run (driver-side metadata listing; consumed by
+def codec_bytes(df: DataFrame) -> dict:
+    """On-disk part-file byte totals per codec under a frame returned by
+    `sink_codec_tradeoff` (driver-side metadata listing of its
+    ``inputFiles()``, whose parent dirs are named by codec; consumed by
     the ordinal size assertions in tests/test_sinks.py)."""
-    base = _scratch(sf_dir, "lineitem_codec")
-    sizes = {}
-    for codec in _TRADEOFF_CODECS:
-        out = os.path.join(base, codec)
-        sizes[codec] = sum(
-            os.path.getsize(os.path.join(out, f))
-            for f in os.listdir(out)
-            if f.startswith("part-")
-        )
+    from urllib.parse import unquote, urlparse
+
+    sizes = dict.fromkeys(_TRADEOFF_CODECS, 0)
+    for uri in df.inputFiles():
+        path = unquote(urlparse(uri).path)
+        sizes[os.path.basename(os.path.dirname(path))] += os.path.getsize(path)
     return sizes
 
 
@@ -706,10 +700,11 @@ def q_sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     drives `jobs.CompactionJob` (Hadoop-FS byte listing,
     ceil(total / target_file_bytes) output files, one
     scan->repartition->write plan), so the oracle check exercises the
-    job users actually deploy, not a lookalike. The write lands in a
-    staging dir and swaps in, so readers never see a half-compacted
-    table. The returned checksum reads the COMPACTED copy, proving the
-    rewrite was lossless; the file-count collapse itself is asserted in
+    job users actually deploy, not a lookalike. The compacted copy is a
+    new directory (``compacted`` beside ``fragmented`` in the call's
+    scratch dir), so no reader ever sees a half-compacted table. The
+    returned checksum reads the COMPACTED copy, proving the rewrite was
+    lossless; the file-count collapse itself is asserted in
     tests/test_sinks.py.
 
     Scale notes: the byte listing is driver-side metadata (the shape a
@@ -722,23 +717,21 @@ def q_sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         CompactionJobSettings,
     )
 
-    frag = _scratch(sf_dir, "orders_fragmented")
-    compact = _scratch(sf_dir, "orders_compacted")
+    base = scratch_dir(spark, "compact_small_files")
+    frag = os.path.join(base, "fragmented")
+    compact = os.path.join(base, "compacted")
     o = load_table(spark, sf_dir, "orders")
-    o.repartition(64).write.mode("overwrite").parquet(frag)
-    staging = compact + "__staging"
+    o.repartition(64).write.parquet(frag)
     resp = CompactionJob(
         CompactionJobSettings(
             input_source=frag,
-            output_directory=staging,
+            output_directory=compact,
             target_file_bytes=_COMPACT_TARGET_BYTES,
         ),
         spark=spark,
     ).run_job()
     if resp.status_code != 200:  # pragma: no cover - job reports, not raises
         raise RuntimeError(f"compaction failed: {resp.message}")
-    shutil.rmtree(compact, ignore_errors=True)
-    shutil.move(staging, compact)
     reread = spark.read.parquet(compact)
     return reread.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -833,10 +826,9 @@ def _build_txlog_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     each key keeps a PRIVATE data dir it can mutate/vacuum freely."""
     import json as _json
 
-    base = _scratch(sf_dir, name)
+    base = scratch_dir(spark, name)
     data_dir = os.path.join(base, "data")
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     staged = _txlog_fixture_batches(spark, sf_dir)
     os.makedirs(data_dir, exist_ok=True)
     paths = {}
@@ -1394,10 +1386,9 @@ def _build_txlog_evo_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     schema v2, and commits the new metaData. Returns the log dir."""
     import json as _json
 
-    base = _scratch(sf_dir, name)
+    base = scratch_dir(spark, name)
     data_dir = os.path.join(base, "data")
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     v1_path = os.path.join(data_dir, "batch-v1")
@@ -1486,10 +1477,9 @@ def _build_txlog_stats_table(spark: SparkSession, sf_dir: str, name: str):
     commit). Returns (log_dir, kmin, kmax)."""
     import json as _json
 
-    base = _scratch(sf_dir, name)
+    base = scratch_dir(spark, name)
     data_dir = os.path.join(base, "data")
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     kmin, kmax = orders.agg(
         F.min("o_orderkey"), F.max("o_orderkey")
@@ -1669,9 +1659,8 @@ def _build_txlog_zorder_table(spark: SparkSession, sf_dir: str, name: str):
     (log_dir, (kmin, kmax, cmin, cmax))."""
     import json as _json
 
-    base = _scratch(sf_dir, name)
+    base = scratch_dir(spark, name)
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
@@ -1912,6 +1901,29 @@ def txlog_delete_with_dv(
     }
 
 
+def _dv_keys(
+    spark: SparkSession, sidecars: list, targets: list, snap: DataFrame,
+    key_col: str,
+) -> DataFrame:
+    """The (target, ``key_col``) pairs of the deletion-vector
+    ``sidecars`` whose target is in ``targets``. A sidecar's schema is
+    fixed by `txlog_delete_with_dv` — ``target string`` plus ``key`` of
+    the snapshot's key type — so the read passes it and runs no
+    footer-inference job."""
+    schema = T.StructType(
+        [
+            T.StructField("target", T.StringType()),
+            T.StructField("key", snap.schema[key_col].dataType),
+        ]
+    )
+    return (
+        spark.read.schema(schema)
+        .parquet(*sidecars)
+        .where(F.col("target").isin(targets))
+        .withColumnRenamed("key", key_col)
+    )
+
+
 def txlog_read_with_dvs(
     spark: SparkSession, log_dir: str, key_col: str, as_of=None
 ) -> DataFrame:
@@ -1930,11 +1942,7 @@ def txlog_read_with_dvs(
     )
     if not dvs:
         return snap.drop("_src")
-    dv = (
-        spark.read.parquet(*dvs)
-        .where(F.col("target").isin(live))
-        .withColumnRenamed("key", key_col)
-    )
+    dv = _dv_keys(spark, dvs, live, snap, key_col)
     return snap.join(
         F.broadcast(dv),
         (snap["_src"] == dv["target"]) & (snap[key_col] == dv[key_col]),
@@ -1962,14 +1970,10 @@ def txlog_dv_materialize(
         if not targets:
             return None
         dvs = sorted({p for ps in by_target.values() for p in ps})
-        dvk = (
-            spark.read.parquet(*dvs)
-            .where(F.col("target").isin(live))
-            .withColumnRenamed("key", key_col)
-        )
         snap = _txlog_scan(spark, rows, targets).withColumn(
             "_src", _src_logged_col(targets)
         )
+        dvk = _dv_keys(spark, dvs, live, snap, key_col)
         survivors = snap.join(
             F.broadcast(dvk),
             (snap["_src"] == dvk["target"])
@@ -2201,11 +2205,10 @@ def txlog_table_changes(
     if dv_pairs:
         sidecars = sorted({p for p, _t in dv_pairs})
         targets = sorted({t for _p, t in dv_pairs})
-        dvdf = (
-            spark.read.parquet(*sidecars)
-            .where(F.col("target").isin(targets))
-            .withColumnRenamed("key", key_col)
+        tsnap = _txlog_scan(spark, rows, targets, to_version).withColumn(
+            "_src", _src_logged_col(targets)
         )
+        dvdf = _dv_keys(spark, sidecars, targets, tsnap, key_col)
         # a re-delete lists keys already tombstoned before the window
         # (sidecars are built from the raw snapshot): those rows were
         # NOT live at from_version, so emitting them again would make a
@@ -2222,17 +2225,10 @@ def txlog_table_changes(
             }
         )
         if pre_dvs:
-            prev = (
-                spark.read.parquet(*pre_dvs)
-                .where(F.col("target").isin(targets))
-                .withColumnRenamed("key", key_col)
-            )
+            prev = _dv_keys(spark, pre_dvs, targets, tsnap, key_col)
             dvdf = dvdf.join(
                 F.broadcast(prev), ["target", key_col], "left_anti"
             )
-        tsnap = _txlog_scan(spark, rows, targets, to_version).withColumn(
-            "_src", _src_logged_col(targets)
-        )
         data = [c for c in tsnap.columns if c not in (key_col, "_src")]
         dv_leg = (
             tsnap.join(
@@ -2374,12 +2370,11 @@ def txlog_shallow_clone(
     snapshot is untouched (divergence is layout-tested). Production
     caveat carried over from Delta: VACUUM on a shallow clone must not
     be pointed at retention sets that would reclaim files the source
-    still owns."""
+    still owns. ``clone_base`` must not hold a table yet."""
     rows = _txlog_log_rows(spark, log_dir)
     live = _live_files(rows)
-    shutil.rmtree(clone_base, ignore_errors=True)
     clone_log = os.path.join(clone_base, "_log")
-    os.makedirs(clone_log, exist_ok=True)
+    os.makedirs(clone_log)
     actions = [{"commit": 0, "action": "add", "path": p} for p in live]
     assert txlog_source.attempt_commit(clone_log, 0, actions, op="CLONE")
     return clone_log
@@ -2397,7 +2392,7 @@ def q_sink_txlog_clone_diverge(
     for: an O(metadata) fork, mutations isolated to the fork's log."""
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_clone_src")
     clone_log = txlog_shallow_clone(
-        spark, log_dir, _scratch(sf_dir, "txlog_table_clone_dst")
+        spark, log_dir, scratch_dir(spark, "txlog_table_clone_dst")
     )
     txlog_merge(
         spark, clone_log, _merge_changes(spark, sf_dir), "o_orderkey"
@@ -2541,7 +2536,9 @@ def q_stream_txlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     table's history converges to its current state."""
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_stream_src")
     txlog_source.register(spark)
-    name = f"txlog_src_{os.getpid()}"
+    # the memory table is named by the call's scratch dir, so it is
+    # per-call like the table it drains
+    name = os.path.basename(os.path.dirname(log_dir))
     q = (
         spark.readStream.format("txlog")
         .option("path", log_dir)
@@ -2558,8 +2555,6 @@ def q_stream_txlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .outputMode("complete")
         .option(
             "checkpointLocation",
-            # under the fixture's scratch root so re-runs reclaim it
-            # with the table instead of leaking one temp dir per run
             os.path.join(os.path.dirname(log_dir), "_src_ckpt"),
         )
         .trigger(availableNow=True)
@@ -3130,10 +3125,9 @@ def _build_txlog_part_table(spark: SparkSession, sf_dir: str, name: str):
     possible. Returns (log_dir, data_dir)."""
     import json as _json
 
-    base = _scratch(sf_dir, name)
+    base = scratch_dir(spark, name)
     data_dir = os.path.join(base, "data")
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     staging = os.path.join(base, "staging")
     (
@@ -3328,10 +3322,9 @@ def _build_manifest_table(spark: SparkSession, sf_dir: str, name: str):
     entry. Returns (meta_dir, kmin, kmax)."""
     import json as _json
 
-    base = _scratch(sf_dir, name)
+    base = scratch_dir(spark, name)
     data_dir = os.path.join(base, "data")
     meta_dir = os.path.join(base, "_meta")
-    shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     kmin, kmax = orders.agg(
         F.min("o_orderkey"), F.max("o_orderkey")
@@ -3839,8 +3832,7 @@ def q_sink_txlog_datasource_write(
     head (writer/reader/engine can never drift on log semantics), and
     the engine's replay AS OF version 1 (the overwrite left history
     time-travelable, nothing was physically deleted)."""
-    base = _scratch(sf_dir, "txlog_ds_write")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_write")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders")
@@ -4102,10 +4094,9 @@ def _build_txlog_mapped_table(
     then file B (odd keys) written under the evolved mapping."""
     import json as _json
 
-    base = _scratch(sf_dir, name)
+    base = scratch_dir(spark, name)
     data_dir = os.path.join(base, "data")
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     a_path = os.path.join(data_dir, "batch-a")
@@ -4221,9 +4212,8 @@ def _build_rowgroup_table(spark: SparkSession, sf_dir: str, name: str):
     Scale: one task per key-range bucket, no driver data path — a
     1000-executor cluster writes 1000 buckets the same way. Returns
     (data_dir, kmin, kmax)."""
-    base = _scratch(sf_dir, name)
+    base = scratch_dir(spark, name)
     out = os.path.join(base, "data")
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(out)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -4573,8 +4563,7 @@ def q_sink_txlog_datasource_write_stats(
     Scale: this is the production write path — N tasks write N files
     and N metadata rows in one commit; the log carries the stats, so
     no reader ever opens a footer to plan."""
-    base = _scratch(sf_dir, "txlog_ds_write_stats")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_write_stats")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -4654,8 +4643,7 @@ def q_sink_txlog_datasource_write_stats_date(
         LessThanOrEqual,
     )
 
-    base = _scratch(sf_dir, "txlog_ds_stats_date")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_stats_date")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -4750,8 +4738,7 @@ def q_sink_txlog_datasource_write_stats_multi(
         LessThanOrEqual,
     )
 
-    base = _scratch(sf_dir, "txlog_ds_stats_multi")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_stats_multi")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -4850,8 +4837,7 @@ def q_sink_txlog_datasource_write_stats_nulls(
     mostly-null enrichment column skips nearly every file)."""
     from pyspark.sql.datasource import IsNotNull, StringStartsWith
 
-    base = _scratch(sf_dir, "txlog_ds_stats_nulls")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_stats_nulls")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -5012,8 +4998,7 @@ def q_sink_txlog_datasource_write_partitioned(
     it. A reader that opened a partition it could prove irrelevant, or
     a writer that misrouted rows across partition dirs, breaks the
     hash (misrouted rows change the scanned aggregate)."""
-    base = _scratch(sf_dir, "txlog_ds_write_part")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_write_part")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -5079,8 +5064,7 @@ def q_scan_txlog_datasource_pruned(
     asserted at the reader level in tests/test_sinks.py; the
     partition-pushdown end-to-end read lives in
     `sink_txlog_datasource_write_partitioned`."""
-    base = _scratch(sf_dir, "txlog_ds_pruned")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_pruned")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -5251,8 +5235,7 @@ def q_sink_txlog_datasource_write_part_stats(
     handful of partition dirs, never the table."""
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
 
-    base = _scratch(sf_dir, "txlog_ds_write_part_stats")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_write_part_stats")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -5356,8 +5339,7 @@ def q_sink_txlog_datasource_merge_schema(
     post-evolution rows carry it — same oracle as the engine key, so a
     connector that rewrote files, dropped old rows, or misaligned the
     added column breaks the hash."""
-    base = _scratch(sf_dir, "txlog_ds_merge_schema")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_merge_schema")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders")
@@ -5484,8 +5466,7 @@ def q_sink_txlog_stats_read_checkpointed(
     half's rows. The oracle restates the plain range aggregate; that
     pruning still genuinely skips files is asserted inline (all 8
     files live, strictly fewer opened)."""
-    base = _scratch(sf_dir, "txlog_stats_ckpt")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_stats_ckpt")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -5546,8 +5527,7 @@ def q_sink_txlog_datasource_autocheckpoint(
     the oracle restates it — proving no add was lost to compaction."""
     import glob as _glob
 
-    base = _scratch(sf_dir, "txlog_ds_autockpt")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_autockpt")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -5614,8 +5594,7 @@ def q_sink_txlog_datasource_bloom_prune(
     the log alone and opens a handful of files."""
     from pyspark.sql.datasource import In
 
-    base = _scratch(sf_dir, "txlog_ds_bloom")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_bloom")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -5712,8 +5691,7 @@ def q_sink_txlog_partition_evolution(
     new files under the new."""
     from pyspark.sql.datasource import EqualTo
 
-    base = _scratch(sf_dir, "txlog_ds_part_evo")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(spark, "txlog_ds_part_evo")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     k = F.col("o_orderkey")
@@ -5872,9 +5850,8 @@ def q_sink_txlog_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert n_blocked_remove == 1, "append_only table accepted a remove"
 
     # --- table B: fenced by an unknown reader feature ---
-    base_b = _scratch(sf_dir, "txlog_table_proto_fenced")
+    base_b = scratch_dir(spark, "txlog_table_proto_fenced")
     log_b = os.path.join(base_b, "_log")
-    shutil.rmtree(base_b, ignore_errors=True)
     os.makedirs(log_b)
     batch0 = os.path.join(os.path.dirname(log_dir), "data", "batch-0")
     with open(os.path.join(log_b, "00000.json"), "w") as fh:
@@ -5903,9 +5880,8 @@ def q_sink_txlog_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- table C: constraints-gated commit paths ---
-    base_c = _scratch(sf_dir, "txlog_table_proto_check")
+    base_c = scratch_dir(spark, "txlog_table_proto_check")
     log_c = os.path.join(base_c, "_log")
-    shutil.rmtree(base_c, ignore_errors=True)
     os.makedirs(log_c)
     set_protocol(log_c, 1, 2, [], ["constraints"])
     n_blocked_plain = 0
@@ -6004,9 +5980,8 @@ def q_sink_txlog_text_bloom_prune(
         register,
     )
 
-    base = _scratch(sf_dir, "txlog_text_bloom")
+    base = scratch_dir(spark, "txlog_text_bloom")
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     register(spark)
     (
@@ -6088,9 +6063,8 @@ def q_sink_txlog_datasource_describe_detail(
         set_protocol,
     )
 
-    base = _scratch(sf_dir, "txlog_describe_detail")
+    base = scratch_dir(spark, "txlog_describe_detail")
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     register(spark)
     orders = load_table(spark, sf_dir, "orders")
     (
@@ -6165,9 +6139,8 @@ def q_corpus_decontaminate_indexed(
         text_candidate_files,
     )
 
-    base = _scratch(sf_dir, "txlog_decontam_idx")
+    base = scratch_dir(spark, "txlog_decontam_idx")
     log_dir = os.path.join(base, "_log")
-    shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     register(spark)
     (

@@ -25,6 +25,7 @@ from aind_data_transformation_spark.io.sources import load_table
 from aind_data_transformation_spark.ops import (
     attach_broadcast,
     dedup_keep_first,
+    scratch_dir,
     session_stage,
 )
 from aind_data_transformation_spark.queries.numeric import money_sum, sql_money_sum
@@ -270,13 +271,11 @@ def q_stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the state read is partition-parallel over the checkpoint's
     shuffle partitions; nothing is collected. The streaming pass itself
     is one watermark-free shuffle on (window, type) — bounded keys."""
-    import tempfile
-
     from aind_data_transformation_spark.streaming import jobs as sjobs
 
     events = sjobs.read_events_stream(spark, sf_dir)
     agg = events.groupBy(F.window("ts", "1 day"), "event_type").count()
-    ckpt = tempfile.mkdtemp(prefix="state_inspect_ckpt_")
+    ckpt = scratch_dir(spark, "state_inspect_ckpt")
     q = (
         agg.writeStream.outputMode("complete")
         .format("noop")
@@ -488,12 +487,10 @@ def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-delivery cost is (new x colliding-buckets), never
     corpus x corpus; the signature store is ~40 bytes/doc."""
-    import tempfile
-
     from aind_data_transformation_spark.streaming import jobs as sjobs
 
     src = _minhash_stage(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="stream_minhash_")
+    base = scratch_dir(spark, "stream_minhash")
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
@@ -532,13 +529,12 @@ def q_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same checkpoint) and composition with the incremental-read
     consumer are asserted in tests/test_streaming.py."""
     import os
-    import tempfile
 
     from aind_data_transformation_spark.queries import sinks as _sinks
     from aind_data_transformation_spark.streaming import jobs as sjobs
 
     src = _txlog_sink_stage(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="stream_txlog_sink_")
+    base = scratch_dir(spark, "stream_txlog_sink")
     log_dir = os.path.join(base, "_log")
     data_dir = os.path.join(base, "data")
     stream = (
@@ -588,7 +584,7 @@ def q_stream_txlog_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     break the hash. Crash-replay idempotence (kill between merge commit
     and checkpoint commit, restart) is asserted in
     tests/test_streaming.py."""
-    import tempfile
+    import os
 
     from aind_data_transformation_spark.queries import sinks as _sinks
     from aind_data_transformation_spark.streaming import jobs as sjobs
@@ -602,7 +598,7 @@ def q_stream_txlog_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    ckpt = tempfile.mkdtemp(prefix="stream_txlog_cdc_ckpt_")
+    ckpt = os.path.join(os.path.dirname(log_dir), "_cdc_ckpt")
     q = sjobs.txlog_cdc_apply_ingest(stream, log_dir, ckpt)
     q.awaitTermination()
     snap = _sinks._txlog_snapshot(spark, log_dir)
@@ -868,13 +864,12 @@ def q_stream_txlog_datasource_write(
     already-committed epoch, markers surviving compaction) is asserted
     in tests/test_sinks.py."""
     import os
-    import tempfile
 
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries import sinks as _sinks
 
     src = _txlog_sink_stage(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="stream_txlog_ds_write_")
+    base = scratch_dir(spark, "stream_txlog_ds_write")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     stream = (
@@ -923,7 +918,6 @@ def q_stream_txlog_write_partitioned(
     Scale: epochs × partitions metadata rows; each epoch's commit cost
     is its own rows, and the planner never lists a directory."""
     import os
-    import tempfile
 
     from pyspark.sql.datasource import EqualTo
 
@@ -931,7 +925,7 @@ def q_stream_txlog_write_partitioned(
     from aind_data_transformation_spark.queries import sinks as _sinks
 
     src = _txlog_sink_stage(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="stream_txlog_part_write_")
+    base = scratch_dir(spark, "stream_txlog_part_write")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     stream = (

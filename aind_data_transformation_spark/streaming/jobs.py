@@ -23,8 +23,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
-import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -39,7 +37,7 @@ from aind_data_transformation_spark.io.sources import (
     normalize_event_ts,
     table_schema,
 )
-from aind_data_transformation_spark.ops import dedup_keep_first
+from aind_data_transformation_spark.ops import dedup_keep_first, scratch_dir
 
 #: events physical schema for synthetic INT64 TIMESTAMP(NANOS) fixtures
 #: (tests/test_watermark.py writes these): with
@@ -475,9 +473,7 @@ def windowed_topk_foreach_batch(
         out.clear()
         out.extend(rows)
 
-    ckpt = os.path.join(
-        tempfile.mkdtemp(prefix="spark_graft_ckpt_"), "topk"
-    )
+    ckpt = scratch_dir(events.sparkSession, "topk_ckpt")
     return (
         counts.writeStream.outputMode("complete")
         .foreachBatch(rank_batch)
@@ -491,8 +487,9 @@ def run_available_now(df: DataFrame, *, mode: str) -> list:
     """Drain a stream built on a bounded source with AvailableNow into a
     memory sink; returns the collected rows. Test/dev helper — production
     sinks use ``write_stream_parquet``."""
-    name = f"q_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="spark_graft_ckpt_"), name)
+    ckpt = scratch_dir(df.sparkSession, "available_now_ckpt")
+    # the memory table is named by the call's checkpoint dir: per-call
+    name = os.path.basename(ckpt)
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -532,15 +529,15 @@ def upsert_stream_foreach_batch(
         spark = batch_df.sparkSession
         if len(batch_df.take(1)) == 0:
             return
-        try:
+        # the snapshot exists once some batch swapped it in; one that
+        # exists but cannot be read raises instead of being replaced
+        # by this batch alone
+        merged = batch_df
+        if glob.glob(os.path.join(target_dir, "part-*")):
             base = spark.read.parquet(target_dir)
-        except Exception:
-            base = None
-        merged = (
-            merge_upsert(base, batch_df.select(*base.columns), key_cols)
-            if base is not None
-            else batch_df
-        )
+            merged = merge_upsert(
+                base, batch_df.select(*base.columns), key_cols
+            )
         tmp = f"{target_dir}__staging_{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(target_dir, ignore_errors=True)
@@ -593,11 +590,11 @@ def incremental_corpus_ingest(
             return
         hashed = batch_df.withColumn("text_sha", F.sha2("text", 256))
         fresh = dedup_keep_first(hashed, ["text_sha"], ["doc_id"])
-        try:
+        # the corpus exists once some batch appended to it; one that
+        # exists but cannot be read raises instead of skipping the
+        # cross-batch dedup
+        if glob.glob(os.path.join(corpus_dir, "part-*")):
             seen = spark.read.parquet(corpus_dir).select("text_sha").distinct()
-        except Exception:
-            seen = None
-        if seen is not None:
             fresh = fresh.join(seen, "text_sha", "left_anti")
         fresh.write.mode("append").parquet(corpus_dir)
 

@@ -582,6 +582,34 @@ def test_application_id_read_only_by_the_two_session_caches():
     }
 
 
+def test_temp_paths_made_only_in_ops():
+    """``ops.session_stage`` and ``ops.scratch_dir`` are the package's
+    only makers of temporary paths: a ``tempfile.*`` or ``os.getpid()``
+    call anywhere else is a hand-built path that no application owns
+    (a fixed pid path that a rebuild overwrites, or a temp dir nothing
+    deletes)."""
+    import ast
+
+    pkg = os.path.join(REPO, "aind_data_transformation_spark")
+    found = set()
+    for d, _dirs, files in os.walk(pkg):
+        for f in (f for f in files if f.endswith(".py")):
+            path = os.path.join(d, f)
+            for node in ast.walk(ast.parse(open(path).read(), path)):
+                fn = getattr(node, "func", None)
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(fn, ast.Attribute)
+                    and isinstance(fn.value, ast.Name)
+                ):
+                    continue
+                if fn.value.id == "tempfile" or (
+                    fn.value.id == "os" and fn.attr == "getpid"
+                ):
+                    found.add((os.path.relpath(path, pkg), node.lineno))
+    assert {f for f, _ in found} == {"ops.py"}, sorted(found)
+
+
 def test_attempt_commit_retried_only_by_the_commit_loop():
     """`io/txlog_source.commit_loop` is the one optimistic retry loop:
     a `for`/`while` loop anywhere else in the package that calls an

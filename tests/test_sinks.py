@@ -20,14 +20,21 @@ def _live(spark, log_dir: str, as_of=None) -> list:
     return tx._live_files(sinks._txlog_log_rows(spark, log_dir), as_of)
 
 
-def _scratch(name: str) -> str:
-    # must mirror the query module's (pid-scoped) scratch layout
-    return sinks._scratch(TEST_SF_DIR, name)
+def _input_root(df, depth: int = 1) -> str:
+    """The directory ``depth`` levels above the first of ``df``'s input
+    files: the layout a key wrote into its own scratch dir."""
+    from urllib.parse import unquote, urlparse
+
+    path = unquote(urlparse(sorted(df.inputFiles())[0]).path)
+    for _ in range(depth):
+        path = os.path.dirname(path)
+    return path
 
 
 def test_partitioned_sink_layout(spark):
-    sinks.q_sink_parquet_partitioned(spark, TEST_SF_DIR).collect()
-    out = _scratch("lineitem_by_flag")
+    df = sinks.q_sink_parquet_partitioned(spark, TEST_SF_DIR)
+    df.collect()
+    out = _input_root(df, 2)
     part_dirs = sorted(
         d for d in os.listdir(out) if d.startswith("l_returnflag=")
     )
@@ -37,8 +44,9 @@ def test_partitioned_sink_layout(spark):
 
 
 def test_repartition_sink_file_count(spark):
-    sinks.q_sink_repartition(spark, TEST_SF_DIR).collect()
-    out = _scratch("orders_repart")
+    df = sinks.q_sink_repartition(spark, TEST_SF_DIR)
+    df.collect()
+    out = _input_root(df)
     files = glob.glob(os.path.join(out, "part-*.parquet"))
     assert len(files) == 8
 
@@ -512,6 +520,35 @@ def test_txlog_merge_insert_only_changeset(spark):
     assert post["n_rows"].sum() == pre["n_rows"].sum() + n_ins
 
 
+def test_txlog_dv_read_runs_no_job(spark):
+    """Deletion-vector sidecars have a fixed schema (``target string``
+    plus the snapshot's key type), so building a DV-aware read runs no
+    Spark job: no footer is opened to infer it. The read still drops
+    exactly the deleted keys."""
+    from pyspark.sql import functions as F
+
+    from aind_data_transformation_spark.io.sources import load_table
+    from tests.test_sources import _jobs_in_group
+
+    log_dir = sinks._build_txlog_table(spark, TEST_SF_DIR, "txlog_dv_jobs")
+    k = F.col("o_orderkey")
+    deletes = (
+        load_table(spark, TEST_SF_DIR, "orders")
+        .where((k % 4 == 0) & (k % 3 == 0))
+        .select("o_orderkey")
+    )
+    sinks.txlog_delete_with_dv(spark, log_dir, deletes, "o_orderkey")
+    df, n_jobs = _jobs_in_group(
+        spark,
+        "dv-read-build",
+        lambda: sinks.txlog_read_with_dvs(spark, log_dir, "o_orderkey"),
+    )
+    assert n_jobs == 0
+    snap = sinks._txlog_snapshot(spark, log_dir)
+    assert df.join(deletes, "o_orderkey", "left_semi").count() == 0
+    assert df.count() == snap.join(deletes, "o_orderkey", "left_anti").count()
+
+
 def test_txlog_dv_delete_is_merge_on_read(spark):
     """The MoR contract beyond the row oracle — the INVERSE of the CoW
     layout test: (1) a DV DELETE rewrites NO data file (every batch
@@ -685,7 +722,7 @@ def test_txlog_mor_update_rewrites_nothing(spark):
     assert abs(got[0]["o_totalprice"] - one["o_totalprice"]) < 1e-9
 
 
-def test_txlog_shallow_clone_is_zero_copy_and_isolated(spark):
+def test_txlog_shallow_clone_is_zero_copy_and_isolated(spark, tmp_path):
     """Clone contract: (1) commit 0 of the clone references the SOURCE's
     batch dirs verbatim — no data copied; (2) a merge on the clone
     leaves the source snapshot byte-identical; (3) the clone's merge
@@ -694,7 +731,7 @@ def test_txlog_shallow_clone_is_zero_copy_and_isolated(spark):
 
     src_log = sinks._build_txlog_table(spark, TEST_SF_DIR, "txlog_cl_src")
     pre = sinks._txlog_read(spark, src_log, as_of=None).toPandas()
-    clone_base = sinks._scratch(TEST_SF_DIR, "txlog_cl_dst")
+    clone_base = str(tmp_path / "txlog_cl_dst")
     clone_log = sinks.txlog_shallow_clone(spark, src_log, clone_base)
     # zero copy: the clone's live set IS the source's live set
     assert _live(spark, clone_log) == _live(spark, src_log)
@@ -709,7 +746,7 @@ def test_txlog_shallow_clone_is_zero_copy_and_isolated(spark):
     assert canon_frame(post_src) == canon_frame(pre)
 
 
-def test_txlog_clone_vacuum_never_deletes_source_files(spark):
+def test_txlog_clone_vacuum_never_deletes_source_files(spark, tmp_path):
     """Ownership scope: after a merge on the clone tombstones the
     SHARED batch files in the clone's log, VACUUM on the clone must
     skip them (they live under the source's root) and report them as
@@ -718,7 +755,7 @@ def test_txlog_clone_vacuum_never_deletes_source_files(spark):
 
     src_log = sinks._build_txlog_table(spark, TEST_SF_DIR, "txlog_clv_src")
     pre = sinks._txlog_read(spark, src_log, as_of=None).toPandas()
-    clone_base = sinks._scratch(TEST_SF_DIR, "txlog_clv_dst")
+    clone_base = str(tmp_path / "txlog_clv_dst")
     clone_log = sinks.txlog_shallow_clone(spark, src_log, clone_base)
     sinks.txlog_merge(
         spark, clone_log, sinks._merge_changes(spark, TEST_SF_DIR),
@@ -1068,8 +1105,9 @@ def test_codec_tradeoff_sizes_are_ordinal(spark):
     losslessness; the ordinal claims live here — uncompressed strictly
     larger than either codec, and zstd no larger than snappy (the
     stated reason the engine defaults cold data to zstd)."""
-    sinks.q_sink_codec_tradeoff(spark, TEST_SF_DIR).collect()
-    sizes = sinks.codec_bytes(TEST_SF_DIR)
+    df = sinks.q_sink_codec_tradeoff(spark, TEST_SF_DIR)
+    df.collect()
+    sizes = sinks.codec_bytes(df)
     assert sizes["uncompressed"] > sizes["snappy"]
     assert sizes["uncompressed"] > sizes["zstd"]
     assert sizes["zstd"] <= sizes["snappy"]
@@ -1103,9 +1141,10 @@ def test_compact_small_files_collapses_file_count(spark):
     fragmentation it fixes."""
     import math
 
-    sinks.q_sink_compact_small_files(spark, TEST_SF_DIR).collect()
-    frag = _scratch("orders_fragmented")
-    compact = _scratch("orders_compacted")
+    df = sinks.q_sink_compact_small_files(spark, TEST_SF_DIR)
+    df.collect()
+    compact = _input_root(df)
+    frag = os.path.join(os.path.dirname(compact), "fragmented")
     from aind_data_transformation_spark.queries.sinks import (
         _COMPACT_TARGET_BYTES,
     )
@@ -1125,13 +1164,14 @@ def test_zorder_layout_bounds_both_dimensions(spark):
     bucket id), which is what lets parquet min/max stats skip files for
     filters on either column. A single-column sort would give a narrow
     span on one dimension and the full 0..255 on the other."""
-    rows = sinks.q_sink_zorder_layout(spark, TEST_SF_DIR).collect()
+    df = sinks.q_sink_zorder_layout(spark, TEST_SF_DIR)
+    rows = df.collect()
     assert len(rows) == 16
     for r in rows:
         assert r.zx_max - r.zx_min <= 64, f"zx span too wide in {r}"
         assert r.zy_max - r.zy_min <= 64, f"zy span too wide in {r}"
     # the layout really is hive-partitioned by bucket on disk
-    out = _scratch("lineitem_zorder")
+    out = _input_root(df, 2)
     part_dirs = [d for d in os.listdir(out) if d.startswith("zbucket=")]
     assert len(part_dirs) == 16
 
@@ -1956,7 +1996,7 @@ def _read_log_json(log_dir):
     return out
 
 
-def test_txlog_ds_writer_append_overwrite_lifecycle(spark):
+def test_txlog_ds_writer_append_overwrite_lifecycle(spark, tmp_path):
     """Batch writer: append creates the table (v0), append extends it
     (v1), overwrite atomically replaces it (v2) while history stays
     time-travelable; every commit carries exactly one commitInfo with
@@ -1964,10 +2004,7 @@ def test_txlog_ds_writer_append_overwrite_lifecycle(spark):
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_writer_lifecycle")
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_writer_lifecycle")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     nation = load_table(spark, TEST_SF_DIR, "nation")
@@ -2008,16 +2045,13 @@ def test_txlog_ds_writer_append_overwrite_lifecycle(spark):
     assert glob.glob(os.path.join(base, "data", "_ds_tmp", "*")) == []
 
 
-def test_txlog_ds_writer_append_schema_mismatch(spark):
+def test_txlog_ds_writer_append_schema_mismatch(spark, tmp_path):
     import pytest
 
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_writer_schema")
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_writer_schema")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     load_table(spark, TEST_SF_DIR, "nation").write.format("txlog").mode(
@@ -2031,17 +2065,15 @@ def test_txlog_ds_writer_append_schema_mismatch(spark):
     assert [r["commit"] for r in _read_log_json(log_dir)].count(1) == 0
 
 
-def test_txlog_ds_writer_concurrent_appends(spark):
+def test_txlog_ds_writer_concurrent_appends(spark, tmp_path):
     """Two threads appending to the same table: the put-if-absent race
     gives each its own version; no rows lost, no version clobbered."""
-    import shutil
     import threading
 
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_writer_race")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_writer_race")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     nation = load_table(spark, TEST_SF_DIR, "nation")
@@ -2082,14 +2114,12 @@ def test_txlog_ds_writer_concurrent_appends(spark):
     assert got == 25
 
 
-def test_txlog_ds_stream_writer_replay_exactly_once(spark):
+def test_txlog_ds_stream_writer_replay_exactly_once(spark, tmp_path):
     """Crash-replay idempotence at the commit level: re-invoking the
     stream writer's commit for an already-committed epoch must drop the
     replay's temps and leave the log untouched; a half-published epoch
     dir (crash after publish, before log commit) is cleared and
     republished completely."""
-    import shutil
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -2098,8 +2128,7 @@ def test_txlog_ds_stream_writer_replay_exactly_once(spark):
         _TxlogWriteCommit,
     )
 
-    base = _scratch("txlog_ds_stream_replay")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_stream_replay")
     log_dir = os.path.join(base, "_log")
     data_root = os.path.join(base, "data")
     schema = spark.createDataFrame([(1,)], "a bigint").schema
@@ -2246,7 +2275,7 @@ def test_txlog_vacuum_age_gate(spark):
     assert b0 in res2["deleted"] and not os.path.exists(b0)
 
 
-def test_txlog_column_mapping_never_rewrites(spark):
+def test_txlog_column_mapping_never_rewrites(spark, tmp_path):
     """The column-mapping contract beyond the row oracle: (1) RENAME /
     DROP / re-ADD are metadata-ONLY — no data file's bytes or mtime
     change across the three schema commits; (2) the dropped column's
@@ -2261,10 +2290,7 @@ def test_txlog_column_mapping_never_rewrites(spark):
 
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_colmap_layout")
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_colmap_layout")
     data_dir = os.path.join(base, "data")
     log_dir = os.path.join(base, "_log")
     orders = load_table(spark, TEST_SF_DIR, "orders")
@@ -2439,22 +2465,19 @@ def test_txlog_uniform_export_is_metadata_only_and_versioned(spark):
         assert canon_frame(got) == canon_frame(want)
 
 
-def test_txlog_ds_writer_stats_per_file_exact(spark):
+def test_txlog_ds_writer_stats_per_file_exact(spark, tmp_path):
     """The stats-writing connector contract beyond the row oracle: ONE
     add action per written file, each carrying that file's EXACT key
     min/max (verified against the parquet footers), and the stats-
     pruning reader genuinely skips files for a narrow range while
     reproducing the full predicate answer."""
-    import shutil
-
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_stats_layout")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_stats_layout")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -2606,12 +2629,11 @@ def test_txlog_cdf_incremental_equals_one_shot(spark):
     assert canon_frame(acc) == canon_frame(one)
 
 
-def test_txlog_ds_writer_partitioned_layout(spark):
+def test_txlog_ds_writer_partitioned_layout(spark, tmp_path):
     """Partitioned connector writes beyond the row oracle: each add
     action's ``part`` value matches its dir name; every file under a
     partition dir holds ONLY that partition's rows; option validation
     (unknown column, stats_col conflict) fails before any write."""
-    import shutil
     from urllib.parse import quote
 
     import pyarrow.parquet as pq
@@ -2621,8 +2643,7 @@ def test_txlog_ds_writer_partitioned_layout(spark):
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_part_layout")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_part_layout")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -2689,14 +2710,12 @@ def test_txlog_ds_writer_partitioned_layout(spark):
     assert all(a["part_col"] == "o_orderstatus" for a in adds)
 
 
-def test_txlog_ds_reader_pushdown_prunes_files(spark):
+def test_txlog_ds_reader_pushdown_prunes_files(spark, tmp_path):
     """pushFilters-level pruning contract: partition EqualTo/In prunes
     whole partition dirs, range filters on the stats column prune
     files by recorded min/max, every filter stays residual (Spark
     re-applies), unprovable or incomparable filters keep all files,
     and reads through the real Spark path stay exact."""
-    import shutil
-
     from pyspark.sql import functions as F
     from pyspark.sql.datasource import (
         EqualTo,
@@ -2709,8 +2728,7 @@ def test_txlog_ds_reader_pushdown_prunes_files(spark):
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_pushdown_unit")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_pushdown_unit")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2819,20 +2837,17 @@ def test_txlog_ds_reader_time_travel_scopes_dvs(spark):
         )
 
 
-def test_txlog_ds_writer_append_type_mismatch(spark):
+def test_txlog_ds_writer_append_type_mismatch(spark, tmp_path):
     """Append type safety: same column names with a different type
     (o_totalprice written as string) must be rejected BEFORE any log
     version is committed — a silently type-drifted file would poison
     every later footer-schema read."""
-    import shutil
-
     import pytest
 
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_type_check")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_type_check")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -2993,7 +3008,7 @@ def test_txlog_stream_writer_rejects_overwrite_modes(spark):
     assert ds.streamWriter(schema, overwrite=False) is not None
 
 
-def test_txlog_stats_col_types_and_bloom_guard(spark):
+def test_txlog_stats_col_types_and_bloom_guard(spark, tmp_path):
     """Write-time stats validation under the r12 GENERALIZED tier:
     orderable non-integer columns (string/double/date/timestamp) are
     now ACCEPTED for stats_col (typed-JSON ``stats_json`` bounds —
@@ -3001,16 +3016,13 @@ def test_txlog_stats_col_types_and_bloom_guard(spark):
     per column, a non-orderable column is rejected at construction,
     and bloom_col keeps the integer-only hashing contract. The legacy
     flag is exactly "one integer column"."""
-    import shutil
-
     import pytest
     from pyspark.sql.types import StructType
 
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_stats_type")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_stats_type")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -3078,7 +3090,7 @@ def test_txlog_register_pushdown_opt_out(spark):
         spark.conf.set(key, old)
 
 
-def test_txlog_checkpoint_twins_share_one_schema(spark):
+def test_txlog_checkpoint_twins_share_one_schema(spark, tmp_path):
     """The advisor's twin-divergence hazard, pinned: a connector
     STATS-recording table compacted through the ENGINE's
     txlog_checkpoint (fully — no JSON tail at all) keeps every add's
@@ -3087,7 +3099,6 @@ def test_txlog_checkpoint_twins_share_one_schema(spark):
     unification this silently stripped the skipping metadata (and the
     fully-compacted read crashed on an empty glob)."""
     import glob as _glob
-    import shutil
 
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
@@ -3095,8 +3106,7 @@ def test_txlog_checkpoint_twins_share_one_schema(spark):
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ckpt_twins")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ckpt_twins")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -3141,23 +3151,20 @@ def test_txlog_checkpoint_twins_share_one_schema(spark):
     )
 
 
-def test_txlog_ds_merge_schema_mechanics(spark):
+def test_txlog_ds_merge_schema_mechanics(spark, tmp_path):
     """merge_schema unit contracts beyond the row oracle: the evolved
     union DDL lands as a metaData action IN THE SAME COMMIT as the
     adds; connector schema() serves the evolved DDL (log-owned, never
     a footer); a write that OMITS existing columns under merge is
     admitted and null-fills; type drift on a common column is still
     rejected even under merge."""
-    import shutil
-
     import pytest
     from pyspark.sql import functions as F
 
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_merge_mech")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_merge_mech")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders")
@@ -3200,7 +3207,7 @@ def test_txlog_ds_merge_schema_mechanics(spark):
         ).save(log_dir)
 
 
-def test_txlog_ds_branched_filters_no_row_loss(spark):
+def test_txlog_ds_branched_filters_no_row_loss(spark, tmp_path):
     """Regression for an upstream Spark 4.1 defect (verified on the
     bytecode: PythonScanBuilder.pushFilters stores each branch's
     planned read via PythonDataSourceV2.setReadInfo on the ONE object
@@ -3212,13 +3219,10 @@ def test_txlog_ds_branched_filters_no_row_loss(spark):
     relation (planning-worker registry keyed by a per-load uuid), so
     branched unions are exact while fresh single-scan loads keep full
     pruning."""
-    import shutil
-
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_branch_union")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_branch_union")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -3256,7 +3260,7 @@ def test_txlog_ds_branched_filters_no_row_loss(spark):
     assert len(r.partitions()) == 1 < n_all
 
 
-def test_txlog_ds_bloom_index_mechanics(spark):
+def test_txlog_ds_bloom_index_mechanics(spark, tmp_path):
     """Bloom index unit contracts beyond the row oracle: the add
     actions carry a decodable filter (bloom/bloom_col/bloom_bits);
     NO file containing a probed key is ever pruned (membership is
@@ -3264,16 +3268,13 @@ def test_txlog_ds_bloom_index_mechanics(spark):
     absent from the whole table prunes EVERY file (modulo false
     positives: asserted ≤ half the files at these sizes); bloom_col
     rejects non-integer columns and non-power-of-two sizes."""
-    import shutil
-
     import pytest
     from pyspark.sql.datasource import EqualTo
 
     from aind_data_transformation_spark.io import txlog_source
     from aind_data_transformation_spark.queries.relational import load_table
 
-    base = _scratch("txlog_ds_bloom_unit")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_bloom_unit")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -3397,7 +3398,7 @@ def test_txlog_stream_writer_partitioned_epochs(spark, tmp_path):
     assert n_a == 2 < n_all == 4
 
 
-def test_txlog_ds_edge_compositions(spark):
+def test_txlog_ds_edge_compositions(spark, tmp_path):
     """Edge compositions across the r11 features: (1) a plain
     connector append to a column-MAPPED table fails loudly naming the
     mapped-write tool (a silent logical-name file would be misread by
@@ -3406,8 +3407,6 @@ def test_txlog_ds_edge_compositions(spark):
     column must not exist at the earlier snapshot); (3) merge_schema
     composes with partitioned writes (the metaData action and the
     part-valued adds land in ONE commit)."""
-    import shutil
-
     import pytest
     from pyspark.sql import functions as F
 
@@ -3428,8 +3427,7 @@ def test_txlog_ds_edge_compositions(spark):
         ).save(mapped_log)
 
     # (2) evolution x time travel
-    base = _scratch("txlog_ds_edge_evo_tt")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_ds_edge_evo_tt")
     log_dir = os.path.join(base, "_log")
     orders.where(k % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -3455,8 +3453,7 @@ def test_txlog_ds_edge_compositions(spark):
 
     # (3) merge_schema x partitioned write: one commit holds both the
     # metaData and the part-valued adds
-    base2 = _scratch("txlog_ds_edge_merge_part")
-    shutil.rmtree(base2, ignore_errors=True)
+    base2 = str(tmp_path / "txlog_ds_edge_merge_part")
     log2 = os.path.join(base2, "_log")
     orders.where(k % 2 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3494,8 +3491,6 @@ def test_txlog_checkpoint_twins_inverse_direction(spark):
     — DV state, idempotence markers, provenance and the recorded
     constraint all survive, and the DV-aware snapshot equals the
     pre-compaction one."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from aind_data_transformation_spark.io.txlog_source import (

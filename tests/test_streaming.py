@@ -7,6 +7,8 @@ queries/streaming_batch.py — the streaming analog of the DuckDB oracle.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from tests.conftest import TEST_SF_DIR, canon_frame
@@ -176,6 +178,51 @@ def test_upsert_stream_foreach_batch_applies_cdc(spark, tmp_path):
     )
     want = canon_frame(batch.toPandas())
     assert got == want  # every stale row replaced, no key lost or duped
+
+
+def _unreadable_store(path) -> None:
+    """A store dir whose one part file is not parquet."""
+    path.mkdir()
+    (path / "part-00000.parquet").write_bytes(b"not a parquet file")
+
+
+def test_upsert_stream_raises_on_unreadable_snapshot(spark, tmp_path):
+    """A snapshot that exists but cannot be read fails the batch; it is
+    never replaced by the batch's rows alone."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    target = tmp_path / "snapshot"
+    _unreadable_store(target)
+    updates = jobs.dedup_events(jobs.read_events_stream(spark, TEST_SF_DIR))
+    q = jobs.upsert_stream_foreach_batch(
+        updates, str(target), str(tmp_path / "ckpt"), ["event_id"]
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+    assert os.listdir(target) == ["part-00000.parquet"]
+
+
+def test_incremental_corpus_ingest_raises_on_unreadable_corpus(
+    spark, tmp_path
+):
+    """A corpus that exists but cannot be read fails the batch instead
+    of skipping the cross-batch dedup and appending duplicates."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    corpus = tmp_path / "corpus"
+    _unreadable_store(corpus)
+    src = str(tmp_path / "incoming")
+    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet")
+    docs.where("doc_id < 50").coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(docs.schema).parquet(src)
+    q = jobs.incremental_corpus_ingest(
+        stream, str(corpus), str(tmp_path / "ckpt")
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+    assert os.listdir(corpus) == ["part-00000.parquet"]
 
 
 def test_stream_file_sink_exactly_once_on_restart(spark, tmp_path):

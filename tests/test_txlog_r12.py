@@ -21,10 +21,6 @@ from aind_data_transformation_spark.queries import sinks
 from aind_data_transformation_spark.queries.relational import load_table
 
 
-def _scratch(name: str) -> str:
-    return sinks._scratch(TEST_SF_DIR, name)
-
-
 def test_parse_ddl_is_backtick_quote_aware():
     """A quoted name may contain commas, parens, and spaces — the
     comma/paren bookkeeping must be suspended inside backticks
@@ -45,14 +41,13 @@ def test_parse_ddl_is_backtick_quote_aware():
     assert txlog_source._roundtrip_ddl(cols, "t") == "`a,b` bigint, `c(d` string"
 
 
-def test_merge_schema_comma_name_table_stays_readable(spark):
+def test_merge_schema_comma_name_table_stays_readable(spark, tmp_path):
     """End-to-end for the ADVICE medium: evolving a column literally
     named ``a,b`` (legal in Spark) must leave the table READABLE —
     the write committing and every later read crashing was the
     defect. The evolved schema is served by the connector and the
     new column's rows come back exact."""
-    base = _scratch("txlog_r12_comma_name")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_comma_name")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders")
@@ -132,14 +127,13 @@ def test_pushed_sets_registry_is_lru(monkeypatch):
     assert reg["relA"][0] == 2
 
 
-def test_rejected_commit_leaves_no_orphan_dir(spark):
+def test_rejected_commit_leaves_no_orphan_dir(spark, tmp_path):
     """ADVICE r11 low: commit-time schema rejection happens after the
     task files were renamed into the final ds-write-* dir; abort only
     knows the (renamed-away) tmp paths, so each rejected write leaked
     an orphaned data dir. The commit wrapper must rmtree the
     unreferenced dir on ANY pre-commit failure."""
-    base = _scratch("txlog_r12_orphan")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_orphan")
     log_dir = os.path.join(base, "_log")
     data_root = os.path.join(base, "data")
     txlog_source.register(spark)
@@ -165,7 +159,7 @@ def test_rejected_commit_leaves_no_orphan_dir(spark):
 
 
 def test_checkpoint_failure_never_deletes_committed_data(
-    spark, monkeypatch
+    spark, monkeypatch, tmp_path
 ):
     """Guard on the orphan-cleanup fix: the auto-checkpoint runs AFTER
     a successful commit, so a checkpoint failure must propagate
@@ -177,8 +171,7 @@ def test_checkpoint_failure_never_deletes_committed_data(
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    base = _scratch("txlog_r12_ckpt_fail")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_ckpt_fail")
     log_dir = os.path.join(base, "_log")
     data_root = os.path.join(base, "data")
     os.makedirs(os.path.join(data_root, "_ds_tmp"))
@@ -242,7 +235,7 @@ def test_bloom_decode_memoized_and_vectorized():
     assert info.misses == 1 and info.hits >= len(present)
 
 
-def test_stage_partitioned_bounds_open_writers(monkeypatch):
+def test_stage_partitioned_bounds_open_writers(monkeypatch, tmp_path):
     """VERDICT r11 item 1: one open ParquetWriter per distinct
     partition value per task exhausts fds on high-cardinality
     partition columns. The staging path must never hold more than
@@ -271,8 +264,7 @@ def test_stage_partitioned_bounds_open_writers(monkeypatch):
             super().close()
 
     monkeypatch.setattr(pq, "ParquetWriter", CountingWriter)
-    base = _scratch("txlog_r12_fd_cap")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_fd_cap")
     data_root = os.path.join(base, "data")
     os.makedirs(data_root)
     n_vals = 200
@@ -323,7 +315,7 @@ def test_stage_partitioned_bounds_open_writers(monkeypatch):
     assert msg.n_rows == n_vals * 4
 
 
-def test_partitioned_write_high_cardinality_end_to_end(spark):
+def test_partitioned_write_high_cardinality_end_to_end(spark, tmp_path):
     """End-to-end fd-cap stress: ONE task writes 150 distinct
     partition values with max_open_files=8 — the exact shape that
     previously risked fd exhaustion. The table must read back exact
@@ -331,8 +323,7 @@ def test_partitioned_write_high_cardinality_end_to_end(spark):
     partition pruning must still plan from pure log metadata."""
     from pyspark.sql.datasource import EqualTo
 
-    base = _scratch("txlog_r12_highcard")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_highcard")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -386,7 +377,7 @@ def test_partitioned_write_high_cardinality_end_to_end(spark):
     assert len(r.partitions()) < n_all
 
 
-def test_stats_json_string_and_timestamp_pruning(spark):
+def test_stats_json_string_and_timestamp_pruning(spark, tmp_path):
     """The generalized stats tier beyond the date/multi oracle keys:
     STRING bounds prune equality probes outside a file's range;
     TIMESTAMP bounds prune range probes; and the legacy single-int
@@ -395,8 +386,7 @@ def test_stats_json_string_and_timestamp_pruning(spark):
 
     from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual
 
-    base = _scratch("txlog_r12_stats_str")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_stats_str")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -431,8 +421,7 @@ def test_stats_json_string_and_timestamp_pruning(spark):
     got = snap.where(F.col("o_orderpriority") == "5-LOW").count()
     assert got == orders.where(F.col("o_orderpriority") == "5-LOW").count()
     # legacy single-int vocabulary untouched
-    base2 = _scratch("txlog_r12_stats_legacy")
-    shutil.rmtree(base2, ignore_errors=True)
+    base2 = str(tmp_path / "txlog_r12_stats_legacy")
     log2 = os.path.join(base2, "_log")
     orders.select("o_orderkey").write.format("txlog").mode("append").option(
         "stats_col", "o_orderkey"
@@ -448,7 +437,7 @@ def test_stats_json_string_and_timestamp_pruning(spark):
     )
 
 
-def test_stats_json_survives_both_checkpoint_paths(spark):
+def test_stats_json_survives_both_checkpoint_paths(spark, tmp_path):
     """VERDICT item 2's checkpoint-survival clause: typed-JSON bounds
     must ride the ONE unified checkpoint action schema through BOTH
     compaction paths — the connector's stdlib `checkpoint_log` and
@@ -468,8 +457,7 @@ def test_stats_json_survives_both_checkpoint_paths(spark):
             lambda log_dir, v: sinks.txlog_checkpoint(spark, log_dir, v),
         ),
     ):
-        base = _scratch(f"txlog_r12_sjckpt_{label}")
-        shutil.rmtree(base, ignore_errors=True)
+        base = str(tmp_path / f"txlog_r12_sjckpt_{label}")
         log_dir = os.path.join(base, "_log")
         txlog_source.register(spark)
         orders = load_table(spark, TEST_SF_DIR, "orders").select(
@@ -518,7 +506,7 @@ def test_stats_json_survives_both_checkpoint_paths(spark):
         assert sorted(map(tuple, before)) == sorted(map(tuple, after)), label
 
 
-def test_rowgroup_split_partitions_and_exact_rows(spark):
+def test_rowgroup_split_partitions_and_exact_rows(spark, tmp_path):
     """VERDICT r11 item 3: the connector planned ONE input partition
     per data file, so a few-huge-files table under-parallelized at
     scale. Oversize files (past ``rowgroup_split_bytes``) now split
@@ -531,8 +519,7 @@ def test_rowgroup_split_partitions_and_exact_rows(spark):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    base = _scratch("txlog_r12_rgsplit")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_rgsplit")
     log_dir = os.path.join(base, "_log")
     data_dir = os.path.join(base, "data", "batch-0")
     os.makedirs(log_dir)
@@ -657,8 +644,7 @@ def test_adds_record_bytes_and_stream_paces_by_bytes(spark, tmp_path):
     data_dir = os.path.join(os.path.dirname(log_dir), "data")
     txlog_source.register(spark)
     # connector writes stamp bytes on their adds
-    wbase = _scratch("txlog_r12_bytes_w")
-    shutil.rmtree(wbase, ignore_errors=True)
+    wbase = str(tmp_path / "txlog_r12_bytes_w")
     wlog = os.path.join(wbase, "_log")
     load_table(spark, TEST_SF_DIR, "orders").select(
         "o_orderkey"
@@ -710,7 +696,7 @@ def test_adds_record_bytes_and_stream_paces_by_bytes(spark, tmp_path):
     assert tail == [375, 375], seen
 
 
-def test_bloom_pruning_is_snapshot_scoped_under_time_travel(spark):
+def test_bloom_pruning_is_snapshot_scoped_under_time_travel(spark, tmp_path):
     """VERDICT r11 item 6: a versionAsOf read must prune from the
     winning add action AT THE TRAVEL POINT only — a bloom committed
     after the travel point (e.g. a later stats/bloom re-commit of the
@@ -726,8 +712,7 @@ def test_bloom_pruning_is_snapshot_scoped_under_time_travel(spark):
 
     from pyspark.sql.datasource import EqualTo
 
-    base = _scratch("txlog_r12_bloom_travel")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_bloom_travel")
     log_dir = os.path.join(base, "_log")
     data_dir = os.path.join(base, "data", "batch-0")
     os.makedirs(log_dir)
@@ -882,7 +867,7 @@ def test_describe_surfaces_match_engine_and_inventory(spark):
         ).save(log_dir)
 
 
-def test_nullcount_and_prefix_pruning(spark):
+def test_nullcount_and_prefix_pruning(spark, tmp_path):
     """Delta-parity data skipping, r12 second pass: stats_json records
     per-column NULL COUNTS (nullCount) and adds record ROW counts, so
     IS NULL / IS NOT NULL prune all-valued / all-null files; string
@@ -895,8 +880,7 @@ def test_nullcount_and_prefix_pruning(spark):
         StringStartsWith,
     )
 
-    base = _scratch("txlog_r12_nullprefix")
-    shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path / "txlog_r12_nullprefix")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
     df = spark.range(300).select(
