@@ -1179,11 +1179,12 @@ def _attach_bytes(actions: list) -> None:
 
 def _attach_stats(add: dict, stats, stats_cols, legacy: bool) -> None:
     """Record a ``{col: (mn, mx)}`` fold on an add action — the ONE
-    place the two stats vocabularies diverge: a single integer column
+    writer of the two stats vocabularies: a single integer column
     keeps the original int64 ``min_key``/``max_key``/``stats_col``
-    fields (existing tables and readers unchanged); everything else
-    (comma lists, strings, dates, timestamps, floats) records
-    typed-JSON ``stats_json`` bounds."""
+    fields (existing tables unchanged); everything else (comma lists,
+    strings, dates, timestamps, floats) records typed-JSON
+    ``stats_json`` bounds. `_add_bounds` is the one reader of both,
+    and `_kept_files` the one pruning rule over them."""
     if not stats_cols:
         return
     if legacy:
@@ -1242,6 +1243,39 @@ def _range_prunes(f, mn, mx) -> bool:
     return False
 
 
+def _stats_entry(add: dict, col: str):
+    """``add``'s ``stats_json`` entry for ``col`` (``{min, max,
+    nulls}``), or None when it records none or is undecodable — an
+    undecodable entry proves nothing, so the file is kept."""
+    sj = add.get("stats_json")
+    if not sj:
+        return None
+    try:
+        return (json.loads(sj) if isinstance(sj, str) else sj).get(col)
+    except Exception:
+        return None
+
+
+def _add_bounds(add: dict, col: str):
+    """The exact ``(min, max)`` of ``col`` that ``add`` records, in
+    either vocabulary `_attach_stats` writes (int64 ``min_key``/
+    ``max_key`` under ``stats_col``, or typed ``stats_json``); None
+    when it records no bounds for ``col``."""
+    if (
+        add.get("stats_col") == col
+        and add.get("min_key") is not None
+        and add.get("max_key") is not None
+    ):
+        return add["min_key"], add["max_key"]
+    entry = _stats_entry(add, col)
+    if entry is None or entry.get("min") is None or entry.get("max") is None:
+        return None
+    try:
+        return _stats_decode(entry["min"]), _stats_decode(entry["max"])
+    except Exception:
+        return None
+
+
 def _prunes_file(f, add: dict) -> bool:
     """True iff pushed filter ``f`` PROVES the file behind ``add``
     holds no matching rows, from the add action's own metadata:
@@ -1263,50 +1297,28 @@ def _prunes_file(f, add: dict) -> bool:
             vals = [x for x in f.value if isinstance(x, str)]
             return len(vals) == len(f.value) and v not in vals
         return False
-    if (
-        add.get("stats_col") == col
-        and add.get("min_key") is not None
-        and add.get("max_key") is not None
-    ):
-        # a range proof that fails falls through to stats_json/bloom —
-        # a file can carry several kinds of metadata on one column
-        if _range_prunes(f, add["min_key"], add["max_key"]):
-            return True
-    if add.get("stats_json"):
+    # a proof that fails falls through to the next kind of metadata —
+    # a file can carry bounds, null counts and a bloom on one column
+    bounds = _add_bounds(add, col)
+    if bounds is not None and _range_prunes(f, *bounds):
+        return True
+    entry = _stats_entry(add, col)
+    if entry is not None:
         from pyspark.sql.datasource import IsNotNull, IsNull
 
-        try:
-            sj = add["stats_json"]
-            bounds = (json.loads(sj) if isinstance(sj, str) else sj).get(
-                col
-            )
-        except Exception:
-            bounds = None  # undecodable stats: keep the file
-        if bounds is not None:
-            nulls = bounds.get("nulls")
-            # null-count proofs (Delta's nullCount skipping): a file
-            # with zero nulls holds no IS NULL row; a file whose nulls
-            # equal its row count holds no IS NOT NULL row
-            if isinstance(f, IsNull) and nulls == 0:
-                return True
-            if (
-                isinstance(f, IsNotNull)
-                and nulls is not None
-                and add.get("rows") is not None
-                and nulls == add["rows"]
-            ):
-                return True
-            if (
-                bounds.get("min") is not None
-                and bounds.get("max") is not None
-            ):
-                try:
-                    mn = _stats_decode(bounds["min"])
-                    mx = _stats_decode(bounds["max"])
-                except Exception:
-                    mn = mx = None
-                if mn is not None and _range_prunes(f, mn, mx):
-                    return True
+        nulls = entry.get("nulls")
+        # null-count proofs (Delta's nullCount skipping): a file
+        # with zero nulls holds no IS NULL row; a file whose nulls
+        # equal its row count holds no IS NOT NULL row
+        if isinstance(f, IsNull) and nulls == 0:
+            return True
+        if (
+            isinstance(f, IsNotNull)
+            and nulls is not None
+            and add.get("rows") is not None
+            and nulls == add["rows"]
+        ):
+            return True
     if add.get("bloom_col") == col and add.get("bloom"):
         # bloom membership: an unset probe bit PROVES absence (prune);
         # a set bit may be a false positive (keep — superset guarantee)
@@ -1360,6 +1372,20 @@ def _live_adds(rows: list, as_of=None) -> dict:
         if r["action"] in ("add", "remove") and r.get("path") is not None:
             last[r["path"]] = r
     return {p: r for p, r in last.items() if r["action"] == "add"}
+
+
+def _kept_files(rows: list, filters, as_of=None) -> list:
+    """The live files at ``as_of`` that no pushed filter proves empty
+    (`_prunes_file`) — the ONE file-pruning rule for log tables, shared
+    by the connector reader and the engine's stats reads. A superset
+    of the matching files: the caller re-applies every filter."""
+    live = _live_files(rows, as_of=as_of)
+    if not filters:
+        return live
+    adds = _live_adds(rows, as_of=as_of)
+    return [
+        p for p in live if not any(_prunes_file(f, adds[p]) for f in filters)
+    ]
 
 
 #: planning-worker registry: relation id -> (push count, RUNNING
@@ -1480,14 +1506,7 @@ class TxlogBatchReader(DataSourceReader):
         # upgrade is governed by the protocol in force at that version
         check_protocol(rows, "read", as_of=as_of)
         mapping = _mapping_as_of(rows, as_of)
-        live = _live_files(rows, as_of=as_of)
-        if self._pushed:
-            adds = _live_adds(rows, as_of=as_of)
-            live = [
-                p
-                for p in live
-                if not any(_prunes_file(f, adds[p]) for f in self._pushed)
-            ]
+        live = _kept_files(rows, self._pushed, as_of)
         dvs = _live_dvs(rows, live, as_of=as_of)
         if dvs and not self.dv_key:
             raise ValueError(
@@ -1933,8 +1952,6 @@ def checkpoint_log(log_dir: str, version: int) -> str:
         ("metrics", pa.string()),
         ("min_key", pa.int64()),
         ("max_key", pa.int64()),
-        ("min_cust", pa.int64()),
-        ("max_cust", pa.int64()),
         ("part_col", pa.string()),
         ("stats_col", pa.string()),
         ("bloom", pa.string()),

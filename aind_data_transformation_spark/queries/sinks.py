@@ -20,10 +20,22 @@ full extra pass and is never acceptable at scale.
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThanOrEqual,
+    In,
+    IsNotNull,
+    LessThanOrEqual,
+    StringContains,
+    StringStartsWith,
+)
 
 from aind_data_transformation_spark.ops import (
     attach_broadcast,
@@ -37,8 +49,10 @@ from aind_data_transformation_spark.io.sources import load_table, read_csv, read
 from aind_data_transformation_spark.io.txlog_source import (
     ENGINE_COMMIT_BUDGET,
     TxlogConflictError,
+    _add_bounds,
     _ddl_schema_as_of,
     _incremental_files,
+    _kept_files,
     _live_adds,
     _live_dvs,
     _live_files,
@@ -49,6 +63,18 @@ from aind_data_transformation_spark.io.txlog_source import (
     check_protocol,
     commit_loop,
 )
+
+#: the (n_rows, sum_keys, sum_price_cents) aggregate most txlog keys
+#: hash over order rows, as SQL for `F.expr` (a Column needs a live
+#: session, so none can be built at import)
+_ORDER_TOTALS = (
+    "CAST(count(1) AS BIGINT) AS n_rows",
+    "CAST(sum(o_orderkey) AS BIGINT) AS sum_keys",
+    "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
+    " AS sum_price_cents",
+)
+#: the order columns a status-grouped `_ORDER_TOTALS` reads
+_TOTALS_COLS = ("o_orderkey", "o_orderstatus", "o_totalprice")
 
 
 def q_sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -902,10 +928,9 @@ def _txlog_log_rows(spark: SparkSession, log_dir: str) -> list:
 #: when absent from the JSON line / checkpoint column set.
 _TXLOG_ACTION_FIELDS = (
     "commit", "action", "path", "target", "constraint", "part", "schema",
-    "ts", "op", "metrics", "min_key", "max_key", "min_cust", "max_cust",
-    "part_col", "stats_col", "bloom", "bloom_col", "bloom_bits",
-    "stats_json", "bytes", "rows", "protocol", "tbloom", "tbloom_col",
-    "tbloom_bits",
+    "ts", "op", "metrics", "min_key", "max_key", "part_col", "stats_col",
+    "bloom", "bloom_col", "bloom_bits", "stats_json", "bytes", "rows",
+    "protocol", "tbloom", "tbloom_col", "tbloom_bits",
 )
 
 
@@ -1299,13 +1324,7 @@ def q_sink_txlog_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     txlog_merge(spark, log_dir, _merge_changes(spark, sf_dir), "o_orderkey")
     txlog_vacuum(spark, log_dir, retain_versions=(None,))
     snap = _txlog_snapshot(spark, log_dir)
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 def txlog_restore(
@@ -1469,63 +1488,21 @@ _STATS_HI_PCT = 40
 
 
 def _build_txlog_stats_table(spark: SparkSession, sf_dir: str, name: str):
-    """Commit fixture for `sink_txlog_stats_skipping`: orders written as
-    `_STATS_BUCKETS` contiguous key-range files (bucket =
-    ((key-min)*B) div (span+1) — so per-file min/max are tight), with
-    ONE log commit whose add actions carry the per-file key stats
-    (computed by the same one-pass groupBy a real writer folds into its
-    commit). Returns (log_dir, kmin, kmax)."""
-    import json as _json
-
-    base = scratch_dir(spark, name)
-    data_dir = os.path.join(base, "data")
-    log_dir = os.path.join(base, "_log")
-    orders = load_table(spark, sf_dir, "orders")
-    kmin, kmax = orders.agg(
-        F.min("o_orderkey"), F.max("o_orderkey")
-    ).collect()[0]
-    span1 = kmax - kmin + 1
-    bucketed = orders.withColumn(
-        "bucket",
-        F.expr(
-            f"CAST(((o_orderkey - {kmin}) * {_STATS_BUCKETS})"
-            f" DIV {span1} AS INT)"
-        ),
-    )
-    (
-        bucketed.repartition(_STATS_BUCKETS, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(data_dir)
-    )
-    stats = (
-        bucketed.groupBy("bucket")
-        .agg(F.min("o_orderkey").alias("mn"), F.max("o_orderkey").alias("mx"))
-        .collect()
-    )
-    os.makedirs(log_dir, exist_ok=True)
-    with open(os.path.join(log_dir, "00000.json"), "w") as fh:
-        for r in sorted(stats, key=lambda r: r["bucket"]):
-            fh.write(
-                _json.dumps(
-                    {
-                        "commit": 0,
-                        "action": "add",
-                        "path": os.path.join(data_dir, f"bucket={r['bucket']}"),
-                        "min_key": r["mn"],
-                        "max_key": r["mx"],
-                    }
-                )
-                + "\n"
-            )
+    """Commit fixture for `sink_txlog_stats_skipping`: the
+    `sink_txlog_datasource_write_part_stats` table — one connector
+    write, a partition per key-range bucket, each add recording its
+    exact o_orderkey bounds. Returns (log_dir, kmin, kmax)."""
+    log_dir = os.path.join(scratch_dir(spark, name), "_log")
+    txlog_source.register(spark)
+    row = _KEY_BUCKET_STATS
+    row.write(row.source(load_table(spark, sf_dir, "orders")), log_dir)
+    kmin, kmax = _log_range(_txlog_log_rows(spark, log_dir), "o_orderkey")
     return log_dir, kmin, kmax
 
 
-#: the add-action fields holding each prunable column's per-file bounds
-_STATS_BOUNDS = {
-    "o_orderkey": ("min_key", "max_key"),
-    "o_custkey": ("min_cust", "max_cust"),
-}
+def _between(col: str, lo, hi) -> list:
+    """The filters Spark pushes for ``col BETWEEN lo AND hi``."""
+    return [GreaterThanOrEqual((col,), lo), LessThanOrEqual((col,), hi)]
 
 
 def txlog_stats_read(
@@ -1538,39 +1515,32 @@ def txlog_stats_read(
 ) -> tuple:
     """Stats-based file skipping — the data-skipping half of why
     lakehouse logs exist: replay the log to the live files AS OF
-    ``as_of`` (None = head) WITH their recorded per-file min/max for
-    ``column`` ('o_orderkey' or 'o_custkey'), prune every file whose
-    [min,max] cannot intersect [lo,hi], and scan only the survivors
-    (predicate still applied — stats pruning is a superset guarantee,
-    not a filter). Returns (snapshot DataFrame, n_files_live,
-    n_files_scanned).
+    ``as_of`` (None = head), keep the files the connector's pruning
+    rule (`txlog_source._kept_files`) cannot prove empty under the
+    filters Spark pushes for ``column BETWEEN lo AND hi``, and scan
+    only those (predicate still applied — stats pruning is a superset
+    guarantee, not a filter). Returns (snapshot DataFrame,
+    n_files_live, n_files_scanned).
 
-    Scale: pruning runs on the metadata frame (one row per file), never
+    Scale: pruning runs on log metadata (one row per file), never
     touches data, and is sound because the recorded stats are exact
     bounds — at 100 TB a selective key-range predicate opens a handful
     of files instead of every file in the table.
 
     Checkpoint-aware: replays through `_txlog_log_rows` (reconciled
     checkpoint state + JSON tail), so a compacted table prunes from the
-    stats the checkpoint preserved — a *.json-glob reader would
-    silently drop every live file whose add survives only in the
-    checkpoint. A live file with NO recorded stats for ``column`` (a
-    connector append records none for o_custkey) is always scanned."""
+    stats the checkpoint preserved. A live file that records no bounds
+    for ``column`` (a connector append with another ``stats_col``) is
+    always scanned."""
     rows = _txlog_log_rows(spark, log_dir)
-    mn, mx = _STATS_BOUNDS[column]
-    live = _live_adds(rows, as_of)
-    pruned = sorted(
-        p
-        for p, r in live.items()
-        if r[mn] is None or r[mx] is None or (r[mx] >= lo and r[mn] <= hi)
-    )
+    live = _live_files(rows, as_of)
+    kept = _kept_files(rows, _between(column, lo, hi), as_of)
     # everything pruned: a correct EMPTY result, not a crash — scan one
     # live file under the (unsatisfiable, by the proven bounds) filter
-    paths = pruned or sorted(live)[:1]
-    snap = _txlog_scan(spark, rows, paths, as_of).where(
+    snap = _txlog_scan(spark, rows, kept or live[:1], as_of).where(
         F.col(column).between(lo, hi)
     )
-    return snap, len(live), len(pruned)
+    return snap, len(live), len(kept)
 
 
 def q_sink_txlog_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1593,11 +1563,7 @@ def q_sink_txlog_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snap.agg(
         F.lit(n_live).cast("long").alias("n_files_live"),
         F.lit(n_scanned).cast("long").alias("n_files_scanned"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
+        *map(F.expr, _ORDER_TOTALS),
     )
 
 
@@ -1634,13 +1600,7 @@ def q_sink_txlog_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_incr")
     files = txlog_incremental_files(spark, log_dir, from_version=1)
     snap = _txlog_scan(spark, _txlog_log_rows(spark, log_dir), files)
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 _Z2_BUCKETS = 16
@@ -1648,19 +1608,17 @@ _Z2_BUCKETS = 16
 
 def _build_txlog_zorder_table(spark: SparkSession, sf_dir: str, name: str):
     """Commit fixture for `sink_txlog_zorder_skipping` — OPTIMIZE ZORDER
-    as a logged transaction: commit 0 adds the table as `_Z2_BUCKETS`
-    contiguous o_orderkey-range files (the layout an append-in-key-order
-    writer produces); commit 1 REWRITES it — removes every linear file
-    and adds `_Z2_BUCKETS` Morton-clustered files (8-bit grid coords on
-    o_orderkey × o_custkey, `_zval_terms` interleave, top-4-bit bucket =
-    a 4×4 quadrant grid). Every add action carries exact per-file
-    min/max stats for BOTH columns, folded from the same one-pass
-    groupBy a real writer computes while committing. Returns
+    as a logged transaction, in two connector writes partitioned by
+    ``bucket``: commit 0 appends the table as `_Z2_BUCKETS` contiguous
+    o_orderkey-range partitions (the layout an append-in-key-order
+    writer produces); commit 1 OVERWRITES it — removes every linear
+    file and adds the Morton-clustered partitions (8-bit grid coords
+    on o_orderkey × o_custkey, `_zval_terms` interleave, top-4-bit
+    bucket = a 4×4 quadrant grid). Both writes record exact per-file
+    bounds for BOTH columns in ``stats_json``. Returns
     (log_dir, (kmin, kmax, cmin, cmax))."""
-    import json as _json
-
-    base = scratch_dir(spark, name)
-    log_dir = os.path.join(base, "_log")
+    log_dir = os.path.join(scratch_dir(spark, name), "_log")
+    txlog_source.register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
@@ -1672,7 +1630,7 @@ def _build_txlog_zorder_table(spark: SparkSession, sf_dir: str, name: str):
     ).collect()[0]
     lb = (
         f"CAST(((o_orderkey - {kmin}) * {_Z2_BUCKETS})"
-        f" DIV {kmax - kmin + 1} AS INT)"
+        f" DIV {kmax - kmin + 1} AS STRING)"
     )
     gx = (
         f"CAST(((o_orderkey - {kmin}) * 255)"
@@ -1682,63 +1640,22 @@ def _build_txlog_zorder_table(spark: SparkSession, sf_dir: str, name: str):
         f"CAST(((o_custkey - {cmin}) * 255)"
         f" DIV greatest({cmax - cmin}, 1) AS INT)"
     )
-    zb = f"CAST(shiftright({_zval_terms('zx', 'zy', 'spark')}, 12) AS INT)"
-    os.makedirs(log_dir, exist_ok=True)
-    version_paths: list = []
-    for version, data_name in ((0, "linear"), (1, "zorder")):
-        data_dir = os.path.join(base, data_name)
-        if data_name == "linear":
-            bucketed = orders.withColumn("bucket", F.expr(lb))
-        else:
-            bucketed = (
-                orders.withColumn("zx", F.expr(gx))
-                .withColumn("zy", F.expr(gy))
-                .withColumn("bucket", F.expr(zb))
-            )
-        bucketed = bucketed.select("o_orderkey", "o_custkey", "bucket")
+    zb = f"CAST(shiftright({_zval_terms('zx', 'zy', 'spark')}, 12) AS STRING)"
+    zordered = orders.withColumn("zx", F.expr(gx)).withColumn(
+        "zy", F.expr(gy)
+    )
+    for mode, bucketed in (
+        ("append", orders.withColumn("bucket", F.expr(lb))),
+        ("overwrite", zordered.withColumn("bucket", F.expr(zb))),
+    ):
         (
-            bucketed.repartition(_Z2_BUCKETS, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(data_dir)
+            bucketed.select("o_orderkey", "o_custkey", "bucket")
+            .write.format("txlog")
+            .mode(mode)
+            .option("partition_col", "bucket")
+            .option("stats_col", "o_orderkey, o_custkey")
+            .save(log_dir)
         )
-        stats = (
-            bucketed.groupBy("bucket")
-            .agg(
-                F.min("o_orderkey").alias("mnk"),
-                F.max("o_orderkey").alias("mxk"),
-                F.min("o_custkey").alias("mnc"),
-                F.max("o_custkey").alias("mxc"),
-            )
-            .collect()
-        )
-        paths = []
-        with open(os.path.join(log_dir, f"{version:05d}.json"), "w") as fh:
-            for prev in version_paths:
-                fh.write(
-                    _json.dumps(
-                        {"commit": version, "action": "remove", "path": prev}
-                    )
-                    + "\n"
-                )
-            for r in sorted(stats, key=lambda r: r["bucket"]):
-                p = os.path.join(data_dir, f"bucket={r['bucket']}")
-                paths.append(p)
-                fh.write(
-                    _json.dumps(
-                        {
-                            "commit": version,
-                            "action": "add",
-                            "path": p,
-                            "min_key": r["mnk"],
-                            "max_key": r["mxk"],
-                            "min_cust": r["mnc"],
-                            "max_cust": r["mxc"],
-                        }
-                    )
-                    + "\n"
-                )
-        version_paths = paths
     return log_dir, (kmin, kmax, cmin, cmax)
 
 
@@ -1808,13 +1725,7 @@ def q_sink_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = _build_txlog_table(spark, sf_dir, "txlog_table_merge")
     txlog_merge(spark, log_dir, _merge_changes(spark, sf_dir), "o_orderkey")
     snap = _txlog_snapshot(spark, log_dir)
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 def _src_logged_col(live: list):
@@ -2028,13 +1939,7 @@ def q_sink_txlog_deletion_vectors(
     live_rows = snap.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_live")
     )
-    per_status = snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    per_status = snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
     return attach_broadcast(attach_broadcast(per_status, scanned), live_rows)
 
 
@@ -2064,13 +1969,7 @@ def q_sink_txlog_dv_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     live_rows = txlog_read_with_dvs(spark, log_dir, "o_orderkey").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_live")
     )
-    per_status = snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    per_status = snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
     return attach_broadcast(attach_broadcast(per_status, scanned), live_rows)
 
 
@@ -2258,13 +2157,7 @@ def q_sink_txlog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdf = txlog_table_changes(
         spark, log_dir, "o_orderkey", from_version=2, to_version=3
     )
-    return cdf.groupBy("_change_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return cdf.groupBy("_change_type").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 def txlog_update_with_dv(
@@ -2348,13 +2241,7 @@ def q_sink_txlog_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     live_rows = snap.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_live")
     )
-    per_status = snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    per_status = snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
     return attach_broadcast(attach_broadcast(per_status, scanned), live_rows)
 
 
@@ -2398,13 +2285,7 @@ def q_sink_txlog_clone_diverge(
         spark, clone_log, _merge_changes(spark, sf_dir), "o_orderkey"
     )
     snap = _txlog_snapshot(spark, clone_log)
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 def txlog_checkpoint(spark: SparkSession, log_dir: str, version: int) -> str:
@@ -2464,13 +2345,7 @@ def q_sink_txlog_checkpoint_mor(
     # (_txlog_log_rows is checkpoint-aware) — one implementation, no
     # second copy of the anti-join to drift
     kept = txlog_read_with_dvs(spark, log_dir, "o_orderkey")
-    return kept.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return kept.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 def q_sink_txlog_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2496,13 +2371,7 @@ def q_sink_txlog_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         from_version=res["version"] - 1,
         to_version=res["version"],
     )
-    return cdf.groupBy("_change_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return cdf.groupBy("_change_type").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 def q_scan_txlog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2561,7 +2430,13 @@ def q_stream_txlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.table(name)
+    # the sink already holds the few aggregate rows on the driver: hand
+    # them out as a local frame and drop the view, so calls add no
+    # catalog entries
+    drained = spark.table(name)
+    out = spark.createDataFrame(drained.collect(), drained.schema)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 QUERIES = {
@@ -3260,13 +3135,10 @@ def q_sink_txlog_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = sorted(p for p, r in live.items() if r["part"] == "O")
     o_scan_rows = _txlog_scan(spark, rows, pruned).count()
     snap = _txlog_scan(spark, rows, sorted(live))
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    ).select(
+    per_status = snap.groupBy("o_orderstatus").agg(
+        *map(F.expr, _ORDER_TOTALS)
+    )
+    return per_status.select(
         "*",
         F.lit(len(live)).cast("long").alias("n_files_live"),
         F.lit(len(pruned)).cast("long").alias("n_files_opened"),
@@ -3451,11 +3323,7 @@ def q_scan_manifest_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(n_mo).cast("long").alias("n_manifests_opened"),
         F.lit(n_f).cast("long").alias("n_files_live"),
         F.lit(n_fo).cast("long").alias("n_files_opened"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
+        *map(F.expr, _ORDER_TOTALS),
     )
 
 
@@ -3670,13 +3538,7 @@ def q_scan_txlog_datasource_mor(
         .option("dv_key", "o_orderkey")
         .load()
     )
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 QUERIES["scan_txlog_datasource_mor"] = q_scan_txlog_datasource_mor
@@ -4491,13 +4353,7 @@ def q_scan_txlog_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     def agg(df, reader):
         return (
             df.groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("o_orderkey").cast("long").alias("sum_keys"),
-                F.sum(
-                    F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-                ).cast("long").alias("sum_price_cents"),
-            )
+            .agg(*map(F.expr, _ORDER_TOTALS))
             .select(
                 F.lit(reader).alias("reader"),
                 "o_orderstatus",
@@ -4542,60 +4398,123 @@ ORACLES["scan_txlog_uniform"] = """
 """
 
 
-def q_sink_txlog_datasource_write_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The connector writer RECORDS data-skipping stats at write time
-    (Delta's shape): ``df.write.format("txlog").option("stats_col",
-    "o_orderkey")`` folds exact min/max per Arrow batch inside each
-    write task (zero extra passes) and the commit emits ONE ADD PER
-    FILE carrying that task's stats — so a single range-partitioned
-    write of a single job yields a table that the stats-pruning reader
-    (`txlog_stats_read`) serves immediately, opening only the files
-    whose recorded range intersects the predicate. The hashed result
-    is the pruned read's aggregate over the 25-40% key span — stats
-    pruning is a superset guarantee, so ANY correct stats layout must
-    reproduce the plain range aggregate the oracle restates; that the
-    pruning genuinely skips files (and that the recorded stats are
-    exact per file) is asserted in tests/test_sinks.py, where the
-    sampled range-partition boundaries live.
+class _SkippingKey(NamedTuple):
+    """One connector data-skipping key, a row of `_skipping_key`:
+    ``write`` the ``source`` frame (built from orders) to a fresh
+    table; take ``window(src, log_rows)`` from the table; check each
+    of ``probes(window)`` — ``(pushed filters, expect(n_kept,
+    n_live))`` — against `_kept_files`, the rule the connector reader
+    plans by; then return the ``agg`` expressions over the connector
+    read under ``where(window)``. ``counts`` names the (files live,
+    files kept) columns of the first probe when the oracle restates
+    them."""
 
-    Scale: this is the production write path — N tasks write N files
-    and N metadata rows in one commit; the log carries the stats, so
-    no reader ever opens a footer to plan."""
-    base = scratch_dir(spark, "txlog_ds_write_stats")
-    log_dir = os.path.join(base, "_log")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    (
-        orders.repartitionByRange(_STATS_BUCKETS, "o_orderkey")
-        .write.format("txlog")
-        .mode("append")
-        .option("stats_col", "o_orderkey")
-        .save(log_dir)
-    )
-    kmin, kmax = orders.agg(
-        F.min("o_orderkey"), F.max("o_orderkey")
-    ).collect()[0]
-    span = kmax - kmin
-    lo = kmin + span * _STATS_LO_PCT // 100
-    hi = kmin + span * _STATS_HI_PCT // 100
-    snap, n_live, n_scanned = txlog_stats_read(spark, log_dir, lo, hi)
-    assert n_scanned < n_live, "stats pruning must skip files"
-    return snap.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    scratch: str
+    source: Callable
+    write: Callable
+    probes: Callable
+    where: Callable
+    agg: tuple = _ORDER_TOTALS
+    window: Callable = lambda src, rows: None
+    counts: tuple = ()
 
 
-QUERIES["sink_txlog_datasource_write_stats"] = (
-    q_sink_txlog_datasource_write_stats
+def _skipping_key(row: _SkippingKey):
+    """The registry function that builds ``row``'s key."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        log_dir = os.path.join(scratch_dir(spark, row.scratch), "_log")
+        txlog_source.register(spark)
+        src = row.source(load_table(spark, sf_dir, "orders"))
+        row.write(src, log_dir)
+        rows = _txlog_log_rows(spark, log_dir)
+        w = row.window(src, rows)
+        n_live = len(_live_files(rows))
+        n_kept = []
+        for filters, expect in row.probes(w):
+            n_kept.append(len(_kept_files(rows, filters)))
+            assert expect(n_kept[-1], n_live), (
+                row.scratch, filters, n_kept[-1], n_live
+            )
+        counts = [
+            F.lit(n).cast("long").alias(c)
+            for c, n in zip(row.counts, (n_live, *n_kept))
+        ]
+        snap = (
+            spark.read.format("txlog")
+            .option("path", log_dir)
+            .load()
+            .where(row.where(w))
+        )
+        return snap.agg(*counts, *map(F.expr, row.agg))
+
+    return build
+
+
+def _append(layout=None, **options):
+    """A row's ``write``: one connector append of ``layout(src)`` (or
+    ``src`` as it is) with the given writer options."""
+
+    def write(src: DataFrame, log_dir: str) -> None:
+        (layout(src) if layout else src).write.format("txlog").mode(
+            "append"
+        ).options(**options).save(log_dir)
+
+    return write
+
+
+def _by_key_range(n: int = _STATS_BUCKETS, col: str = "o_orderkey"):
+    """A ``layout``: ``n`` range partitions of ``col``, so each write
+    task's file holds a contiguous, tightly bounded range."""
+    return lambda df: df.repartitionByRange(n, col)
+
+
+def _log_range(rows: list, col: str) -> tuple:
+    """(min, max) of ``col`` over the bounds the live adds record."""
+    bounds = [_add_bounds(a, col) for a in _live_adds(rows).values()]
+    return min(b[0] for b in bounds), max(b[1] for b in bounds)
+
+
+def _log_window(col: str, lo_pct: int, hi_pct: int):
+    """A row's ``window``: [lo, hi] at ``lo_pct``..``hi_pct`` % of
+    ``col``'s span, the span read from the written log's exact bounds
+    (no min/max job over the data)."""
+
+    def window(src: DataFrame, rows: list) -> tuple:
+        kmin, kmax = _log_range(rows, col)
+        return (
+            kmin + (kmax - kmin) * lo_pct // 100,
+            kmin + (kmax - kmin) * hi_pct // 100,
+        )
+
+    return window
+
+
+def _prunes(n_kept: int, n_live: int) -> bool:
+    return n_kept < n_live
+
+
+#: o_orderkey stats per range-partitioned file, probed and read over
+#: the `_STATS_LO_PCT`–`_STATS_HI_PCT` % key window
+_KEY_RANGE_STATS = _SkippingKey(
+    scratch="txlog_ds_write_stats",
+    source=lambda o: o.select(*_TOTALS_COLS),
+    write=_append(_by_key_range(), stats_col="o_orderkey"),
+    window=_log_window("o_orderkey", _STATS_LO_PCT, _STATS_HI_PCT),
+    probes=lambda w: [(_between("o_orderkey", *w), _prunes)],
+    where=lambda w: F.col("o_orderkey").between(*w),
 )
+
+# The connector writer RECORDS data-skipping stats at write time
+# (Delta's shape): ``stats_col`` folds exact min/max per Arrow batch in
+# each write task (zero extra passes) and the commit emits one add per
+# file, so one range-partitioned write yields a table whose key-range
+# read opens only the files whose recorded range meets the window.
+# Pruning is a superset guarantee, so any correct stats layout must
+# reproduce the plain range aggregate the oracle restates. Scale: N
+# tasks write N files and N metadata rows in one commit; no reader
+# opens a footer to plan.
+QUERIES["sink_txlog_datasource_write_stats"] = _skipping_key(_KEY_RANGE_STATS)
 ORACLES["sink_txlog_datasource_write_stats"] = f"""
     WITH b AS (
         SELECT MIN(o_orderkey) AS kmin, MAX(o_orderkey) AS kmax
@@ -4614,92 +4533,38 @@ ORACLES["sink_txlog_datasource_write_stats"] = f"""
 """
 
 
-def q_sink_txlog_datasource_write_stats_date(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """NON-INTEGER write-time data skipping (r11 verdict gap closed):
-    ``stats_col`` on a DATE column records typed-JSON ``stats_json``
-    bounds per file (Delta records min/max for every orderable type;
-    this format's legacy int64 min_key/max_key fields stay reserved
-    for the single-integer-column case, so existing tables are
-    byte-identical). A date-range-partitioned write then serves
-    METADATA-ONLY file pruning for date predicates: the in-function
-    probe asserts the pushed [1994-01-01, 1995-12-31] window plans
-    strictly fewer partitions than the full table — from log metadata
-    alone, no footer reads. The hashed result is the pruned read's
-    aggregate; pruning is a superset guarantee, so any correct stats
-    layout must reproduce the plain filter aggregate the oracle
-    restates.
-
-    Scale: identical to the integer stats path — N tasks write N
-    files and N typed metadata rows in one commit; bounds survive
-    checkpoint compaction via the widened unified action schema
-    (``stats_json`` column in both `checkpoint_log` and
-    `txlog_checkpoint`)."""
-    import datetime
-
-    from pyspark.sql.datasource import (
-        GreaterThanOrEqual,
-        LessThanOrEqual,
-    )
-
-    base = scratch_dir(spark, "txlog_ds_stats_date")
-    log_dir = os.path.join(base, "_log")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        # the testdata ships o_orderdate as timestamp[us]; cast to a
-        # true DATE so the key exercises date-typed stats end to end
-        F.to_date("o_orderdate").alias("o_orderdate"),
-        "o_totalprice",
-    )
-    (
-        orders.repartitionByRange(_STATS_BUCKETS, "o_orderdate")
-        .write.format("txlog")
-        .mode("append")
-        .option("stats_col", "o_orderdate")
-        .save(log_dir)
-    )
-    lo = datetime.date(1994, 1, 1)
-    hi = datetime.date(1995, 12, 31)
-    cols = ["o_orderkey", "o_orderdate", "o_totalprice"]
-    n_all = len(
-        txlog_source.TxlogBatchReader({"path": log_dir}, cols).partitions()
-    )
-    pruned = txlog_source.TxlogBatchReader({"path": log_dir}, cols)
-    pruned.pushFilters(
-        [
-            GreaterThanOrEqual(("o_orderdate",), lo),
-            LessThanOrEqual(("o_orderdate",), hi),
-        ]
-    )
-    assert len(pruned.partitions()) < n_all, "date stats must prune files"
-    snap = (
-        spark.read.format("txlog")
-        .option("path", log_dir)
-        .load()
-        .where(
-            (F.col("o_orderdate") >= F.lit(lo))
-            & (F.col("o_orderdate") <= F.lit(hi))
-        )
-    )
-    return snap.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        # dates travel as formatted strings (the fn_date convention:
-        # DuckDB's pandas path coerces DATE to datetime64, drifting
-        # the representation even when values are equal)
-        F.date_format(F.min("o_orderdate"), "yyyy-MM-dd").alias(
-            "min_date"
+# NON-INTEGER write-time data skipping: ``stats_col`` on a DATE column
+# records typed-JSON ``stats_json`` bounds per file (the int64
+# min_key/max_key fields stay reserved for a single integer column), so
+# a date-range-partitioned write prunes date predicates from log
+# metadata alone. Dates leave as formatted strings (the fn_date
+# convention: DuckDB's pandas path coerces DATE to datetime64).
+QUERIES["sink_txlog_datasource_write_stats_date"] = _skipping_key(
+    _SkippingKey(
+        scratch="txlog_ds_stats_date",
+        # the testdata ships o_orderdate as timestamp[us]; a true DATE
+        # exercises date-typed stats end to end
+        source=lambda o: o.select(
+            "o_orderkey",
+            F.to_date("o_orderdate").alias("o_orderdate"),
+            "o_totalprice",
         ),
-        F.date_format(F.max("o_orderdate"), "yyyy-MM-dd").alias(
-            "max_date"
+        write=_append(
+            _by_key_range(col="o_orderdate"), stats_col="o_orderdate"
+        ),
+        window=lambda src, rows: (
+            datetime.date(1994, 1, 1),
+            datetime.date(1995, 12, 31),
+        ),
+        probes=lambda w: [(_between("o_orderdate", *w), _prunes)],
+        where=lambda w: F.col("o_orderdate").between(*w),
+        agg=(
+            "CAST(count(1) AS BIGINT) AS n_rows",
+            "CAST(sum(o_orderkey) AS BIGINT) AS sum_keys",
+            "date_format(min(o_orderdate), 'yyyy-MM-dd') AS min_date",
+            "date_format(max(o_orderdate), 'yyyy-MM-dd') AS max_date",
         ),
     )
-
-
-QUERIES["sink_txlog_datasource_write_stats_date"] = (
-    q_sink_txlog_datasource_write_stats_date
 )
 ORACLES["sink_txlog_datasource_write_stats_date"] = """
     SELECT COUNT(*)::BIGINT AS n_rows,
@@ -4714,87 +4579,30 @@ ORACLES["sink_txlog_datasource_write_stats_date"] = """
 """
 
 
-def q_sink_txlog_datasource_write_stats_multi(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """MULTI-COLUMN write-time data skipping (Delta's
-    dataSkippingNumIndexedCols shape, r11 verdict item 7): one write
-    with ``stats_col = "o_custkey, o_orderdate"`` records typed-JSON
-    bounds for BOTH columns in every add action, so a single commit's
-    metadata serves range pruning on either key. The layout is
-    range-partitioned by o_custkey, so the custkey window probe must
-    prune files (asserted in-function from pure log metadata); the
-    per-add presence of both columns' bounds is asserted too. The
-    hashed result restates the custkey-window aggregate — bounds
-    arithmetic identical to the single-column key's oracle, with the
-    window applied to the SECOND schema position to prove column
-    attribution cannot drift.
-
-    Scale: stats cost is one pyarrow min_max per column per batch
-    inside the write task — no extra pass, no shuffle; pruning stays
-    O(adds) planner-side metadata work."""
-    from pyspark.sql.datasource import (
-        GreaterThanOrEqual,
-        LessThanOrEqual,
+# MULTI-COLUMN write-time data skipping (Delta's
+# dataSkippingNumIndexedCols shape): one write with ``stats_col =
+# "o_custkey, o_orderdate"`` records typed-JSON bounds for both columns
+# in every add. The layout is range-partitioned by o_custkey, the
+# SECOND schema position, so a custkey window must prune files and
+# column attribution cannot drift.
+QUERIES["sink_txlog_datasource_write_stats_multi"] = _skipping_key(
+    _SkippingKey(
+        scratch="txlog_ds_stats_multi",
+        source=lambda o: o.select("o_orderkey", "o_custkey", "o_orderdate"),
+        write=_append(
+            _by_key_range(col="o_custkey"),
+            stats_col="o_custkey, o_orderdate",
+        ),
+        window=_log_window("o_custkey", 30, 55),
+        probes=lambda w: [(_between("o_custkey", *w), _prunes)],
+        where=lambda w: F.col("o_custkey").between(*w),
+        agg=(
+            "CAST(count(1) AS BIGINT) AS n_rows",
+            "CAST(sum(o_custkey) AS BIGINT) AS sum_cust",
+            "CAST(sum(o_orderkey) AS BIGINT) AS sum_keys",
+            "max(o_orderdate) AS max_date",
+        ),
     )
-
-    base = scratch_dir(spark, "txlog_ds_stats_multi")
-    log_dir = os.path.join(base, "_log")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    (
-        orders.repartitionByRange(_STATS_BUCKETS, "o_custkey")
-        .write.format("txlog")
-        .mode("append")
-        .option("stats_col", "o_custkey, o_orderdate")
-        .save(log_dir)
-    )
-    kmin, kmax = orders.agg(
-        F.min("o_custkey"), F.max("o_custkey")
-    ).collect()[0]
-    span = kmax - kmin
-    lo = kmin + span * 30 // 100
-    hi = kmin + span * 55 // 100
-    adds = [
-        r
-        for r in txlog_source._log_rows(log_dir)
-        if r["action"] == "add"
-    ]
-    import json as _json
-
-    for a in adds:
-        bounds = _json.loads(a["stats_json"])
-        assert set(bounds) == {"o_custkey", "o_orderdate"}
-    cols = ["o_orderkey", "o_custkey", "o_orderdate"]
-    n_all = len(
-        txlog_source.TxlogBatchReader({"path": log_dir}, cols).partitions()
-    )
-    pruned = txlog_source.TxlogBatchReader({"path": log_dir}, cols)
-    pruned.pushFilters(
-        [
-            GreaterThanOrEqual(("o_custkey",), lo),
-            LessThanOrEqual(("o_custkey",), hi),
-        ]
-    )
-    assert len(pruned.partitions()) < n_all, "custkey stats must prune"
-    snap = (
-        spark.read.format("txlog")
-        .option("path", log_dir)
-        .load()
-        .where((F.col("o_custkey") >= lo) & (F.col("o_custkey") <= hi))
-    )
-    return snap.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_custkey").cast("long").alias("sum_cust"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.max("o_orderdate").alias("max_date"),
-    )
-
-
-QUERIES["sink_txlog_datasource_write_stats_multi"] = (
-    q_sink_txlog_datasource_write_stats_multi
 )
 ORACLES["sink_txlog_datasource_write_stats_multi"] = """
     WITH b AS (
@@ -4814,81 +4622,46 @@ ORACLES["sink_txlog_datasource_write_stats_multi"] = """
 """
 
 
-def q_sink_txlog_datasource_write_stats_nulls(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """NULL-COUNT data skipping + string-prefix proofs (Delta's
-    nullCount / startsWith skipping, r12 second pass): adds record
-    per-column null counts and row counts in ``stats_json``, so
-    ``IS NOT NULL`` prunes an all-null file and ``LIKE 'p%'`` prunes
-    files whose string bounds exclude the prefix window
-    [p, p[:-1]+succ(p[-1])). Layout: Hive-partitioned by
-    o_orderstatus with a derived column that is NULL exactly on the
-    'P' partition — the in-function probes assert the 'P' dir is
-    pruned by IS NOT NULL (from null counts alone) and that a
-    priority-prefix probe prunes further. The hashed result is the
-    filtered aggregate the oracle restates from the defining
-    predicates; pruning is a superset guarantee, so any correct
-    metadata must reproduce it.
-
-    Scale: null counts fold per Arrow batch inside the write task
-    (pyarrow column.null_count — zero extra passes); IS NOT NULL
-    pruning is the workhorse of sparse-column scans at 100 TB (a
-    mostly-null enrichment column skips nearly every file)."""
-    from pyspark.sql.datasource import IsNotNull, StringStartsWith
-
-    base = scratch_dir(spark, "txlog_ds_stats_nulls")
-    log_dir = os.path.join(base, "_log")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_orderpriority",
-        F.when(F.col("o_orderstatus") == "P", F.lit(None))
-        .otherwise(F.col("o_custkey"))
-        .cast("long")
-        .alias("x"),
+# NULL-COUNT data skipping + string-prefix proofs (Delta's nullCount /
+# startsWith skipping): adds record per-column null counts and row
+# counts in ``stats_json``. The table is partitioned by o_orderstatus
+# with a column ``x`` that is NULL exactly on the 'P' partition, so
+# ``x IS NOT NULL`` prunes the 'P' dir from null counts alone and an
+# impossible priority prefix prunes every file.
+QUERIES["sink_txlog_datasource_write_stats_nulls"] = _skipping_key(
+    _SkippingKey(
+        scratch="txlog_ds_stats_nulls",
+        source=lambda o: o.select(
+            "o_orderkey",
+            "o_orderstatus",
+            "o_orderpriority",
+            F.when(F.col("o_orderstatus") == "P", F.lit(None))
+            .otherwise(F.col("o_custkey"))
+            .cast("long")
+            .alias("x"),
+        ),
+        write=_append(
+            partition_col="o_orderstatus", stats_col="x, o_orderpriority"
+        ),
+        probes=lambda w: [
+            ([IsNotNull(("x",))], _prunes),
+            (
+                [
+                    IsNotNull(("x",)),
+                    StringStartsWith(("o_orderpriority",), "9"),
+                ],
+                lambda n_kept, n_live: n_kept == 0,
+            ),
+        ],
+        where=lambda w: (
+            F.col("x").isNotNull() & F.col("o_orderpriority").startswith("3")
+        ),
+        agg=(
+            "CAST(count(1) AS BIGINT) AS n_rows",
+            "CAST(sum(x) AS BIGINT) AS sum_x",
+            "CAST(sum(o_orderkey) AS BIGINT) AS sum_keys",
+        ),
     )
-    (
-        orders.write.format("txlog")
-        .mode("append")
-        .option("partition_col", "o_orderstatus")
-        .option("stats_col", "x, o_orderpriority")
-        .save(log_dir)
-    )
-    cols = ["o_orderkey", "o_orderstatus", "o_orderpriority", "x"]
-    n_all = len(
-        txlog_source.TxlogBatchReader({"path": log_dir}, cols).partitions()
-    )
-    notnull = txlog_source.TxlogBatchReader({"path": log_dir}, cols)
-    notnull.pushFilters([IsNotNull(("x",))])
-    n_notnull = len(notnull.partitions())
-    assert n_notnull < n_all, "IS NOT NULL must prune the all-null dir"
-    both = txlog_source.TxlogBatchReader({"path": log_dir}, cols)
-    both.pushFilters(
-        [IsNotNull(("x",)), StringStartsWith(("o_orderpriority",), "9")]
-    )
-    assert len(both.partitions()) == 0, (
-        "an impossible prefix must prune everything"
-    )
-    snap = (
-        spark.read.format("txlog")
-        .option("path", log_dir)
-        .load()
-        .where(
-            F.col("x").isNotNull()
-            & F.col("o_orderpriority").startswith("3")
-        )
-    )
-    return snap.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("x").cast("long").alias("sum_x"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-    )
-
-
-QUERIES["sink_txlog_datasource_write_stats_nulls"] = (
-    q_sink_txlog_datasource_write_stats_nulls
 )
 ORACLES["sink_txlog_datasource_write_stats_nulls"] = """
     SELECT COUNT(*)::BIGINT AS n_rows,
@@ -4938,13 +4711,7 @@ def q_stream_txlog_cdf_consume(
                 to_version=v,
             )
             .groupBy("_change_type")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("o_orderkey").cast("long").alias("sum_keys"),
-                F.sum(
-                    F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-                ).cast("long").alias("sum_price_cents"),
-            )
+            .agg(*map(F.expr, _ORDER_TOTALS))
             .withColumn("win_to", F.lit(v).cast("long"))
         )
         out = agg if out is None else out.unionByName(agg)
@@ -4983,58 +4750,21 @@ ORACLES["stream_txlog_cdf_consume"] = """
 """
 
 
-def q_sink_txlog_datasource_write_partitioned(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hive/Delta-style PARTITIONED write through the connector:
-    ``.option("partition_col", "o_orderstatus")`` makes each write task
-    split its Arrow batches by partition value (columnar masks, no
-    Python rows) and the commit publish one data dir + one
-    ``part``-valued add action per partition — the same metadata shape
-    `sink_txlog_replace_where` mutates, so partition-pruned reads plan
-    on pure log metadata from day one. The result carries partitions
-    live vs opened for a single-status read (3 order statuses -> open
-    exactly 1) plus the scanned aggregate; the oracle restates all of
-    it. A reader that opened a partition it could prove irrelevant, or
-    a writer that misrouted rows across partition dirs, breaks the
-    hash (misrouted rows change the scanned aggregate)."""
-    base = scratch_dir(spark, "txlog_ds_write_part")
-    log_dir = os.path.join(base, "_log")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
+# Hive/Delta-style PARTITIONED write through the connector: each write
+# task splits its Arrow batches by ``partition_col`` and the commit
+# publishes one data dir + one ``part``-valued add per value, so a
+# single-status read opens exactly 1 of the 3 partitions. The oracle
+# restates partitions live vs opened and the scanned aggregate, so a
+# misrouted row or an unpruned partition breaks the hash.
+QUERIES["sink_txlog_datasource_write_partitioned"] = _skipping_key(
+    _SkippingKey(
+        scratch="txlog_ds_write_part",
+        source=lambda o: o.select(*_TOTALS_COLS),
+        write=_append(partition_col="o_orderstatus"),
+        probes=lambda w: [([EqualTo(("o_orderstatus",), "F")], _prunes)],
+        where=lambda w: F.col("o_orderstatus") == "F",
+        counts=("n_parts_live", "n_parts_opened"),
     )
-    (
-        orders.write.format("txlog")
-        .mode("append")
-        .option("partition_col", "o_orderstatus")
-        .save(log_dir)
-    )
-    pairs = _live_adds(_txlog_log_rows(spark, log_dir))
-    opened = sorted(p for p, r in pairs.items() if r["part"] == "F")
-    # read back through the CONNECTOR: Spark pushes the partition
-    # filter into the reader (pushFilters), which prunes the other
-    # partitions' dirs at planning time — end-to-end partition
-    # pushdown, unit-asserted at the reader level in tests
-    snap = (
-        spark.read.format("txlog")
-        .option("path", log_dir)
-        .load()
-        .where(F.col("o_orderstatus") == "F")
-    )
-    return snap.agg(
-        F.lit(len(pairs)).cast("long").alias("n_parts_live"),
-        F.lit(len(opened)).cast("long").alias("n_parts_opened"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
-
-
-QUERIES["sink_txlog_datasource_write_partitioned"] = (
-    q_sink_txlog_datasource_write_partitioned
 )
 ORACLES["sink_txlog_datasource_write_partitioned"] = """
     SELECT (SELECT COUNT(DISTINCT o_orderstatus) FROM orders)::BIGINT
@@ -5048,72 +4778,17 @@ ORACLES["sink_txlog_datasource_write_partitioned"] = """
 """
 
 
-def q_scan_txlog_datasource_pruned(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Range-filter pushdown through the connector (Spark 4.1's Python
-    DataSource ``pushFilters`` hook): a connector-written table with
-    per-file o_orderkey stats, read back through
-    ``spark.read.format("txlog")`` with a key-range predicate Spark
-    pushes into the reader — which prunes whole files at PLANNING time
-    from the log's recorded min/max alone. Every filter is also
-    returned as residual so Spark re-applies it (pruning is a superset
-    guarantee), and the hashed aggregate proves no row was lost or
-    leaked. That the file list genuinely shrinks (strict subset of the
-    8 stats-ranged files; partition-value pruning likewise) is
-    asserted at the reader level in tests/test_sinks.py; the
-    partition-pushdown end-to-end read lives in
-    `sink_txlog_datasource_write_partitioned`."""
-    base = scratch_dir(spark, "txlog_ds_pruned")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    stats_log = os.path.join(base, "stats", "_log")
-    (
-        orders.repartitionByRange(_STATS_BUCKETS, "o_orderkey")
-        .write.format("txlog")
-        .mode("append")
-        .option("stats_col", "o_orderkey")
-        .save(stats_log)
-    )
-    kmin, kmax = orders.agg(
-        F.min("o_orderkey"), F.max("o_orderkey")
-    ).collect()[0]
-    lo = kmin + (kmax - kmin) * _STATS_LO_PCT // 100
-    hi = kmin + (kmax - kmin) * _STATS_HI_PCT // 100
-    return (
-        spark.read.format("txlog")
-        .option("path", stats_log)
-        .load()
-        .where(F.col("o_orderkey").between(lo, hi))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("o_orderkey").cast("long").alias("sum_keys"),
-            F.sum(
-                F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-            ).cast("long").alias("sum_price_cents"),
-        )
-    )
-
-
-QUERIES["scan_txlog_datasource_pruned"] = q_scan_txlog_datasource_pruned
-ORACLES["scan_txlog_datasource_pruned"] = f"""
-    WITH b AS (
-        SELECT MIN(o_orderkey) AS kmin, MAX(o_orderkey) AS kmax
-        FROM orders
-    ), bounds AS (
-        SELECT kmin + (kmax - kmin) * {_STATS_LO_PCT} // 100 AS lo,
-               kmin + (kmax - kmin) * {_STATS_HI_PCT} // 100 AS hi
-        FROM b
-    )
-    SELECT COUNT(*)::BIGINT AS n_rows,
-           SUM(o_orderkey)::BIGINT AS sum_keys,
-           SUM(CAST(round(o_totalprice * 100) AS BIGINT))::BIGINT
-               AS sum_price_cents
-    FROM orders CROSS JOIN bounds
-    WHERE o_orderkey BETWEEN lo AND hi
-"""
+# Range-filter pushdown through the connector (Spark 4.1's Python
+# DataSource ``pushFilters`` hook): the same write, window and oracle as
+# `sink_txlog_datasource_write_stats`. The reader prunes whole files at
+# planning time from the log's recorded min/max; every filter is also
+# returned as residual, so the aggregate proves no row was lost.
+QUERIES["scan_txlog_datasource_pruned"] = _skipping_key(
+    _KEY_RANGE_STATS._replace(scratch="txlog_ds_pruned")
+)
+ORACLES["scan_txlog_datasource_pruned"] = ORACLES[
+    "sink_txlog_datasource_write_stats"
+]
 
 
 def q_scan_txlog_datasource_time_travel(
@@ -5212,86 +4887,40 @@ QUERIES["scan_txlog_datasource_mapped"] = q_scan_txlog_datasource_mapped
 ORACLES["scan_txlog_datasource_mapped"] = ORACLES["sink_txlog_column_mapping"]
 
 
-def q_sink_txlog_datasource_write_part_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Partitioned connector write WITH per-partition stats (r10
-    verdict gap #2 closed): ``partition_col`` + ``stats_col`` combine —
-    each write task folds the stats column's exact min/max per
-    partition value while splitting its Arrow batches (zero extra
-    passes), and the commit's per-partition add actions carry BOTH the
-    partition value and that partition's key bounds, so the table gets
-    partition pruning AND range pruning from one commit's metadata
-    (Delta records column stats on partitioned adds too). The fixture
-    partitions by a key-range bucket, so the recorded per-dir bounds
-    are tight and a key-range read through the reader's ``pushFilters``
-    opens only the intersecting dirs. The result carries dirs live vs
-    dirs opened (the oracle restates the identical pruning arithmetic
-    from the bucket layout — per-bucket exact min/max vs the [lo, hi]
-    probe) plus the scanned aggregate.
-
-    Scale: N partitions write N metadata rows; the range probe plans on
-    log metadata alone — at 100 TB a selective key range opens a
-    handful of partition dirs, never the table."""
-    from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
-
-    base = scratch_dir(spark, "txlog_ds_write_part_stats")
-    log_dir = os.path.join(base, "_log")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+def _key_bucketed(orders: DataFrame) -> DataFrame:
+    """orders with a string ``bucket`` column: `_STATS_BUCKETS`
+    contiguous o_orderkey ranges, ((key-min)*B) div (span+1), so each
+    bucket's recorded bounds are tight."""
     kmin, kmax = orders.agg(
         F.min("o_orderkey"), F.max("o_orderkey")
     ).collect()[0]
-    span = kmax - kmin
-    bucketed = orders.withColumn(
-        "kbucket",
+    return orders.withColumn(
+        "bucket",
         F.expr(
             f"CAST(((o_orderkey - {kmin}) * {_STATS_BUCKETS})"
-            f" DIV ({span} + 1) AS STRING)"
+            f" DIV {kmax - kmin + 1} AS STRING)"
         ),
     )
-    (
-        bucketed.write.format("txlog")
-        .mode("append")
-        .option("partition_col", "kbucket")
-        .option("stats_col", "o_orderkey")
-        .save(log_dir)
-    )
-    lo = kmin + span * _STATS_LO_PCT // 100
-    hi = kmin + span * _STATS_HI_PCT // 100
-    # pruning evidence straight from the reader's pushFilters path:
-    # distinct partition dirs surviving the pushed range
-    cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "kbucket"]
-    rdr = txlog_source.TxlogBatchReader({"path": log_dir}, cols)
-    rdr.pushFilters(
-        [
-            GreaterThanOrEqual(("o_orderkey",), lo),
-            LessThanOrEqual(("o_orderkey",), hi),
-        ]
-    )
-    n_scanned = len({p.data_dir for p in rdr.partitions()})
-    n_live = len(_live_files(_txlog_log_rows(spark, log_dir)))
-    snap = (
-        spark.read.format("txlog")
-        .option("path", log_dir)
-        .load()
-        .where(F.col("o_orderkey").between(lo, hi))
-    )
-    return snap.agg(
-        F.lit(n_live).cast("long").alias("n_parts_live"),
-        F.lit(n_scanned).cast("long").alias("n_parts_scanned"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
 
 
-QUERIES["sink_txlog_datasource_write_part_stats"] = (
-    q_sink_txlog_datasource_write_part_stats
+#: o_orderkey stats on a partition per key-range bucket — partition
+#: pruning AND range pruning from one commit's metadata
+_KEY_BUCKET_STATS = _KEY_RANGE_STATS._replace(
+    scratch="txlog_ds_write_part_stats",
+    source=lambda o: _key_bucketed(o.select(*_TOTALS_COLS)),
+    write=_append(partition_col="bucket", stats_col="o_orderkey"),
+    counts=("n_parts_live", "n_parts_scanned"),
+)
+
+# Partitioned connector write WITH per-partition stats: each write task
+# folds the stats column's exact min/max per partition value while
+# splitting its Arrow batches, and each partition's add carries both
+# its value and its key bounds (Delta records column stats on
+# partitioned adds too). The oracle restates dirs live vs opened from
+# the bucket layout. Scale: a selective key range opens a handful of
+# partition dirs, planned on log metadata alone.
+QUERIES["sink_txlog_datasource_write_part_stats"] = _skipping_key(
+    _KEY_BUCKET_STATS
 )
 ORACLES["sink_txlog_datasource_write_part_stats"] = f"""
     WITH b AS (
@@ -5450,60 +5079,34 @@ ORACLES["scan_txlog_datasource_mapped_dv"] = """
 """
 
 
-def q_sink_txlog_stats_read_checkpointed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Stats-skipping read on a PARTIALLY COMPACTED log (the r10
-    advisor's hazard, now a hash-checked contract): two stats-recording
-    connector writes land as commits 0 and 1; the engine's
-    `txlog_checkpoint` compacts commit 0 (its JSON is GONE — the add
-    actions survive only in the parquet checkpoint, which since this
-    round preserves min_key/max_key/stats_col, the ONE unified
-    checkpoint schema both `checkpoint_log` twins write). The
-    stats-pruning reader replays checkpoint + tail through
-    `_txlog_log_rows`, so BOTH halves' files stay visible with their
-    bounds — a *.json-glob reader would silently drop the compacted
-    half's rows. The oracle restates the plain range aggregate; that
-    pruning still genuinely skips files is asserted inline (all 8
-    files live, strictly fewer opened)."""
-    base = scratch_dir(spark, "txlog_stats_ckpt")
-    log_dir = os.path.join(base, "_log")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+def _append_halves_then_checkpoint(src: DataFrame, log_dir: str) -> None:
+    """Two stats-recording appends (even keys, then odd) as commits 0
+    and 1; `txlog_checkpoint` then compacts commit 0, whose JSON is
+    gone — its adds survive only in the parquet checkpoint."""
     k = F.col("o_orderkey")
     for pred in (k % 2 == 0, k % 2 == 1):
-        (
-            orders.where(pred)
-            .repartitionByRange(_STATS_BUCKETS // 2, "o_orderkey")
-            .write.format("txlog")
-            .mode("append")
-            .option("stats_col", "o_orderkey")
-            .save(log_dir)
+        _append(_by_key_range(_STATS_BUCKETS // 2), stats_col="o_orderkey")(
+            src.where(pred), log_dir
         )
-    txlog_checkpoint(spark, log_dir, 0)
+    txlog_checkpoint(src.sparkSession, log_dir, 0)
     assert not os.path.exists(os.path.join(log_dir, "00000.json"))
-    kmin, kmax = orders.agg(
-        F.min("o_orderkey"), F.max("o_orderkey")
-    ).collect()[0]
-    span = kmax - kmin
-    lo = kmin + span * _STATS_LO_PCT // 100
-    hi = kmin + span * _STATS_HI_PCT // 100
-    snap, n_live, n_scanned = txlog_stats_read(spark, log_dir, lo, hi)
-    assert n_live == _STATS_BUCKETS, (n_live, _STATS_BUCKETS)
-    assert n_scanned < n_live, "stats pruning must survive compaction"
-    return snap.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
+
+
+# Stats skipping on a PARTIALLY COMPACTED log: the log replays
+# checkpoint + tail, so both halves' files stay visible with their
+# bounds (a *.json-glob reader would drop the compacted half) and the
+# key window still prunes: all 8 files live, strictly fewer kept.
+QUERIES["sink_txlog_stats_read_checkpointed"] = _skipping_key(
+    _KEY_RANGE_STATS._replace(
+        scratch="txlog_stats_ckpt",
+        write=_append_halves_then_checkpoint,
+        probes=lambda w: [
+            (
+                _between("o_orderkey", *w),
+                lambda n_kept, n_live: n_kept < n_live == _STATS_BUCKETS,
+            )
+        ],
     )
-
-
-QUERIES["sink_txlog_stats_read_checkpointed"] = (
-    q_sink_txlog_stats_read_checkpointed
 )
 ORACLES["sink_txlog_stats_read_checkpointed"] = ORACLES[
     "sink_txlog_datasource_write_stats"
@@ -5547,13 +5150,7 @@ def q_sink_txlog_datasource_autocheckpoint(
     assert not os.path.exists(os.path.join(log_dir, "00001.json"))
     assert os.path.exists(os.path.join(log_dir, "00002.json"))
     snap = spark.read.format("txlog").option("path", log_dir).load()
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return snap.groupBy("o_orderstatus").agg(*map(F.expr, _ORDER_TOTALS))
 
 
 QUERIES["sink_txlog_datasource_autocheckpoint"] = (
@@ -5570,89 +5167,56 @@ ORACLES["sink_txlog_datasource_autocheckpoint"] = """
 """
 
 
-def q_sink_txlog_datasource_bloom_prune(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """BLOOM FILTER INDEX on connector writes (Delta's bloom filter
-    index mechanic): ``.option("bloom_col", "o_orderkey")`` makes each
-    write task fold a bloom filter over its file's key values
-    (numpy-vectorized double hashing, zlib+base64 into the add action)
-    — the pruning modality min/max stats CANNOT provide: the fixture
-    hash-repartitions on the key, so every file's [min,max] spans the
-    whole domain and range stats prune nothing, yet a point lookup
-    (IN of 5 specific keys, pushed via pushFilters) opens only the
-    files whose blooms admit a probe key. An unset probe bit PROVES
-    absence (safe prune); a false positive only keeps a file — the
-    superset guarantee, so the hashed row content (the oracle restates
-    the 5-key lookup, keys chosen deterministically FROM the data)
-    catches any wrongly pruned file. That pruning genuinely bites
-    (files opened < files live) and that range stats provably cannot
-    (every file spans lo..hi) are asserted inline.
+def _bloom_write(src: DataFrame, log_dir: str) -> None:
+    """A hash layout (every file spans the key domain, so range stats
+    prune nothing) with a bloom over o_orderkey per file, sized like a
+    real writer sizes from expected rows: ~16 bits per key keeps the
+    false-positive rate low at ANY sf."""
+    bits = 1 << max(17, (src.count() * 16 // 8).bit_length())
+    _append(
+        lambda df: df.repartition(8, "o_orderkey"),
+        bloom_col="o_orderkey",
+        bloom_bits=str(bits),
+        stats_col="o_orderkey",
+    )(src, log_dir)
 
-    Scale: the filters live in log metadata (KBs per file at 2^20
-    bits, sparse-compressed); a needle-in-100-TB key lookup plans on
-    the log alone and opens a handful of files."""
-    from pyspark.sql.datasource import In
 
-    base = scratch_dir(spark, "txlog_ds_bloom")
-    log_dir = os.path.join(base, "_log")
-    txlog_source.register(spark)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    # size the filter for the layout (a real writer sizes from expected
-    # rows/file): ~16 bits per key keeps the false-positive rate low at
-    # ANY sf, so the pruning assertion below is scale-proof
-    n_rows = orders.count()
-    bits = 1 << max(17, (n_rows * 16 // 8).bit_length())
-    (
-        orders.repartition(8, "o_orderkey")  # hash layout: stats useless
-        .write.format("txlog")
-        .mode("append")
-        .option("bloom_col", "o_orderkey")
-        .option("bloom_bits", str(bits))
-        .option("stats_col", "o_orderkey")
-        .save(log_dir)
-    )
-    probe = [
+def _bloom_window(src: DataFrame, rows: list) -> tuple:
+    """(lo, hi, keys): the logged key window, and 5 lookup keys chosen
+    from the data by the rule the oracle restates."""
+    keys = [
         r["o_orderkey"]
-        for r in orders.where("o_orderkey % 97 = 3")
+        for r in src.where("o_orderkey % 97 = 3")
         .orderBy("o_orderkey")
         .limit(5)
         .collect()
     ]
-    rows = _txlog_log_rows(spark, log_dir)
-    adds = [r for r in rows if r["action"] == "add"]
-    kmin = min(r["min_key"] for r in adds)
-    kmax = max(r["max_key"] for r in adds)
-    # range stats are useless on this layout: every file's recorded
-    # range spans most of the key domain (hash distribution)
-    assert all(
-        (r["max_key"] - r["min_key"]) * 2 >= (kmax - kmin)
-        for r in adds
-    ), "hash layout should defeat range stats"
-    cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-    rdr = txlog_source.TxlogBatchReader({"path": log_dir}, cols)
-    rdr.pushFilters([In(("o_orderkey",), tuple(probe))])
-    n_scanned = len(rdr.partitions())
-    assert n_scanned < len(adds), "bloom pruning must skip files"
-    snap = (
-        spark.read.format("txlog")
-        .option("path", log_dir)
-        .load()
-        .where(F.col("o_orderkey").isin(probe))
-    )
-    return snap.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("sum_keys"),
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-        ).cast("long").alias("sum_price_cents"),
-    )
+    return (*_log_window("o_orderkey", _STATS_LO_PCT, _STATS_HI_PCT)(
+        src, rows
+    ), keys)
 
 
-QUERIES["sink_txlog_datasource_bloom_prune"] = (
-    q_sink_txlog_datasource_bloom_prune
+# BLOOM FILTER INDEX on connector writes (Delta's bloom filter index):
+# a point lookup (IN of 5 keys) opens only the files whose blooms admit
+# a probe key, while the key window proves range stats prune nothing on
+# this layout. An unset probe bit PROVES absence; a false positive only
+# keeps a file. Scale: the filters live in log metadata, so a
+# needle-in-100-TB lookup plans on the log alone.
+QUERIES["sink_txlog_datasource_bloom_prune"] = _skipping_key(
+    _SkippingKey(
+        scratch="txlog_ds_bloom",
+        source=lambda o: o.select(*_TOTALS_COLS),
+        write=_bloom_write,
+        window=_bloom_window,
+        probes=lambda w: [
+            ([In(("o_orderkey",), tuple(w[2]))], _prunes),
+            (
+                _between("o_orderkey", w[0], w[1]),
+                lambda n_kept, n_live: n_kept == n_live,
+            ),
+        ],
+        where=lambda w: F.col("o_orderkey").isin(w[2]),
+    )
 )
 ORACLES["sink_txlog_datasource_bloom_prune"] = """
     WITH probe AS (
@@ -5689,8 +5253,6 @@ def q_sink_txlog_partition_evolution(
     Scale: this is how a 100-TB table changes its partition scheme in
     place — no rewrite, old files keep pruning under the old spec,
     new files under the new."""
-    from pyspark.sql.datasource import EqualTo
-
     base = scratch_dir(spark, "txlog_ds_part_evo")
     log_dir = os.path.join(base, "_log")
     txlog_source.register(spark)
@@ -5715,16 +5277,11 @@ def q_sink_txlog_partition_evolution(
         .option("partition_col", "kmod")
         .save(log_dir)
     )
-    cols = ["o_orderkey", "o_orderstatus", "kmod", "o_totalprice"]
-
-    def scanned(filt) -> int:
-        rdr = txlog_source.TxlogBatchReader({"path": log_dir}, cols)
-        rdr.pushFilters([filt])
-        return len({p.data_dir for p in rdr.partitions()})
-
-    n_live = len(_live_files(_txlog_log_rows(spark, log_dir)))
-    n_status = scanned(EqualTo(("o_orderstatus",), "F"))
-    n_kmod = scanned(EqualTo(("kmod",), "1"))
+    rows = _txlog_log_rows(spark, log_dir)
+    n_live = len(_live_files(rows))
+    # each partitioned add is one partition dir
+    n_status = len(_kept_files(rows, [EqualTo(("o_orderstatus",), "F")]))
+    n_kmod = len(_kept_files(rows, [EqualTo(("kmod",), "1")]))
     tbl = spark.read.format("txlog").option("path", log_dir).load()
 
     def agg(df, probe, n_scanned):
@@ -5732,11 +5289,7 @@ def q_sink_txlog_partition_evolution(
             F.lit(probe).alias("probe"),
             F.lit(n_live).cast("long").alias("n_parts_live"),
             F.lit(n_scanned).cast("long").alias("n_parts_scanned"),
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("o_orderkey").cast("long").alias("sum_keys"),
-            F.sum(
-                F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-            ).cast("long").alias("sum_price_cents"),
+            *map(F.expr, _ORDER_TOTALS),
         )
 
     return agg(
@@ -5975,15 +5528,10 @@ def q_sink_txlog_text_bloom_prune(
     needle's connector count equals the raw-parquet count (exactness
     under pruning). The oracle restates both match counts and the
     layout arithmetic."""
-    from aind_data_transformation_spark.io.txlog_source import (
-        TxlogBatchReader,
-        register,
-    )
-
     base = scratch_dir(spark, "txlog_text_bloom")
     log_dir = os.path.join(base, "_log")
     docs = load_table(spark, sf_dir, "documents")
-    register(spark)
+    txlog_source.register(spark)
     (
         docs.repartition(8, "doc_id")
         .write.format("txlog")
@@ -5991,9 +5539,8 @@ def q_sink_txlog_text_bloom_prune(
         .option("text_bloom_col", "text")
         .save(log_dir)
     )
-    adds = [
-        r for r in _log_rows(log_dir) if r.get("action") == "add"
-    ]
+    rows = _log_rows(log_dir)
+    adds = [r for r in rows if r.get("action") == "add"]
     assert len(adds) == 8 and all(r.get("tbloom") for r in adds)
     # deterministic data-derived needle: chars 51..70 of the first
     # doc's text (restated by the oracle with the same rule)
@@ -6010,13 +5557,9 @@ def q_sink_txlog_text_bloom_prune(
     n_match_absent = table.where(F.col("text").contains(absent)).count()
     # the planner proof: the absent needle prunes EVERY file before a
     # single parquet footer is opened
-    from pyspark.sql.datasource import StringContains
-
-    probe = TxlogBatchReader(
-        {"path": log_dir}, [f.name for f in table.schema.fields]
+    n_planned_absent = len(
+        _kept_files(rows, [StringContains(("text",), absent)])
     )
-    probe.pushFilters([StringContains(("text",), absent)])
-    n_planned_absent = len(probe.partitions())
     assert n_planned_absent == 0, (
         f"absent needle planned {n_planned_absent} partitions"
     )

@@ -499,7 +499,9 @@ def run_available_now(df: DataFrame, *, mode: str) -> list:
         .start()
     )
     q.awaitTermination()
-    return df.sparkSession.sql(f"SELECT * FROM {name}").collect()
+    rows = df.sparkSession.table(name).collect()
+    df.sparkSession.catalog.dropTempView(name)
+    return rows
 
 
 def upsert_stream_foreach_batch(

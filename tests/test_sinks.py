@@ -889,11 +889,9 @@ def test_txlog_zorder_prunes_the_second_column(spark):
 
 
 def test_txlog_checkpoint_keeps_second_column_stats(spark):
-    """A checkpoint keeps the adds' min_cust/max_cust stats: the
-    o_custkey stats read of the z-order table returns the same (live,
-    opened, rows) after `txlog_checkpoint` as before it. Without those
-    checkpoint columns the stats came back None and the prune raised
-    TypeError."""
+    """A checkpoint keeps the adds' second-column bounds (``stats_json``):
+    the o_custkey stats read of the z-order table returns the same
+    (live, opened, rows) after `txlog_checkpoint` as before it."""
     log_dir, (_, _, cmin, cmax) = sinks._build_txlog_zorder_table(
         spark, TEST_SF_DIR, "txlog_z2_ckpt"
     )
@@ -914,8 +912,8 @@ def test_txlog_checkpoint_keeps_second_column_stats(spark):
 def test_txlog_stats_read_scans_appended_file_without_column_stats(spark):
     """A connector append to the z-order table records o_orderkey stats
     only: an o_custkey stats read still prunes the fixture's files, always
-    scans the appended file (it has no min_cust/max_cust to prune by) and
-    returns its matching rows."""
+    scans the appended file (it records no o_custkey bounds to prune by)
+    and returns its matching rows."""
     from pyspark.sql import functions as F
 
     from aind_data_transformation_spark.io import txlog_source
@@ -932,7 +930,8 @@ def test_txlog_stats_read_scans_appended_file_without_column_stats(spark):
 
     txlog_source.register(spark)
     extra = spark.createDataFrame(
-        [(10**9 + i, lo + i) for i in range(3)], "o_orderkey long, o_custkey long"
+        [(10**9 + i, lo + i, "appended") for i in range(3)],
+        "o_orderkey long, o_custkey long, bucket string",
     )
     extra.coalesce(1).write.format("txlog").mode("append").option(
         "stats_col", "o_orderkey"
@@ -1088,9 +1087,8 @@ def test_txlog_stats_skipping_opens_fewer_files(spark):
     assert n_live == sinks._STATS_BUCKETS
     assert 0 < n_scanned < n_live
     # soundness: pruning dropped no needed rows
-    full = (
-        spark.read.parquet(os.path.join(os.path.dirname(log_dir), "data"))
-        .where(f"o_orderkey BETWEEN {lo} AND {hi}")
+    full = sinks._txlog_snapshot(spark, log_dir).where(
+        f"o_orderkey BETWEEN {lo} AND {hi}"
     )
     assert snap.count() == full.count()
     assert (
