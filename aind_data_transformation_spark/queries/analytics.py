@@ -15,7 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast, knuth32_sql
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    knuth32_sql,
+    local_materializer,
+    merge_upsert,
+)
 from aind_data_transformation_spark.queries.numeric import cents, sql_cents
 
 
@@ -210,8 +215,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every o_orderkey % 3 == 0, price bumped by $5.00 in exact cents) is
     upserted into a base snapshot missing every 7th key — updates replace,
     new keys insert, untouched rows pass through."""
-    from aind_data_transformation_spark.ops import merge_upsert
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -533,8 +536,6 @@ def q_audience_overlap_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the segment bitmaps feed sizes + both join sides (4 events scans
     # before); staged once — |segments|·|users|/64 words, exactly the
     # bitmap index an audience system keeps resident.
-    from aind_data_transformation_spark.ops import local_materializer
-
     words = local_materializer(
         e.groupBy(
             "event_type",

@@ -22,7 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast
+from aind_data_transformation_spark.ops import (
+    asof_join,
+    attach_broadcast,
+    local_materializer,
+)
 
 
 def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,8 +38,6 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Three per-user conditional aggregations; each reduces events to one row
     per user before the next join, so the joins move user-cardinality data,
     not event-cardinality."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     # each step's per-user entry frame feeds BOTH the next step's join
     # and its own count; un-staged, the chained lazy plan re-derived
@@ -156,8 +158,6 @@ def q_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-size, then one shuffle each; never a per-day rescan of the
     event log. Report days are clamped to the observed [min, max] day
     span."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     e = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
@@ -210,8 +210,6 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ops.asof_join): union + ONE user_id shuffle + linear window scan —
     no per-purchase subquery. Views are deduped per (user, ts) with
     max_by(event_id) so the tie rule is explicit."""
-    from aind_data_transformation_spark.ops import attach_broadcast, asof_join
-
     e = load_table(spark, sf_dir, "events")
     purchases = e.where(F.col("event_type") == "purchase").select(
         "user_id",
@@ -435,8 +433,6 @@ def q_seq_markov_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the |types|²-row cell table is referenced twice (cells + its
     # per-cur rollup inside the model join); staged once so the
     # user-window pass over events backing it runs once, not twice.
-    from aind_data_transformation_spark.ops import local_materializer
-
     cells = local_materializer(
         trans.groupBy(F.col("event_type").alias("cur"), "nxt").agg(
             F.count(F.lit(1)).alias("n")
@@ -489,12 +485,6 @@ def q_funnel_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay DOMAIN (≤ 1801 rows after the tolerance cap): distribution
     groupBy + one bounded cumulative window + threshold probes — never
     a global sort of raw delays (the stats_levene discipline)."""
-    from aind_data_transformation_spark.ops import (
-        asof_join,
-        attach_broadcast,
-        local_materializer,
-    )
-
     e = load_table(spark, sf_dir, "events")
     purchases = e.where(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", F.unix_micros("ts").alias("p_us")
@@ -684,8 +674,6 @@ def q_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain itself is a |types|²-bounded frame, so the per-channel × per
     -round iteration is metadata-sized joins — the whole attribution
     model costs one fact shuffle at any corpus size."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -704,7 +692,7 @@ def q_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # kept feeds three branches (lag pairs, START edges, last-row edges):
     # materialize once
-    kept = mat(
+    kept = local_materializer(
         ranked.where(
             F.col("conv_rk").isNull() | (F.col("rk") <= F.col("conv_rk"))
         ).select(

@@ -19,6 +19,7 @@ from aind_data_transformation_spark.ops import (
     attach_broadcast,
     connected_components,
     knuth32_sql,
+    local_materializer,
     pack_sequences,
     series_row_number,
     staged_parquet,
@@ -255,8 +256,6 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     # the |sources|-row count table feeds both the scalar min and the
     # rate table; staged once so the corpus aggregation runs once.
-    from aind_data_transformation_spark.ops import local_materializer
-
     counts = local_materializer(
         d.groupBy("source").agg(F.count(F.lit(1)).alias("n_s")),
         "temp_source_counts",
@@ -448,8 +447,6 @@ def q_corpus_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     size and broadcasts to the probe side; only the maybe-dup fraction
     ever reaches the exact (shuffle) check. That cost model — broadcast
     sketch probe gating an exact join — is the point of the operator."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     # the digest projection (md5 over the full text) fed SEVEN plan
     # branches (3 bitmap-position unions + 3 probe-position unions + the
     # exact check), each re-hashing the corpus. Stage the 2-column

@@ -4,7 +4,7 @@ PageRank is the canonical "loop until fixpoint" algorithm a declarative
 engine supposedly can't express — here it's a driver-side loop that only
 *builds* the plan: each round adds one join+groupBy referencing the
 previous round once, so plan growth is linear and a fixed round count
-executes as a single job. Connected components (ops.connected_components,
+executes from one plan. Connected components (ops.connected_components,
 exercised by ``dedup_clusters``) is the contrasting case: its per-round
 frame is referenced twice (convergence probe + next round), so it MUST
 materialize each round or the plan doubles.
@@ -17,12 +17,21 @@ rounds unrolled as chained CTEs, generated from the same Python loop)
 matches bit-for-bit. A float PageRank could never hash-match across
 engines.
 
+Materialization rule: a round that reads its state once stays lazy, so
+a fixed round count is one plan that grows by a join and an aggregate
+per round. PageRank's rounds are lazy, and BFS, Bellman-Ford, k-core
+and label propagation build without running a Spark job. A loop whose
+round count depends on the data (connected components) must probe for
+convergence, so it materializes each round. PageRank does checkpoint
+its degree-joined edge table, which every round reads: without it one
+build plus collect ran 28 Spark jobs (100 stages) in about 2.3 s
+instead of 24 jobs (78 stages) in about 1.6 s (sf0.01, local[4],
+4-vCPU host, four warm runs each).
+
 Scale notes (100 TB): each round is one shuffle of the edge list joined
-against the current rank vector — the same shape GraphX/Pregel lowers to.
-Ranks persist in MEMORY_AND_DISK between rounds; at real scale you
-``localCheckpoint`` every ~5 rounds to truncate lineage, and pre-partition
-edges by src so every round reuses the partitioning (zero-shuffle join
-against the co-partitioned rank vector).
+against the current state vector — the same shape GraphX/Pregel lowers
+to. At real scale, pre-partition edges by src so every round reuses the
+partitioning (zero-shuffle join against the co-partitioned state).
 """
 
 from __future__ import annotations
@@ -32,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from aind_data_transformation_spark.io.sources import load_table
 from aind_data_transformation_spark.ops import (
     attach_broadcast,
+    connected_components,
     local_materializer,
     session_stage,
 )
@@ -286,54 +296,63 @@ def _copurchase_support(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized co-purchase edge list (support >= 2), the undirected
-    graph under graph_triangle_count, as (u, v) in both directions —
-    a narrow union over the cached `_copurchase_support` table."""
-    half = _copurchase_support(spark, sf_dir).select("u", "v")
+    graph under graph_triangle_count, as (u, v, n_orders) in both
+    directions — a narrow union over the cached `_copurchase_support`
+    table."""
+    half = _copurchase_support(spark, sf_dir)
     return half.unionByName(
-        half.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        half.select(F.col("v").alias("u"), F.col("u").alias("v"), "n_orders")
     )
+
+
+def _shortest_paths(edges: DataFrame, rounds: int) -> DataFrame:
+    """``rounds`` synchronous relaxation rounds of single-source shortest
+    paths over a ``(u, v, w)`` edge frame, from the minimum ``u`` at
+    distance 0; returns ``(node, dist)`` for every node reached.
+
+    A zero-weight self-loop per node carries each distance into the next
+    round, so a round is ``dist ⋈ edges`` plus ``min(dist + w)`` grouped
+    by ``v`` — equal to ``min(dist, relaxed)`` and reading ``dist`` once.
+    The plan therefore grows by one join and one aggregate per round and
+    stays lazy, like `pagerank_plan`. Bellman-Ford with every ``w = 1``
+    is BFS."""
+    nodes = edges.select("u").union(edges.select("v")).distinct()
+    closed = edges.unionByName(
+        nodes.select(
+            "u", F.col("u").alias("v"), F.lit(0).cast("long").alias("w")
+        )
+    )
+    dist = edges.agg(F.min("u").alias("node")).select(
+        "node", F.lit(0).cast("long").alias("dist")
+    )
+    for _ in range(rounds):
+        dist = (
+            dist.join(closed, dist.node == closed.u)
+            .groupBy(F.col("v").alias("node"))
+            .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
+        )
+    return dist
 
 
 def q_graph_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-round BFS (shortest hop count) on the co-purchase graph from
-    the minimum part id in the edge set, BFS_ROUNDS rounds. Each round is
+    the minimum part id in the edge set, BFS_ROUNDS rounds: the
+    `_shortest_paths` relaxation with every edge weight 1. Each round is
     dist' = min(dist, 1 + min over in-neighbors(dist)) — one equi-join of
     the edge list against the current distance vector plus a min-groupBy,
-    exactly the Pregel message round lowered to DataFrames (same shape as
-    PageRank above). All-integer state, so partial-aggregation order
-    cannot change anything and the DuckDB oracle (identical rounds
-    unrolled as chained CTEs) matches exactly.
+    exactly the Pregel message round lowered to DataFrames. All-integer
+    state, so partial-aggregation order cannot change anything and the
+    DuckDB oracle (identical rounds unrolled as chained CTEs) matches
+    exactly.
 
-    Scale: per round one shuffle of (frontier ⋈ edges); the distance
-    vector is keyed by node — pre-partitioning edges by u makes every
-    round's join co-partitioned. The edge list feeds every round and the
-    round frame is referenced twice (carry + expand), so both are
-    stage-materialized (ops.local_materializer; parquet on a cluster —
-    ops.connected_components shows the same pattern). Without that the
-    plan doubles per round and the basket self-join that builds the
-    edges re-executes 2^rounds times."""
-    from aind_data_transformation_spark.ops import attach_broadcast, local_materializer as mat
-
-    edges = mat(_copurchase_edges(spark, sf_dir), "bfs_edges")
-    seed = edges.agg(F.min("u").alias("node")).select(
-        "node", F.lit(0).cast("long").alias("dist")
+    Scale: per round one shuffle of (frontier ⋈ edges); the rounds form
+    one lazy plan over the session-staged `_copurchase_support`, so
+    building the key runs no Spark job."""
+    edges = _copurchase_edges(spark, sf_dir).select(
+        "u", "v", F.lit(1).cast("long").alias("w")
     )
-    dist = seed
-    for r in range(BFS_ROUNDS):
-        expanded = (
-            dist.join(edges, dist.node == edges.u)
-            .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = mat(
-            dist.unionByName(expanded)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist")),
-            f"bfs_round_{r}",
-        )
-    return dist.select(
-        F.col("node").cast("long").alias("part"),
-        F.col("dist").cast("long").alias("dist"),
-    )
+    dist = _shortest_paths(edges, BFS_ROUNDS)
+    return dist.select(F.col("node").cast("long").alias("part"), "dist")
 
 
 #: Bellman-Ford relaxation rounds (covers paths of <= BF_ROUNDS hops; the
@@ -347,61 +366,39 @@ def q_graph_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     count), so strong co-purchase ties are cheap to traverse — the
     cost-propagation upgrade of `graph_bfs_frontier`'s hop counts
     (routing, influence cost, supply-chain distance all run this
-    relaxation). Each round is dist' = min(dist, min over in-edges
-    (dist_u + w)) — one equi-join + min-groupBy, the Pregel round
-    lowered to DataFrames. All-integer distances: partial-aggregation
-    order cannot change a min, so the unrolled-CTE DuckDB oracle
-    matches exactly.
+    relaxation). BF_ROUNDS rounds of `_shortest_paths`: each is
+    dist' = min(dist, min over in-edges (dist_u + w)) — one equi-join +
+    min-groupBy. All-integer distances: partial-aggregation order cannot
+    change a min, so the unrolled-CTE DuckDB oracle matches exactly.
 
-    Scale: per round one shuffle of (frontier ⋈ edges); edges and
-    round frames stage-materialize exactly like BFS/CC (each round
-    frame feeds two branches; parquet materializer on a cluster)."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
-    half = _copurchase_support(spark, sf_dir).select(
+    Scale: per round one shuffle of (frontier ⋈ edges), all rounds one
+    lazy plan, like BFS."""
+    edges = _copurchase_edges(spark, sf_dir).select(
         "u",
         "v",
         F.greatest(F.lit(1), F.lit(6) - F.col("n_orders")).alias("w"),
     )
-    edges = mat(
-        half.unionByName(
-            half.select(
-                F.col("v").alias("u"), F.col("u").alias("v"), "w"
-            )
-        ),
-        "bf_edges",
-    )
-    seed = edges.agg(F.min("u").alias("node")).select(
-        "node", F.lit(0).cast("long").alias("dist")
-    )
-    dist = seed
-    for r in range(BF_ROUNDS):
-        relaxed = dist.join(edges, dist.node == edges.u).select(
-            F.col("v").alias("node"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-        )
-        dist = mat(
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist")),
-            f"bf_round_{r}",
-        )
-    return dist.select(
-        F.col("node").cast("long").alias("part"),
-        F.col("dist").cast("long").alias("dist"),
-    )
+    dist = _shortest_paths(edges, BF_ROUNDS)
+    return dist.select(F.col("node").cast("long").alias("part"), "dist")
 
 
-def _bellman_ford_oracle() -> str:
+def _shortest_paths_oracle(n_rounds: int, weighted: bool) -> str:
+    """The `_shortest_paths` rounds unrolled as chained CTEs, each the
+    min over the previous distances and their relaxation — Bellman-Ford
+    with weight ``max(1, 6 − shared orders)``, or BFS with weight 1."""
+    step, w, half_w = "1", "", ""
+    if weighted:
+        step, w = "e.w", ", w"
+        half_w = ",\n                   greatest(1, 6 - COUNT(*)) AS w"
     rounds = []
     prev = "d0"
-    for r in range(1, BF_ROUNDS + 1):
+    for r in range(1, n_rounds + 1):
         rounds.append(
             f"d{r} AS (\n"
             f"            SELECT node, MIN(dist) AS dist FROM (\n"
             f"                SELECT node, dist FROM {prev}\n"
             f"                UNION ALL\n"
-            f"                SELECT e.v AS node, d.dist + e.w AS dist\n"
+            f"                SELECT e.v AS node, d.dist + {step} AS dist\n"
             f"                FROM {prev} d JOIN edges e ON e.u = d.node\n"
             f"            ) GROUP BY node\n"
             f"        )"
@@ -412,56 +409,16 @@ def _bellman_ford_oracle() -> str:
         WITH items AS (
             SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
         ), half AS (
-            SELECT a.l_partkey AS u, b.l_partkey AS v,
-                   greatest(1, 6 - COUNT(*)) AS w
+            SELECT a.l_partkey AS u, b.l_partkey AS v{half_w}
             FROM items a JOIN items b
               ON a.l_orderkey = b.l_orderkey
              AND a.l_partkey < b.l_partkey
             GROUP BY a.l_partkey, b.l_partkey
             HAVING COUNT(*) >= 2
         ), edges AS (
-            SELECT u, v, w FROM half
+            SELECT u, v{w} FROM half
             UNION ALL
-            SELECT v AS u, u AS v, w FROM half
-        ), d0 AS (
-            SELECT MIN(u) AS node, 0 AS dist FROM edges
-        ),
-        {chain}
-        SELECT CAST(node AS BIGINT) AS part, CAST(dist AS BIGINT) AS dist
-        FROM {prev}
-    """
-
-
-def _bfs_oracle() -> str:
-    rounds = []
-    prev = "d0"
-    for r in range(1, BFS_ROUNDS + 1):
-        rounds.append(
-            f"d{r} AS (\n"
-            f"            SELECT node, MIN(dist) AS dist FROM (\n"
-            f"                SELECT node, dist FROM {prev}\n"
-            f"                UNION ALL\n"
-            f"                SELECT e.v AS node, d.dist + 1 AS dist\n"
-            f"                FROM {prev} d JOIN edges e ON e.u = d.node\n"
-            f"            ) GROUP BY node\n"
-            f"        )"
-        )
-        prev = f"d{r}"
-    chain = ",\n        ".join(rounds)
-    return f"""
-        WITH items AS (
-            SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        ), half AS (
-            SELECT a.l_partkey AS u, b.l_partkey AS v
-            FROM items a JOIN items b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
-            GROUP BY a.l_partkey, b.l_partkey
-            HAVING COUNT(*) >= 2
-        ), edges AS (
-            SELECT u, v FROM half
-            UNION ALL
-            SELECT v AS u, u AS v FROM half
+            SELECT v AS u, u AS v{w} FROM half
         ), d0 AS (
             SELECT MIN(u) AS node, 0 AS dist FROM edges
         ),
@@ -632,31 +589,40 @@ KCORE_ROUNDS = 3
 LPA_ROUNDS = 3
 
 
+def _k_core_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
+    """``rounds`` peel rounds over a SYMMETRIC ``(u, v)`` edge frame:
+    each round keeps the edges whose endpoints both have degree >= k in
+    the previous round's frame. Symmetry makes the edge count over ``v``
+    the degree of ``v``, so one frame with two count windows (by ``u``
+    and by ``v``) decides both endpoints and each round reads its frame
+    once — the rounds stay one lazy plan. Dropping an edge drops its
+    reverse too, so a peel keeps the frame symmetric; the co-purchase
+    edge list is symmetric by construction (`_copurchase_edges`)."""
+    by_u, by_v = Window.partitionBy("u"), Window.partitionBy("v")
+    for _ in range(rounds):
+        edges = (
+            edges.withColumn("du", F.count(F.lit(1)).over(by_u))
+            .withColumn("dv", F.count(F.lit(1)).over(by_v))
+            .where((F.col("du") >= k) & (F.col("dv") >= k))
+            .select("u", "v")
+        )
+    return edges
+
+
 def q_graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-round k-core peel (k=2) of the co-purchase graph: each
     round recomputes degrees on the surviving subgraph and drops nodes
-    below k together with their incident edges. Emits the surviving
-    nodes with their post-peel degree after KCORE_ROUNDS rounds — the
-    standard dense-subgraph extraction / spam-node filter.
+    below k together with their incident edges (`_k_core_peel`). Emits
+    the surviving nodes with their post-peel degree after KCORE_ROUNDS
+    rounds — the standard dense-subgraph extraction / spam-node filter.
 
     All-integer state; the DuckDB oracle unrolls the identical rounds as
-    chained CTEs. Scale: a round is one degree aggregation plus two
-    semi-joins of the edge list against the surviving-node set — the
-    same Pregel-on-DataFrames shape as BFS/PageRank; edges and per-round
-    survivors stage-materialize because each feeds two plan branches."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
-    edges = mat(_copurchase_edges(spark, sf_dir), "kcore_edges")
-    for r in range(KCORE_ROUNDS):
-        deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= KCORE_K).select("u")
-        keep = mat(keep, f"kcore_keep_{r}")
-        edges = mat(
-            edges.join(keep, "u", "left_semi").join(
-                keep.select(F.col("u").alias("v")), "v", "left_semi"
-            ),
-            f"kcore_edges_{r}",
-        )
+    chained CTEs. Scale: a round is two degree windows over the edge
+    list (one shuffle each), and the rounds form one lazy plan over the
+    session-staged `_copurchase_support`."""
+    edges = _k_core_peel(
+        _copurchase_edges(spark, sf_dir), KCORE_K, KCORE_ROUNDS
+    )
     return (
         edges.groupBy(F.col("u").cast("long").alias("part"))
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
@@ -701,39 +667,45 @@ def _k_core_oracle() -> str:
     """
 
 
-def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous label propagation (community detection) on the
-    co-purchase graph: labels start as node ids; each round every node
-    adopts the most frequent label among its neighbors, ties broken by
-    the smaller label — the deterministic LPA variant. LPA_ROUNDS sync
-    rounds, then (label, community size).
-
-    Integer labels + (count desc, label asc) argmax keep every round
-    engine-exact; the oracle unrolls identical rounds. Scale: a round is
-    edges ⋈ labels (one shuffle) + a two-level aggregation; labels
-    stage-materialize per round (referenced by the next round's join and
-    the final aggregate)."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
-    edges = mat(_copurchase_edges(spark, sf_dir), "lpa_edges")
+def _label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
+    """``rounds`` synchronous label-propagation rounds over a ``(u, v)``
+    edge frame: labels start as node ids; each round every ``u`` adopts
+    the most frequent label among its ``v`` neighbours, ties broken by
+    the smaller label. Returns ``(node, label)``. A round reads the
+    previous labels once, so the rounds stay one lazy plan."""
     labels = edges.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for r in range(LPA_ROUNDS):
+    w = Window.partitionBy("u").orderBy(
+        F.col("cnt").desc(), F.col("label").asc()
+    )
+    for _ in range(rounds):
         votes = (
             edges.join(labels, edges.v == labels.node)
             .groupBy("u", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        w = Window.partitionBy("u").orderBy(
-            F.col("cnt").desc(), F.col("label").asc()
-        )
-        labels = mat(
+        labels = (
             votes.withColumn("rk", F.row_number().over(w))
             .where(F.col("rk") == 1)
-            .select(F.col("u").alias("node"), "label"),
-            f"lpa_round_{r}",
+            .select(F.col("u").alias("node"), "label")
         )
+    return labels
+
+
+def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Synchronous label propagation (community detection) on the
+    co-purchase graph: labels start as node ids; each round every node
+    adopts the most frequent label among its neighbors, ties broken by
+    the smaller label — the deterministic LPA variant
+    (`_label_propagation`). LPA_ROUNDS sync rounds, then (label,
+    community size).
+
+    Integer labels + (count desc, label asc) argmax keep every round
+    engine-exact; the oracle unrolls identical rounds. Scale: a round is
+    edges ⋈ labels (one shuffle) + a two-level aggregation; the rounds
+    form one lazy plan over the session-staged `_copurchase_support`."""
+    labels = _label_propagation(_copurchase_edges(spark, sf_dir), LPA_ROUNDS)
     return labels.groupBy(F.col("label").cast("long").alias("community")).agg(
         F.count(F.lit(1)).cast("long").alias("n_members")
     )
@@ -802,8 +774,6 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget is exhausted with labels still changing — a graph needing
     more than max_iters rounds fails loudly rather than returning
     partial components. All-integer labels; no tie-break subtleties."""
-    from aind_data_transformation_spark.ops import connected_components
-
     edges = _copurchase_edges(spark, sf_dir)
     comp = connected_components(edges, "u", "v")
     return comp.groupBy(F.col("component").alias("component_id")).agg(
@@ -913,8 +883,8 @@ ORACLES = {
     "graph_pagerank": _pagerank_oracle(),
     "graph_k_core": _k_core_oracle(),
     "graph_label_propagation": _lpa_oracle(),
-    "graph_bfs_frontier": _bfs_oracle(),
-    "graph_bellman_ford": _bellman_ford_oracle(),
+    "graph_bfs_frontier": _shortest_paths_oracle(BFS_ROUNDS, False),
+    "graph_bellman_ford": _shortest_paths_oracle(BF_ROUNDS, True),
     "basket_assoc_rules": """
         WITH items AS (
             SELECT DISTINCT l_orderkey, l_partkey FROM lineitem

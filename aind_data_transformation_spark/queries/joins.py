@@ -16,6 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
+from aind_data_transformation_spark.ops import (
+    asof_join,
+    asof_join_forward,
+    salted_join,
+)
 
 
 def q_join_inner_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,7 +138,6 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth = synth.groupBy("user_id", "ts").agg(
         F.max("o_orderkey").alias("matched_order")
     )
-    from aind_data_transformation_spark.ops import asof_join
 
     return asof_join(
         e.select("user_id", "ts", "event_id"),
@@ -165,7 +169,6 @@ def q_join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth = synth.groupBy("user_id", "ts").agg(
         F.max("o_orderkey").alias("next_order")
     )
-    from aind_data_transformation_spark.ops import asof_join_forward
 
     return asof_join_forward(
         e.select("user_id", "ts", "event_id"),
@@ -359,8 +362,6 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition on a single task and AQE skew-splitting can't help (e.g.
     pre-aggregated inputs, or a skewed build side). Result rolled up in
     exact integer cents."""
-    from aind_data_transformation_spark.ops import salted_join
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("p_partkey"), "l_extendedprice"
     )
@@ -456,7 +457,6 @@ def q_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth = synth.groupBy("user_id", "ts").agg(
         F.max("o_orderkey").alias("matched_order")
     )
-    from aind_data_transformation_spark.ops import asof_join
 
     return asof_join(
         e.select("user_id", "ts", "event_id"),

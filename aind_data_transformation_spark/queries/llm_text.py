@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
+from aind_data_transformation_spark.ops import local_materializer
 from aind_data_transformation_spark.texthash import (
     TOKS_DUCK as _TOKS_DUCK,
     TOKS_SPARK as _TOKS_SPARK,
@@ -330,10 +331,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage-materialized exactly like ``verified_near_dups`` — without
     that the minhash and shingling work runs twice (measured 3x the
     verified pipeline's wall time at sf0.1)."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
     d = load_table(spark, sf_dir, "documents")
-    cands = mat(
+    cands = local_materializer(
         lsh_candidate_pairs(minhash_signatures(d, "doc_id", "text"), "doc_id"),
         "containment_cands",
     )
@@ -342,7 +341,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(cands.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    tris = mat(
+    tris = local_materializer(
         d.join(cand_ids, "doc_id", "left_semi")
         .select("doc_id", F.expr("split(text, ' ')").alias("__toks"))
         .select(
@@ -804,8 +803,6 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is touched only through its index and the (tiny) candidate
     pull — this is what makes continuous dedup affordable where a full
     self-join dedup per crawl is not."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     d = load_table(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") % 10 != 0)
     batch = d.where(F.col("doc_id") % 10 == 0)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from aind_data_transformation_spark.io.sources import load_table
 from aind_data_transformation_spark.ops import (
     attach_broadcast,
+    local_materializer,
     partitioned_cum_before,
     session_stage,
     staged_parquet,
@@ -174,12 +175,10 @@ def _ivf_base(spark: SparkSession, sf_dir: str):
     centroids, staged once per (session, sf_dir). The base rides the
     staged `_lloyd_rounds` quantizer but adds its own localCheckpoint, so
     the IVF keys AND the nprobe sweep share one materialization."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
     def build(_scratch: str):
         _, a2, c1, _ = _lloyd_rounds(spark, sf_dir)
         norm = F.sqrt(_dot(F.col("v"), F.col("v")))
-        base = mat(
+        base = local_materializer(
             a2.select(
                 "vec_id", F.col("cid").alias("cell"), "v", norm.alias("nrm")
             ),
@@ -1752,8 +1751,6 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: identical integer-micros SQ algebra as `ann_pq_topk`
     (cross-engine-exact ADC sums), cell bits from double sign tests,
     ranks tie-broken by neighbor id."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
     _, a2, c1, _ = _lloyd_rounds(spark, sf_dir)
     norm = F.sqrt(_dot(F.col("v"), F.col("v")))
     base = (
@@ -1770,7 +1767,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cell-assigned corpus feeds bounds, codes AND the query probe:
     # stage-materialize or the 2-round Lloyd lineage executes 3 times
-    base = mat(base, "ivfpq_cells")
+    base = local_materializer(base, "ivfpq_cells")
     bounds = base.agg(
         *[
             F.min(F.element_at("v", d + 1)).alias(f"mn{d}")
@@ -1966,8 +1963,6 @@ def _lloyd_rounds(spark: SparkSession, sf_dir: str, k: int | None = None):
     index is built ONCE and amortized across every query that probes it
     — `ann_ivf_topk`, `ann_ivfpq_topk`, `dedup_semantic` and the
     `ml_ann_recall` grader share one training run."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
     def build(_scratch: str):
         em = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", _dbl("embedding").alias("v")
@@ -1983,7 +1978,7 @@ def _lloyd_rounds(spark: SparkSession, sf_dir: str, k: int | None = None):
             .collect()
         )
         cents = _train_lloyd_numpy(sample, n_cells)
-        a2 = mat(
+        a2 = local_materializer(
             em.mapInPandas(
                 _assign_batches(cents),
                 "vec_id bigint, v array<double>, cid bigint",
@@ -2063,14 +2058,12 @@ def _dedup_semantic_impl(
     binds k=None (auto-sized from the corpus count);
     tests/test_properties.py runs this at two explicit k values against
     `_semdedup_oracle(k)` to prove the knob is real."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
     _, a2, _, _ = _lloyd_rounds(spark, sf_dir, k=k)
     norm = F.sqrt(_dot(F.col("v"), F.col("v")))
     # the cell-assigned corpus feeds BOTH sides of the self-join:
     # stage-materialize it (parquet on a cluster) or the assignment
     # lineage executes twice
-    base = mat(
+    base = local_materializer(
         a2.select("vec_id", "cid", "v", norm.alias("nrm")),
         "semdedup_cells",
     )

@@ -17,7 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast, knuth32_sql
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    knuth32_sql,
+    local_materializer,
+)
 from aind_data_transformation_spark.queries.numeric import cents, sql_cents
 from aind_data_transformation_spark.queries.llm_text import (
     q_text_langid,
@@ -227,8 +231,6 @@ def q_ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the ≤40-row (bin, half) table feeds both halves AND the totals;
     # staged once so the orders scan runs once, not three times.
-    from aind_data_transformation_spark.ops import local_materializer
-
     counts = local_materializer(
         binned.groupBy("bin", "half").agg(F.count(F.lit(1)).alias("n")),
         "psi_bins",
@@ -295,8 +297,6 @@ def q_ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct-score histogram feeds both the positives total and
     # the cumulative curve; staged once so the quality-score text pass
     # runs once, not twice (4 documents scans in the before plan).
-    from aind_data_transformation_spark.ops import local_materializer
-
     per = local_materializer(per, "pr_score_hist")
     w = Window.orderBy(F.col("s").desc()).rowsBetween(
         Window.unboundedPreceding, 0
@@ -354,8 +354,6 @@ def q_ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the ≤10-row bin table feeds both the grand total and the report;
     # staged once so the quality-score text pass runs once, not twice.
-    from aind_data_transformation_spark.ops import local_materializer
-
     per = local_materializer(
         rows.groupBy("bin").agg(
             F.count(F.lit(1)).alias("n"),
@@ -467,7 +465,6 @@ def q_ml_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: every input is a k×queries-row frame by construction; each
     overlap is a tiny semi-join + one aggregation."""
-    from aind_data_transformation_spark.ops import local_materializer
     from aind_data_transformation_spark.queries.llm_vectors import (
         q_ann_ivf_topk,
         q_ann_ivfpq_topk,
@@ -723,8 +720,6 @@ def q_ml_gini_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the value domain feeds the cumulative window AND two total
     # attaches; staged once so the corpus aggregation runs once, not
     # three times (3 documents scans in the before plan).
-    from aind_data_transformation_spark.ops import local_materializer
-
     per_v = local_materializer(
         d.groupBy(F.col("n_chars").alias("v")).agg(
             F.count(F.lit(1)).alias("n"), F.sum("pos").alias("p")
@@ -795,8 +790,6 @@ def q_ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reduction; every boosting-round branch re-derived it through the
     # nested round-1/round-2 plan (8 documents scans before). Stage it
     # once — all downstream work is domain-sized (distinct values × 2).
-    from aind_data_transformation_spark.ops import local_materializer
-
     per_vy = local_materializer(
         d.groupBy("v", "pos").agg(F.count(F.lit(1)).alias("n_vy")),
         "ada_value_domain",
@@ -1651,8 +1644,6 @@ def q_ml_hist_binned_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 64-row histogram feeds both the totals and the cumulative
     # gain window; staged once so the lineitem scan + min/max prepass
     # run once, not twice (4 lineitem scans in the before plan).
-    from aind_data_transformation_spark.ops import local_materializer
-
     hist = local_materializer(
         binned.groupBy("bin", "mn", "mx").agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -2259,8 +2250,6 @@ def q_ml_target_encoding_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold. The encoder domain stays metadata-sized at any table size,
     which is exactly why target encoding scales where one-hot
     doesn't."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     o = load_table(spark, sf_dir, "orders")
     fold = F.expr(
         "conv(substr(md5(cast(o_orderkey AS STRING)), 1, 7), 16, 10) % 5"
@@ -2339,8 +2328,6 @@ def q_ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized k-row aggregate feeds both the per-category rows and
     the broadcast totals (which carry k itself — no separate count
     action), so nothing re-scans the table."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     o = load_table(spark, sf_dir, "orders")
     per = local_materializer(
         o.groupBy(F.col("o_orderpriority").alias("category")).agg(

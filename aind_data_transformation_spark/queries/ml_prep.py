@@ -43,7 +43,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from aind_data_transformation_spark.ops import attach_broadcast
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    local_materializer,
+    pack_sequences,
+    session_stage,
+)
 
 from aind_data_transformation_spark.io.sources import load_table
 
@@ -613,11 +618,6 @@ def _bpe_learned_merges(spark: SparkSession, sf_dir: str) -> list:
     map-side merge fold. Rounds are stage-materialized
     (ops.local_materializer; parquet on a cluster) so the plan stays
     linear in rounds."""
-    from aind_data_transformation_spark.ops import (
-        local_materializer as mat,
-        session_stage,
-    )
-
     def build(_scratch: str) -> list:
         d = load_table(spark, sf_dir, "documents")
         wc = (
@@ -631,7 +631,9 @@ def _bpe_learned_merges(spark: SparkSession, sf_dir: str) -> list:
             .where(F.length("w") >= 2)
         )
         chars = "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        words = mat(wc.select("cnt", F.expr(chars).alias("cs")), "bpe_w0")
+        words = local_materializer(
+            wc.select("cnt", F.expr(chars).alias("cs")), "bpe_w0"
+        )
         merges = []
         for r in range(1, _BPE_ROUNDS + 1):
             pairs = (
@@ -660,7 +662,7 @@ def _bpe_learned_merges(spark: SparkSession, sf_dir: str) -> list:
                 fold = _bpe_merge_spark_expr(
                     _sql_str_lit(row["pa"]), _sql_str_lit(row["pb"])
                 )
-                words = mat(
+                words = local_materializer(
                     words.select("cnt", F.expr(fold).alias("cs")), f"bpe_w{r}"
                 )
         return merges
@@ -973,11 +975,6 @@ def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-derives the merges, the per-doc counts, and the packing
     in one CTE chain, so a drifted token count anywhere shifts every
     later seq_id and breaks the hash."""
-    from aind_data_transformation_spark.ops import (
-        local_materializer,
-        pack_sequences,
-    )
-
     # pack_sequences' two-phase cumsum references its input twice; the
     # input here is the full BPE encode chain, so stage the tiny
     # (doc_id, n_tokens) projection once instead of tokenizing the

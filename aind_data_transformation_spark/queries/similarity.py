@@ -36,7 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast, series_row_number
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    local_materializer,
+    series_row_number,
+)
 
 #: string-sim join: prefix-band width, length-difference cap, distance cap.
 #: A true edit-distance join needs |len(a)-len(b)| <= tau to match, so the
@@ -242,10 +246,8 @@ def q_corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the materialized stream scans the text exactly once; on a cluster
     the materializer is the parquet stage writer (ops doctrine), the
     same tokenize-once layout every LM data pipeline uses."""
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
     d = load_table(spark, sf_dir, "documents")
-    toks = mat(
+    toks = local_materializer(
         d.select(
             "doc_id",
             "lang",
@@ -253,7 +255,7 @@ def q_corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "perplexity_toks",
     )
-    big = mat(
+    big = local_materializer(
         toks.where(F.size("w") >= 2).select(
             "doc_id",
             F.explode(
@@ -347,8 +349,6 @@ def q_ml_naive_bayes_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the before plan — the r12 attempts that regressed materialized
     # corpus-sized frames or re-keyed the shuffle; these two are the
     # COMPACT aggregates, staged with the shuffles unchanged).
-    from aind_data_transformation_spark.ops import local_materializer
-
     class_term = local_materializer(
         toks.groupBy(F.col("source").alias("cls"), "term").agg(
             F.count(F.lit(1)).alias("cnt")
@@ -468,7 +468,6 @@ def q_dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.lower(F.substring("text", 1, _SIM_HEAD)).alias("head"),
     )
-    from aind_data_transformation_spark.ops import local_materializer
 
     # the row-numbered frame feeds both neighbor-join sides; staged once
     # so the two-phase global numbering (two window passes) runs once,
@@ -595,8 +594,6 @@ def q_join_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode + two shuffles (12 documents scans in the before plan).
     # Stage it once — at 100 TB this frame IS the inverted index a
     # similarity-join system persists (ops.parquet_materializer there).
-    from aind_data_transformation_spark.ops import local_materializer
-
     w = local_materializer(w, "tfidf_index")
     # decimal operands: worst-case w ≈ tf_max·ln(N) · 1e3 can reach 1e8,
     # so w² sums can pass int64 — the registry-wide product-sum audit

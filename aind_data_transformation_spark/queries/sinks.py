@@ -2995,8 +2995,9 @@ def _build_txlog_part_table(spark: SparkSession, sf_dir: str, name: str):
     orders written as one file-dir per o_orderstatus partition (the
     helper-column partitionBy trick keeps the full schema in the data
     files), committed at version 0 with each add action carrying its
-    ``part`` value — Delta's partitionValues, the metadata that makes
-    log-level partition pruning and partition-scoped conflict checks
+    ``part`` value and ``part_col`` — Delta's partitionValues, the
+    metadata that makes log-level partition pruning
+    (`txlog_source._kept_files`) and partition-scoped conflict checks
     possible. Returns (log_dir, data_dir)."""
     import json as _json
 
@@ -3024,7 +3025,13 @@ def _build_txlog_part_table(spark: SparkSession, sf_dir: str, name: str):
             os.rename(os.path.join(staging, f"__p={s}"), p)
             fh.write(
                 _json.dumps(
-                    {"commit": 0, "action": "add", "path": p, "part": s}
+                    {
+                        "commit": 0,
+                        "action": "add",
+                        "path": p,
+                        "part": s,
+                        "part_col": "o_orderstatus",
+                    }
                 )
                 + "\n"
             )
@@ -3070,25 +3077,23 @@ def txlog_replace_where(
     st = {"recomputes": 0}
 
     def plan(rows, version):
-        st["victims"] = [
-            p for p, r in _live_adds(rows).items() if r["part"] == part_value
-        ]
+        victims = {
+            p: r
+            for p, r in _live_adds(rows).items()
+            if r["part"] == part_value
+        }
+        st["victims"] = list(victims)
+        # the victims' partition column carries over, so the replacement
+        # prunes under the same rule as the files it replaces
+        part_col = next(
+            (r["part_col"] for r in victims.values() if r.get("part_col")),
+            None,
+        )
+        meta = {"part": part_value, "part_col": part_col}
         return [
-            {
-                "commit": version,
-                "action": "remove",
-                "path": p,
-                "part": part_value,
-            }
-            for p in st["victims"]
-        ] + [
-            {
-                "commit": version,
-                "action": "add",
-                "path": new_path,
-                "part": part_value,
-            }
-        ]
+            {"commit": version, "action": "remove", "path": p, **meta}
+            for p in victims
+        ] + [{"commit": version, "action": "add", "path": new_path, **meta}]
 
     def rebase(rows, lost) -> bool:
         if part_value not in {r["part"] for r in rows if r["commit"] >= lost}:
@@ -3132,7 +3137,7 @@ def q_sink_txlog_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     txlog_replace_where(spark, log_dir, "O", replacement)
     rows = _txlog_log_rows(spark, log_dir)
     live = _live_adds(rows)
-    pruned = sorted(p for p, r in live.items() if r["part"] == "O")
+    pruned = _kept_files(rows, [EqualTo(("o_orderstatus",), "O")])
     o_scan_rows = _txlog_scan(spark, rows, pruned).count()
     snap = _txlog_scan(spark, rows, sorted(live))
     per_status = snap.groupBy("o_orderstatus").agg(

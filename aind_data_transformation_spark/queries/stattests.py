@@ -22,7 +22,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    local_materializer,
+)
 from aind_data_transformation_spark.queries.numeric import cents, sql_cents
 
 _G1 = "1-URGENT"
@@ -465,8 +468,6 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sketch is a 2k-cell aggregate (fixed size regardless of
     corpus size) built in one shuffle — exactly how a heavy-hitter pass
     over 100 TB avoids a full vocabulary materialization."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(F.explode(F.split("text", " ")).alias("term")).where(
         F.col("term") != ""

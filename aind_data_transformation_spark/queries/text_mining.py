@@ -22,7 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from aind_data_transformation_spark.ops import attach_broadcast
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    local_materializer,
+)
 
 from aind_data_transformation_spark.io.sources import load_table
 
@@ -97,8 +100,6 @@ def q_ngram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the two c_x/c_y joins are plain equi-joins AQE will broadcast when
     they fit (same reasoning as tfidf_keywords); totals are one broadcast
     row."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(F.expr(_TOKENS).alias("toks")).where(F.size("toks") >= 2)
     # the unigram table feeds THREE consumers (totals + the c_x and c_y
@@ -284,8 +285,6 @@ def q_ml_chi2_feature_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (term, lang) presence table feeds both the term-df rollup and
     # the contingency join; staged once so the distinct-term explode
     # runs once, not twice (4 documents scans in the before plan).
-    from aind_data_transformation_spark.ops import local_materializer
-
     tl = local_materializer(
         dt.groupBy("term", "lang").agg(F.count(F.lit(1)).alias("n11")),
         "chi2_term_lang",

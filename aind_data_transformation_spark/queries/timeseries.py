@@ -11,7 +11,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from aind_data_transformation_spark.io.sources import load_table
-from aind_data_transformation_spark.ops import attach_broadcast, halo_blocks, series_row_number
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    halo_blocks,
+    local_materializer,
+    series_row_number,
+)
 
 
 def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,8 +228,6 @@ def q_ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # phases, and the bucketed frame fans into the averages and the
     # final join (6 events scans before). Stage the points once — the
     # deduped series is the natural persisted input of a downsampler.
-    from aind_data_transformation_spark.ops import local_materializer
-
     pts = local_materializer(
         e.groupBy("event_type", "x").agg(F.max("yc").alias("yc")),
         "lttb_points",
@@ -1157,8 +1160,6 @@ def q_ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (type, day) domain feeds both self-join sides AND the pair
     # branch twice (count + rank) — un-staged the events aggregation ran
     # 4×. The frame is |types|·|days| rows; staged once.
-    from aind_data_transformation_spark.ops import local_materializer
-
     daily = local_materializer(
         e.groupBy(
             "event_type",

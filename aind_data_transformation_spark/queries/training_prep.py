@@ -41,7 +41,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from aind_data_transformation_spark.ops import attach_broadcast, knuth32, knuth32_sql
+from aind_data_transformation_spark.ops import (
+    attach_broadcast,
+    knuth32,
+    knuth32_sql,
+    local_materializer,
+)
 
 from aind_data_transformation_spark.io.sources import load_table
 from aind_data_transformation_spark.texthash import (
@@ -92,8 +97,6 @@ def q_rank_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     at (matching docs × |query terms|); df is |query terms| rows and the
     corpus stats are one row — both broadcast. The only corpus-sized pass
     is the token explode feeding tf/dl."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_TOKS_SPARK).alias("toks")
     )
@@ -269,9 +272,7 @@ def q_dedup_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized via ops.local_materializer (cluster swap: the
     # parquet stage writer) — one text scan + split, explodes run over
     # the stored arrays.
-    from aind_data_transformation_spark.ops import local_materializer as mat
-
-    d = mat(
+    d = local_materializer(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text", F.expr(_TOKS_SPARK).alias("toks"))
         .withColumn("n_tokens", F.size("toks").cast("long")),

@@ -37,7 +37,11 @@ from aind_data_transformation_spark.io.sources import (
     normalize_event_ts,
     table_schema,
 )
-from aind_data_transformation_spark.ops import dedup_keep_first, scratch_dir
+from aind_data_transformation_spark.ops import (
+    dedup_keep_first,
+    merge_upsert,
+    scratch_dir,
+)
 
 #: events physical schema for synthetic INT64 TIMESTAMP(NANOS) fixtures
 #: (tests/test_watermark.py writes these): with
@@ -524,8 +528,6 @@ def upsert_stream_foreach_batch(
     StreamingQuery.
     """
     import shutil
-
-    from aind_data_transformation_spark.ops import merge_upsert
 
     def apply_batch(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession

@@ -21,6 +21,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from aind_data_transformation_spark.ops import (
+    local_materializer,
+    staged_parquet,
+)
+
 TOKS_SPARK = "split(text, ' ')"
 TOKS_DUCK = "string_split(text, ' ')"
 
@@ -216,8 +221,6 @@ def lsh_candidate_pairs(
     persisting it is the right call at 100 TB too — pass
     ``ops.parquet_materializer(dir)`` as ``materializer`` there so the
     stage is durable instead of executor-local."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     mat = materializer or local_materializer
     banded = mat(
         sig_df.select(
@@ -257,8 +260,6 @@ def candidate_jaccard(
     scales with the candidate set, not the corpus) and materialized once
     for the two probe sides. ``materializer`` selects the stage storage
     (default executor-local checkpoint; parquet for cluster runs)."""
-    from aind_data_transformation_spark.ops import local_materializer
-
     mat = materializer or local_materializer
     cands = mat(
         lsh_candidate_pairs(
@@ -313,7 +314,6 @@ def verified_near_dups_docs(spark, sf_dir: str, threshold: float = 0.7):
     expensive common prefix of dedup_minhash_verified, dedup_clusters and
     corpus_dedup_cascade. Columns: (id_a, id_b, jaccard)."""
     from aind_data_transformation_spark.io.sources import load_table
-    from aind_data_transformation_spark.ops import staged_parquet
 
     return staged_parquet(
         spark,

@@ -1,10 +1,17 @@
 """Unit tests for the graph/layout library operators: connected
 components (iterative min-label propagation) and scalable sequence
-packing (two-phase cumulative sum)."""
+packing (two-phase cumulative sum); and the job budget of the
+fixed-round graph keys."""
 
 from __future__ import annotations
 
+import pytest
+
 from aind_data_transformation_spark.ops import connected_components, pack_sequences
+from aind_data_transformation_spark.queries import registry
+from aind_data_transformation_spark.queries.graph import _copurchase_support
+from tests.conftest import TEST_SF_DIR
+from tests.test_sources import _jobs_in_group
 
 
 def test_connected_components_chain_and_island(spark):
@@ -94,3 +101,29 @@ def test_pack_sequences_matches_bruteforce(spark):
         assert got[i] == (cum, cum // 20, cum % 20), i
         cum += n
     assert len(got) == len(rows)
+
+
+#: Spark jobs one build plus collect of a fixed-round graph key may run
+#: once the shared co-purchase support is staged: the rounds are one
+#: lazy plan, so every job is an execution job of that plan
+_GRAPH_ROUNDS_JOB_BUDGET = 12
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "graph_bfs_frontier",
+        "graph_bellman_ford",
+        "graph_k_core",
+        "graph_label_propagation",
+    ],
+)
+def test_fixed_round_graph_key_builds_without_jobs(spark, key):
+    build = registry()[0][key]
+    _copurchase_support(spark, TEST_SF_DIR)
+    df, n_build = _jobs_in_group(
+        spark, f"graph-rounds-build-{key}", lambda: build(spark, TEST_SF_DIR)
+    )
+    _, n_exec = _jobs_in_group(spark, f"graph-rounds-exec-{key}", df.collect)
+    assert n_build == 0, f"building {key} ran {n_build} Spark jobs"
+    assert n_build + n_exec <= _GRAPH_ROUNDS_JOB_BUDGET, (n_build, n_exec)

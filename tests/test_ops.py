@@ -224,3 +224,33 @@ def test_attach_broadcast_null_first_column(spark):
     )
     tiny = spark.createDataFrame([(7,)], "y int")
     assert attach_broadcast(a, tiny).count() == 3
+
+
+def test_no_function_imports_from_ops():
+    """Package modules import `ops` names at module level only, so a
+    name rebound on `ops` (a tracer's wrapper) is rebound in every
+    module that holds it, and each module lists its `ops` use in one
+    place."""
+    import ast
+    import os
+
+    import aind_data_transformation_spark
+
+    root = os.path.dirname(aind_data_transformation_spark.__file__)
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            tree = ast.parse(open(path).read(), path)
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for node in ast.walk(fn):
+                    if (
+                        isinstance(node, ast.ImportFrom)
+                        and node.module == "aind_data_transformation_spark.ops"
+                    ):
+                        hits.append(f"{path}:{node.lineno}")
+    assert hits == []

@@ -11,12 +11,14 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
 from tests.conftest import TEST_SF_DIR
 
 from aind_data_transformation_spark.queries import registry
+from aind_data_transformation_spark.queries.graph import BF_ROUNDS, BFS_ROUNDS
 
 _QUERIES, _ = registry()
 
@@ -593,12 +595,24 @@ def test_bpe_pair_counts_no_joins_two_agg_levels(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_bfs_rounds_are_equi_joins(spark):
-    """Every BFS round joins the frontier to the edge list as an
-    equi-join (hash or sort-merge); the seed aggregation broadcast is the
-    only nested-loop-shaped exchange allowed."""
-    plan = plan_of(spark, "graph_bfs_frontier")
+@pytest.mark.parametrize(
+    "key, rounds",
+    [("graph_bfs_frontier", BFS_ROUNDS), ("graph_bellman_ford", BF_ROUNDS)],
+    ids=["graph_bfs_frontier", "graph_bellman_ford"],
+)
+def test_bfs_rounds_are_equi_joins(spark, key, rounds):
+    """Every shortest-path round joins the distances to the edge list as
+    an equi-join (hash or sort-merge), and all rounds sit in the one
+    returned plan; none is a nested-loop or cartesian join."""
+    plan = plan_of(spark, key)
+    joins = re.findall(
+        r"^\(\d+\) (?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin)\b",
+        plan,
+        re.M,
+    )
+    assert len(joins) >= rounds, plan
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_containment_has_no_all_pairs_stage(spark):

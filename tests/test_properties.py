@@ -554,6 +554,122 @@ def test_connected_components_matches_union_find(spark, edges):
     }
     assert got == _union_find_components(edges)
 
+
+_GRAPH_ROUNDS = settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+_node = st.integers(min_value=0, max_value=11)
+
+
+@st.composite
+def _weighted_edges(draw):
+    """Directed ``(u, v, w)`` edges over a few nodes, weights 1–5, with
+    repeated pairs at other weights and isolated pairs far from the
+    rest."""
+    edges = draw(
+        st.lists(
+            st.tuples(_node, _node, st.integers(1, 5)), min_size=1, max_size=24
+        )
+    )
+    dups = [
+        (u, v, draw(st.integers(1, 5)))
+        for u, v, _ in draw(st.lists(st.sampled_from(edges), max_size=4))
+    ]
+    pairs = [
+        (100 + 2 * i, 101 + 2 * i, draw(st.integers(1, 5)))
+        for i in range(draw(st.integers(0, 2)))
+    ]
+    return edges + dups + pairs
+
+
+@st.composite
+def _symmetric_edges(draw):
+    """Both directions of random undirected pairs, repeats included."""
+    half = draw(
+        st.lists(
+            st.tuples(_node, _node).filter(lambda e: e[0] != e[1]),
+            min_size=1,
+            max_size=24,
+        )
+    )
+    return half + [(v, u) for u, v in half]
+
+
+def _edge_frame(spark, edges, cols):
+    schema = T.StructType([T.StructField(c, T.LongType()) for c in cols])
+    return spark.createDataFrame(edges, schema)
+
+
+@_GRAPH_ROUNDS
+@given(edges=_weighted_edges(), rounds=st.integers(1, 4))
+def test_shortest_paths_matches_synchronous_relaxation(spark, edges, rounds):
+    """Each round relaxes every edge from the PREVIOUS round's distances
+    (synchronous Bellman-Ford), from the minimum source at 0."""
+    from aind_data_transformation_spark.queries.graph import _shortest_paths
+
+    want = {min(u for u, _, _ in edges): 0}
+    for _ in range(rounds):
+        nxt = dict(want)
+        for u, v, w in edges:
+            if u in want:
+                nxt[v] = min(nxt.get(v, want[u] + w), want[u] + w)
+        want = nxt
+    df = _edge_frame(spark, edges, ["u", "v", "w"])
+    got = {r["node"]: r["dist"] for r in _shortest_paths(df, rounds).collect()}
+    assert got == want
+
+
+@_GRAPH_ROUNDS
+@given(
+    edges=_symmetric_edges(),
+    k=st.integers(1, 3),
+    rounds=st.integers(1, 3),
+)
+def test_k_core_peel_matches_reference(spark, edges, k, rounds):
+    """A round keeps the edges whose endpoints both have degree >= k in
+    the previous round's edge multiset."""
+    from collections import Counter
+
+    from aind_data_transformation_spark.queries.graph import _k_core_peel
+
+    want = list(edges)
+    for _ in range(rounds):
+        deg = Counter(u for u, _ in want)
+        want = [(u, v) for u, v in want if deg[u] >= k and deg[v] >= k]
+    df = _edge_frame(spark, edges, ["u", "v"])
+    got = [tuple(r) for r in _k_core_peel(df, k, rounds).collect()]
+    assert sorted(got) == sorted(want)
+
+
+@_GRAPH_ROUNDS
+@given(
+    edges=st.lists(st.tuples(_node, _node), min_size=1, max_size=30),
+    rounds=st.integers(1, 3),
+)
+def test_label_propagation_matches_reference(spark, edges, rounds):
+    """Every ``u`` takes the label most common among its ``v`` neighbours'
+    previous labels, ties to the smaller label; a ``u`` whose neighbours
+    all lack a label drops out, as in the inner join."""
+    from collections import Counter
+
+    from aind_data_transformation_spark.queries.graph import _label_propagation
+
+    want = {u: u for u, _ in edges}
+    for _ in range(rounds):
+        votes = Counter((u, want[v]) for u, v in edges if v in want)
+        best: dict = {}
+        for (u, label), cnt in votes.items():
+            best[u] = min(best.get(u, (-cnt, label)), (-cnt, label))
+        want = {u: label for u, (_, label) in best.items()}
+    df = _edge_frame(spark, edges, ["u", "v"])
+    got = {
+        r["node"]: r["label"] for r in _label_propagation(df, rounds).collect()
+    }
+    assert got == want
+
+
 def test_bfs_distances_consistent_with_edges(spark):
     """BFS output sanity: the seed has distance 0; every other reached
     node at distance d has at least one neighbor at distance d-1."""

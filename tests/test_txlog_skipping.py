@@ -129,3 +129,23 @@ def test_memory_sink_drains_leave_no_views(spark):
         )
         assert build(spark, TEST_SF_DIR).collect()
     assert _catalog_names(spark) == before
+
+
+def test_replace_where_prunes_under_the_connector_rule(spark):
+    """The partition fixture's adds and `txlog_replace_where`'s actions
+    carry ``part_col``, so `_kept_files` alone picks the replaced
+    partition's one file out of the live table."""
+    from pyspark.sql.datasource import EqualTo
+
+    log_dir, _ = sinks._build_txlog_part_table(
+        spark, TEST_SF_DIR, "prune_rule_rw"
+    )
+    orders = spark.read.parquet(f"{TEST_SF_DIR}/orders.parquet")
+    sinks.txlog_replace_where(
+        spark, log_dir, "O", orders.where("o_orderstatus = 'O'")
+    )
+    rows = sinks._txlog_log_rows(spark, log_dir)
+    live = tx._live_adds(rows)
+    replaced = [p for p, r in live.items() if r["commit"] == 1]
+    assert len(replaced) == 1 and len(live) > 1
+    assert tx._kept_files(rows, [EqualTo(("o_orderstatus",), "O")]) == replaced
